@@ -648,12 +648,12 @@ object SparkEntry {
     * date-promoted yyyy/MM/dd column, a semicolon-sniffed file, a gzip
     * file, a messy quoted header with a row_index column, a decimal file
     * the strict in-task decoder REJECTS to the driver chain, and a
-    * <5-row file P4 skips — decoded by `CsvScan`'s single-job binaryFile
-    * scan, profiled through the one keyed aggregate, fallback files
-    * profiled via `RobustCsv`. The oracle re-reads the same CSVs with
-    * pinned types and recomputes every stat, so sniffing, tokenization,
-    * inference replay, promotion, and the reject routing are all
-    * DuckDB-cross-checked. */
+    * <5-row file P4 skips — built by `SketchBuild.build`: `CsvScan`'s
+    * single-job binaryFile scan, fallback files read via `RobustCsv`,
+    * every table profiled through the one keyed aggregate. The oracle
+    * re-reads the same CSVs with pinned types and recomputes every stat,
+    * so sniffing, tokenization, inference replay, promotion, and the
+    * reject routing are all DuckDB-cross-checked. */
   private def lakeCsvUnifiedQ(s: SparkSession, dir: String): DataFrame = {
     val d = java.nio.file.Paths.get("/tmp/graft_fixtures/csv_lake")
     java.nio.file.Files.createDirectories(d)
@@ -681,15 +681,7 @@ object SparkEntry {
       "id,huge\n1,12345678901234567890123\n2,22345678901234567890123\n" +
       "3,3234567890123456789\n4,1\n5,2\n")
     w("tiny.csv", "a,b\n1,x\n2,y\n3,z\n")
-    val files = graft.ingest.RobustCsv.listTables(s, d.toString)
-    val names = graft.sources.CsvScan.tableNames(files)
-    val scan = graft.sources.CsvScan.scanLake(s, names)
-    val fallback = scan.rejected.flatMap(p =>
-      graft.ingest.RobustCsv.read(s, p).map(df => names(p) -> df))
-    statsSummary((Profiler.profileFromLong(
-        graft.sources.LakeScan.renderLong(scan.cells)) +:
-      fallback.map { case (n, df) => Profiler.profile(df, n) })
-      .reduce(_ unionByName _))
+    statsSummary(graft.cli.SketchBuild.build(s, d.toString).profiles)
   }
 
   /** Q7 end-to-end through the REAL ONNX artifact: deterministic feature

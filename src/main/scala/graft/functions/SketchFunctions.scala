@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.Column
 
 import graft.core.{MinHash, SimHash}
 
@@ -12,50 +9,12 @@ import graft.core.{MinHash, SimHash}
   * Re-expresses the reference's column sketching
   * (`/root/reference/tabsketchfm/data_prep.py:264-274` exact-value MinHash,
   * `:213` word-token MinHash, `:319-337` whole-table content snapshot) as
-  * `Aggregator`s with an associative/commutative elementwise-min merge, so
+  * native aggregates with an associative/commutative elementwise-min merge, so
   * Spark performs map-side partial aggregation: raw values never shuffle,
   * only fixed 100-slot digests per (group, partition) do. That is the
   * property that makes per-column sketching scale linearly with input size.
   */
 object SketchFunctions {
-
-  private implicit val longArrayEnc: Encoder[Array[Long]] =
-    ExpressionEncoder[Array[Long]]()
-
-  /** MinHash over the multiset of exact values (null-skipping). */
-  class MinHashAgg(seed: Long, numPerm: Int)
-      extends Aggregator[String, Array[Long], Array[Long]] {
-    @transient private lazy val p = MinHash.perms(seed, numPerm)
-    def zero: Array[Long] = MinHash.emptyDigest(numPerm)
-    def reduce(buf: Array[Long], v: String): Array[Long] = {
-      if (v != null) MinHash.updateInto(buf, v, p)
-      buf
-    }
-    def merge(a: Array[Long], b: Array[Long]): Array[Long] = MinHash.mergeInto(a, b)
-    def finish(buf: Array[Long]): Array[Long] = buf
-    def bufferEncoder: Encoder[Array[Long]] = longArrayEnc
-    def outputEncoder: Encoder[Array[Long]] = longArrayEnc
-  }
-
-  /** MinHash over whitespace tokens of each value — tokenizes inside the
-    * aggregator (no `explode`, so no row blow-up before the shuffle).
-    * Mirrors `str(v).split()` at `data_prep.py:213`.
-    */
-  class MinHashWordsAgg(seed: Long, numPerm: Int)
-      extends MinHashAgg(seed, numPerm) {
-    @transient private lazy val p = MinHash.perms(seed, numPerm)
-    override def reduce(buf: Array[Long], v: String): Array[Long] = {
-      if (v != null) {
-        val toks = v.split("\\s+")
-        var i = 0
-        while (i < toks.length) {
-          if (toks(i).nonEmpty) MinHash.updateInto(buf, toks(i), p)
-          i += 1
-        }
-      }
-      buf
-    }
-  }
 
   import org.apache.spark.sql.graftbridge.{columnOf, expressionOf}
 
@@ -68,12 +27,6 @@ object SketchFunctions {
   /** `minhash_words_agg(values)`: digest of the word-token multiset. */
   def minhash_words_agg(col: Column): Column =
     columnOf(MinHashWordsAggNative(expressionOf(col)).toAggregateExpression())
-
-  /** Aggregator-based variants (kept for API parity / custom seeds). */
-  def minhash_agg_seeded(col: Column, seed: Long, numPerm: Int = MinHash.NumPerm): Column =
-    udaf(new MinHashAgg(seed, numPerm)).apply(col)
-  def minhash_words_agg_seeded(col: Column, seed: Long, numPerm: Int = MinHash.NumPerm): Column =
-    udaf(new MinHashWordsAgg(seed, numPerm)).apply(col)
 
   // ---- scalar sketch functions ----
 

@@ -199,16 +199,14 @@ object RobustCsv {
 
   /** Directory-walk source (S6): list `*.csv[.bz2|.gz]` under a directory.
     * The reference's 21-files-per-dir cap (`batch_fastdata_opendata.py:
-    * 5-23`) is a quirk we expose behind a flag, default off.
+    * 5-23`) is a corpus-download quirk and is not reproduced.
     */
-  def listTables(spark: SparkSession, dir: String,
-                 capPerDir: Option[Int] = None): Seq[String] = {
+  def listTables(spark: SparkSession, dir: String): Seq[String] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val it = fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
+    fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
       .filter(s => s.isFile && (s.getPath.getName.endsWith(".csv") ||
         s.getPath.getName.endsWith(".csv.bz2") || s.getPath.getName.endsWith(".csv.gz")))
       .map(_.getPath.toString).sorted
-    capPerDir.map(it.take).getOrElse(it)
   }
 }

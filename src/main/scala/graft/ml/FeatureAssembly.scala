@@ -18,7 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object FeatureAssembly {
 
-  val StatsWidth = 16   // unique, num_nan, cell_width, 13 quantiles
   val DefaultPad = 768  // reference hidden size
 
   /** Per-column stats vector: `[unique, num_nan, cell_width, quantile13,

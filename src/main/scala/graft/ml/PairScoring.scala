@@ -78,16 +78,6 @@ object PairScoring {
           greatest(col("n_cols_1"), col("n_cols_2")), 6))
   }
 
-  /** Content-snapshot Jaccard per pair (whole-table signal, A13/J5). */
-  def snapshotFeature(pairs: DataFrame, snapshots: DataFrame): DataFrame =
-    pairs
-      .join(broadcast(snapshots.select(col("table_name").as("table1"),
-        col("content_snapshot").as("snap1"))), "table1")
-      .join(broadcast(snapshots.select(col("table_name").as("table2"),
-        col("content_snapshot").as("snap2"))), "table2")
-      .withColumn("snap_jaccard", round(minhash_jaccard(col("snap1"), col("snap2")), 6))
-      .drop("snap1", "snap2")
-
   /** Train an MLlib scorer over pair features. `problemType` mirrors the
     * reference's classification/regression dispatch
     * (`tabsketchfm_finetune.py:86-107`).

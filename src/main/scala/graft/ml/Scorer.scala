@@ -176,15 +176,6 @@ object Scorer {
       (batch: Array[Array[Double]]) => session.run(batch)
     }
 
-  /** [[onnxEmbedderFactory]] with the per-JVM shared session. */
-  def sharedOnnxEmbedderFactory(path: String)
-      : () => Array[Array[Double]] => Array[Array[Float]] =
-    () => {
-      val session = sharedSession(path)
-      (batch: Array[Array[Double]]) =>
-        session.runMatrix(batch).map(_.map(_.toFloat))
-    }
-
   /** Batch-scoring factory over an exported ONNX artifact
     * ([[OnnxExport.exportLogistic]]): the model file is parsed and the
     * session opened ONCE per partition — the exact slot a JNI-backed

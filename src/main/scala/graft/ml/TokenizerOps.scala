@@ -71,20 +71,4 @@ object TokenizerOps {
   def oneHot(labels: Column, numClasses: Int): Column =
     transform(sequence(lit(0), lit(numClasses - 1)),
       i => when(array_contains(labels, i), 1.0).otherwise(0.0))
-
-  /** Q6: value-embedding enrichment — concat a column's tensor with a
-    * hashed value-head vector (the model-free stand-in for the optional
-    * sentence-transformer path, `embedding_search.py:29-42`): `mode` is
-    * "concatenate" or "values_only" (`:69-88`).
-    */
-  def enrichWithValues(colTensors: DataFrame, hashedValues: DataFrame,
-                       mode: String = "concatenate"): DataFrame = {
-    val hv = hashedValues.select(col("table_name"), col("col_idx"),
-      col("hv").as("value_vec"))
-    val joined = colTensors.join(hv, Seq("table_name", "col_idx"), "left")
-    mode match {
-      case "values_only" => joined.withColumn("embedding", col("value_vec"))
-      case _ => joined // both tensors available; caller concats per format
-    }
-  }
 }

@@ -625,13 +625,6 @@ object Dedup {
       .select("val_a", "val_b", "dist")
   }
 
-  /** Embedding near-dups: cosine ≥ threshold via the ANN banding in
-    * [[Ann.cosineNearDups]] — re-exported here for the dedup surface.
-    */
-  def embeddingNearDups(embs: DataFrame, threshold: Double = 0.95,
-                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    Ann.cosineNearDups(embs, threshold, idCol, vecCol)
-
   /** Resolve near-dup pairs into connected components by STAR
     * CONTRACTION: each round the ORIGINAL bidirectional edge relation is
     * rewritten through the current labels (edges inside one region

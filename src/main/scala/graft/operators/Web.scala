@@ -86,13 +86,6 @@ object Web {
       .drop("__rk")
   }
 
-  /** Crawl-shape diagnostics: docs and total chars per registered
-    * domain. */
-  def domainStats(df: DataFrame, nCharsCol: String): DataFrame =
-    df.groupBy(col("url_domain"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col(nCharsCol)).cast("long").as("total_chars"))
-
   /** Query parameters that never change page content — the standard
     * tracking families a crawl dedup strips before comparing URLs. */
   val TrackingParamRe = "^(utm_[^=]*|fbclid|gclid|msclkid|ref|mc_cid|mc_eid)="

@@ -26,9 +26,6 @@ object Bucketing {
       .sortBy(key)
       .saveAsTable(table)
 
-  def readTable(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
   /** Co-located equi-join of two identically-bucketed catalog tables.
     * With matching bucket counts on the join keys this plans as a
     * SortMergeJoin with zero Exchange operators.

@@ -29,22 +29,15 @@ object SketchStore {
     * partition overwrite rewrites ONLY the `table_name` partitions present
     * in `profiles`, leaving every other table's sketches untouched — the
     * catalog-maintenance half of the incremental story (re-profile what
-    * changed, `Incremental.merge` what grew, never touch the rest).
+    * changed, `Incremental.merge` what grew, never touch the rest). The
+    * mode rides the writer option, so the session's conf is never touched.
     */
-  def upsertParquet(profiles: DataFrame, path: String): Unit = {
-    val spark = profiles.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      profiles.dropDuplicates("table_name", "col_idx")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("table_name")
-        .parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+  def upsertParquet(profiles: DataFrame, path: String): Unit =
+    profiles.dropDuplicates("table_name", "col_idx")
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("table_name")
+      .parquet(path)
 
   /** Migration audit: slot-level agreement between two sketch catalogs —
     * e.g. an engine catalog re-sketched in `ReferenceMinHash` parity mode

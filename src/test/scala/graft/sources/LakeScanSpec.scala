@@ -216,7 +216,7 @@ class LakeScanSpec extends SparkSpec {
       s"key-less part file dropped or mis-capped: $rows")
   }
 
-  test("Graft.profileLake routes unsupported-type tables through the per-table path") {
+  test("SketchBuild.build routes unsupported-type tables through the per-table path") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_mixedtypes").toString
     Seq((1L, BigDecimal("1.23")), (2L, BigDecimal("4.56"))).toDF("id", "dec")
@@ -224,7 +224,7 @@ class LakeScanSpec extends SparkSpec {
     Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("id", "v")
       .write.mode("overwrite").parquet(s"$tmp/plain.parquet")
     assert(LakeScan.unsupportedTables(spark, tmp, Seq("money", "plain")) == Seq("money"))
-    val prof = graft.Graft.profileLake(spark, tmp, Seq("money", "plain"))
+    val prof = graft.cli.SketchBuild.build(spark, tmp).profiles
     val byTable = prof.groupBy("table_name").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byTable == Map("money" -> 2L, "plain" -> 2L),

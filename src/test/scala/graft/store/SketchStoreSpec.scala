@@ -56,7 +56,11 @@ class SketchStoreUpsertSpec extends SparkSpec {
     SketchStore.writeParquet(a.unionByName(b), dir)
     // refresh ONLY tb with different content
     val b2 = Profiler.profile((1 to 50).map(i => (i.toLong, s"B$i")).toDF("id", "v"), "tb")
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
     SketchStore.upsertParquet(b2, dir)
+    // the dynamic mode rides the writer option; the session conf is untouched
+    assert(spark.conf.getOption(modeKey) == modeBefore)
     val back = SketchStore.readParquet(spark, dir)
     assert(back.filter(col("table_name") === "ta").count() == 2) // untouched
     val tbRows = back.filter(col("table_name") === "tb")
