@@ -28,6 +28,13 @@ object SketchFunctions {
   def minhash_words_agg(col: Column): Column =
     columnOf(MinHashWordsAggNative(expressionOf(col)).toAggregateExpression())
 
+  /** `exact_deciles(value, freq, probs)`: exact linear-interpolation
+    * percentiles at `probs` of a (value, freq) histogram; null for a
+    * group with no value. Native TypedImperativeAggregate. */
+  def exact_deciles(value: Column, freq: Column, probs: Seq[Double]): Column =
+    columnOf(ExactDeciles(expressionOf(value.cast("double")),
+      expressionOf(freq.cast("long")), probs).toAggregateExpression())
+
   // ---- scalar sketch functions ----
 
   /** Estimated Jaccard similarity of two MinHash digests (J5) — native

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import org.apache.spark.sql.expressions.Window
-
 import graft.functions.SketchFunctions._
 
 /** Column profiler — re-expresses the reference's `preprocess_cols`
@@ -20,8 +18,9 @@ import graft.functions.SketchFunctions._
   *    distinct values, so the shuffle carries histograms, not rows;
   *  - `unique` becomes a plain `count(*)` over histogram rows — no
   *    `count_distinct`, so no Expand doubling of the stream;
-  *  - exact deciles use frequency-weighted `percentile(v, p, freq)`, whose
-  *    state is one histogram entry per *distinct* value, not per row;
+  *  - exact deciles use the native `exact_deciles(v, freq, probs)`
+  *    aggregate in the same stage-2 `groupBy`, whose state is one entry
+  *    per histogram row, not per cell;
   *  - MinHash is set-semantics, so sketching distinct values gives the
   *    identical digest while hashing each value once.
   *
@@ -208,20 +207,8 @@ object Profiler {
     // distinct values per partition before any shuffle); schema sentinels
     // ride through with freq 0 so every column aggregates to a row even
     // when it has no cells (empty table)
-    val hist0 = long.groupBy(keyCols ++ Seq(col("value_str"), col("value_num")): _*)
+    val hist = long.groupBy(keyCols ++ Seq(col("value_str"), col("value_num")): _*)
       .agg(sum(when(col("present"), 1L).otherwise(0L)).as("freq"))
-    // With quantiles on, the stage-1 histogram is MATERIALIZED once
-    // (eager localCheckpoint + stats-barrier re-wrap): the stats branch,
-    // the decile cum-sums, AND the decile branch's three driver-built
-    // broadcasts (rng/probes/coverB) all read the local leaf, so the
-    // cell relation is scanned and shuffled exactly once per run and no
-    // broadcast build ever replays it on a busy driver (the r14-r15
-    // a4_quantiles in-suite inflation mechanism). The materialized
-    // relation is the DISTINCT-value histogram — i.e. at most the
-    // stage-1 shuffle Spark already writes to local disk. Without
-    // quantiles there is no multi-branch fan-out, so the plan stays a
-    // single streaming aggregate.
-    val hist = if (withQuantiles) cpBarrier(hist0) else hist0
 
     // Exact decimal sums power order-independent quantile-vector mean/std
     // (bit-identical across engines). A value past the guard (decimal CSV
@@ -270,27 +257,17 @@ object Profiler {
         minhash_agg(exactInput).as("minhash_exact"),                        // A11 (set semantics)
         minhash_words_agg(wordsInput).as("minhash_words_raw"))              // A12
       else Seq.empty
-    val aggd0 = hist.groupBy(keyCols: _*)
-      .agg(baseAggs.head, (baseAggs.tail ++ sketchAggs): _*)
-    // A4 deciles (gated — consumers that discard the quantile column skip
-    // the whole subtree; Catalyst cannot prune a join that feeds a built
-    // output column, so the gate must be plan-construction-time): the
-    // value histogram CHAINS off `hist`, so the exploded cell relation is
-    // scanned, rendered, and stage-1-shuffled exactly ONCE — the stage-1
-    // exchange is shared with the stats branch (ReuseExchange / AQE stage
-    // reuse), and the re-aggregation to (keys, value_num) shuffles only
-    // distinct (value_str, value_num) pairs, not cells.
-    val aggd = if (!withQuantiles)
-      aggd0.withColumn("deciles", lit(null).cast(ArrayType(DoubleType)))
-    else {
-      val valueHist = hist
-        .filter(col("value_num").isNotNull && col("freq") > 0)
-        .select(col("table_name"), col("col_idx"), col("value_num"), col("freq"))
-      aggd0.join(
-        decilesFromHist(valueHist, QuantileProbs, Seq("table_name", "col_idx"),
-          materialize = false), // `hist` is already a local leaf
-        Seq("table_name", "col_idx"), "left")
-    }
+    // A4 deciles (gated at plan construction — consumers that discard the
+    // quantile column skip the aggregate). The final buffer holds a whole
+    // column's histogram (16 B per row), so only integer/float columns —
+    // the ones that get a quantile vector — feed it.
+    val deciles =
+      if (withQuantiles) exact_deciles(
+        when(col("col_type").isin("integer", "float"), col("value_num")),
+        col("freq"), QuantileProbs)
+      else lit(null).cast(ArrayType(DoubleType))
+    val aggd = hist.groupBy(keyCols: _*)
+      .agg(baseAggs.head, (baseAggs.tail ++ sketchAggs :+ deciles.as("deciles")): _*)
 
     // A6: population std = sqrt(E[x²] − E[x]²); guard unique<=2 → 0
     // (data_prep.py:238-241)
@@ -338,125 +315,6 @@ object Profiler {
       (if (withSketches) Seq("minhash_exact") else Nil)
     out.select(cols.map(col) ++
       (if (withSketches) Seq(col("minhash_words_f").as("minhash_words")) else Nil): _*)
-  }
-
-  /** Exact linear-interpolation percentiles computed relationally from a
-    * (col_idx, value_num, freq) histogram — the scale-path replacement for
-    * the built-in `percentile` aggregate, whose per-group in-memory value
-    * maps become the bottleneck (and an OOM risk) at very high column
-    * cardinality. Each probe interpolates between the two covering values
-    * using the same `(hi−pos)·vLo + (pos−lo)·vHi` formula as Spark's
-    * Percentile, so results are identical.
-    *
-    * The rank cum-sum is a TWO-LEVEL prefix sum so no column ever funnels
-    * through one reducer (a plain `Window.partitionBy(col_idx)` bounds
-    * parallelism by column count — a near-unique column at 100× scale
-    * becomes a single-partition sort): distinct values are range-bucketed
-    * deterministically on the column's (min,max) span, per-bucket totals
-    * roll up into bucket offsets via a tiny window (≤ `DecileBuckets` rows
-    * per column), and the heavy cum-sum runs partitioned by
-    * (col_idx, bucket). Range bucketing is monotone, so bucket-then-value
-    * order equals global value order and results are exactly unchanged.
-    * Worst case (all distinct values in one bucket) degrades to the old
-    * single-reducer plan, never below it.
-    */
-  val DecileBuckets = 1024
-
-  /** Eager localCheckpoint + the house stats-barrier re-wrap (see
-    * Dedup.cpOnly): materializes `df` NOW and returns a fresh-stats
-    * local leaf. Used to pin multi-consumer relations whose small-side
-    * broadcasts must not replay the upstream plan per build. */
-  private def cpBarrier(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(true)
-    df.sparkSession.createDataFrame(cp.rdd, cp.schema)
-  }
-
-  def decilesFromHist(hist: DataFrame, probs: Seq[Double],
-                      keys: Seq[String] = Seq("col_idx"),
-                      materialize: Boolean = true): DataFrame = {
-    val k = keys.map(col)
-    // Accepts any (keys…, value_num, freq) histogram, WITHOUT re-aggregating
-    // to distinct value_num first: duplicate (keys, value_num) rows (e.g. a
-    // chained stage-1 histogram still split by value_str) merely subdivide a
-    // value's rank interval into per-row sub-intervals — any probe rank
-    // falls into exactly one sub-interval and recovers the same value_num,
-    // so deciles are unchanged while a full re-agg shuffle is saved. The
-    // within-bucket cum-sum below uses an explicit ROWS frame so tied
-    // values accumulate per row, not per peer group. Null value rows
-    // (string columns) ride along as bucket −1: no offset match → never
-    // covering.
-    // Materialize the histogram ONCE (default): every small side below
-    // (rng, probes, coverB) is a driver-built broadcast whose child plan
-    // would otherwise replay the upstream scan + stage-1 shuffle per
-    // build. Under a loaded driver those sequential broadcast builds
-    // serialized and inflated a4_quantiles 5-8× while neighbors moved
-    // ~1.3× (rounds 14-15); building them from a local RDD leaf makes
-    // each a milliseconds job. On a real cluster the same shape holds
-    // (the materialized relation is the DISTINCT-value histogram, i.e.
-    // ≤ stage-1 shuffle size, which Spark writes to local disk anyway).
-    // Callers that already feed a materialized/persisted histogram (the
-    // profiler checkpoints stage-1 itself so its stats branch shares the
-    // same leaf) pass materialize = false.
-    val h0 = hist.select(k ++ Seq(col("value_num"), col("freq")): _*)
-    val h = if (materialize) cpBarrier(h0) else h0
-    val rng = h.groupBy(k: _*).agg(
-      min(col("value_num")).as("vmin"), max(col("value_num")).as("vmax"),
-      sum(when(col("value_num").isNotNull, col("freq")).otherwise(0L)).as("n"))
-    val span = when(col("vmax") > col("vmin"), col("vmax") - col("vmin")).otherwise(lit(1.0))
-    val hb = h.join(broadcast(rng), keys)
-      .withColumn("bucket",
-        when(col("value_num").isNull, lit(-1))
-          .otherwise(least(lit(DecileBuckets - 1), greatest(lit(0),
-            floor((col("value_num") - col("vmin")) / span * DecileBuckets).cast("int")))))
-    // level 1: bucket totals → exclusive bucket offsets (tiny per-column window)
-    val wB = Window.partitionBy(k: _*).orderBy(col("bucket"))
-    val bOff = hb.filter(col("value_num").isNotNull)
-      .groupBy(k :+ col("bucket"): _*).agg(sum(col("freq")).as("bfreq"))
-      .withColumn("boff", sum(col("bfreq")).over(wB) - col("bfreq"))
-    // Probe positions: 9 tiny rows per column — joined against the bucket
-    // offsets FIRST, so only buckets whose rank interval [boff, boff+bfreq)
-    // actually contains a probe rank survive. Exploding the probes onto
-    // every histogram row instead is a 9× row amplification on the dominant
-    // relation (~all distinct values) that the filter then throws away.
-    val probsLit = typedLit(probs.zipWithIndex.map { case (p, i) => (p, i) })
-    val probes = rng
-      .select(k ++ Seq(col("n"), explode(probsLit).as("pq")): _*)
-      .select(k ++ Seq(col("pq._2").as("qi"),
-        (col("pq._1") * (col("n") - 1).cast("double")).as("pos")): _*)
-      .select(k ++ Seq(col("qi"), col("pos"),
-        floor(col("pos")).cast("long").as("lo"),
-        ceil(col("pos")).cast("long").as("hi")): _*)
-    val coverB = bOff.join(broadcast(probes), keys)
-      .filter((col("boff") <= col("lo") && col("lo") < col("boff") + col("bfreq")) ||
-        (col("boff") <= col("hi") && col("hi") < col("boff") + col("bfreq")))
-      .select(keys ++ Seq("bucket", "boff", "qi", "pos", "lo", "hi") map col: _*)
-    // level 2: within-bucket cum-sum, ONLY over covering buckets (≤ 18 per
-    // column), partitioned by (keys, bucket, qi) so each histogram row
-    // accumulates exactly once PER COVERING PROBE — a bucket covering
-    // several probes duplicates its rows per probe but each probe's
-    // cum-sum sees every row once, so no double-counting. This replaces
-    // the former separate `neededB` distinct + second coverB join (two
-    // broadcasts and a join saved); the amplification is bounded by
-    // probes-per-bucket ≤ |probs|, on the ≤2-buckets-per-probe slice of
-    // the histogram only.
-    val wV = Window.partitionBy(k ++ Seq(col("bucket"), col("qi")): _*)
-      .orderBy(col("value_num"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val covering = hb.join(broadcast(coverB), keys :+ "bucket")
-      .withColumn("cum", sum(col("freq")).over(wV) + col("boff"))
-      .withColumn("start", col("cum") - col("freq"))
-      .filter((col("start") <= col("lo") && col("lo") < col("cum")) ||
-        (col("start") <= col("hi") && col("hi") < col("cum")))
-    covering.groupBy(k ++ Seq(col("qi"), col("pos"), col("lo"), col("hi")): _*)
-      .agg(
-        max(when(col("start") <= col("lo") && col("lo") < col("cum"), col("value_num"))).as("v_lo"),
-        max(when(col("start") <= col("hi") && col("hi") < col("cum"), col("value_num"))).as("v_hi"))
-      .withColumn("q", when(col("lo") === col("hi"), col("v_lo"))
-        .otherwise((col("hi").cast("double") - col("pos")) * col("v_lo") +
-          (col("pos") - col("lo").cast("double")) * col("v_hi")))
-      .groupBy(k: _*)
-      .agg(sort_array(collect_list(struct(col("qi"), col("q"))))
-        .getField("q").as("deciles"))
   }
 
   /** Whole-table content snapshot (A13): one MinHash over the multiset of

@@ -91,19 +91,53 @@ class ProfilerSpec extends SparkSpec {
     assert(p.isNullAt(p.fieldIndex("quantile"))) // only numeric get quantile vec
     assert(p.getAs[Double]("min_v") == 1609459200.0)
   }
+
+  test("edge values (NaN, ±Inf, ±0.0, 1e±300) keep pinned quantile vectors") {
+    val NaN = Double.NaN
+    val Inf = Double.PositiveInfinity
+    val cases = Seq(
+      ((1 to 20).map(_.toDouble) :+ NaN) ->
+        Seq(3.0, 5.0, 7.0, 9.0, 11.0, 13.0, 15.0, 17.0, 19.0, NaN, NaN, 1.0, NaN),
+      (Seq(1.0, Inf, -Inf) ++ (5 to 20).map(_.toDouble)) ->
+        Seq(4.2, 6.6000000000000005, 8.399999999999999, 10.2, 12.0, 13.799999999999999,
+          15.6, 17.4, 19.2, NaN, NaN, -Inf, Inf),
+      (Seq(-0.0, 0.0, 0.0, -0.0, 1.5, -2.5) ++ (1 to 10).map(-_.toDouble)) ->
+        Seq(-8.5, -7.0, -5.5, -4.0, -2.75, -2.0, -0.5, 0.0, 0.0,
+          -3.5, 3.513367330638799, -10.0, 1.5),
+      Seq(1e300, -1e300, 1e-300, 0.0, 5.0) ->
+        Seq(-6.0E299, -1.9999999999999997E299, 1.9999999999999997E-301,
+          6.000000000000001E-301, 1.0E-300, 1.9999999999999996, 3.999999999999999,
+          2.000000000000002E299, 6.000000000000001E299, 0.0, Inf, -1.0E300, 1.0E300))
+    for ((xs, want) <- cases) {
+      val q = Profiler.profile(xs.toDF("x"), "edge").collect()(0)
+        .getAs[scala.collection.Seq[Double]]("quantile")
+      // Double.compare: NaN equals NaN, and -0.0 differs from 0.0
+      assert(q.length == want.length &&
+        q.zip(want).forall { case (a, b) => java.lang.Double.compare(a, b) == 0 },
+        s"input $xs: got $q, want $want")
+    }
+  }
 }
 
-/** Contract of the re-agg-free decilesFromHist (round 8): duplicate
-  * (keys, value_num) histogram rows — e.g. a stage-1 histogram still
-  * split by value_str, or pre-split freq counts — subdivide a value's
-  * rank interval and must yield IDENTICAL deciles to the aggregated
-  * histogram, and to Spark's own exact percentile.
+/** Contract of `exact_deciles`, deciles from a (value, freq) histogram:
+  * duplicate value rows — e.g. a stage-1 histogram still split by
+  * value_str, or one value's partial counts from several partitions —
+  * subdivide a value's rank interval and must yield IDENTICAL deciles to
+  * the aggregated histogram, and to Spark's own exact percentile.
   */
 class DecilesFromHistSpec extends SparkSpec {
+  import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
   import spark.implicits._
+  import graft.functions.DecileBuffer
+  import graft.functions.SketchFunctions.exact_deciles
 
   private val probs = Profiler.QuantileProbs
+
+  private def decilesOf(h: DataFrame): Map[Int, Seq[Double]] =
+    h.groupBy("col_idx")
+      .agg(exact_deciles(col("value_num"), col("freq"), probs).as("deciles"))
+      .collect().map(r => r.getAs[Int]("col_idx") -> r.getAs[Seq[Double]]("deciles")).toMap
 
   test("duplicate value rows give the same deciles as the aggregated histogram") {
     // column 0: skewed ints with heavy ties; column 1: near-unique doubles
@@ -113,10 +147,8 @@ class DecilesFromHistSpec extends SparkSpec {
     val dup = vals.flatMap { case (c, v, _) => Seq((c, v, 1L), (c, v, 1L), (c, v, 1L)) }
       .toDF("col_idx", "value_num", "freq")
     val agg = dup.groupBy("col_idx", "value_num").agg(sum("freq").as("freq"))
-    val a = Profiler.decilesFromHist(dup, probs).collect()
-      .map(r => r.getAs[Int]("col_idx") -> r.getAs[Seq[Double]]("deciles")).toMap
-    val b = Profiler.decilesFromHist(agg, probs).collect()
-      .map(r => r.getAs[Int]("col_idx") -> r.getAs[Seq[Double]]("deciles")).toMap
+    val a = decilesOf(dup)
+    val b = decilesOf(agg)
     assert(a == b)
     // cross-check against Spark's built-in exact percentile on the
     // expanded multiset (each dup row carries freq 1 = one element)
@@ -133,41 +165,66 @@ class DecilesFromHistSpec extends SparkSpec {
   test("single-value and two-value columns interpolate exactly") {
     val h = Seq((0, 5.0, 10L), (1, 1.0, 1L), (1, 2.0, 1L))
       .toDF("col_idx", "value_num", "freq")
-    val d = Profiler.decilesFromHist(h, probs).collect()
-      .map(r => r.getAs[Int]("col_idx") -> r.getAs[Seq[Double]]("deciles")).toMap
+    val d = decilesOf(h)
     assert(d(0).forall(_ == 5.0))
     // two values, n=2: pos = p*(n-1) = p -> lo=0, hi=1 interpolation
     probs.indices.foreach { i =>
       assert(math.abs(d(1)(i) - (1.0 + probs(i))) < 1e-12)
     }
   }
+
+  test("1 vs 8 input partitions give the same deciles (serialize, merge)") {
+    val h = ((1 to 3000).map(i => (i % 3, ((i * 7919) % 1013).toDouble, (i % 4 + 1).toLong)) ++
+      Seq((0, Double.NaN, 2L), (2, -1e300, 1L))).toDF("col_idx", "value_num", "freq")
+    val one = decilesOf(h.repartition(1))
+    val eight = decilesOf(h.repartition(8))
+    assert(one.keySet == Set(0, 1, 2) && eight.keySet == one.keySet)
+    assert(one.keySet.forall(k => one(k).length == probs.length &&
+      one(k).corresponds(eight(k))(java.lang.Double.compare(_, _) == 0)), s"$one vs $eight")
+  }
+
+  test("null values and freq = 0 sentinel rows are ignored") {
+    val base = Seq((0, Some(1.0), 1L), (0, Some(2.0), 3L), (0, Some(4.0), 2L))
+    val noisy = base ++ Seq((0, None, 5L), (0, Some(100.0), 0L), (0, Some(-100.0), 0L))
+    def d(rows: Seq[(Int, Option[Double], Long)]) =
+      decilesOf(rows.toDF("col_idx", "value_num", "freq"))
+    assert(d(noisy) == d(base))
+  }
+
+  test("a group with no numeric value gives null") {
+    val h = Seq((0, Some(1.0), 1L), (1, None, 4L), (1, Some(9.0), 0L))
+      .toDF("col_idx", "value_num", "freq")
+    val d = decilesOf(h)
+    assert(d.keySet == Set(0, 1) && d(1) == null)
+  }
+
+  test("buffer growth past the JVM array limit raises a named error") {
+    val e = intercept[IllegalStateException] {
+      new DecileBuffer().reserve(DecileBuffer.MaxEntries + 1L)
+    }
+    assert(e.getMessage.contains("exact_deciles"))
+  }
 }
 
-/** Plan-shape guard for the stage-1 histogram sharing. Round 8 pinned
-  * AQE exchange reuse between the stats and decile branches; round 16
-  * replaced the shared exchange with ONE materialized stage-1 leaf
-  * (eager localCheckpoint + stats barrier) that the stats branch, the
-  * decile cum-sums, and every decile small-side broadcast read — so the
-  * cell relation is scanned exactly once per run and no driver-built
-  * broadcast replays the scan+shuffle under load (the r14-r15
-  * a4_quantiles in-suite inflation). The pin: with quantiles on, the
-  * final executed plan's leaves are the materialized RDD only — the raw
-  * input relation must NOT appear. */
+/** Plan-shape guard for the profile. With quantiles on, the deciles are
+  * one `exact_deciles` aggregate in the stats `groupBy`, so the plan is a
+  * single two-level aggregate: the input is read once, and no
+  * checkpointed leaf, broadcast or window appears. */
 class ProfilePlanReuseSpec extends SparkSpec {
   import spark.implicits._
 
-  test("decile branch reads the materialized stage-1 leaf, never the raw input") {
+  test("deciles ride the stats aggregate: one scan, no broadcast/window") {
     val df = (1 to 5000).map(i => (i % 37, i.toDouble % 101, s"s$i")).toDF("a", "b", "c")
     val prof = Profiler.profile(df, "t", withSketches = false)
     prof.collect()
     val plan = prof.queryExecution.executedPlan.toString
-    // the materialized histogram leaf feeds the final plan...
-    assert(plan.contains("Scan ExistingRDD"),
-      s"expected the materialized stage-1 leaf in the plan; plan:\n$plan")
-    // ...and the raw input relation is not re-scanned by it (it was
-    // consumed once, inside the eager checkpoint job)
-    assert(!plan.contains("LocalTableScan"),
-      s"raw input must not be re-scanned by the final plan; plan:\n$plan")
+    Seq("BroadcastExchange", "Window", "Scan ExistingRDD").foreach { node =>
+      assert(!plan.contains(node), s"unexpected $node in the profile plan:\n$plan")
+    }
+    // the input relation (columns a, b, c) is scanned exactly once
+    val finalPlan = plan.split("== Initial Plan ==")(0)
+    assert("LocalTableScan \\[a#".r.findAllIn(finalPlan).size == 1,
+      s"expected one scan of the input; plan:\n$plan")
   }
 
   test("without quantiles the profile stays a single un-materialized aggregate") {
