@@ -185,7 +185,7 @@ object Bench {
     * known "broadcasting large task binary" warnings are suppressed via
     * [[quietly]] so the bench log's warning stream speaks only about the
     * ENGINE's plans — which stay under Spark's 1 MiB warning threshold
-    * even at 400 tables (tools/TaskBinProbe).
+    * even at 400 tables.
     */
   private def lakePlanBench(spark: SparkSession): String = {
     val dir = "/tmp/graft_bench_microlake"
@@ -199,9 +199,15 @@ object Bench {
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     import graft.profile.Profiler
+    import graft.sources.LakeScan
+    def unified(ts: Seq[String]): Unit = {
+      val scan = LakeScan.scanLake(spark, dir, ts, None)
+      run(Profiler.profileFromLong(LakeScan.renderLong(scan.cells)))
+      scan.release()
+    }
     // warm both paths on a 3-table slice (JIT, codegen cache)
     run(Profiler.profileLake(spark, dir, names.take(3)))
-    run(Profiler.profileLakeUnified(spark, dir, names.take(3)))
+    unified(names.take(3))
     // this section runs AFTER the 70-query bench in the same JVM: force a
     // collection first and take min-of-2 on the cheap unified runs, or a
     // full-heap GC pause lands inside one timed run and reads as a 15×
@@ -209,8 +215,8 @@ object Bench {
     def timed2(f: => Unit): Double = { System.gc(); math.min(time(f), time(f)) }
     val loop40 = { System.gc();
       quietly(spark)(time(run(Profiler.profileLake(spark, dir, names.take(nSmall))))) }
-    val uni40 = timed2(run(Profiler.profileLakeUnified(spark, dir, names.take(nSmall))))
-    val uni400 = timed2(run(Profiler.profileLakeUnified(spark, dir, names)))
+    val uni40 = timed2(unified(names.take(nSmall)))
+    val uni400 = timed2(unified(names))
     f"""{"tables_small":$nSmall,"tables_big":$nBig,"loop_${nSmall}":$loop40%.3f,"unified_${nSmall}":$uni40%.3f,"unified_${nBig}":$uni400%.3f}"""
   }
 

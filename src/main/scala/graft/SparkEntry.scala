@@ -30,17 +30,11 @@ object SparkEntry {
   /** Sketch-catalog cache: the reference materializes sketches once and
     * reuses them across every downstream task (`data_prep.py:150-163`,
     * SURVEY §4 "sketch materialization"); the Spark analogue is one
-    * persisted profile catalog per lake shared by all sketch queries.
+    * catalog per lake — profiles and [[SnapshotTables]] snapshots —
+    * shared by all sketch queries.
     */
-  private val catalogCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** O1: the reference caps every table read at 10 k rows before sketching
-    * (`data_prep.py:27`); the deterministic first-N analogue lives in
-    * `Lake.read`. Uncapped profiling stays available as the explicit
-    * engine mode (`Profiler.profileLake(rowCap = None)`).
-    */
-  val RowCap = 10000
+  private val lakeBuilds =
+    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, DataFrame)]
 
   // keyed by session too: a cached plan is bound to the session that built
   // it and must not leak into a successor session in the same JVM.
@@ -50,20 +44,23 @@ object SparkEntry {
   // checkpointing truncates lineage so consumers plan against a flat
   // LogicalRDD. On a real cluster the durable equivalent is the
   // SketchStore parquet catalog (s7s8 round-trip) — same effect, reliable.
-  // Both catalogs build through the UNIFIED single-job path (one
-  // binaryFile scan + one keyed aggregate subtree, planning cost constant
-  // in table count) — every sketch query downstream therefore
-  // hash-verifies the unified profiler end-to-end. The per-table loop
-  // (`Profiler.profileLake`) remains the spec-pinned double-check.
-  private def lakeCatalog(s: SparkSession, dir: String): DataFrame =
-    catalogCache.getOrElseUpdate(s"${System.identityHashCode(s)}#$dir#profiles",
-      Profiler.profileLakeUnified(s, dir, LakeTables, rowCap = Some(RowCap))
-        .localCheckpoint(eager = true))
+  // One `SketchBuild.build` (one decode, one keyed aggregate subtree,
+  // planning cost constant in table count) serves both catalogs — every
+  // sketch query downstream therefore hash-verifies the catalog build
+  // end-to-end. The per-table loop (`Profiler.profileLake`) remains the
+  // spec-pinned double-check.
+  private def lakeBuild(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    lakeBuilds.getOrElseUpdate(s"${System.identityHashCode(s)}#$dir", {
+      val catalog = graft.cli.SketchBuild.build(s, dir)
+      try (catalog.profiles.localCheckpoint(eager = true),
+        catalog.snapshots.filter(col("table_name").isin(SnapshotTables: _*))
+          .localCheckpoint(eager = true))
+      finally catalog.release()
+    })
 
-  private def lakeSnapshots(s: SparkSession, dir: String): DataFrame =
-    catalogCache.getOrElseUpdate(s"${System.identityHashCode(s)}#$dir#snapshots",
-      graft.sources.LakeScan.snapshotLakeUnified(s, dir, SnapshotTables, Some(RowCap))
-        .localCheckpoint(eager = true))
+  private def lakeCatalog(s: SparkSession, dir: String): DataFrame = lakeBuild(s, dir)._1
+
+  private def lakeSnapshots(s: SparkSession, dir: String): DataFrame = lakeBuild(s, dir)._2
 
   val LakeTables: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
@@ -588,8 +585,11 @@ object SparkEntry {
     * re-distincting the lake; on a real cluster it would persist next to
     * the SketchStore catalog, bucketed by value_str.
     */
+  private val valueIndexes =
+    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+
   private def searchValueIndex(s: SparkSession, dir: String): DataFrame =
-    catalogCache.getOrElseUpdate(s"${System.identityHashCode(s)}#$dir#values",
+    valueIndexes.getOrElseUpdate(s"${System.identityHashCode(s)}#$dir#values",
       SearchLake.map { name =>
         Profiler.longFormat(t(s, dir, name)).withColumn("table_name", lit(name))
       }.reduce(_ unionByName _)
@@ -1049,21 +1049,16 @@ object SparkEntry {
       .orderBy("col_id")
   }
 
-  /** E2E discovery composition guard: lake dir → unified single-job
-    * profile (fresh, not the session cache) → SketchStore parquet
-    * round-trip → union search. Hash-verifies that the unified catalog
-    * schema, the store layout, and Discovery's expectations stay glued
-    * (each piece is separately green; this pins the seams). */
+  /** E2E discovery composition guard: lake dir → `SketchBuild.build`
+    * (fresh, not the session cache) → SketchStore parquet round-trip →
+    * union search. Hash-verifies that the catalog schema, the store
+    * layout, and Discovery's expectations stay glued (each piece is
+    * separately green; this pins the seams). */
   private def e2eLakeSearch(s: SparkSession, dir: String): DataFrame = {
     val store = "/tmp/graft_fixtures/e2e_store"
-    // withQuantiles = false: the search path consumes sketches + col
-    // metadata only — computing the decile subtree (the profiler's most
-    // expensive branch) to immediately discard it would be plan waste.
-    // The quantile columns stay pinned by a4_quantiles (compute) and
-    // s7s8_sketch_roundtrip (store layout).
-    val catalog = Profiler.profileLakeUnified(s, dir, LakeTables,
-      rowCap = Some(RowCap), withQuantiles = false)
-    graft.store.SketchStore.writeParquet(catalog, store)
+    val catalog = graft.cli.SketchBuild.build(s, dir)
+    try graft.store.SketchStore.writeParquet(catalog.profiles, store)
+    finally catalog.release()
     Discovery.searchUnionable(
       graft.store.SketchStore.readParquet(s, store), "supplier", k = 10)
   }

@@ -1,7 +1,6 @@
 package graft.cli
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 import graft.ingest.RobustCsv
 import graft.profile.Profiler
@@ -31,60 +30,56 @@ object SketchBuild {
   /** Sketch every table under `inDir` — a directory of CSVs, or else of
     * parquet tables — into one catalog, capped at the reference's 10k rows.
     *
-    * Most tables decode ON THE EXECUTORS in one scan: CSVs through
-    * `CsvScan`'s strict in-task parse, parquet through `LakeScan`'s
-    * decoder. The rest — CSVs the strict parser rejects (exotic charsets,
-    * malformed rows, gray-zone types: the expected minority,
-    * `data_prep.py:70-78`) and parquet tables whose types the decoder
-    * cannot express (decimals, maps/structs, non-float lists) — are read
-    * per table on the driver side (`RobustCsv.read` / `Lake.read`). Every
-    * table, however decoded, feeds ONE keyed long relation and ONE
-    * `Profiler.profileFromLong` call, so the plan has one aggregate
-    * subtree however many files fall back. CSV table names come from
-    * `CsvScan.tableNames`, which suffixes basename collisions instead of
-    * letting same-named files in different subdirs overwrite each other.
+    * One arm for both formats: list the lake through the Hadoop FS (so
+    * `inDir` may be a path or a URI), decode it ON THE EXECUTORS in one
+    * scan (`CsvScan`'s strict in-task parse, or `LakeScan`'s decoder),
+    * and read the inputs that scan rejects per table on the driver side
+    * (`RobustCsv.read` / `Lake.read`): CSVs the strict parser cannot
+    * mirror (exotic charsets, malformed rows, gray-zone types: the
+    * expected minority, `data_prep.py:70-78`) and parquet tables whose
+    * types the decoder cannot express (decimals, maps/structs, non-float
+    * lists). Every table, however decoded, feeds ONE keyed long relation
+    * and ONE `Profiler.profileFromLong` call, so the plan has one
+    * aggregate subtree however many inputs fall back. CSV table names come
+    * from `CsvScan.tableNames`, which suffixes basename collisions instead
+    * of letting same-named files in different subdirs overwrite each
+    * other. CSVs under 5 rows are skipped (P4); a parquet table with no
+    * parquet leaf fails the build in `Lake.read`.
     */
   def build(spark: SparkSession, inDir: String): Catalog = {
+    val cap = RobustCsv.RowCap
     val csvs = RobustCsv.listTables(spark, inDir)
-    // (executor-decoded variant cells, per-table fallback frames, and the
-    // release of the persisted decode)
-    val (cells, fallback, releaseDecode) =
+    // the format's scan, and its driver-side reader of one rejected input
+    val (scan, readRejected) =
       if (csvs.nonEmpty) {
         val names = CsvScan.tableNames(csvs)
-        val scan = CsvScan.scanLake(spark, names, RobustCsv.RowCap)
-        val fallback = scan.rejected.flatMap { p =>
-          RobustCsv.read(spark, p).map(df => names(p) -> df.persist())
-        }
+        (CsvScan.scanLake(spark, names, cap),
+          (p: String) => RobustCsv.read(spark, p).map(names(p) -> _))
+      } else {
+        val tables = Lake.listTables(spark, inDir)
+        require(tables.nonEmpty, s"no readable tables under $inDir")
+        (LakeScan.scanLake(spark, inDir, tables, Some(cap)),
+          (t: String) => Some(t -> Lake.read(spark, inDir, t, Some(cap))))
+      }
+    val fallback =
+      try {
+        val read = scan.rejected.flatMap(readRejected).map { case (n, df) => n -> df.persist() }
         // loud failure when NOTHING decoded: every file sub-5-row or
         // unreadable — an empty catalog written with exit 0 would look
-        // like success on a misconfigured input dir
-        require(fallback.nonEmpty || scan.cells.limit(1).count() > 0,
+        // like success on a misconfigured input dir. A parquet table is
+        // either decoded or read above, so only a CSV lake can come out empty
+        require(csvs.isEmpty || read.nonEmpty || scan.cells.limit(1).count() > 0,
           s"no readable tables under $inDir (all files skipped or unreadable)")
-        (Some(scan.cells), fallback, () => scan.release())
-      } else {
-        val tables = Option(new java.io.File(inDir)
-            .listFiles((_, n) => n.endsWith(".parquet"))).toSeq.flatten
-          .map(_.getName.stripSuffix(".parquet")).sorted
-        require(tables.nonEmpty, s"no readable tables under $inDir")
-        val exotic = LakeScan.unsupportedTables(spark, inDir, tables).toSet
-        val unified = tables.filterNot(exotic)
-        val cells =
-          if (unified.isEmpty) None
-          else Some(LakeScan.rawCells(spark, inDir, unified, Some(RobustCsv.RowCap))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-        val fallback = tables.filter(exotic).map { t =>
-          t -> Lake.read(spark, inDir, t, Some(RobustCsv.RowCap)).persist()
-        }
-        (cells, fallback, () => cells.foreach(_.unpersist()))
-      }
-    val long = (cells.map(LakeScan.renderLong(_)) ++
+        read
+      } catch { case e: Exception => scan.release(); throw e }
+    val long = (LakeScan.renderLong(scan.cells) +:
       fallback.map { case (n, df) => Profiler.longFormatKeyed(df, n) })
       .reduce(_ unionByName _)
-    val snapshots = (cells.map(LakeScan.snapshotFromRaw) ++
+    val snapshots = (LakeScan.snapshotFromRaw(scan.cells) +:
       fallback.map { case (n, df) => Profiler.contentSnapshot(df, n) })
       .reduce(_ unionByName _)
     Catalog(Profiler.profileFromLong(long), snapshots, () => {
-      releaseDecode()
+      scan.release()
       fallback.foreach(_._2.unpersist())
     })
   }

@@ -23,12 +23,15 @@ object RobustCsv {
   val RowCap = 10000
   val MinRows = 5
   val CandidateDelimiters = Seq(",", ";", "\t", "|")
+  /** Head sample size of the charset and delimiter sniffs (both decoders). */
+  private[graft] val HeadBytes = 64 * 1024
 
-  /** Head bytes of a (possibly compressed) file, decompressed — the raw
-    * material for charset + delimiter sniffing. Driver-side single read of
-    * a bounded prefix; the distributed scan happens afterwards.
+  /** The first [[HeadBytes]] of a (possibly compressed) file, decompressed
+    * — the raw material for the charset, delimiter and magic-byte sniffs.
+    * Driver-side single read of a bounded prefix; the distributed scan
+    * happens afterwards.
     */
-  private def headBytes(spark: SparkSession, path: String, n: Int): Array[Byte] = {
+  private def headBytes(spark: SparkSession, path: String): Array[Byte] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(
@@ -36,7 +39,7 @@ object RobustCsv {
     val raw = fs.open(p)
     val in: java.io.InputStream =
       if (codec != null) codec.createInputStream(raw) else raw
-    try in.readNBytes(n) finally in.close()
+    try in.readNBytes(HeadBytes) finally in.close()
   }
 
   /** Charset sniff over the head sample — BOM first, then strict UTF-8
@@ -47,7 +50,7 @@ object RobustCsv {
     * the fallback never throws — exactly the reference's error-tolerance.
     */
   def detectCharset(spark: SparkSession, path: String): String =
-    detectCharsetFromBytes(headBytes(spark, path, 64 * 1024))
+    detectCharsetFromBytes(headBytes(spark, path))
 
   /** Pure core of [[detectCharset]] over an (up to 64 KiB) head sample —
     * shared with the executor-side decoder ([[graft.sources.CsvScan]]),
@@ -75,15 +78,10 @@ object RobustCsv {
     catch { case _: java.nio.charset.CharacterCodingException => false }
   }
 
-  /** Sniff the delimiter from a head sample: the candidate with the highest
-    * consistent per-line count wins (reference uses `sep=None` python-engine
-    * sniffing, `data_prep.py:76`).
-    */
-  def sniffDelimiter(spark: SparkSession, path: String, charset: String = "UTF-8"): String =
-    sniffDelimiterFromHead(new String(headBytes(spark, path, 64 * 1024), charset))
-
-  /** Pure core of [[sniffDelimiter]] over the decoded head sample (same
-    * 64 KiB prefix) — shared with the executor-side decoder. */
+  /** Sniff the delimiter from the decoded 64 KiB head sample: the
+    * candidate with the highest consistent per-line count wins (reference
+    * uses `sep=None` python-engine sniffing, `data_prep.py:76`) — shared
+    * with the executor-side decoder. */
   def sniffDelimiterFromHead(headText: String): String = {
     val head = headText.split("\r?\n").iterator.filter(_.nonEmpty).take(20).toArray
     if (head.isEmpty) ","
@@ -116,14 +114,15 @@ object RobustCsv {
     // strictness failure; the PERMISSIVE retry only handles files the
     // skip-mode parser rejects outright; Excel is the reference's last
     // resort (`pd.read_excel`, data_prep.py:78).
-    val charset = detectCharset(spark, path)
-    val delim = sniffDelimiter(spark, path, charset)
+    // one 64 KiB head sample feeds the charset, delimiter and magic sniffs
+    val head = headBytes(spark, path)
+    val charset = detectCharsetFromBytes(head)
+    val delim = sniffDelimiterFromHead(new String(head, charset))
     def csvChain = tryRead(spark, path, delim, charset, permissive = false)
       .orElse(tryRead(spark, path, delim, charset, permissive = true))
     // zip magic means an .xlsx workbook, CFB magic a legacy .xls: the
     // permissive CSV parser would otherwise "succeed" on the raw bytes as
     // one garbage column and mask S12
-    val head = headBytes(spark, path, 8)
     val cfbMagic = Array(0xD0, 0xCF, 0x11, 0xE0, 0xA1, 0xB1, 0x1A, 0xE1).map(_.toByte)
     val df =
       if (head.startsWith(Array[Byte]('P', 'K', 3, 4)))

@@ -61,17 +61,17 @@ object Profiler {
     */
   val DatePromotedKey = "graft.date_promoted"
 
+  /** The single definition of the promotion check — LakeScan's footer
+    * decoding and this classification must never diverge. */
+  def isDatePromoted(f: StructField): Boolean =
+    f.metadata.contains(DatePromotedKey) && f.metadata.getBoolean(DatePromotedKey)
+
   /** Logical type of a field: the data type's mapping, overridden to
     * "date" for date-promoted string columns (see [[DatePromotedKey]]).
     * Rendering in [[longFormat]] still follows the physical type — the
     * values ARE strings — only the classification changes, exactly the
     * reference's split between df values and col_types.
     */
-  /** The single definition of the promotion check — LakeScan's footer
-    * decoding and this classification must never diverge. */
-  def isDatePromoted(f: StructField): Boolean =
-    f.metadata.contains(DatePromotedKey) && f.metadata.getBoolean(DatePromotedKey)
-
   def logicalType(f: StructField): String =
     if (isDatePromoted(f)) "date" else logicalType(f.dataType)
 
@@ -120,8 +120,7 @@ object Profiler {
 
   /** Long-format values relation for one table:
     * (col_idx, value_str, value_num). `value_num` carries numerics (and
-    * date→epoch-seconds) for quantiles. Column metadata stays out of the
-    * hot path and is re-attached from [[colMeta]] after aggregation.
+    * date→epoch-seconds) for quantiles.
     */
   def longFormat(df: DataFrame, renderNumerics: Boolean = true): DataFrame = {
     val structs = df.schema.fields.zipWithIndex.map { case (f, i) =>
@@ -173,14 +172,6 @@ object Profiler {
     data.unionByName(schemaSentinels(df.sparkSession, df, tableName))
   }
 
-  /** Tiny (col_idx, col_name, col_type) dimension for one table's schema. */
-  def colMeta(spark: SparkSession, df: DataFrame): DataFrame = {
-    val rows = df.schema.fields.zipWithIndex.map { case (f, i) =>
-      (i, f.name, logicalType(f))
-    }
-    spark.createDataFrame(rows.toIndexedSeq).toDF("col_idx", "col_name", "col_type")
-  }
-
   /** Full per-column profile of one table (two aggregation levels) —
     * the keyed core [[profileFromLong]] with this table's literal key.
     */
@@ -198,7 +189,7 @@ object Profiler {
     * levels over a keyed long-format cell relation (see
     * [[KeyedLongSchema]]), ONE aggregate subtree for however many tables
     * ride in `long`. Feeders: [[longFormatKeyed]] (single table),
-    * `LakeScan.unifiedLongRows` (whole lake, one scan).
+    * `LakeScan.renderLong` over a lake scan's cells (whole lake).
     */
   def profileFromLong(long: DataFrame, withSketches: Boolean = true,
                       withQuantiles: Boolean = true): DataFrame = {
@@ -335,11 +326,10 @@ object Profiler {
   }
 
   /** Profile a whole lake directory of parquet tables into one catalog
-    * DataFrame — per-table plans unioned. RETAINED for the few-huge-tables
-    * shape (each table's parquet scan splits by row group) and as the
-    * independent double-check of [[profileLakeUnified]] (parity spec);
-    * the catalog default is the unified path, whose planning cost is
-    * CONSTANT in table count instead of an N-branch union.
+    * DataFrame — per-table plans unioned. The independent per-table
+    * reference the lake-scan specs compare against; catalogs are built by
+    * `SketchBuild.build`, whose one scan plans at a cost CONSTANT in table
+    * count instead of an N-branch union.
     */
   def profileLake(spark: SparkSession, dir: String, tables: Seq[String],
                   withSketches: Boolean = true, rowCap: Option[Int] = None,
@@ -349,23 +339,4 @@ object Profiler {
       profile(graft.sources.Lake.read(spark, dir, t, rowCap), t, withSketches,
         withQuantiles)
     }.reduce(_ unionByName _)
-
-  /** Lake-scale single-job profiler (SURVEY §3 E1 "Spark shape"): ONE
-    * binaryFile scan over every table file → executor-side decode into a
-    * long cell relation keyed by table → ONE `groupBy(table_name,
-    * col_idx)` aggregate subtree, however many tables. The reference's
-    * real corpora run to 40,752 tables (`README.md:175`, Wiki Union);
-    * at that N the per-table loop's 40k-branch union plan and 80k+
-    * scheduled jobs stall the DRIVER — this path plans one fixed-shape
-    * job. Values render through the same Catalyst casts as [[profile]],
-    * so outputs are bit-identical (spec-pinned).
-    */
-  def profileLakeUnified(spark: SparkSession, dir: String, tables: Seq[String],
-                         withSketches: Boolean = true,
-                         rowCap: Option[Int] = None,
-                         withQuantiles: Boolean = true): DataFrame =
-    profileFromLong(
-      graft.sources.LakeScan.unifiedLongRows(spark, dir, tables, rowCap,
-        renderNumerics = withSketches),
-      withSketches, withQuantiles)
 }

@@ -28,19 +28,29 @@ object Discovery {
     * values. Output: (q_col_idx, q_col_name, cand_table, cand_col_idx,
     * cand_col_name, dist).
     */
-  def columnDistances(profiles: DataFrame, queryTable: String): DataFrame = {
+  def columnDistances(profiles: DataFrame, queryTable: String): DataFrame =
+    scoredPairs(profiles, queryTable)(
+      lit(1.0) - minhash_jaccard(col("q_mh"), col("cand_mh")))
+
+  /** Every same-type (query column, candidate column) pair scored by
+    * `dist`, which may read `q_mh`/`cand_mh` (exact-value digests) and
+    * `q_u`/`cand_u` (distinct counts). Same-type pruning matches the
+    * sketch semantics (cross-type value sets rarely overlap); the
+    * broadcast keeps this a map-side nested loop. Pairs with a null
+    * distance drop: zero-encoded "other" columns have no digest.
+    */
+  private def scoredPairs(profiles: DataFrame, queryTable: String)(dist: Column): DataFrame = {
+    def side(p: String): Seq[Column] = Seq(col("col_type").as(s"${p}_type"),
+      col("minhash_exact").as(s"${p}_mh"), col("unique").as(s"${p}_u"))
     val q = profiles.filter(col("table_name") === queryTable)
-      .select(col("col_idx").as("q_col_idx"), col("col_name").as("q_col_name"),
-        col("col_type").as("q_type"), col("minhash_exact").as("q_mh"))
+      .select(Seq(col("col_idx").as("q_col_idx"), col("col_name").as("q_col_name")) ++
+        side("q"): _*)
     val cands = profiles.filter(col("table_name") =!= queryTable)
-      .select(col("table_name").as("cand_table"), col("col_idx").as("cand_col_idx"),
-        col("col_name").as("cand_col_name"), col("col_type").as("cand_type"),
-        col("minhash_exact").as("cand_mh"))
-    // Same-type pruning matches the sketch semantics (cross-type value sets
-    // rarely overlap); the broadcast keeps this a map-side nested loop.
+      .select(Seq(col("table_name").as("cand_table"), col("col_idx").as("cand_col_idx"),
+        col("col_name").as("cand_col_name")) ++ side("cand"): _*)
     cands.join(broadcast(q), col("q_type") === col("cand_type"))
-      .withColumn("dist", lit(1.0) - minhash_jaccard(col("q_mh"), col("cand_mh")))
-      .filter(col("dist").isNotNull) // zero-encoded "other" columns have no digest
+      .withColumn("dist", dist)
+      .filter(col("dist").isNotNull)
       .select("q_col_idx", "q_col_name", "cand_table", "cand_col_idx",
         "cand_col_name", "dist")
   }
@@ -87,25 +97,12 @@ object Discovery {
 
   /** Q4 subset mode: distances by estimated containment(query ⊆ cand) —
     * ranks tables by how fully they CONTAIN the query's column values
-    * (the J5 estimator: j·(u_q+u_c) / ((1+j)·u_q)). Same broadcast
-    * nested-loop shape as [[columnDistances]].
+    * (the J5 estimator: j·(u_q+u_c) / ((1+j)·u_q)), over the same
+    * column pairs as [[columnDistances]].
     */
-  def columnDistancesContainment(profiles: DataFrame, queryTable: String): DataFrame = {
-    val q = profiles.filter(col("table_name") === queryTable)
-      .select(col("col_idx").as("q_col_idx"), col("col_name").as("q_col_name"),
-        col("col_type").as("q_type"), col("minhash_exact").as("q_mh"),
-        col("unique").as("q_u"))
-    val cands = profiles.filter(col("table_name") =!= queryTable)
-      .select(col("table_name").as("cand_table"), col("col_idx").as("cand_col_idx"),
-        col("col_name").as("cand_col_name"), col("col_type").as("cand_type"),
-        col("minhash_exact").as("cand_mh"), col("unique").as("cand_u"))
-    cands.join(broadcast(q), col("q_type") === col("cand_type"))
-      .withColumn("dist", lit(1.0) -
-        minhash_containment(col("q_mh"), col("cand_mh"), col("q_u"), col("cand_u")))
-      .filter(col("dist").isNotNull)
-      .select("q_col_idx", "q_col_name", "cand_table", "cand_col_idx",
-        "cand_col_name", "dist")
-  }
+  def columnDistancesContainment(profiles: DataFrame, queryTable: String): DataFrame =
+    scoredPairs(profiles, queryTable)(lit(1.0) -
+      minhash_containment(col("q_mh"), col("cand_mh"), col("q_u"), col("cand_u")))
 
   /** Top-k tables likely to be SUPERSETS of the query table (Q4 subset
     * search — the LakeBench subset benchmarks' semantics). */

@@ -4,7 +4,7 @@ import java.time.{LocalDate, LocalDateTime, LocalTime, ZoneId}
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.DateFunctions
@@ -39,24 +39,22 @@ import graft.ingest.RobustCsv
   *    gray zone (single-digit date fields, zone offsets, >6-digit
   *    fractions) or that would infer DecimalType reject the file.
   *
-  * Rejected files surface as one marker row each ([[RejectMarker]]) and
-  * fall back to the driver-side `RobustCsv` chain — the expected minority
+  * Rejected files surface as one reject row each (`LakeScan.rejectRow`)
+  * and fall back to the driver-side `RobustCsv` chain — the expected minority
   * (`data_prep.py:70-78`: most corpus files parse clean on the first try).
   * Tables with fewer than 5 data rows emit NOTHING (P4 — the driver chain
   * returns None for them; they are skipped, not rejected).
   */
 object CsvScan {
 
-  /** `col_name` of the per-file reject sentinel row; `col_type` carries
-    * the reject reason for diagnostics. */
-  val RejectMarker = "__graft_csv_reject__"
-
-  /** Decoded CSV lake: `cells` holds the accepted files' variant rows
+  /** A decoded lake — what both `scanLake`s return (this one and
+    * `LakeScan.scanLake`): `cells` holds the accepted inputs' variant rows
     * (backed by a persisted decode — the reject probe already
     * materialized it; call [[ScanResult.release]] to drop the cache:
     * unpersisting the filtered `cells` view would be a silent no-op,
     * Spark only uncaches plans that match the CACHED plan exactly);
-    * `rejected` lists the files needing the driver fallback chain. */
+    * `rejected` lists the inputs (CSV files, parquet tables) that need
+    * the driver-side reader. */
   final case class ScanResult(cells: DataFrame, rejected: Seq[String],
                               private val cached: DataFrame) {
     def release(): Unit = cached.unpersist()
@@ -90,51 +88,36 @@ object CsvScan {
   }
 
   /** One binaryFile scan + strict decode of a whole CSV lake. Runs the
-    * decode ONCE (persisted), probes the reject markers, and returns the
+    * decode ONCE (persisted), probes the reject rows, and returns the
     * accepted cell relation ready for `Profiler.profileFromLong(LakeScan
     * .renderLong(cells))` / `LakeScan.snapshotFromRaw(cells)`. */
   def scanLake(spark: SparkSession, nameByPath: Map[String, String],
                rowCap: Int = RobustCsv.RowCap): ScanResult = {
-    val cells = rawCells(spark, nameByPath, rowCap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (cached, _, marked) =
+      LakeScan.persistAndProbe(rawCells(spark, nameByPath, rowCap), "src_file")
     // report rejects in the CALLER's path space (binaryFile re-schemes
     // paths — file:/x vs /x — which would break nameByPath lookups)
     val byNorm = nameByPath.keys.map(p => normPath(p) -> p).toMap
-    val rejected = cells.filter(col("col_name") === lit(RejectMarker))
-      .select("src_file").distinct().collect()
-      .map(r => byNorm.getOrElse(normPath(r.getString(0)), r.getString(0)))
-      .toSeq.sorted
-    ScanResult(cells.filter(col("col_name") =!= lit(RejectMarker)), rejected, cells)
+    val rejected = marked.toSeq.map(p => byNorm.getOrElse(normPath(p), p)).sorted
+    // a rejected file's only row is its reject row
+    ScanResult(cached.filter(col("col_name") =!= lit(LakeScan.RejectMarker)),
+      rejected, cached)
   }
 
-  /** The raw decode: binaryFile scan over the listed files, flatMapped
-    * through [[decodeFile]] on the executors. Small lakes re-spread
-    * one-file-per-task (same rationale as [[LakeScan.rawCells]]). */
-  def rawCells(spark: SparkSession, nameByPath: Map[String, String],
-               rowCap: Int): DataFrame = {
+  /** The raw decode: the shared binaryFile scan over the listed files,
+    * each decoded by [[decodeFile]] on the executors. */
+  private def rawCells(spark: SparkSession, nameByPath: Map[String, String],
+                       rowCap: Int): DataFrame = {
     require(nameByPath.nonEmpty, "CsvScan needs at least one file")
-    val paths = nameByPath.keys.toSeq.sorted
-    val bin0 = spark.read.format("binaryFile").load(paths: _*)
-      .select(col("path"), col("content"))
-    val spread = math.max(paths.size, spark.sparkContext.defaultParallelism * 2)
-    val bin =
-      if (paths.size <= spark.sparkContext.defaultParallelism * 4)
-        bin0.repartition(spread)
-      else bin0
     val lookup = nameByPath.map { case (p, n) => normPath(p) -> n }
-    val zoneId = spark.sessionState.conf.sessionLocalTimeZone
+    val zone = ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
     val cap = rowCap
-    val enc = Encoders.row(LakeScan.RawSchema)
-    bin.as(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-      .mapPartitions { it =>
-        val zone = ZoneId.of(zoneId)
-        it.flatMap { case (path, bytes) =>
-          val name = lookup.getOrElse(normPath(path),
-            throw new IllegalStateException(
-              s"CsvScan: file $path matches no requested table"))
-          decodeFile(name, path, bytes, cap, zone)
-        }
-      }(enc)
+    LakeScan.binaryScan(spark, nameByPath.keys.toSeq.sorted, glob = None) { (path, bytes) =>
+      val name = lookup.getOrElse(normPath(path),
+        throw new IllegalStateException(
+          s"CsvScan: file $path matches no requested table"))
+      decodeFile(name, path, bytes, cap, zone)
+    }
   }
 
   /** Scheme-insensitive path key (`file:/x`, `file:///x` and `/x` all
@@ -240,18 +223,11 @@ object CsvScan {
     new com.univocity.parsers.csv.CsvParser(settings)
   }
 
-  /** Decode one CSV file into variant cell rows, or a reject marker. */
+  /** Decode one CSV file into variant cell rows, or a reject row. */
   private[sources] def decodeFile(table: String, path: String, raw: Array[Byte],
                                   rowCap: Int, zone: ZoneId): Iterator[Row] = {
-    def reject(reason: String): Iterator[Row] = {
-      val w = LakeScan.SlotBase + 9
-      val slots = new Array[Any](w)
-      slots(0) = table; slots(1) = 0; slots(2) = RejectMarker
-      slots(3) = reason; slots(4) = false; slots(6) = path
-      slots(w - 1) = false
-      Iterator.single(Row.fromSeq(
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(slots)))
-    }
+    def reject(reason: String): Iterator[Row] =
+      Iterator.single(LakeScan.rejectRow(table, path, reason))
 
     val bytes = try decompress(path, raw) catch {
       case _: java.io.IOException => return reject("undecompressable")
@@ -261,7 +237,7 @@ object CsvScan {
     if (bytes.length >= 3 && (bytes(0) & 0xff) == 0xef &&
         (bytes(1) & 0xff) == 0xbb && (bytes(2) & 0xff) == 0xbf)
       return reject("utf-8 bom")
-    val head = java.util.Arrays.copyOfRange(bytes, 0, math.min(bytes.length, 64 * 1024))
+    val head = java.util.Arrays.copyOfRange(bytes, 0, math.min(bytes.length, RobustCsv.HeadBytes))
     val charset = RobustCsv.detectCharsetFromBytes(head)
     if (charset != "UTF-8") return reject(s"charset $charset")
     val delim = RobustCsv.sniffDelimiterFromHead(
@@ -340,60 +316,48 @@ object CsvScan {
     // output column plan: base columns (minus row_index) then the
     // promoted *_DATE derivatives, in base-column order (same foldLeft
     // append order as the driver chain)
-    final case class Out(srcIdx: Int, name: String, colType: String, t: Int,
-                         datePromoted: Boolean, derivedDate: Boolean)
-    val baseOut = (0 until nCols).filter(_ != dropIdx).map { j =>
-      val ct = finalTypes(j) match {
-        case TInt | TLong => "integer"
-        case TDouble      => "float"
-        case TDate | TTs  => "date"
-        case TBool        => "string" // pandas bool→STRING (data_prep.py:103-108)
-        case _            => if (promoted(j)) "date" else "string"
+    final case class Out(srcIdx: Int, name: String, colType: String, slot: Int,
+                         datePromoted: Boolean, derivedDate: Boolean) {
+      /** The typed value of a non-null token, in [[slot]]'s type. */
+      def value(tok: String): Any = slot match {
+        case LakeScan.SlotLong   => java.lang.Long.parseLong(tok)
+        case LakeScan.SlotDouble => java.lang.Double.parseDouble(tok)
+        case LakeScan.SlotDate   => LocalDate.parse(tok).toEpochDay.toInt
+        case LakeScan.SlotBool   => java.lang.Boolean.valueOf(tok.equalsIgnoreCase("true"))
+        case LakeScan.SlotTs if derivedDate =>
+          // lenient_date_parse parity: Instant truncated to millis
+          DateFunctions.parseLenient(tok).map[Any](_.toEpochMilli * 1000L).orNull
+        case LakeScan.SlotTs     => tsMicros(tok, zone)
+        case _                   => tok
       }
-      Out(j, names0(j), ct, finalTypes(j), promoted(j), derivedDate = false)
+    }
+    val baseOut = (0 until nCols).filter(_ != dropIdx).map { j =>
+      val (ct, slot) = finalTypes(j) match {
+        case TInt | TLong => ("integer", LakeScan.SlotLong)
+        case TDouble      => ("float", LakeScan.SlotDouble)
+        case TDate        => ("date", LakeScan.SlotDate)
+        case TTs          => ("date", LakeScan.SlotTs)
+        case TBool        => ("string", LakeScan.SlotBool) // pandas bool→STRING (data_prep.py:103-108)
+        case _            => (if (promoted(j)) "date" else "string", LakeScan.SlotStr)
+      }
+      Out(j, names0(j), ct, slot, promoted(j), derivedDate = false)
     }
     val derivedOut = (0 until nCols).filter(j => j != dropIdx && promoted(j))
-      .map(j => Out(j, names0(j) + "_DATE", "date", TTs, datePromoted = false,
-        derivedDate = true))
+      .map(j => Out(j, names0(j) + "_DATE", "date", LakeScan.SlotTs,
+        datePromoted = false, derivedDate = true))
     val outs = (baseOut ++ derivedOut).zipWithIndex
 
-    val w = LakeScan.SlotBase + 9
-    def cellRows(toks: Array[String], rowId: Long): Iterator[Row] =
+    def cellRows(toks: Array[String], rowId: Long): Iterator[Row] = {
+      val rid: java.lang.Long = rowId
       outs.iterator.map { case (o, idx) =>
-        val slots = new Array[Any](w)
-        slots(0) = table; slots(1) = idx; slots(2) = o.name
-        slots(3) = o.colType; slots(4) = true; slots(5) = rowId; slots(6) = path
         val tok = toks(o.srcIdx)
-        if (tok != null) {
-          if (o.derivedDate)
-            // lenient_date_parse parity: Instant truncated to millis
-            DateFunctions.parseLenient(tok).foreach { i =>
-              slots(LakeScan.SlotBase + LakeScan.SlotTs) = i.toEpochMilli * 1000L
-            }
-          else o.t match {
-            case TInt | TLong =>
-              slots(LakeScan.SlotBase + LakeScan.SlotLong) = java.lang.Long.parseLong(tok)
-            case TDouble =>
-              slots(LakeScan.SlotBase + LakeScan.SlotDouble) = java.lang.Double.parseDouble(tok)
-            case TDate =>
-              slots(LakeScan.SlotBase + LakeScan.SlotDate) = LocalDate.parse(tok).toEpochDay.toInt
-            case TTs =>
-              slots(LakeScan.SlotBase + LakeScan.SlotTs) = tsMicros(tok, zone)
-            case TBool =>
-              slots(LakeScan.SlotBase + LakeScan.SlotBool) = java.lang.Boolean.valueOf(tok.equalsIgnoreCase("true"))
-            case _ =>
-              slots(LakeScan.SlotBase + LakeScan.SlotStr) = tok
-          }
-        }
-        slots(w - 1) = o.datePromoted
-        Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(slots))
+        LakeScan.rawRow(table, idx, o.name, o.colType, present = true, rid, path,
+          o.slot, if (tok == null) null else o.value(tok), o.datePromoted)
       }
+    }
     val sentinels = outs.iterator.map { case (o, idx) =>
-      val slots = new Array[Any](w)
-      slots(0) = table; slots(1) = idx; slots(2) = o.name
-      slots(3) = o.colType; slots(4) = false; slots(6) = path
-      slots(w - 1) = o.datePromoted
-      Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(slots))
+      LakeScan.rawRow(table, idx, o.name, o.colType, present = false, null, path,
+        o.slot, null, o.datePromoted)
     }
     kept.iterator.zipWithIndex.flatMap { case (toks, rid) =>
       cellRows(toks, rid.toLong) } ++ sentinels

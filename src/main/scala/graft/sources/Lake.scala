@@ -64,6 +64,16 @@ object Lake {
     "events" -> Seq("event_id"), "documents" -> Seq("doc_id"),
     "embeddings" -> Seq("vec_id"))
 
+  /** The tables of a parquet lake: every `*.parquet` entry (a file, or a
+    * directory of part files) directly under `dir`, listed through the
+    * Hadoop FS, so `dir` may be a plain path or a URI. */
+  def listTables(spark: SparkSession, dir: String): Seq[String] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(path).toSeq
+      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+      .map(_.stripSuffix(".parquet")).sorted
+  }
+
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
     read(spark, dir, name, None)
 

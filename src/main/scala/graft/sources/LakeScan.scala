@@ -27,10 +27,10 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * executor works).
   *
   * Scale posture: a file is decoded WHOLE inside one task (binaryFile
-  * semantics), so this path targets the many-small-tables lake shape the
-  * reference profiles (≤ tens of MB per table, O1-capped at 10k rows).
-  * Few-huge-tables lakes keep the per-table `Lake.read` + `Profiler
-  * .profile` path, whose parquet scans split by row group.
+  * semantics); the keyed row cap bounds a task's memory to O(cap × width)
+  * however large the file. `SketchBuild.build` reads every parquet lake
+  * through [[scanLake]]; only the tables it rejects take the per-table
+  * `Lake.read` path.
   *
   * Value-rendering parity is BY CONSTRUCTION: the decoder only moves
   * typed values into a fixed variant schema (one slot per physical type);
@@ -74,7 +74,66 @@ object LakeScan {
   private[sources] val SlotFloat = 2; private[sources] val SlotDouble = 3
   private[sources] val SlotTs = 4; private[sources] val SlotDate = 5
   private[sources] val SlotBool = 6; private[sources] val SlotArr = 7
-  private[sources] val SlotBase = 7
+  private val SlotBase = 7
+  private val Width = SlotBase + 9 // 8 typed slots + date_promoted
+
+  /** `col_name` of a per-file reject row: the decoder cannot express the
+    * file, and `col_type` carries the reason. */
+  private[sources] val RejectMarker = "__graft_reject__"
+
+  /** The one constructor of [[RawSchema]] rows. A data cell is `present`
+    * with its row ordinal and (unless null) its value in `slot`; a schema
+    * sentinel passes `present = false` and nulls. */
+  private[sources] def rawRow(table: String, colIdx: Int, colName: String,
+                              colType: String, present: Boolean,
+                              rowId: java.lang.Long, srcFile: String,
+                              slot: Int, value: Any, datePromoted: Boolean): Row = {
+    val slots = new Array[Any](Width)
+    slots(0) = table; slots(1) = colIdx; slots(2) = colName; slots(3) = colType
+    slots(4) = present; slots(5) = rowId; slots(6) = srcFile
+    if (value != null) slots(SlotBase + slot) = value
+    slots(Width - 1) = datePromoted
+    Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(slots))
+  }
+
+  private[sources] def rejectRow(table: String, srcFile: String, reason: String): Row =
+    rawRow(table, 0, RejectMarker, reason, present = false, null, srcFile, 0, null,
+      datePromoted = false)
+
+  /** The binaryFile scan both decoders share: load `paths` (keeping only
+    * leaves that match `glob`), spread small lakes one file per task, and
+    * `decode` each (path, bytes) into [[RawSchema]] rows on the executors.
+    * binaryFile's open-cost packing would otherwise put a small lake in
+    * one task; a large lake already arrives with ample partitions. The
+    * spread is round-robin, so each row (one file) gets its own task up to
+    * the partition count.
+    */
+  private[sources] def binaryScan(spark: SparkSession, paths: Seq[String],
+                                  glob: Option[String])(
+      decode: (String, Array[Byte]) => Iterator[Row]): DataFrame = {
+    val reader = spark.read.format("binaryFile")
+    val bin0 = glob.fold(reader)(g => reader.option("pathGlobFilter", g))
+      .load(paths: _*).select(col("path"), col("content"))
+    val dp = spark.sparkContext.defaultParallelism
+    val bin =
+      if (paths.size <= dp * 4) bin0.repartition(math.max(paths.size, dp * 2))
+      else bin0
+    bin.as(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
+      .mapPartitions(_.flatMap { case (path, bytes) => decode(path, bytes) })(
+        Encoders.row(RawSchema))
+  }
+
+  /** Persist a decode and probe it in one small job over its
+    * `present = false` rows (schema sentinels and reject rows): every
+    * `key` value that decoded, and those with a reject row. */
+  private[sources] def persistAndProbe(decoded: DataFrame, key: String)
+      : (DataFrame, Set[String], Set[String]) = {
+    val cached = decoded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val probe = cached.filter(!col("present"))
+      .select(col(key), col("col_name") === lit(RejectMarker)).distinct().collect()
+    (cached, probe.map(_.getString(0)).toSet,
+      probe.filter(_.getBoolean(1)).map(_.getString(0)).toSet)
+  }
 
   /** Per-column decode plan: field position, reference-logical type, the
     * variant slot, and the (already-null-checked) value extractor.
@@ -129,15 +188,15 @@ object LakeScan {
 
   /** Map a parquet schema to decode plans. Types are the driver-lake /
     * reference-corpus surface (ints, floats, strings, bools, dates,
-    * ms/us/ns timestamps, float-list embeddings); anything else fails
-    * loudly — the per-table path handles exotic schemas.
+    * ms/us/ns timestamps, float-list embeddings); anything else throws
+    * `UnsupportedOperationException`, which [[readFile]] turns into the
+    * file's reject row.
     */
   private def planFor(schema: MessageType, table: String,
                       promoted: Set[String]): Array[ColPlan] = {
     schema.getFields.asScala.zipWithIndex.map { case (t, i) =>
       def unsupported(what: String) = throw new UnsupportedOperationException(
-        s"LakeScan: unsupported $what for column '${t.getName}' of table " +
-          s"'$table' — profile it through the per-table Lake.read path")
+        s"LakeScan: unsupported $what for column '${t.getName}' of table '$table'")
       if (t.isPrimitive) {
         val ann = t.asPrimitiveType().getLogicalTypeAnnotation
         t.asPrimitiveType().getPrimitiveTypeName match {
@@ -421,7 +480,8 @@ object LakeScan {
   }
 
   /** Decode one table file into variant cell rows (+ one `present=false`
-    * sentinel per column). `rowCap` keeps the first N rows BY TABLE KEY
+    * sentinel per column), or one reject row when [[planFor]] cannot
+    * express its schema. `rowCap` keeps the first N rows BY TABLE KEY
     * (O1, same semantics as `Lake.read(rowCap)`) via a bounded heap —
     * memory O(cap × width) however large the file; unkeyed tables cap in
     * file order and stop reading early.
@@ -447,29 +507,28 @@ object LakeScan {
     // onlyCols: projection pushdown for the scoped key-extraction pass —
     // plans keep their ORIGINAL parquet field idx, data arrays are
     // positional over the (possibly filtered) plan list
-    val plans = {
-      val all = planFor(schema, table, promoted)
-      onlyCols.map(cs => all.filter(p => cs.contains(p.name))).getOrElse(all)
-    }
-    val width = SlotBase + 9 // 8 typed slots + date_promoted
-
-    def rowsOf(vals: Array[Any], rowId: Long): Iterator[Row] =
-      plans.iterator.zipWithIndex.map { case (p, pos) =>
-        val slots = new Array[Any](width)
-        slots(0) = table; slots(1) = p.idx; slots(2) = p.name
-        slots(3) = p.colType; slots(4) = true; slots(5) = rowId; slots(6) = path
-        if (vals(pos) != null) slots(SlotBase + p.slot) = vals(pos)
-        slots(width - 1) = p.datePromoted
-        Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(slots))
+    val plans =
+      try {
+        val all = planFor(schema, table, promoted)
+        onlyCols.map(cs => all.filter(p => cs.contains(p.name))).getOrElse(all)
+      } catch {
+        case e: UnsupportedOperationException =>
+          in.close()
+          return Iterator.single(rejectRow(table, path, e.getMessage))
       }
+
+    def rowsOf(vals: Array[Any], rowId: Long): Iterator[Row] = {
+      val rid: java.lang.Long = rowId
+      plans.iterator.zipWithIndex.map { case (p, pos) =>
+        rawRow(table, p.idx, p.name, p.colType, present = true, rid, path,
+          p.slot, vals(pos), p.datePromoted)
+      }
+    }
+    // src_file set on sentinels too: the multi-file cap detection and
+    // snapshot empty-table rows key off the per-(table, file) sentinels
     val sentinels = plans.iterator.map { p =>
-      val slots = new Array[Any](width)
-      slots(0) = table; slots(1) = p.idx; slots(2) = p.name
-      // src_file set on sentinels too: the multi-file cap detection and
-      // snapshot empty-table rows key off the per-(table, file) sentinels
-      slots(3) = p.colType; slots(4) = false; slots(6) = path
-      slots(width - 1) = p.datePromoted
-      Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(slots))
+      rawRow(table, p.idx, p.name, p.colType, present = false, null, path,
+        p.slot, null, p.datePromoted)
     }
 
     val keyIdxs = keys.get(table)
@@ -499,133 +558,64 @@ object LakeScan {
     dataRows ++ sentinels
   }
 
-  /** One multi-path binaryFile scan over `tables` → decoded variant rows.
-    * Small lakes are re-spread one-file-per-task (binaryFile's open-cost
-    * packing would otherwise put the whole driver lake in one task);
-    * large lakes keep the natural packing — at 40k files the scan already
-    * yields ample partitions.
+  /** One binaryFile scan + decode of the parquet `tables` under `dir`,
+    * the contract `CsvScan.scanLake` has for CSV files. The decode runs
+    * ONCE (persisted) and one probe job reads its reject rows. A table is
+    * `rejected` whole when any of its part files has a schema [[planFor]]
+    * cannot express, or when it decoded no file at all (a directory with
+    * no parquet leaf): the caller reads those through `Lake.read`, which
+    * raises on the latter instead of letting the table drop silently out
+    * of the catalog. `cells` holds every other table's variant rows, ready
+    * for `Profiler.profileFromLong(renderLong(cells))` /
+    * [[snapshotFromRaw]]; `release()` drops the persisted decode.
     */
-  def rawCells(spark: SparkSession, dir: String, tables: Seq[String],
-               rowCap: Option[Int]): DataFrame = {
-    val cells = decodeScan(spark, dir, tables, rowCap)
-    rowCap match {
+  def scanLake(spark: SparkSession, dir: String, tables: Seq[String],
+               rowCap: Option[Int]): CsvScan.ScanResult = {
+    val raw = decodeScan(spark, dir, tables, rowCap)
+    val capped = rowCap match {
       case Some(cap) =>
         // the per-file keyed heap is only a PRE-filter when a keyed table
-        // spans several part files — re-select the global top-cap rows
-        val multiKeyed = multiFileKeyedTables(spark, dir, tables)
-        if (multiKeyed.isEmpty) cells
-        else globalKeyedCap(spark, dir, cells, multiKeyed, cap)
-      case None => cells
+        // spans several part files (as the scan listed them, partition
+        // subdirs included) — re-select the global top-cap rows
+        val nFiles = raw.inputFiles.toSeq.groupBy(tableOf(tables, _)).map {
+          case (t, fs) => t -> fs.size }
+        val multiKeyed = tables.filter(t =>
+          Lake.TableKeys.contains(t) && nFiles.getOrElse(t, 0) > 1)
+        if (multiKeyed.isEmpty) raw else globalKeyedCap(spark, dir, raw, multiKeyed, cap)
+      case None => raw
     }
+    val (cached, decoded, marked) = persistAndProbe(capped, "table_name")
+    val rejected = tables.filter(t => marked(t) || !decoded(t)).sorted
+    val unmarked = cached.filter(col("col_name") =!= lit(RejectMarker))
+    val cells =
+      if (rejected.isEmpty) unmarked
+      else unmarked.filter(!col("table_name").isin(rejected: _*))
+    CsvScan.ScanResult(cells, rejected, cached)
   }
+
+  /** The requested table a scanned file belongs to, resolved from the
+    * REQUESTED names (deepest match wins), not by grabbing a '.parquet'
+    * path segment — a lake directory itself named '*.parquet' would
+    * otherwise swallow every table into one name. */
+  private def tableOf(tables: Seq[String], path: String): String =
+    tables.filter { t =>
+      path.endsWith(s"/$t.parquet") || path.contains(s"/$t.parquet/")
+    }.sortBy(t => path.lastIndexOf(s"/$t.parquet")).lastOption
+      .getOrElse(throw new IllegalStateException(
+        s"LakeScan: file $path matches no requested table"))
 
   private def decodeScan(spark: SparkSession, dir: String, tables: Seq[String],
                          rowCap: Option[Int],
                          onlyCols: Option[Set[String]] = None): DataFrame = {
     require(tables.nonEmpty, "LakeScan needs at least one table")
-    val paths = tables.map(t => s"$dir/$t.parquet")
-    // pathGlobFilter: Spark-written tables are DIRECTORIES of part files
-    // (plus _SUCCESS markers) — keep only parquet leaves
-    val bin0 = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.parquet").load(paths: _*)
-      .select(col("path"), col("content"))
-    // re-spread decode work: round-robin (no hash collisions — each row IS
-    // one file, so this is genuinely one-file-per-task up to the partition
-    // count); large lakes already arrive with ample partitions
-    val spread = math.max(tables.size, spark.sparkContext.defaultParallelism * 2)
-    val bin =
-      if (tables.size <= spark.sparkContext.defaultParallelism * 4)
-        bin0.repartition(spread)
-      else bin0
     val keyMap = Lake.TableKeys
     val cap = rowCap
-    // resolve each file to its table from the REQUESTED names (deepest
-    // match wins), not by grabbing a '.parquet' path segment — a lake
-    // directory itself named '*.parquet' would otherwise swallow every
-    // table into one name
-    val known = tables.toArray
+    val known = tables.toVector
     val only = onlyCols
-    val enc = Encoders.row(RawSchema)
-    bin.as(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-      .mapPartitions { it =>
-        it.flatMap { case (path, bytes) =>
-          val name = known.filter { t =>
-            path.endsWith(s"/$t.parquet") || path.contains(s"/$t.parquet/")
-          }.sortBy(t => path.lastIndexOf(s"/$t.parquet")).lastOption
-            .getOrElse(throw new IllegalStateException(
-              s"LakeScan: file $path matches no requested table"))
-          readFile(name, path, bytes, keyMap, cap, only)
-        }
-      }(enc)
-  }
-
-  /** Parquet-footer supportability probe: the tables whose schema the
-    * unified decoder cannot express (decimals, maps/structs, non-float
-    * lists — [[planFor]]'s loud-error surface). ONE footer per table,
-    * read on the EXECUTORS in a single tiny metadata-only job — no
-    * driver loop, so a 40k-table probe is still one job. Callers route
-    * the returned tables through the per-table `Lake.read` path.
-    */
-  def unsupportedTables(spark: SparkSession, dir: String,
-                        tables: Seq[String]): Seq[String] = {
-    if (tables.isEmpty) return Nil
-    // hadoop conf as a plain serializable map (SerializableConfiguration
-    // is private[spark]); executors rebuild it for FS access
-    val confMap = spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => (e.getKey, e.getValue)).toArray
-    val d = dir
-    spark.sparkContext.parallelize(tables, math.min(tables.size,
-        math.max(1, spark.sparkContext.defaultParallelism)))
-      .filter { t =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confMap.foreach { case (k, v) => conf.set(k, v) }
-        val p = new org.apache.hadoop.fs.Path(s"$d/$t.parquet")
-        val fs = p.getFileSystem(conf)
-        val leaf =
-          if (fs.getFileStatus(p).isFile) p
-          else {
-            val it = fs.listFiles(p, true)
-            var found: org.apache.hadoop.fs.Path = null
-            while (found == null && it.hasNext) {
-              val s = it.next()
-              if (s.isFile && s.getPath.getName.endsWith(".parquet")) found = s.getPath
-            }
-            found
-          }
-        leaf == null || {
-          val in = ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(leaf, conf))
-          try {
-            try { planFor(in.getFooter.getFileMetaData.getSchema, t, Set.empty); false }
-            catch { case _: UnsupportedOperationException => true }
-          } finally in.close()
-        }
-      }.collect().toSeq.sorted
-  }
-
-  /** Keyed tables stored as MORE than one parquet leaf — detected from a
-    * driver-side FS listing (metadata only, the same listing the
-    * binaryFile load performs; no Spark jobs, no per-table plans). */
-  private def multiFileKeyedTables(spark: SparkSession, dir: String,
-                                   tables: Seq[String]): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    tables.filter(Lake.TableKeys.contains).filter { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
-      try {
-        val fs = p.getFileSystem(conf)
-        fs.getFileStatus(p).isDirectory && {
-          // RECURSIVE leaf walk: binaryFile enumerates partition subdirs
-          // (key=value layouts), so the multi-file test must see the same
-          // leaves a direct-children listStatus would miss
-          val it = fs.listFiles(p, true)
-          var n = 0
-          while (n <= 1 && it.hasNext) {
-            val s = it.next()
-            if (s.isFile && s.getPath.getName.endsWith(".parquet")) n += 1
-          }
-          n > 1
-        }
-      } catch { case _: java.io.FileNotFoundException => false }
+    // pathGlobFilter: Spark-written tables are DIRECTORIES of part files
+    // (plus _SUCCESS markers) — keep only parquet leaves
+    binaryScan(spark, tables.map(t => s"$dir/$t.parquet"), Some("*.parquet")) {
+      (path, bytes) => readFile(tableOf(known, path), path, bytes, keyMap, cap, only)
     }
   }
 
@@ -737,27 +727,13 @@ object LakeScan {
     raw.select(base ++ extra: _*)
   }
 
-  /** Long-format cell relation for a whole lake (the E1 "Spark shape"):
-    * ONE scan + flatMap however many tables, ready for the single
-    * `groupBy(table_name, col_idx)` profile.
+  /** Whole-table content snapshots of a decoded variant cell relation in
+    * ONE job (A13 at lake scale): reassemble each row's space-joined
+    * string relationally (group cells by (table, file, row), order by
+    * col_idx, concat_ws — nulls drop, empty strings stay, exactly
+    * `Profiler.contentSnapshot`'s `concat_ws(" ", cols…)`), then one
+    * MinHash aggregation per table. Shared by both decoders.
     */
-  def unifiedLongRows(spark: SparkSession, dir: String, tables: Seq[String],
-                      rowCap: Option[Int], renderNumerics: Boolean = true): DataFrame =
-    renderLong(rawCells(spark, dir, tables, rowCap), renderNumerics)
-
-  /** Whole-table content snapshots for a lake in ONE job (A13 at lake
-    * scale): reassemble each row's space-joined string relationally
-    * (group cells by (table, row), order by col_idx, concat_ws — nulls
-    * drop, empty strings stay, exactly `Profiler.contentSnapshot`'s
-    * `concat_ws(" ", cols…)`), then one MinHash aggregation per table.
-    */
-  def snapshotLakeUnified(spark: SparkSession, dir: String, tables: Seq[String],
-                          rowCap: Option[Int]): DataFrame =
-    snapshotFromRaw(rawCells(spark, dir, tables, rowCap))
-
-  /** [[snapshotLakeUnified]]'s aggregate over an already-decoded variant
-    * cell relation — shared by the parquet scan above and the CSV lake
-    * decoder ([[CsvScan]]). */
   def snapshotFromRaw(raw: DataFrame): DataFrame = {
     val all = renderLong(raw, withRaw = true)
     val rowStrs = all.filter(col("present"))

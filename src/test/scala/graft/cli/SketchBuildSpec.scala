@@ -107,13 +107,41 @@ class SketchBuildSpec extends SparkSpec {
       canon(Profiler.profile(Lake.read(spark, dir, "money"), "money")))
     assert(canonSnap(catalog.snapshots.filter(col("table_name") === "money")) ==
       canonSnap(Profiler.contentSnapshot(money, "money")))
-    // the plain table is the unified decoder's
+    // the plain table is the lake scan's
+    val scan = LakeScan.scanLake(spark, dir, Seq("plain"), Some(RobustCsv.RowCap))
     assert(canon(catalog.profiles.filter(col("table_name") === "plain")) ==
-      canon(Profiler.profileLakeUnified(spark, dir, Seq("plain"),
-        rowCap = Some(RobustCsv.RowCap))))
+      canon(Profiler.profileFromLong(LakeScan.renderLong(scan.cells))))
     assert(canonSnap(catalog.snapshots.filter(col("table_name") === "plain")) ==
-      canonSnap(LakeScan.snapshotLakeUnified(spark, dir, Seq("plain"),
-        Some(RobustCsv.RowCap))))
+      canonSnap(LakeScan.snapshotFromRaw(scan.cells)))
+    scan.release()
     catalog.release()
+  }
+
+  test("parquet lake given as a file:// URI builds the same catalog as its path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_build_uri")
+    (1 to 8).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+      .write.mode("overwrite").parquet(dir.resolve("a.parquet").toString)
+    (1 to 6).map(i => (i.toLong, i * 1.5)).toDF("k", "x").coalesce(1)
+      .write.mode("overwrite").parquet(dir.resolve("b.parquet").toString)
+    val byUri = SketchBuild.build(spark, dir.toUri.toString)
+    val byPath = SketchBuild.build(spark, dir.toString)
+    assert(byUri.profiles.select("table_name").distinct().as[String].collect().sorted
+      .toSeq == Seq("a", "b"))
+    assert(canon(byUri.profiles) == canon(byPath.profiles))
+    assert(canonSnap(byUri.snapshots) == canonSnap(byPath.snapshots))
+    byUri.release()
+    byPath.release()
+  }
+
+  test("a parquet table with no parquet leaf fails the build, not vanishes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_build_hollow")
+    Seq((1L, "x"), (2L, "y")).toDF("id", "v")
+      .write.mode("overwrite").parquet(dir.resolve("plain.parquet").toString)
+    val hollow = java.nio.file.Files.createDirectory(dir.resolve("hollow.parquet"))
+    java.nio.file.Files.createFile(hollow.resolve("_SUCCESS"))
+    val scan = LakeScan.scanLake(spark, dir.toString, Seq("hollow", "plain"), Some(10))
+    assert(scan.rejected == Seq("hollow"))
+    scan.release()
+    intercept[org.apache.spark.sql.AnalysisException](SketchBuild.build(spark, dir.toString))
   }
 }

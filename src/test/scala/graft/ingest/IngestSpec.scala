@@ -56,11 +56,10 @@ class RobustCsvSpec extends SparkSpec {
     assert(df.filter(df("when_DATE").isNull).count() == 0)
     // the ORIGINAL column keeps string values but is re-classified DATE
     // for type votes (get_types split, data_prep.py:92-98)
-    val meta = graft.profile.Profiler.colMeta(spark, df).collect()
-      .map(r => r.getAs[String]("col_name") -> r.getAs[String]("col_type")).toMap
-    assert(meta("when") == "date")
-    assert(meta("when_DATE") == "date")
-    assert(meta("id") == "integer")
+    def logicalType(c: String) = graft.profile.Profiler.logicalType(df.schema(c))
+    assert(logicalType("when") == "date")
+    assert(logicalType("when_DATE") == "date")
+    assert(logicalType("id") == "integer")
     assert(df.schema("when").dataType == org.apache.spark.sql.types.StringType)
   }
 

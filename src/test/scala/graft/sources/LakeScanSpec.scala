@@ -4,11 +4,12 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.profile.Profiler
 
-/** The unified single-job lake profiler must be BIT-IDENTICAL to the
-  * per-table loop path on every stat, digest, and quantile — the loop
-  * path is oracle-verified against DuckDB, so parity transfers that
-  * verification to the unified path. Plus the planning property that
-  * motivates it: ONE aggregate subtree regardless of table count.
+/** The lake scan (`LakeScan.scanLake` → `renderLong` → one
+  * `Profiler.profileFromLong`, and `snapshotFromRaw`) must be
+  * BIT-IDENTICAL to the per-table loop path on every stat, digest, and
+  * quantile — the loop path is oracle-verified against DuckDB, so parity
+  * transfers that verification to the scan. Plus the planning property
+  * that motivates it: ONE aggregate subtree regardless of table count.
   */
 class LakeScanSpec extends SparkSpec {
 
@@ -29,6 +30,19 @@ class LakeScanSpec extends SparkSpec {
     rounded.orderBy("table_name", "col_idx").toJSON.collect().toSeq
   }
 
+  /** Run `f` over the accepted cells of one lake scan, then release it. */
+  private def scanned[A](d: String, ts: Seq[String], rowCap: Option[Int] = None)(
+      f: org.apache.spark.sql.DataFrame => A): A = {
+    val scan = LakeScan.scanLake(spark, d, ts, rowCap)
+    try f(scan.cells) finally scan.release()
+  }
+
+  /** The unified profile of scanned cells (one keyed aggregate). */
+  private def profileOf(cells: org.apache.spark.sql.DataFrame,
+                        withSketches: Boolean = true) =
+    Profiler.profileFromLong(LakeScan.renderLong(cells, renderNumerics = withSketches),
+      withSketches)
+
   private def assertParity(unified: org.apache.spark.sql.DataFrame,
                            loop: org.apache.spark.sql.DataFrame): Unit = {
     val (cu, cl) = (canon(unified), canon(loop))
@@ -40,17 +54,17 @@ class LakeScanSpec extends SparkSpec {
     }
   }
 
-  test("profileLakeUnified == profileLake on the full driver lake (sketches, cap)") {
+  test("lake-scan profile == profileLake on the driver lake (sketches, cap)") {
     val loop = Profiler.profileLake(spark, dir, tables, rowCap = Some(10000))
-    val unified = Profiler.profileLakeUnified(spark, dir, tables, rowCap = Some(10000))
-    assertParity(unified, loop)
+    scanned(dir, tables, Some(10000)) { cells => assertParity(profileOf(cells), loop) }
   }
 
-  test("profileLakeUnified == profileLake without sketches or cap") {
+  test("lake-scan profile == profileLake without sketches or cap") {
     val sub = Seq("nation", "orders", "events", "embeddings")
     val loop = Profiler.profileLake(spark, dir, sub, withSketches = false)
-    val unified = Profiler.profileLakeUnified(spark, dir, sub, withSketches = false)
-    assertParity(unified, loop)
+    scanned(dir, sub) { cells =>
+      assertParity(profileOf(cells, withSketches = false), loop)
+    }
   }
 
   test("keyed row cap selects the same rows on a file-shuffled table") {
@@ -62,8 +76,7 @@ class LakeScanSpec extends SparkSpec {
       .orderBy(expr("hash(n_nationkey)")).coalesce(1)
       .write.mode("overwrite").parquet(s"$tmp/nation.parquet")
     val loop = Profiler.profileLake(spark, tmp, Seq("nation"), rowCap = Some(10))
-    val unified = Profiler.profileLakeUnified(spark, tmp, Seq("nation"), rowCap = Some(10))
-    assertParity(unified, loop)
+    scanned(tmp, Seq("nation"), Some(10)) { cells => assertParity(profileOf(cells), loop) }
   }
 
   test("edge schemas: bools, real DATE columns, empty strings, all-null column") {
@@ -78,25 +91,24 @@ class LakeScanSpec extends SparkSpec {
       .toDF("id", "s", "b", "d", "ts", "dead")
       .write.mode("overwrite").parquet(s"$tmp/edge.parquet")
     val loop = Profiler.profileLake(spark, tmp, Seq("edge"))
-    val unified = Profiler.profileLakeUnified(spark, tmp, Seq("edge"))
-    assertParity(unified, loop)
+    scanned(tmp, Seq("edge")) { cells => assertParity(profileOf(cells), loop) }
   }
 
-  test("snapshotLakeUnified matches per-table contentSnapshot digests") {
+  test("lake-scan snapshots match per-table contentSnapshot digests") {
     val snapTables = Seq("region", "nation", "supplier", "orders")
     val loop = snapTables.map(t =>
         Profiler.contentSnapshot(Lake.read(spark, dir, t, Some(10000)), t))
       .reduce(_ unionByName _)
-    val unified = LakeScan.snapshotLakeUnified(spark, dir, snapTables, Some(10000))
     def c(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("table_name").toJSON.collect().toSeq
-    assert(c(unified) == c(loop))
+    scanned(dir, snapTables, Some(10000)) { cells =>
+      assert(c(LakeScan.snapshotFromRaw(cells)) == c(loop))
+    }
   }
 
   test("unified plan: ONE aggregate subtree and zero unions regardless of table count") {
     def planOf(ts: Seq[String]) =
-      Profiler.profileLakeUnified(spark, dir, ts, rowCap = Some(10000))
-        .queryExecution.optimizedPlan
+      scanned(dir, ts, Some(10000))(profileOf(_).queryExecution.optimizedPlan)
     def aggCount(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
       p.collect { case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }.size
     def unionCount(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
@@ -123,8 +135,7 @@ class LakeScanSpec extends SparkSpec {
       .orderBy(expr("hash(c_custkey)")).repartition(3)
       .write.mode("overwrite").parquet(s"$tmp/customer.parquet")
     val loop = Profiler.profileLake(spark, tmp, Seq("customer"), rowCap = Some(40))
-    val unified = Profiler.profileLakeUnified(spark, tmp, Seq("customer"), rowCap = Some(40))
-    assertParity(unified, loop)
+    scanned(tmp, Seq("customer"), Some(40)) { cells => assertParity(profileOf(cells), loop) }
   }
 
   test("date-promoted staging parquet keeps its 'date' classification") {
@@ -137,13 +148,15 @@ class LakeScanSpec extends SparkSpec {
     assert(Profiler.logicalType(staged.schema("when_str")) == "date") // fixture sane
     staged.write.mode("overwrite").parquet(s"$tmp/dated.parquet")
     val loop = Profiler.profileLake(spark, tmp, Seq("dated"))
-    val unified = Profiler.profileLakeUnified(spark, tmp, Seq("dated"))
-    // the promoted column must be CLASSIFIED date while its values stay
-    // strings (P2 applied) — and the whole profile must stay bit-identical
-    val ct = unified.filter(col("col_name") === "when_str")
-      .select("col_type").collect().map(_.getString(0)).toSeq
-    assert(ct == Seq("date"), s"promoted column classified $ct")
-    assertParity(unified, loop)
+    scanned(tmp, Seq("dated")) { cells =>
+      val unified = profileOf(cells)
+      // the promoted column must be CLASSIFIED date while its values stay
+      // strings (P2 applied) — and the whole profile must stay bit-identical
+      val ct = unified.filter(col("col_name") === "when_str")
+        .select("col_type").collect().map(_.getString(0)).toSeq
+      assert(ct == Seq("date"), s"promoted column classified $ct")
+      assertParity(unified, loop)
+    }
   }
 
   test("lake directory itself named *.parquet resolves table names correctly") {
@@ -156,9 +169,10 @@ class LakeScanSpec extends SparkSpec {
     Seq((10L, 1.5), (20L, 2.5), (30L, 3.5))
       .toDF("k", "x").coalesce(1)
       .write.mode("overwrite").parquet(s"$lakeDir/b.parquet")
-    val prof = Profiler.profileLakeUnified(spark, lakeDir, Seq("a", "b"))
-    val rows = prof.select("table_name", "rows").distinct().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val rows = scanned(lakeDir, Seq("a", "b")) { cells =>
+      profileOf(cells).select("table_name", "rows").distinct().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
     assert(rows == Map("a" -> 5L, "b" -> 3L),
       s"tables merged or misnamed: $rows")
   }
@@ -170,10 +184,12 @@ class LakeScanSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$tmp/hollow.parquet")
     val perTable = Profiler.contentSnapshot(
       spark.read.parquet(s"$tmp/hollow.parquet"), "hollow")
-    val unified = LakeScan.snapshotLakeUnified(spark, tmp, Seq("hollow"), Some(10000))
     def c(df: org.apache.spark.sql.DataFrame) = df.toJSON.collect().toSeq
-    assert(unified.count() == 1, "empty table dropped from unified snapshots")
-    assert(c(unified) == c(perTable))
+    scanned(tmp, Seq("hollow"), Some(10000)) { cells =>
+      val unified = LakeScan.snapshotFromRaw(cells)
+      assert(unified.count() == 1, "empty table dropped from unified snapshots")
+      assert(c(unified) == c(perTable))
+    }
   }
 
   test("multi-part table named like a keyed table but WITHOUT key columns is not emptied") {
@@ -186,8 +202,9 @@ class LakeScanSpec extends SparkSpec {
     (1 to 30).map(i => (s"n$i", i * 1.0)).toDF("name", "amount")
       .repartition(2)
       .write.mode("overwrite").parquet(s"$tmp/orders.parquet")
-    val prof = Profiler.profileLakeUnified(spark, tmp, Seq("orders"), rowCap = Some(100))
-    val rows = prof.select("rows").distinct().collect().map(_.getLong(0)).toSeq
+    val rows = scanned(tmp, Seq("orders"), Some(100)) { cells =>
+      profileOf(cells).select("rows").distinct().collect().map(_.getLong(0)).toSeq
+    }
     assert(rows == Seq(30L), s"key-less multi-part table lost rows: $rows")
   }
 
@@ -207,9 +224,10 @@ class LakeScanSpec extends SparkSpec {
       .iterator().asScala.find(_.toString.endsWith(".parquet")).get
     java.nio.file.Files.move(part,
       java.nio.file.Paths.get(s"$tmp/orders.parquet/part-keyless.parquet"))
-    val prof = Profiler.profileLakeUnified(spark, tmp, Seq("orders"), rowCap = Some(10))
-    val rows = prof.select("col_name", "rows").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val rows = scanned(tmp, Seq("orders"), Some(10)) { cells =>
+      profileOf(cells).select("col_name", "rows").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
     assert(rows("o_orderkey") == 10L && rows("v") == 10L,
       s"keyed part file mis-capped: $rows")
     assert(rows("name") == 10L && rows("amount") == 10L,
@@ -223,7 +241,10 @@ class LakeScanSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$tmp/money.parquet")
     Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("id", "v")
       .write.mode("overwrite").parquet(s"$tmp/plain.parquet")
-    assert(LakeScan.unsupportedTables(spark, tmp, Seq("money", "plain")) == Seq("money"))
+    scanned(tmp, Seq("money", "plain"), Some(10000)) { cells =>
+      assert(cells.select("table_name").distinct().collect().map(_.getString(0))
+        .toSeq == Seq("plain"))
+    }
     val prof = graft.cli.SketchBuild.build(spark, tmp).profiles
     val byTable = prof.groupBy("table_name").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -260,8 +281,8 @@ class LakeScanSpec extends SparkSpec {
     }
     assert(nGroups > 3, s"fixture must span several row groups, got $nGroups")
     // uncapped: every cell must round-trip (counts + null counts + sum)
-    val cells = LakeScan.renderLong(
-      LakeScan.rawCells(spark, tmp, Seq("big"), None))
+    val scan = LakeScan.scanLake(spark, tmp, Seq("big"), None)
+    val cells = LakeScan.renderLong(scan.cells)
     val got = cells.filter(col("present") && col("col_name") === "x")
       .agg(count(lit(1)).as("n"),
         sum(when(col("value_str").isNull, 1L).otherwise(0L)).as("nulls"),
@@ -272,36 +293,57 @@ class LakeScanSpec extends SparkSpec {
     val expectedSum = (1 to n).filter(_ % 11 != 0).map(_ * 0.5).sum
     assert(math.abs(got.getDouble(2) - expectedSum) < 1e-3)
     // keyed cap across groups == ORDER BY key LIMIT cap
-    val capped = LakeScan.renderLong(
-        LakeScan.rawCells(spark, tmp, Seq("big"), Some(1000)))
-      .filter(col("present") && col("col_name") === "id")
-    assert(capped.count() == 1000)
-    // "big" has no TableKeys entry → unkeyed first-N file-order cap;
-    // with one part file that is ids 1..1000 exactly
-    val maxId = capped.agg(max(col("value_num"))).collect()(0).getDouble(0)
-    assert(maxId == 1000.0, s"unkeyed cap must take the first rows, got max $maxId")
+    scanned(tmp, Seq("big"), Some(1000)) { capCells =>
+      val capped = LakeScan.renderLong(capCells)
+        .filter(col("present") && col("col_name") === "id")
+      assert(capped.count() == 1000)
+      // "big" has no TableKeys entry → unkeyed first-N file-order cap;
+      // with one part file that is ids 1..1000 exactly
+      val maxId = capped.agg(max(col("value_num"))).collect()(0).getDouble(0)
+      assert(maxId == 1000.0, s"unkeyed cap must take the first rows, got max $maxId")
+    }
     // string nulls stride groups too
     val sNulls = cells.filter(col("present") && col("col_name") === "s" &&
       col("value_str").isNull).count()
     assert(sNulls == n / 7)
+    scan.release()
   }
 
-  test("unsupported parquet types fail loudly, pointing at the per-table path") {
+  test("scanLake rejects the decimal table, with none of its rows in cells") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_unsup").toString
     Seq((1L, BigDecimal("1.23"))).toDF("id", "dec")
       .write.mode("overwrite").parquet(s"$tmp/dec.parquet")
-    val e = intercept[org.apache.spark.SparkException] {
-      Profiler.profileLakeUnified(spark, tmp, Seq("dec")).collect()
-    }
-    // the DOCUMENTED error contract (README "Mixed lakes"): name the
-    // column and table, and point at the per-table fallback path
-    val msgs = (Iterator.single(e.getMessage) ++
-      Iterator.iterate(e.getCause)(_.getCause).takeWhile(_ != null)
-        .map(_.getMessage)).mkString("\n")
-    assert(msgs.contains("LakeScan: unsupported"))
-    assert(msgs.contains("'dec'") && msgs.contains("column 'dec'") ||
-      msgs.contains("of table 'dec'"))
-    assert(msgs.contains("profile it through the per-table Lake.read path"))
+    Seq((1L, "x"), (2L, "y")).toDF("id", "v")
+      .write.mode("overwrite").parquet(s"$tmp/plain.parquet")
+    val scan = LakeScan.scanLake(spark, tmp, Seq("dec", "plain"), Some(10000))
+    assert(scan.rejected == Seq("dec"))
+    val byTable = scan.cells.filter(col("present")).groupBy("table_name").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(byTable == Map("plain" -> 4L), s"cells by table: $byTable") // 2 rows × 2 columns
+    assert(scan.cells.filter(col("table_name") === "dec" ||
+      col("col_name") === LakeScan.RejectMarker).count() == 0)
+    scan.release()
+  }
+
+  test("a two-part table with a decimal second part is rejected whole") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_unsup_part").toString
+    (1 to 6).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/mixed.parquet")
+    Seq((7L, BigDecimal("1.23"))).toDF("id", "dec")
+      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/aside")
+    val part = java.nio.file.Files.list(java.nio.file.Paths.get(s"$tmp/aside"))
+      .iterator().asScala.find(_.toString.endsWith(".parquet")).get
+    java.nio.file.Files.move(part,
+      java.nio.file.Paths.get(s"$tmp/mixed.parquet/part-zz-decimal.parquet"))
+    Seq((1L, "x")).toDF("id", "v").write.mode("overwrite").parquet(s"$tmp/plain.parquet")
+    val scan = LakeScan.scanLake(spark, tmp, Seq("mixed", "plain"), Some(10000))
+    assert(scan.rejected == Seq("mixed"))
+    assert(scan.cells.filter(col("table_name") === "mixed").count() == 0,
+      "the decodable part of a rejected table leaked into cells")
+    assert(scan.cells.filter(col("table_name") === "plain").count() > 0)
+    scan.release()
   }
 }
