@@ -40,6 +40,7 @@ object Bench {
         case "encoder_scale" => encoderScaleBench(spark, cpus.toInt)
         case "lake_plan"     => lakePlanBench(spark)
         case "csv_plan"      => csvPlanBench(spark)
+        case "store_scale"   => storeScaleBench(spark)
         case other           => s"""{"err":"unknown section $other"}"""
       }
       println(s"""{"section":"$sec","value":$out}""")
@@ -218,6 +219,64 @@ object Bench {
     val uni40 = timed2(unified(names.take(nSmall)))
     val uni400 = timed2(unified(names))
     f"""{"tables_small":$nSmall,"tables_big":$nBig,"loop_${nSmall}":$loop40%.3f,"unified_${nSmall}":$uni40%.3f,"unified_${nBig}":$uni400%.3f}"""
+  }
+
+  /** Catalog-store cost vs table count (40, TUS-SANTOS's 1,127, 10,000):
+    * per size, the `SketchStore.writeParquet` wall and the files it
+    * wrote, three interactive union searches (`readParquet` +
+    * `searchUnionable(…, k = 10).collect()`, each reading the store
+    * afresh), and one 5-table `upsertParquet`. Catalogs are synthetic
+    * ([[syntheticCatalog]]), checkpointed before the write so only the
+    * store is timed. Selected with `SPARK_GRAFT_SECTION=store_scale`.
+    */
+  private def storeScaleBench(spark: SparkSession): String = {
+    import graft.store.SketchStore
+    import graft.search.Discovery
+    def secs(f: => Unit): Double = {
+      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+    }
+    def parquetFiles(f: java.io.File): Int =
+      if (f.isDirectory) f.listFiles().map(parquetFiles).sum
+      else if (f.getName.endsWith(".parquet")) 1 else 0
+    def list(xs: Seq[Double]): String = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
+    Seq(40, 1127, 10000).map { n =>
+      val path = s"/tmp/graft_bench_store_scale/catalog_$n"
+      val catalog = syntheticCatalog(spark, n).localCheckpoint(eager = true)
+      System.gc()
+      val write = secs(SketchStore.writeParquet(catalog, path))
+      val files = parquetFiles(new java.io.File(path))
+      val searches = Seq(0, n / 3, 2 * n / 3).map(t => secs(
+        Discovery.searchUnionable(SketchStore.readParquet(spark, path), f"t$t%05d", 10)
+          .collect()))
+      val grown = (0 until 5).map(i => f"t${i * n / 5}%05d")
+      val upsert = secs(SketchStore.upsertParquet(
+        catalog.filter(col("table_name").isin(grown: _*))
+          .withColumn("rows", col("rows") + 1), path))
+      f"""{"tables":$n,"write_s":$write%.3f,"files":$files,"read_search_s":${list(searches)},"upsert5_s":$upsert%.3f}"""
+    }.mkString("[", ",", "]")
+  }
+
+  /** A synthetic profile catalog: `tables` tables × `cols` columns in the
+    * profile schema, each column a re-keyed copy of one profiled string
+    * column with its own 100-slot exact-value digest. Slots take one of
+    * 8 values, so any two columns agree on about an eighth of them; tables
+    * whose index agrees mod 97 share their digests, and columns `c` and
+    * `c + 4` of a table are equal, so a union search meets many exact
+    * ties. */
+  private[graft] def syntheticCatalog(spark: SparkSession, tables: Int,
+                                     cols: Int = 8): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val template = graft.profile.Profiler.profile(
+      (1 to 20).map(i => s"v$i words").toDF("txt"), "template")
+    spark.range(tables.toLong * cols)
+      .select((col("id") / cols).cast("long").as("t"), (col("id") % cols).as("c"))
+      .crossJoin(template.drop("table_name", "col_idx", "col_name", "minhash_exact"))
+      .withColumn("table_name", format_string("t%05d", col("t")))
+      .withColumn("col_idx", col("c").cast(template.schema("col_idx").dataType))
+      .withColumn("col_name", concat(lit("c"), col("c")))
+      .withColumn("minhash_exact", transform(sequence(lit(0), lit(99)),
+        slot => pmod(xxhash64(col("t") % 97, col("c") % 4, slot), lit(8L))))
+      .select(template.columns.toIndexedSeq.map(col): _*)
   }
 
   /** Run `f` with Spark logging at ERROR, restoring WARN after — used

@@ -681,7 +681,14 @@ object SparkEntry {
       "id,huge\n1,12345678901234567890123\n2,22345678901234567890123\n" +
       "3,3234567890123456789\n4,1\n5,2\n")
     w("tiny.csv", "a,b\n1,x\n2,y\n3,z\n")
-    statsSummary(graft.cli.SketchBuild.build(s, d.toString).profiles)
+    // the summary is a few dozen rows: hold them on the driver, so the
+    // build's persisted decode and fallback frames can be released here
+    // and nothing of the run stays cached in the session
+    val catalog = graft.cli.SketchBuild.build(s, d.toString)
+    try {
+      val summary = statsSummary(catalog.profiles)
+      s.createDataFrame(java.util.Arrays.asList(summary.collect(): _*), summary.schema)
+    } finally catalog.release()
   }
 
   /** Q7 end-to-end through the REAL ONNX artifact: deterministic feature
@@ -1307,7 +1314,7 @@ object SparkEntry {
       .orderBy("n_regionkey")
   }
 
-  /** S7/S8 round-trip: profile catalog → partitioned parquet sketch store
+  /** S7/S8 round-trip: profile catalog → bucketed parquet sketch store
     * → read back → same projection as `profile_sketches`. Green iff the
     * persisted digests survive the store bit-for-bit (the oracle
     * recomputes them from the raw tables). */

@@ -106,7 +106,7 @@ object SketchBuild {
       SketchStore.readParquet(spark, s"$outDir/profiles"),
       spark.read.parquet(s"$outDir/snapshots"), s"$outDir/docs_json")
 
-    val written = spark.read.parquet(s"$outDir/profiles")
+    val written = SketchStore.readParquet(spark, s"$outDir/profiles")
     val nTables = written.select("table_name").distinct().count()
     println(s"[sketch-build] $nTables tables, ${written.count()} column profiles -> $outDir")
     spark.stop()

@@ -144,4 +144,13 @@ class SketchBuildSpec extends SparkSpec {
     scan.release()
     intercept[org.apache.spark.sql.AnalysisException](SketchBuild.build(spark, dir.toString))
   }
+
+  test("lake_csv_unified releases its build: two runs leave nothing cached") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    for (_ <- 1 to 2)
+      assert(graft.SparkEntry.queries("lake_csv_unified")(spark, "unused").collect().nonEmpty)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"RDDs left persisted: ${left.mkString(", ")}")
+  }
 }

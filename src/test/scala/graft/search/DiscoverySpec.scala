@@ -70,6 +70,79 @@ class DiscoverySpec extends SparkSpec {
   }
 }
 
+/** The one-exchange `columnVoteRank` against the three-window ranking it
+  * replaced, on random tie-heavy distance relations, plus a pin on the
+  * executed plan of a search over a stored catalog. */
+class ColumnVoteRankSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  import spark.implicits._
+  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.expressions.Window
+  import org.scalacheck.Gen
+
+  /** The ranking as it was before the single exchange: three windows,
+    * each with its own shuffle, then the vote and a global sort. */
+  private def referenceRank(dists: DataFrame, k: Int, overFetch: Int = 3): DataFrame = {
+    val wKnn = Window.partitionBy(col("q_col_idx"))
+      .orderBy(col("dist"), col("cand_table"), col("cand_col_idx"))
+    val knn = dists.withColumn("rank", row_number().over(wKnn))
+      .filter(col("rank") <= k * overFetch)
+    val wFirst = Window.partitionBy(col("q_col_idx"), col("cand_table"))
+      .orderBy(col("rank"))
+    val first = knn.withColumn("rn", row_number().over(wFirst))
+      .filter(col("rn") === 1)
+    val wSeen = Window.partitionBy(col("cand_table"), col("cand_col_idx"))
+      .orderBy(col("dist"), col("rank"))
+    val deduped = first.withColumn("seen", row_number().over(wSeen))
+      .filter(col("seen") === 1)
+    deduped.groupBy(col("cand_table"))
+      .agg(count(lit(1)).as("matched_cols"),
+        round(sum(col("dist")), 6).as("sum_dist"))
+      .orderBy(col("matched_cols").desc, col("sum_dist"), col("cand_table"))
+      .limit(k)
+  }
+
+  /** A distance relation keyed by (q_col_idx, cand_table, cand_col_idx),
+    * as the scorers emit it, with distances drawn from five values so
+    * ties abound within and across query columns and candidate tables. */
+  private val relation: Gen[Seq[(Int, String, Int, Double)]] = for {
+    nq <- Gen.choose(1, 6)
+    nt <- Gen.choose(1, 25)
+    nc <- Gen.choose(1, 5)
+    keys <- Gen.someOf(for (q <- 0 until nq; t <- 0 until nt; c <- 0 until nc)
+      yield (q, f"t$t%02d", c))
+    dists <- Gen.listOfN(keys.size, Gen.oneOf(0.0, 0.25, 0.5, 0.75, 1.0))
+  } yield keys.toSeq.zip(dists).map { case ((q, t, c), d) => (q, t, c, d) }
+
+  test("one-exchange ranking equals the three-window ranking, ties included") {
+    val params = Gen.Parameters.default.withSize(100)
+    for (seed <- 1L to 12L) {
+      val rows = relation(params, org.scalacheck.rng.Seed(seed)).get
+      val dists = spark.sparkContext.parallelize(rows, 3)
+        .toDF("q_col_idx", "cand_table", "cand_col_idx", "dist")
+      for (k <- Seq(1, 3, 10)) {
+        val got = Discovery.columnVoteRank(dists, k).collect().toSeq
+        val want = referenceRank(dists, k).collect().toSeq
+        assert(got == want, s"seed $seed, k $k: ${got.mkString(" ")} vs ${want.mkString(" ")}")
+      }
+    }
+  }
+
+  test("a search over a stored catalog runs one shuffle besides the broadcast") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_rank_plan").toString
+    graft.store.SketchStore.writeParquet(graft.Bench.syntheticCatalog(spark, 30), dir)
+    val res = Discovery.searchUnionable(
+      graft.store.SketchStore.readParquet(spark, dir), "t00003", k = 5)
+    assert(res.collect().length == 5)
+    val plan = res.queryExecution.executedPlan
+    val shuffles = collectWithSubqueries(plan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
+    val broadcasts = collectWithSubqueries(plan) {
+      case e: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => e }
+    assert(shuffles.size == 1 && broadcasts.size == 1, plan.toString)
+  }
+}
+
 class TextSearchSpec extends SparkSpec {
   import spark.implicits._
 
