@@ -14,20 +14,8 @@ object Bench {
     // and a comma-decimal locale would emit unparseable "0,993"
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // split single-file small-SF parquet into enough scan tasks to
-      // use the box (default 128 MB budget = ONE task per table, so
-      // scan-stage map work ran on 1 core of 32); queries are
-      // partitioning-invariant by contract, so this is pure tuning
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = LocalSpark.cpus
+    val spark = LocalSpark.session()
     spark.sparkContext.setLogLevel("WARN")
     // single-section mode for local iteration on the structural probes
     // (driver runs never set this): print just that section and exit

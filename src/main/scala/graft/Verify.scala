@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,22 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg (local iteration only): comma-separated query names
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // small-SF tables are single-file parquet; at the default 128 MB
-      // split budget every scan is ONE task and scan-stage map work
-      // (tokenize/explode/hash) runs on one core of 32. 8 MB splits the
-      // local tables into enough tasks to use the box; on a real lake
-      // file count provides the parallelism and this stays sane.
-      // Every registered query is partitioning-invariant by contract
-      // (pinned across the spec suite), so this is pure tuning.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

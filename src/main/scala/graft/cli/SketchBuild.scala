@@ -94,6 +94,7 @@ object SketchBuild {
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -14,6 +14,12 @@ import org.apache.spark.sql.types.{LongType, Metadata}
   * TimestampType column — the same ns→us truncation DuckDB applies when
   * it loads TIMESTAMP_NS into its us-precision TIMESTAMP, so both
   * engines see identical values either way.
+  *
+  * `read` does not change session conf: a session that reads
+  * TIMESTAMP(NANOS) through it must set
+  * `spark.sql.legacy.parquet.nanosAsLong=true` itself, as
+  * `graft.LocalSpark` and the `SketchBuild` CLI do. `LakeScan` decodes
+  * NANOS natively with or without it.
   */
 object Lake {
 
@@ -90,7 +96,6 @@ object Lake {
     * parquet `_metadata.row_index` per-file cap.
     */
   def read(spark: SparkSession, dir: String, name: String, rowCap: Option[Int]): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df0 = spark.read.parquet(s"$dir/$name.parquet")
     val df = rowCap match {
       case Some(n) =>

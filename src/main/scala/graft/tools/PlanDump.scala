@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `.explain("formatted")` for the named registered queries to
   * plans/<tag>/<query>_<suffix>.txt — the committed before/after plan
@@ -14,16 +13,7 @@ object PlanDump {
     val tag = args(0)
     val suffix = args(1)
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSpark.session()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = java.nio.file.Paths.get(sys.props("user.dir"), "plans", tag)

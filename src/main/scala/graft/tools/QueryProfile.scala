@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.SparkEntry
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job/stage wall attribution for ONE registered query: runs the
   * query through the bench's noop-sink methodology (one warm-up, one
@@ -15,16 +14,7 @@ object QueryProfile {
   def main(args: Array[String]): Unit = {
     val q = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSpark.session()
     spark.sparkContext.setLogLevel("WARN")
     def once(): Double = {
       graft.search.TextSearch.clearRouterMemo()

@@ -1,7 +1,7 @@
 package graft.ml
 
 import graft.SparkSpec
-import graft.OracleSql
+import graft.queries.EncoderQueries
 
 /** Pins the rank-general OnnxSession ops through the exported
   * mini-encoder: the expected values come from an INDEPENDENT forward
@@ -11,41 +11,41 @@ import graft.OracleSql
   */
 class MiniEncoderSpec extends SparkSpec {
 
-  private val (s_, d_, h_, f_) = (OracleSql.TeS, OracleSql.TeD, OracleSql.TeH, OracleSql.TeF)
+  private val (s_, d_, h_, f_) = (EncoderQueries.TeS, EncoderQueries.TeD, EncoderQueries.TeH, EncoderQueries.TeF)
   private val dh = d_ / h_
 
   private def weights = OnnxExport.MiniEncoderWeights(
     seqLen = s_, dModel = d_, nHeads = h_, dFf = f_,
-    wq = Array.tabulate(h_, d_, dh)(OracleSql.teWq),
-    wk = Array.tabulate(h_, d_, dh)(OracleSql.teWk),
-    wv = Array.tabulate(h_, d_, dh)(OracleSql.teWv),
-    wo = Array.tabulate(d_, d_)(OracleSql.teWo), bo = Array.tabulate(d_)(OracleSql.teBo),
-    g1 = Array.tabulate(d_)(OracleSql.teG1), b1 = Array.tabulate(d_)(OracleSql.teB1),
-    w1 = Array.tabulate(d_, f_)(OracleSql.teW1), bf1 = Array.tabulate(f_)(OracleSql.teBf1),
-    w2 = Array.tabulate(f_, d_)(OracleSql.teW2), bf2 = Array.tabulate(d_)(OracleSql.teBf2),
-    g2 = Array.tabulate(d_)(OracleSql.teG2), b2 = Array.tabulate(d_)(OracleSql.teB2),
-    wHead = Array.tabulate(d_)(OracleSql.teWh), bHead = OracleSql.TeBh,
-    attScale = OracleSql.TeScale, lnEps = OracleSql.TeEps)
+    wq = Array.tabulate(h_, d_, dh)(EncoderQueries.teWq),
+    wk = Array.tabulate(h_, d_, dh)(EncoderQueries.teWk),
+    wv = Array.tabulate(h_, d_, dh)(EncoderQueries.teWv),
+    wo = Array.tabulate(d_, d_)(EncoderQueries.teWo), bo = Array.tabulate(d_)(EncoderQueries.teBo),
+    g1 = Array.tabulate(d_)(EncoderQueries.teG1), b1 = Array.tabulate(d_)(EncoderQueries.teB1),
+    w1 = Array.tabulate(d_, f_)(EncoderQueries.teW1), bf1 = Array.tabulate(f_)(EncoderQueries.teBf1),
+    w2 = Array.tabulate(f_, d_)(EncoderQueries.teW2), bf2 = Array.tabulate(d_)(EncoderQueries.teBf2),
+    g2 = Array.tabulate(d_)(EncoderQueries.teG2), b2 = Array.tabulate(d_)(EncoderQueries.teB2),
+    wHead = Array.tabulate(d_)(EncoderQueries.teWh), bHead = EncoderQueries.TeBh,
+    attScale = EncoderQueries.TeScale, lnEps = EncoderQueries.TeEps)
 
   private def layer(l: Int): OnnxExport.EncoderLayer = OnnxExport.EncoderLayer(
-    wq = Array.tabulate(h_, d_, dh)(OracleSql.teWqL(l, _, _, _)),
-    wk = Array.tabulate(h_, d_, dh)(OracleSql.teWkL(l, _, _, _)),
-    wv = Array.tabulate(h_, d_, dh)(OracleSql.teWvL(l, _, _, _)),
-    wo = Array.tabulate(d_, d_)(OracleSql.teWoL(l, _, _)),
-    bo = Array.tabulate(d_)(OracleSql.teBoL(l, _)),
-    g1 = Array.tabulate(d_)(OracleSql.teG1L(l, _)),
-    b1 = Array.tabulate(d_)(OracleSql.teB1L(l, _)),
-    w1 = Array.tabulate(d_, f_)(OracleSql.teW1L(l, _, _)),
-    bf1 = Array.tabulate(f_)(OracleSql.teBf1L(l, _)),
-    w2 = Array.tabulate(f_, d_)(OracleSql.teW2L(l, _, _)),
-    bf2 = Array.tabulate(d_)(OracleSql.teBf2L(l, _)),
-    g2 = Array.tabulate(d_)(OracleSql.teG2L(l, _)),
-    b2 = Array.tabulate(d_)(OracleSql.teB2L(l, _)))
+    wq = Array.tabulate(h_, d_, dh)(EncoderQueries.teWqL(l, _, _, _)),
+    wk = Array.tabulate(h_, d_, dh)(EncoderQueries.teWkL(l, _, _, _)),
+    wv = Array.tabulate(h_, d_, dh)(EncoderQueries.teWvL(l, _, _, _)),
+    wo = Array.tabulate(d_, d_)(EncoderQueries.teWoL(l, _, _)),
+    bo = Array.tabulate(d_)(EncoderQueries.teBoL(l, _)),
+    g1 = Array.tabulate(d_)(EncoderQueries.teG1L(l, _)),
+    b1 = Array.tabulate(d_)(EncoderQueries.teB1L(l, _)),
+    w1 = Array.tabulate(d_, f_)(EncoderQueries.teW1L(l, _, _)),
+    bf1 = Array.tabulate(f_)(EncoderQueries.teBf1L(l, _)),
+    w2 = Array.tabulate(f_, d_)(EncoderQueries.teW2L(l, _, _)),
+    bf2 = Array.tabulate(d_)(EncoderQueries.teBf2L(l, _)),
+    g2 = Array.tabulate(d_)(EncoderQueries.teG2L(l, _)),
+    b2 = Array.tabulate(d_)(EncoderQueries.teB2L(l, _)))
 
   private def stack(n: Int): OnnxExport.EncoderStack = OnnxExport.EncoderStack(
     s_, d_, h_, f_, (0 until n).map(layer),
-    wHead = Array.tabulate(d_)(OracleSql.teWh), bHead = OracleSql.TeBh,
-    attScale = OracleSql.TeScale, lnEps = OracleSql.TeEps)
+    wHead = Array.tabulate(d_)(EncoderQueries.teWh), bHead = EncoderQueries.TeBh,
+    attScale = EncoderQueries.TeScale, lnEps = EncoderQueries.TeEps)
 
   /** Independent reference: one encoder BLOCK with plain nested loops. */
   private def refBlock(x: Array[Array[Double]], lw: OnnxExport.EncoderLayer,
@@ -124,7 +124,7 @@ class MiniEncoderSpec extends SparkSpec {
     val path = "/tmp/graft_fixtures/spec_mini_encoder.onnx"
     OnnxExport.exportMiniEncoder(weights, path)
     val session = OnnxSession.load(path)
-    val batch = (1 to OracleSql.TeN).map { n =>
+    val batch = (1 to EncoderQueries.TeN).map { n =>
       Array.tabulate(s_ * d_) { k =>
         ((n * 13 + (k / d_) * 7 + (k % d_) * 3) % 17) * 0.125 - 1.0
       }
@@ -139,7 +139,7 @@ class MiniEncoderSpec extends SparkSpec {
     }
     // scores must be non-degenerate (not all equal) for the fixture to
     // actually exercise attention mixing
-    assert(got.distinct.length > OracleSql.TeN / 2)
+    assert(got.distinct.length > EncoderQueries.TeN / 2)
   }
 
   test("a 3-layer stacked export executes and matches three chained reference blocks") {

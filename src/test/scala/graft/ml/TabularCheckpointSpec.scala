@@ -1,6 +1,7 @@
 package graft.ml
 
-import graft.{OracleSql, SparkSpec, SparkEntry}
+import graft.SparkSpec
+import graft.queries.EncoderQueries
 
 /** Pins the realistic-checkpoint path (float32 tensors, Gather/Cast/
   * Slice/Split/Unsqueeze, additive attention mask, decomposed LayerNorm,
@@ -11,7 +12,7 @@ import graft.{OracleSql, SparkSpec, SparkEntry}
   */
 class TabularCheckpointSpec extends SparkSpec {
 
-  import OracleSql._
+  import EncoderQueries._
   private val dh = TbD / TbH
 
   /** Independent forward for one sequence: 6-way embedding sum + LN,
@@ -87,7 +88,7 @@ class TabularCheckpointSpec extends SparkSpec {
   test("float32 checkpoint executes; matches an independent forward pass") {
     val path = java.nio.file.Files.createTempDirectory("tbckpt")
       .resolve("ckpt.onnx").toString
-    OnnxExport.exportTabularCheckpoint(SparkEntry.tbCheckpoint, path)
+    OnnxExport.exportTabularCheckpoint(tbCheckpoint, path)
     val session = OnnxSession.load(path)
     assert(session.inputNames === Seq("input_ids", "type_ids", "tokpos_ids",
       "attention_mask", "value_vals", "minhash_vals"))
@@ -105,7 +106,7 @@ class TabularCheckpointSpec extends SparkSpec {
   test("the attention mask is live: padding changes the pooled state") {
     val path = java.nio.file.Files.createTempDirectory("tbckpt")
       .resolve("ckpt.onnx").toString
-    OnnxExport.exportTabularCheckpoint(SparkEntry.tbCheckpoint, path)
+    OnnxExport.exportTabularCheckpoint(tbCheckpoint, path)
     val session = OnnxSession.load(path)
     val ids = Array(2L, 17L, 45L, 9L, 21L, 3L)
     val base = (ids, Array.fill(TbS)(1L), Array.tabulate(TbS)(_ % TbP),
@@ -117,7 +118,7 @@ class TabularCheckpointSpec extends SparkSpec {
   }
 
   test("float32 export rejects non-float32-exact weights") {
-    val w = SparkEntry.tbCheckpoint
+    val w = tbCheckpoint
     val bad = w.copy(gEmb = w.gEmb.updated(0, 0.1)) // 0.1 has no exact float32
     val path = java.nio.file.Files.createTempDirectory("tbckpt")
       .resolve("bad.onnx").toString
@@ -130,7 +131,7 @@ class TabularCheckpointSpec extends SparkSpec {
   test("unbound and ragged multi-input batches fail loudly") {
     val path = java.nio.file.Files.createTempDirectory("tbckpt")
       .resolve("ckpt.onnx").toString
-    OnnxExport.exportTabularCheckpoint(SparkEntry.tbCheckpoint, path)
+    OnnxExport.exportTabularCheckpoint(tbCheckpoint, path)
     val session = OnnxSession.load(path)
     val full = inputsFor(fixtureRows.take(2))
     intercept[IllegalArgumentException] { session.runMulti(full - "type_ids") }
