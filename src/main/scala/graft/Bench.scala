@@ -536,12 +536,7 @@ object Bench {
     def candidates(shingle: Int): Long = {
       val wts = Dedup.idfWeights(docs, shingle = shingle)
         .localCheckpoint(eager = false)
-      val bnd = Dedup.icwsSignatures(wts, 32)
-        .withColumn("band", expr("k div 4"))
-        .groupBy("id", "band")
-        .agg(concat_ws("|", expr(
-          "transform(array_sort(collect_list(struct(k, s_tok, s_tk)))," +
-            " x -> concat(x.s_tok, '@', x.s_tk))")).as("bkey"))
+      val bnd = Dedup.icwsBandKeys(Dedup.icwsSignatures(wts, 32), rows = 4)
         .localCheckpoint(eager = false)
       bnd.as("a").join(bnd.as("b"),
           col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&

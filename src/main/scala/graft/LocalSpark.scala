@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The local session the query mains run in (`Verify`, `Bench`,
-  * `tools.PlanDump`, `tools.QueryProfile`): `SPARK_GRAFT_CPUS` cores
-  * (default 32) and as many shuffle partitions, 8 MB scan splits, AQE,
-  * a UTC session clock and no UI.
+  * `tools.PlanDump`, `tools.QueryProfile`, `tools.SketchDemo`):
+  * `SPARK_GRAFT_CPUS` cores (default 32) and as many shuffle
+  * partitions, 8 MB scan splits, AQE, a UTC session clock and no UI.
   */
 object LocalSpark {
 

@@ -84,6 +84,11 @@ object SketchBuild {
     })
   }
 
+  /** The E1 CLI: `SketchBuild <inputDir> <outputDir> [--json]` writes
+    * the lake's profiles/ and snapshots/ catalog. It keeps its own
+    * session builder rather than `graft.LocalSpark.session()`: its master
+    * comes from `SPARK_MASTER` and it pins no session time zone, so
+    * moving it would change the catalogs the CLI writes. */
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: SketchBuild <inputDir> <outputDir> [--json]")
     val (inDir, outDir) = (args(0), args(1))

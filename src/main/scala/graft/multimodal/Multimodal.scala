@@ -101,6 +101,11 @@ object Multimodal {
     }
   }
 
+  /** A payload's pixels: PNG, else GIF, else baseline JPEG; None when
+    * no codec decodes it. */
+  private def decodeImage(payload: Array[Byte]): Option[PngCodec.Image] =
+    PngCodec.decode(payload).orElse(GifCodec.decode(payload)).orElse(JpegCodec.decode(payload))
+
   /** FULL-FRAME decode over payload batches: real PNG ([[PngCodec]] —
     * inflate + unfilter), GIF ([[GifCodec]] — LZW + palette), and
     * baseline JPEG ([[JpegCodec]] — Huffman + IDCT) pixel decoding,
@@ -117,8 +122,7 @@ object Multimodal {
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (id, payload) =>
-          PngCodec.decode(payload).orElse(GifCodec.decode(payload))
-            .orElse(JpegCodec.decode(payload)) match {
+          decodeImage(payload) match {
             case Some(img) =>
               (id, Some(img.width), Some(img.height), Some(img.channels),
                 Some(img.channelMeans.toSeq))
@@ -183,8 +187,7 @@ object Multimodal {
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (id, payload) =>
-          val h = PngCodec.decode(payload).orElse(GifCodec.decode(payload))
-            .orElse(JpegCodec.decode(payload)).flatMap(dhashOf)
+          val h = decodeImage(payload).flatMap(dhashOf)
           (id, h)
         }
       }
@@ -302,8 +305,7 @@ object Multimodal {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.map { case (id, payload) =>
-          PngCodec.decode(payload).orElse(GifCodec.decode(payload))
-            .orElse(JpegCodec.decode(payload)) match {
+          decodeImage(payload) match {
             case Some(img) =>
               md.reset()
               md.update(s"${img.width}x${img.height}x${img.channels}:"
@@ -335,8 +337,7 @@ object Multimodal {
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.map { case (id, payload) =>
-          PngCodec.decode(payload).orElse(GifCodec.decode(payload))
-            .orElse(JpegCodec.decode(payload)) match {
+          decodeImage(payload) match {
             case Some(img) =>
               val rw = (img.width + factor - 1) / factor
               val rh = (img.height + factor - 1) / factor

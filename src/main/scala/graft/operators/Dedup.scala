@@ -317,27 +317,8 @@ object Dedup {
     * corpus. Output: (id_a, id_b, wjaccard). */
   def weightedJaccardPairs(docs: DataFrame, pairs: DataFrame,
                            idCol: String = "doc_id",
-                           textCol: String = "text"): DataFrame = {
-    val tf = docs.select(col(idCol).as("id"),
-        explode(split(trim(col(textCol)), "\\s+")).as("tok"))
-      .filter(col("tok") =!= "")
-      .groupBy("id", "tok").agg(count(lit(1)).as("tf"))
-    val tot = tf.groupBy("id").agg(sum(col("tf")).as("tot"))
-    val inter = pairs
-      .join(tf.select(col("id").as("id_a"), col("tok"), col("tf").as("tf_a")), "id_a")
-      .join(tf.select(col("id").as("id_b"), col("tok"), col("tf").as("tf_b")),
-        Seq("id_b", "tok"))
-      .groupBy("id_a", "id_b").agg(sum(least(col("tf_a"), col("tf_b"))).as("smin"))
-    pairs
-      .join(tot.select(col("id").as("id_a"), col("tot").as("tot_a")), "id_a")
-      .join(tot.select(col("id").as("id_b"), col("tot").as("tot_b")), "id_b")
-      .join(inter, Seq("id_a", "id_b"), "left")
-      .withColumn("smin", coalesce(col("smin"), lit(0L)))
-      .select(col("id_a"), col("id_b"),
-        round(col("smin").cast("double") /
-          (col("tot_a") + col("tot_b") - col("smin")).cast("double"), 6)
-          .as("wjaccard"))
-  }
+                           textCol: String = "text"): DataFrame =
+    weightedJaccardOn(termFreqs(docs, idCol, textCol), "tf", pairs)
 
   /** Weighted MinHash digests by the classic integer-weight reduction
     * (Ioffe 2010 §2 credits it as the folklore baseline; public): a
@@ -354,10 +335,7 @@ object Dedup {
     * the per-doc digest. Output: (id, mh array<bigint>[100]). */
   def weightedMinHashDigests(docs: DataFrame, idCol: String = "doc_id",
                              textCol: String = "text"): DataFrame = {
-    val tf = docs.select(col(idCol).as("id"),
-        explode(split(trim(col(textCol)), "\\s+")).as("tok"))
-      .filter(col("tok") =!= "")
-      .groupBy("id", "tok").agg(count(lit(1)).as("tf"))
+    val tf = termFreqs(docs, idCol, textCol)
     tf.select(col("id"), explode(expr(
         "transform(sequence(1, cast(tf as int)), i -> concat(tok, '#', i))")).as("v"))
       .groupBy("id")
@@ -479,18 +457,32 @@ object Dedup {
   /** Exact weighted Jaccard over an arbitrary integer weight relation
     * (id, tok, w) — the [[weightedJaccardPairs]] Σmin/Σmax identity on
     * caller-supplied weights (e.g. [[idfWeights]] micros). */
-  def weightedJaccardOnWeights(weights: DataFrame, pairs: DataFrame): DataFrame = {
+  def weightedJaccardOnWeights(weights: DataFrame, pairs: DataFrame): DataFrame =
+    weightedJaccardOn(weights, "w", pairs)
+
+  /** Whitespace-token term frequencies (id, tok, tf) of `docs`. */
+  private def termFreqs(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).as("id"),
+        explode(split(trim(col(textCol)), "\\s+")).as("tok"))
+      .filter(col("tok") =!= "")
+      .groupBy("id", "tok").agg(count(lit(1)).as("tf"))
+
+  /** The Σmin/Σmax weighted Jaccard of `pairs` over the integer weights
+    * in column `w` of (id, tok, w): Σmax = tot_A + tot_B − Σmin, so only
+    * the intersection joins. */
+  private def weightedJaccardOn(weights: DataFrame, w: String,
+                                pairs: DataFrame): DataFrame = {
     // Token-exploded verify join, NOT per-pair map lookups: Spark map
     // element_at is a linear key scan, so a fetch-and-score fold costs
     // O(|A|·|B|) string compares per pair (measured 2.5× slower at
     // sf0.1's 2M candidates); the exploded equi-join is O(Σ tokens)
     // through the shuffle with map-side partial Σmin.
-    val tot = weights.groupBy("id").agg(sum(col("w")).as("tot"))
+    val tot = weights.groupBy("id").agg(sum(col(w)).as("tot"))
     val inter = pairs
-      .join(weights.select(col("id").as("id_a"), col("tok"), col("w").as("w_a")), "id_a")
-      .join(weights.select(col("id").as("id_b"), col("tok"), col("w").as("w_b")),
+      .join(weights.select(col("id").as("id_a"), col("tok"), col(w).as(s"${w}_a")), "id_a")
+      .join(weights.select(col("id").as("id_b"), col("tok"), col(w).as(s"${w}_b")),
         Seq("id_b", "tok"))
-      .groupBy("id_a", "id_b").agg(sum(least(col("w_a"), col("w_b"))).as("smin"))
+      .groupBy("id_a", "id_b").agg(sum(least(col(s"${w}_a"), col(s"${w}_b"))).as("smin"))
     pairs
       .join(tot.select(col("id").as("id_a"), col("tot").as("tot_a")), "id_a")
       .join(tot.select(col("id").as("id_b"), col("tot").as("tot_b")), "id_b")
@@ -501,6 +493,15 @@ object Dedup {
           (col("tot_a") + col("tot_b") - col("smin")).cast("double"), 6)
           .as("wjaccard"))
   }
+
+  /** The band keys of ICWS signatures, `rows` hashes per band: (id, band,
+    * bkey), bkey the band's (k-ordered) `s_tok@s_tk` slots joined by `|`. */
+  private[graft] def icwsBandKeys(sig: DataFrame, rows: Int): DataFrame =
+    sig.withColumn("band", expr(s"k div $rows"))
+      .groupBy("id", "band")
+      .agg(concat_ws("|", expr(
+        "transform(array_sort(collect_list(struct(k, s_tok, s_tk)))," +
+          " x -> concat(x.s_tok, '@', x.s_tk))")).as("bkey"))
 
   /** Banded near-dup join over [[icwsSignatures]] — the weighted
     * (tf·idf) sibling of [[minhashNearDups]]: signatures band (k div
@@ -529,12 +530,7 @@ object Dedup {
     // checkpoint the band relation: the candidate self-join reads it
     // twice, and without the barrier AQE re-executes the whole
     // signature pipeline per side
-    val bnd = sig.withColumn("band", expr(s"k div $rows"))
-      .groupBy("id", "band")
-      .agg(concat_ws("|", expr(
-        "transform(array_sort(collect_list(struct(k, s_tok, s_tk)))," +
-          " x -> concat(x.s_tok, '@', x.s_tk))")).as("bkey"))
-      .localCheckpoint(eager = false)
+    val bnd = icwsBandKeys(sig, rows).localCheckpoint(eager = false)
     val cand = bnd.as("a").join(bnd.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.id") < col("b.id"))

@@ -145,20 +145,23 @@ object AnnQueries {
     (base +: rounds).mkString(",\n")
   }
 
-  private def annIvfPqCtes: String = {
-    val (cellIters, kCells, dim) = (3, 8, 64)
-    val (pqIters, nSub, kCodes, subDim, kNb, nProbe) = (2, 8, 16, 8, 5, 2)
-    def pqArgmin(src: String) =
-      s"""  SELECT vec_id, sub, code FROM (
-         |    SELECT v.vec_id, v.sub, c.code,
-         |      row_number() OVER (PARTITION BY v.vec_id, v.sub ORDER BY
-         |        list_sum([(v.sq[d] - c.cq[d]) * (v.sq[d] - c.cq[d])
-         |                  FOR d IN range(1, ${subDim + 1})]), c.code) AS rn
-         |    FROM sv v JOIN $src c ON v.sub = c.sub)
-         |  WHERE rn = 1""".stripMargin
-    val pqRounds = (1 to pqIters).map { i =>
+  /** Nearest-code argmin CTE body over the `sv` subvectors × the `src`
+    * codebooks (BIGINT micro-space distances, ties to the lowest code). */
+  private def pqArgmin(src: String, subDim: Int): String =
+    s"""  SELECT vec_id, sub, code FROM (
+       |    SELECT v.vec_id, v.sub, c.code,
+       |      row_number() OVER (PARTITION BY v.vec_id, v.sub ORDER BY
+       |        list_sum([(v.sq[d] - c.cq[d]) * (v.sq[d] - c.cq[d])
+       |                  FOR d IN range(1, ${subDim + 1})]), c.code) AS rn
+       |    FROM sv v JOIN $src c ON v.sub = c.sub)
+       |  WHERE rn = 1""".stripMargin
+
+  /** Per-subspace Lloyd's rounds over `sv` from the `pc0` codebooks:
+    * assign/sum/mean (trunc division)/carry CTEs ending at `pc<iters>`. */
+  private def pqLloydRounds(iters: Int, subDim: Int): Seq[String] =
+    (1 to iters).map { i =>
       s"""pa$i AS (
-         |${pqArgmin(s"pc${i - 1}")}),
+         |${pqArgmin(s"pc${i - 1}", subDim)}),
          |ps$i AS (
          |  SELECT a.sub, a.code, d, sum(v.sq[d]) AS s, count(*) AS n
          |  FROM (SELECT vec_id, sub, code, unnest(range(1, ${subDim + 1})) AS d FROM pa$i) a
@@ -171,7 +174,12 @@ object AnnQueries {
          |pc$i AS (
          |  SELECT o.sub, o.code, coalesce(nn.cq, o.cq) AS cq
          |  FROM pc${i - 1} o LEFT JOIN pn$i nn ON nn.sub = o.sub AND nn.code = o.code)""".stripMargin
-    }.mkString(",\n")
+    }
+
+  private def annIvfPqCtes: String = {
+    val (cellIters, kCells, dim) = (3, 8, 64)
+    val (pqIters, nSub, kCodes, subDim, kNb, nProbe) = (2, 8, 16, 8, 5, 2)
+    val pqRounds = pqLloydRounds(pqIters, subDim).mkString(",\n")
     s"""${kmeansCascade(cellIters, kCells, dim)},
        |ca AS (
        |${kmeansArgmin(s"c$cellIters", "", "rn = 1", dim)}),
@@ -189,7 +197,7 @@ object AnnQueries {
        |pc0 AS (SELECT v.sub, s.code, v.sq AS cq FROM sv v JOIN sd s USING (vec_id)),
        |$pqRounds,
        |paf AS (
-       |${pqArgmin(s"pc$pqIters")}),
+       |${pqArgmin(s"pc$pqIters", subDim)}),
        |qp AS (
        |${kmeansArgmin(s"c$cellIters", " WHERE v.vec_id <= 10", s"rn <= $nProbe", dim)}),
        |rq AS (
@@ -391,14 +399,6 @@ object AnnQueries {
     * BIGINT sum of 8 table lookups, top-5. */
   private def annPqAdcSql: String = {
     val (iters, nSub, kCodes, subDim, kNb) = (2, 8, 16, 8, 5)
-    def argmin(src: String, filter: String) =
-      s"""  SELECT vec_id, sub, code FROM (
-         |    SELECT v.vec_id, v.sub, c.code,
-         |      row_number() OVER (PARTITION BY v.vec_id, v.sub ORDER BY
-         |        list_sum([(v.sq[d] - c.cq[d]) * (v.sq[d] - c.cq[d])
-         |                  FOR d IN range(1, ${subDim + 1})]), c.code) AS rn
-         |    FROM sv v JOIN $src c ON v.sub = c.sub$filter)
-         |  WHERE rn = 1""".stripMargin
     val base =
       s"""qvs AS (
          |  SELECT vec_id,
@@ -412,25 +412,10 @@ object AnnQueries {
          |  SELECT vec_id, CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) AS code
          |  FROM (SELECT DISTINCT vec_id FROM qvs ORDER BY vec_id LIMIT $kCodes)),
          |pc0 AS (SELECT v.sub, s.code, v.sq AS cq FROM sv v JOIN sd s USING (vec_id))""".stripMargin
-    val rounds = (1 to iters).map { i =>
-      s"""pa$i AS (
-         |${argmin(s"pc${i - 1}", "")}),
-         |ps$i AS (
-         |  SELECT a.sub, a.code, d, sum(v.sq[d]) AS s, count(*) AS n
-         |  FROM (SELECT vec_id, sub, code, unnest(range(1, ${subDim + 1})) AS d FROM pa$i) a
-         |  JOIN sv v ON v.vec_id = a.vec_id AND v.sub = a.sub
-         |  GROUP BY a.sub, a.code, d),
-         |pn$i AS (
-         |  SELECT sub, code,
-         |    list(CASE WHEN s >= 0 THEN s // n ELSE -((-s) // n) END ORDER BY d) AS cq
-         |  FROM ps$i GROUP BY sub, code),
-         |pc$i AS (
-         |  SELECT o.sub, o.code, coalesce(nn.cq, o.cq) AS cq
-         |  FROM pc${i - 1} o LEFT JOIN pn$i nn ON nn.sub = o.sub AND nn.code = o.code)""".stripMargin
-    }
+    val rounds = pqLloydRounds(iters, subDim)
     s"""WITH ${(base +: rounds).mkString(",\n")},
        |paf AS (
-       |${argmin(s"pc$iters", "")}),
+       |${pqArgmin(s"pc$iters", subDim)}),
        |dtb AS (
        |  SELECT v.vec_id AS query_id, v.sub, c.code,
        |    list_sum([(v.sq[d] - c.cq[d]) * (v.sq[d] - c.cq[d])
@@ -468,15 +453,15 @@ object AnnQueries {
        |SELECT query_id, neighbor_id, adc_dist, rank FROM ivf5
        |ORDER BY query_id, rank""".stripMargin
 
-  /** Recall self-audit of the IVFADC path ([[Ann.ivfPqTopK]] vs
-    * [[Ann.bruteForceTopK]] — the ann_recall_audit shape): what the
-    * composed coarse-quantizer + residual-code approximation costs on
-    * THIS corpus. */
-  private def annIvfPqRecall(s: SparkSession, dir: String): DataFrame = {
+  /** Recall@5 of an approximate top-5 search (`approxTopK(corpus,
+    * queries)`) against the exact brute-force top-5 of the 10 query
+    * vectors: one (n_exact, n_approx, n_hit, recall) row. */
+  private def recallAt5(s: SparkSession, dir: String)(
+      approxTopK: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val embs = t(s, dir, "embeddings")
     val q = embs.filter(col("vec_id") <= 10)
     val exact = Ann.bruteForceTopK(embs, q, 5).select("query_id", "neighbor_id")
-    val approx = Ann.ivfPqTopK(embs, q, 5).select("query_id", "neighbor_id")
+    val approx = approxTopK(embs, q).select("query_id", "neighbor_id")
     val hit = approx.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
     exact.agg(count(lit(1)).as("n_exact"))
       .crossJoin(approx.agg(count(lit(1)).as("n_approx")))
@@ -487,21 +472,19 @@ object AnnQueries {
             col("n_exact").cast("double"), 6)).as("recall"))
   }
 
+  /** Recall self-audit of the IVFADC path ([[Ann.ivfPqTopK]] vs
+    * [[Ann.bruteForceTopK]] — the ann_recall_audit shape): what the
+    * composed coarse-quantizer + residual-code approximation costs on
+    * THIS corpus. */
+  private def annIvfPqRecall(s: SparkSession, dir: String): DataFrame =
+    recallAt5(s, dir)(Ann.ivfPqTopK(_, _, 5))
+
   /** ann_ivfpq_recall: the IVFADC top-5 (shared CTE block) against the
     * full-precision brute-force top-5, one summary row. */
   private def annIvfPqRecallSql: String =
     s"""WITH $annIvfPqCtes,
        |f AS (SELECT vec_id, e, sqrt(list_dot_product(e, e)) AS nrm FROM qvs),
-       |bf5 AS MATERIALIZED (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY CASE WHEN q.nrm * c.nrm = 0 THEN 0.0
-       |          ELSE round(list_dot_product(q.e, c.e) / (q.nrm * c.nrm), 6) END DESC,
-       |          c.vec_id) AS rank
-       |    FROM (SELECT * FROM f WHERE vec_id <= 10) q
-       |    JOIN f c ON c.vec_id <> q.vec_id)
-       |  WHERE rank <= 5),
+       |${cosineTop5Cte("bf5", "f")},
        |hit AS (SELECT a.query_id, a.neighbor_id FROM ivf5 a
        |        JOIN bf5 b USING (query_id, neighbor_id))
        |SELECT
@@ -806,20 +789,8 @@ object AnnQueries {
     * exact cosine top-5 — the engine measuring its own index, like
     * `d_lsh_quality` does for MinHash.
     */
-  private def annRecallQ(s: SparkSession, dir: String): DataFrame = {
-    val embs = t(s, dir, "embeddings")
-    val q = embs.filter(col("vec_id") <= 10)
-    val exact = Ann.bruteForceTopK(embs, q, 5).select("query_id", "neighbor_id")
-    val approx = Ann.bucketedTopK(embs, q, 5).select("query_id", "neighbor_id")
-    val hit = approx.join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-    exact.agg(count(lit(1)).as("n_exact"))
-      .crossJoin(approx.agg(count(lit(1)).as("n_approx")))
-      .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-      .select(col("n_exact"), col("n_approx"), col("n_hit"),
-        when(col("n_exact") === 0, lit(0.0))
-          .otherwise(round(col("n_hit").cast("double") /
-            col("n_exact").cast("double"), 6)).as("recall"))
-  }
+  private def annRecallQ(s: SparkSession, dir: String): DataFrame =
+    recallAt5(s, dir)(Ann.bucketedTopK(_, _, 5))
 
   /** ann_recall_audit: recall@5 of the sign-LSH bucketed search against
     * the exact top-5 — BOTH pipelines replayed as nested subqueries of

@@ -18,11 +18,7 @@ object ColumnStatsQueries {
     * (per-doc-deduped, as the Spark side's array_distinct) and their
     * DISTINCT low-32 md5 hashes. */
   private def kmvShingleCte: String =
-    """WITH d AS (SELECT lang, string_split_regex(trim(text), '\s+') AS w FROM documents),
-      |g AS (SELECT lang,
-      |        CASE WHEN len(w) <= 2 THEN [array_to_string(w, ' ')]
-      |             ELSE list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) END AS sh
-      |      FROM d),
+    raw"""WITH ${shingle3Ctes("lang")},
       |sv AS (SELECT lang, unnest(sh) AS s FROM g),
       |h AS (SELECT DISTINCT lang, (md5_number_lower(s) & 4294967295) AS hv FROM sv)""".stripMargin
 
@@ -170,19 +166,21 @@ object ColumnStatsQueries {
        |ORDER BY lhs, rhs""".stripMargin
   }
 
+  /** Candidate (table, column) pairs of the inclusion-dependency scan. */
+  private val IndCandidates = Seq(
+    ("nation", "n_nationkey"), ("nation", "n_regionkey"),
+    ("region", "r_regionkey"),
+    ("customer", "c_custkey"), ("customer", "c_nationkey"),
+    ("supplier", "s_suppkey"), ("supplier", "s_nationkey"),
+    ("orders", "o_orderkey"), ("orders", "o_custkey"),
+    ("lineitem", "l_orderkey"), ("lineitem", "l_suppkey"))
+
   /** Profile: inclusion-dependency scan over the TPC-H key/FK columns —
     * the foreign-key discovery pass; every true FK⊆PK edge surfaces at
     * containment 1.0.
     */
   private def indScanQ(s: SparkSession, dir: String): DataFrame = {
-    val cands = Seq(
-      ("nation", "n_nationkey"), ("nation", "n_regionkey"),
-      ("region", "r_regionkey"),
-      ("customer", "c_custkey"), ("customer", "c_nationkey"),
-      ("supplier", "s_suppkey"), ("supplier", "s_nationkey"),
-      ("orders", "o_orderkey"), ("orders", "o_custkey"),
-      ("lineitem", "l_orderkey"), ("lineitem", "l_suppkey"))
-      .map { case (tbl, c) => (tbl, t(s, dir, tbl), c) }
+    val cands = IndCandidates.map { case (tbl, c) => (tbl, t(s, dir, tbl), c) }
     graft.profile.InfoTheory.indScan(cands, minContainment = 0.95)
       .orderBy("src", "dst")
   }
@@ -190,14 +188,7 @@ object ColumnStatsQueries {
   /** a_ind_scan: containment of every directed candidate-column pair
     * from the unified distinct (src, v) relation; ≥ 0.95 kept. */
   private def indScanSql: String = {
-    val cands = Seq(
-      ("nation", "n_nationkey"), ("nation", "n_regionkey"),
-      ("region", "r_regionkey"),
-      ("customer", "c_custkey"), ("customer", "c_nationkey"),
-      ("supplier", "s_suppkey"), ("supplier", "s_nationkey"),
-      ("orders", "o_orderkey"), ("orders", "o_custkey"),
-      ("lineitem", "l_orderkey"), ("lineitem", "l_suppkey"))
-    val arms = cands.map { case (t, c) =>
+    val arms = IndCandidates.map { case (t, c) =>
       s"SELECT DISTINCT '$t.$c' AS src, CAST($c AS VARCHAR) AS v FROM $t"
     }.mkString("\nUNION ALL\n")
     s"""WITH vals AS ($arms),
@@ -438,15 +429,20 @@ object ColumnStatsQueries {
        |FROM vals""".stripMargin
   }
 
+  /** Each document's distinct word 3-shingles with its language, as
+    * (lang, sh) rows. */
+  private def langShingles(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents").select(col("lang"),
+      explode(array_distinct(
+        graft.functions.TextFunctions.word_shingles(col("text"), 3))).as("sh"))
+
   /** Profile: relational HLL distinct estimate vs exact, per lang, over
     * 3-word shingles — the estimate column is oracle-replayed register
     * by register (integer-space harmonic sum, no FP summation order).
     */
   private def hllDistinctQ(s: SparkSession, dir: String): DataFrame = {
     import graft.profile.Hll
-    val sh = t(s, dir, "documents").select(col("lang"),
-      explode(array_distinct(
-        graft.functions.TextFunctions.word_shingles(col("text"), 3))).as("sh"))
+    val sh = langShingles(s, dir)
     val spec = Hll.HllSpec(p = 8)
     val est = Hll.estimate(Hll.registers(sh, "sh", spec, Seq("lang")), spec, Seq("lang"))
     val exact = sh.distinct().groupBy("lang").agg(count(lit(1)).as("exact_distinct"))
@@ -460,11 +456,7 @@ object ColumnStatsQueries {
     * estimate expression. alpha·m²·2³³ is written with the same
     * operation order as the JVM literal so the doubles agree bitwise. */
   private def hllDistinctSql: String =
-    """WITH d AS (SELECT lang, string_split_regex(trim(text), '\s+') AS w FROM documents),
-      |g AS (SELECT lang,
-      |        CASE WHEN len(w) <= 2 THEN [array_to_string(w, ' ')]
-      |             ELSE list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) END AS sh
-      |      FROM d),
+    raw"""WITH ${shingle3Ctes("lang")},
       |sv AS (SELECT lang, unnest(sh) AS s FROM g),
       |h AS (SELECT lang, s, (md5_number_lower(s) & 4294967295) AS hv FROM sv),
       |r AS (SELECT lang, hv & 255 AS reg,
@@ -493,9 +485,7 @@ object ColumnStatsQueries {
     */
   private def kmvDistinctQ(s: SparkSession, dir: String): DataFrame = {
     import graft.profile.Kmv
-    val sh = t(s, dir, "documents").select(col("lang"),
-      explode(array_distinct(
-        graft.functions.TextFunctions.word_shingles(col("text"), 3))).as("sh"))
+    val sh = langShingles(s, dir)
     val spec = Kmv.KmvSpec(k = 256)
     val est = Kmv.estimate(Kmv.sketch(sh, "sh", spec, Seq("lang")), spec, Seq("lang"))
     val exact = sh.distinct().groupBy("lang").agg(count(lit(1)).as("exact_distinct"))
@@ -525,9 +515,7 @@ object ColumnStatsQueries {
     */
   private def kmvSetOpsQ(s: SparkSession, dir: String): DataFrame = {
     import graft.profile.Kmv
-    val sh = t(s, dir, "documents").select(col("lang"),
-      explode(array_distinct(
-        graft.functions.TextFunctions.word_shingles(col("text"), 3))).as("sh"))
+    val sh = langShingles(s, dir)
     val spec = Kmv.KmvSpec(k = 256)
     val est = Kmv.setEstimates(Kmv.sketch(sh, "sh", spec, Seq("lang")), "lang", spec)
     val d = sh.distinct()

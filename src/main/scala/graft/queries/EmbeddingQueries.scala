@@ -188,17 +188,7 @@ object EmbeddingQueries {
       s"""p$d AS MATERIALIZED (
          |  SELECT vec_id, e2 AS e, sqrt(list_dot_product(e2, e2)) AS nrm FROM (
          |    SELECT vec_id, CAST(embedding AS DOUBLE[])[1:$d] AS e2 FROM embeddings))""".stripMargin
-    def topCte(d: Int) =
-      s"""t$d AS MATERIALIZED (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY CASE WHEN q.nrm * c.nrm = 0 THEN 0.0
-         |          ELSE round(list_dot_product(q.e, c.e) / (q.nrm * c.nrm), 6) END DESC,
-         |          c.vec_id) AS rank
-         |    FROM (SELECT * FROM p$d WHERE vec_id <= 10) q
-         |    JOIN p$d c ON c.vec_id <> q.vec_id)
-         |  WHERE rank <= 5)""".stripMargin
+    def topCte(d: Int) = cosineTop5Cte(s"t$d", s"p$d")
     val nq = "nq AS (SELECT count(*) AS n FROM embeddings WHERE vec_id <= 10)"
     val ctes = (dims.map(prefCte) ++ dims.map(topCte) :+ nq).mkString(",\n")
     val arms = dims.map { d =>
@@ -244,32 +234,24 @@ object EmbeddingQueries {
        |  GROUP BY vec_id),
        |pjl AS MATERIALIZED (
        |  SELECT vec_id, e, sqrt(list_dot_product(e, e)) AS nrm FROM pj),
-       |tfull AS MATERIALIZED (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY CASE WHEN q.nrm * c.nrm = 0 THEN 0.0
-       |          ELSE round(list_dot_product(q.e, c.e) / (q.nrm * c.nrm), 6) END DESC,
-       |          c.vec_id) AS rank
-       |    FROM (SELECT * FROM pfull WHERE vec_id <= 10) q
-       |    JOIN pfull c ON c.vec_id <> q.vec_id)
-       |  WHERE rank <= 5),
-       |tjl AS MATERIALIZED (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY CASE WHEN q.nrm * c.nrm = 0 THEN 0.0
-       |          ELSE round(list_dot_product(q.e, c.e) / (q.nrm * c.nrm), 6) END DESC,
-       |          c.vec_id) AS rank
-       |    FROM (SELECT * FROM pjl WHERE vec_id <= 10) q
-       |    JOIN pjl c ON c.vec_id <> q.vec_id)
-       |  WHERE rank <= 5),
+       |${cosineTop5Cte("tfull", "pfull")},
+       |${cosineTop5Cte("tjl", "pjl")},
        |nq AS (SELECT count(*) AS n FROM embeddings WHERE vec_id <= 10)
        |SELECT CAST(16 AS BIGINT) AS dim_out,
        |  CAST(count(*) AS BIGINT) AS matches,
        |  CAST(count(*) * 1000000 // (nq.n * 5) AS BIGINT) / 1000000.0 AS overlap_r
        |FROM tjl a JOIN tfull b USING (query_id, neighbor_id), nq
        |GROUP BY nq.n""".stripMargin
+
+  /** The exact kNN edges over every vector, k = 5 (the ann_cosine_topk
+    * scoring): `n`(vec_id, <cols>e, nrm) and `knn`(query_id,
+    * neighbor_id). */
+  private def knnCtes(cols: String): String =
+    s"""n AS MATERIALIZED (
+       |  SELECT vec_id, ${cols}CAST(embedding AS DOUBLE[]) AS e,
+       |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
+       |  FROM embeddings),
+       |${cosineTop5Cte("knn", "n", allQueries = true)}""".stripMargin
 
   /** Mutual-kNN graph health report
     * ([[graft.operators.Ann.knnGraphReport]], k=5). */
@@ -279,19 +261,7 @@ object EmbeddingQueries {
   /** emb_knn_graph: replay the exact kNN edges (the ann_cosine_topk
     * scoring, all queries), then the mutual/hubness/orphan rollup. */
   private def knnGraphSql: String =
-    """WITH n AS MATERIALIZED (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-      |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-      |  FROM embeddings),
-      |knn AS MATERIALIZED (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |      row_number() OVER (PARTITION BY q.vec_id
-      |        ORDER BY CASE WHEN q.nrm * c.nrm = 0 THEN 0.0
-      |          ELSE round(list_dot_product(q.e, c.e) / (q.nrm * c.nrm), 6) END DESC,
-      |          c.vec_id) AS rank
-      |    FROM n q JOIN n c ON c.vec_id <> q.vec_id)
-      |  WHERE rank <= 5),
+    s"""WITH ${knnCtes("")},
       |m AS (SELECT count(*) AS mutual_pairs FROM knn a JOIN knn b
       |  ON a.query_id = b.neighbor_id AND a.neighbor_id = b.query_id
       |     AND a.query_id < a.neighbor_id),
@@ -318,19 +288,7 @@ object EmbeddingQueries {
     * k=5), attach both endpoints' labels, per-vector agreement counts,
     * per-label rollup with the exact ppm rate. */
   private def labelAgreementSql: String =
-    """WITH n AS MATERIALIZED (
-      |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e,
-      |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-      |  FROM embeddings),
-      |knn AS MATERIALIZED (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |      row_number() OVER (PARTITION BY q.vec_id
-      |        ORDER BY CASE WHEN q.nrm * c.nrm = 0 THEN 0.0
-      |          ELSE round(list_dot_product(q.e, c.e) / (q.nrm * c.nrm), 6) END DESC,
-      |          c.vec_id) AS rank
-      |    FROM n q JOIN n c ON c.vec_id <> q.vec_id)
-      |  WHERE rank <= 5),
+    s"""WITH ${knnCtes("label, ")},
       |pv AS (
       |  SELECT k.query_id, ql.label AS ql, count(*) AS n_nb,
       |    CAST(sum(CASE WHEN ql.label = nl.label THEN 1 ELSE 0 END) AS BIGINT) AS n_agree

@@ -65,6 +65,41 @@ object EncoderQueries {
     (feats, featCols)
   }
 
+  /** (id, score_r): a scorer's output rounded to 6 dp, by id. */
+  private def roundedScores(scored: DataFrame): DataFrame =
+    scored.select(col("id"), round(col("score"), 6).as("score_r")).orderBy("id")
+
+  /** The q7 fixture batch scored through a `layers`-deep mini-encoder
+    * with FFN `activation`, exported to `path` as a real ONNX graph. */
+  private def teScore(s: SparkSession, path: String, layers: Int,
+      activation: String = "Sigmoid"): DataFrame = {
+    graft.ml.OnnxExport.exportEncoderStack(teStack(layers), path, activation = activation)
+    val (feats, featCols) = teFeats(s)
+    roundedScores(new graft.ml.Scorer.ExternalModelScorer(
+        graft.ml.Scorer.onnxModelFactory(path), featCols).score(feats))
+  }
+
+  /** The q6 encoder input over `docs`: each doc's first TeS whitespace
+    * tokens hash to ids through the md5-low32 family (mod 64) and look up
+    * the closed-form embedding table; `keep` columns ride along. Returns
+    * the feature frame and its `x_{s}_{d}` column names. */
+  private def teTokenFeats(docs: DataFrame, keep: Seq[String]): (DataFrame, Seq[String]) = {
+    val (sq, d) = (TeS, TeD)
+    val toks = docs.select(keep.map(col) :+
+      filter(split(lower(col("text")), "\\s+"), v => v =!= "").as("w"): _*)
+    val tids = toks.select(keep.map(col) ++ (0 until sq).map { si =>
+      coalesce(when(size(col("w")) > si,
+          graft.functions.SketchFunctions.md5_low32(col("w")(si)) % 64),
+        lit(0L)).as(s"tid_$si")
+    }: _*)
+    val featCols = for (si <- 0 until sq; di <- 0 until d) yield s"x_${si}_$di"
+    val feats = tids.select(keep.map(col) ++
+      (for (si <- 0 until sq; di <- 0 until d) yield
+        (((col(s"tid_$si") * 7 + lit(di * 3)) % 17).cast("double") * 0.125 - 1.0)
+          .as(s"x_${si}_$di")): _*)
+    (feats, featCols)
+  }
+
   // ---- q7_transformer_score fixture: a 1-layer 2-head toy encoder whose
   // weights AND inputs come from these closed-form exact-binary-fraction
   // formulas, shared with the Spark plan (which exports them as a real ONNX
@@ -181,50 +216,67 @@ object EncoderQueries {
   private[graft] def tbMh(tid: Long, s: Int, j: Int): Double =
     ((tid * 7 + j * 5 + s) % 11) * 0.25 - 1.25
 
-  /** Unrolled SQL replay of the mini-encoder forward pass. Generated, not
-    * hand-written: every matrix product is a left-associated sum in the
-    * session kernels' ascending index order; softmax uses GREATEST +
+  /** Shortest round-trip double literal for generated SQL. */
+  private def sqlDouble(v: Double): String = {
+    val t = v.toString
+    if (t.contains('E') || t.contains('e')) s"CAST($t AS DOUBLE)" else t
+  }
+
+  /** A parenthesized, left-associated SQL sum of `ts` in order. */
+  private def sqlSum(ts: Seq[String]): String = ts.mkString("(", " + ", ")")
+
+  /** Unrolled SQL replay of an encoder stack's forward pass. Generated,
+    * not hand-written: every matrix product is a left-associated sum in
+    * the session kernels' ascending index order; softmax uses GREATEST +
     * exp(x−max)/Σ; LayerNorm is ((x−mean)/sqrt(var+eps))·g+b with
-    * population variance; pooling averages positions ascending. */
-  /** The encoder CTE chain over any `c0` that provides columns `id` and
-    * `x0_{s}_{d}` — shared by the q7 oracles (classifier head, 1 and
-    * `layers` deep) and q6 (embedding output). Each layer l reads
-    * `x{l}_*`, emits `L{l}_`-prefixed scratch columns, and writes its
-    * LayerNorm output as `x{l+1}_*`; the final CTE `cP` exposes
+    * population variance; pooling averages positions ascending.
+    *
+    * The chain reads a CTE `c0` that provides `id` and `x0_{s}_{d}`; its
+    * CTEs are named `<prefix>1, <prefix>2, …`. Each layer l reads `x{l}_*`,
+    * emits `L{l}_`-prefixed scratch columns, and writes its LayerNorm
+    * output as `x{l+1}_*`; the final CTE `cP` exposes
     * (id, pooled_0..pooled_{D−1}) mean-pooled over the LAST layer.
+    * `checkpoint` selects the realistic-checkpoint form: FUSED-QKV biases
+    * on q/k/v, the additive attention mask `em_j` on every logit before
+    * the softmax max-subtraction, and a MASKED mean pool over `m_0..m_{S−1}`
+    * (which `c0` then also provides). Sigmoid is the only FFN activation
+    * of that form.
     */
-  private def teEncoderCtes(layers: Int, activation: String = "sigmoid"): String = {
-    val (s_, d_, h_, f_) = (TeS, TeD, TeH, TeF)
+  private def encoderCtes(prefix: String, s_ : Int, d_ : Int, h_ : Int, f_ : Int,
+      layers: Int, scale: Double, eps: Double, checkpoint: Boolean,
+      activation: String = "sigmoid"): String = {
     val dh = d_ / h_
-    def f(v: Double): String = { // shortest round-trip double literal
-      val t = v.toString
-      if (t.contains('E') || t.contains('e')) s"CAST($t AS DOUBLE)" else t
-    }
-    def sum(ts: Seq[String]): String = ts.mkString("(", " + ", ")")
+    def f(v: Double): String = sqlDouble(v)
+    def sum(ts: Seq[String]): String = sqlSum(ts)
     val ctes = scala.collection.mutable.ArrayBuffer.empty[String]
     var prev = "c0"
     var n = 0
     def cte(cols: Seq[String]): Unit = {
       n += 1
-      ctes += s"c$n AS (SELECT *, ${cols.mkString(", ")} FROM $prev)"
-      prev = s"c$n"
+      ctes += s"$prefix$n AS (SELECT *, ${cols.mkString(", ")} FROM $prev)"
+      prev = s"$prefix$n"
     }
     for (l <- 0 until layers) {
       val X = s"x${l}_"
       val P = s"L${l}_"
       val O = s"x${l + 1}_"
-      // q/k/v per head: [S,dh] = x[S,D] · W[D,dh], d ascending
+      // q/k/v per head: [S,dh] = x[S,D] · W[D,dh], d ascending; the
+      // checkpoint adds the fused-QKV bias of the torch Linear layout
+      // [Q|K|V], block column (h·dh + e) of block `off`
       val qkv = for {
-        (nm, w) <- Seq[(String, (Int, Int, Int) => Double)](
+        ((nm, w), off) <- Seq[(String, (Int, Int, Int) => Double)](
           ("q", teWqL(l, _, _, _)), ("k", teWkL(l, _, _, _)), ("v", teWvL(l, _, _, _)))
+          .zip(Seq(0, d_, 2 * d_))
         hi <- 0 until h_; si <- 0 until s_; e <- 0 until dh
       } yield sum((0 until d_).map(di => s"$X${si}_$di * ${f(w(hi, di, e))}")) +
+        (if (checkpoint) s" + ${f(tbBqkv(l, off + hi * dh + e))}" else "") +
         s" AS $P${nm}_${hi}_${si}_$e"
       cte(qkv)
-      // scaled attention logits: scl[i][j] = (Σ_e q[i][e]·k[j][e]) · scale
+      // scaled attention logits: scl[i][j] = (Σ_e q[i][e]·k[j][e]) · scale,
+      // plus the checkpoint's em_j (pad keys → −10000)
       cte(for (hi <- 0 until h_; i <- 0 until s_; j <- 0 until s_)
         yield sum((0 until dh).map(e => s"${P}q_${hi}_${i}_$e * ${P}k_${hi}_${j}_$e")) +
-          s" * $TeScale AS ${P}scl_${hi}_${i}_$j")
+          s" * $scale${if (checkpoint) s" + em_$j" else ""} AS ${P}scl_${hi}_${i}_$j")
       cte(for (hi <- 0 until h_; i <- 0 until s_)
         yield s"GREATEST(${(0 until s_).map(j => s"${P}scl_${hi}_${i}_$j").mkString(", ")})" +
           s" AS ${P}m_${hi}_$i")
@@ -252,7 +304,7 @@ object EncoderQueries {
               s"(${src}_${i}_$di - mean_${tag}_$i) * (${src}_${i}_$di - mean_${tag}_$i)")) +
               s" / ${d_}.0 AS var_${tag}_$i"))
         cte(for (i <- 0 until s_; di <- 0 until d_)
-          yield s"((${src}_${i}_$di - mean_${tag}_$i) / sqrt(var_${tag}_$i + $TeEps))" +
+          yield s"((${src}_${i}_$di - mean_${tag}_$i) / sqrt(var_${tag}_$i + $eps))" +
             s" * ${f(g(di))} + ${f(b(di))} AS ${out}${i}_$di")
       }
       lnCols(s"${P}r1", s"${P}l1_", teG1L(l, _), teB1L(l, _))
@@ -324,12 +376,22 @@ object EncoderQueries {
           s" + ${f(teBf2L(l, di))} + ${P}l1_${i}_$di AS ${P}r2_${i}_$di")
       lnCols(s"${P}r2", O, teG2L(l, _), teB2L(l, _))
     }
+    // pooled: Σ_i x / S, or the checkpoint's masked Σ_i x·m_i / Σ_i m_i,
+    // both ascending
+    val cnt = if (checkpoint) sum((0 until s_).map(i => s"m_$i")) else s"${s_}.0"
     val pooled = for (di <- 0 until d_)
-      yield sum((0 until s_).map(i => s"x${layers}_${i}_$di")) +
-        s" / ${s_}.0 AS pooled_$di"
+      yield sum((0 until s_).map(i =>
+        s"x${layers}_${i}_$di${if (checkpoint) s" * m_$i" else ""}")) +
+        s" / $cnt AS pooled_$di"
     ctes += s"cP AS (SELECT id, ${pooled.mkString(", ")} FROM $prev)"
     ctes.mkString(", ")
   }
+
+  /** The q7/q6 mini-encoder chain (classifier head, 1 and `layers` deep,
+    * and the embedding output). */
+  private def teEncoderCtes(layers: Int, activation: String = "sigmoid"): String =
+    encoderCtes("c", TeS, TeD, TeH, TeF, layers, TeScale, TeEps, checkpoint = false,
+      activation)
 
   private def q7TransformerSql(layers: Int, activation: String = "sigmoid"): String = {
     def f(v: Double): String = v.toString
@@ -365,81 +427,21 @@ object EncoderQueries {
       s"SELECT CAST(id AS BIGINT) AS doc_id, ${outs.mkString(", ")} FROM cP ORDER BY doc_id"
   }
 
-  /** Shared recursive-CTE WordPiece replay (the t2_wordpiece machinery,
-    * parameterized): the vocab is built from the 18-char doc snippets
+  /** The snippet WordPiece replay ([[Shared.wordpieceCtes]], the
+    * t2_wordpiece machinery): the vocab is built from the 18-char doc snippets
     * (doc_id ≤ TbVocabDocs, maxSize TbVocabMax — the TRAINED vocab
     * relation), then greedy longest-match segmentation +
     * [CLS]/body≤(TbS−2)/[SEP] encoding of `srcSql` rows
     * `(eid, etext)` (etext already lowercased; may reference `sn`).
     * Emits CTEs `sn … enc(eid, ids)`; callers continue from `enc` and
     * must open the statement with WITH RECURSIVE (the `walk` CTE). */
-  private def tbWordpieceCtes(srcSql: String): String = {
-    val bodySlots = TbS - 2
+  private def tbWordpieceCtes(srcSql: String): String =
     s"""sn AS (SELECT doc_id, lower(substr(text, 1, $TbSnip)) AS sniptext
        |       FROM documents WHERE doc_id < $TbDocs),
        |src AS ($srcSql),
-       |words AS (
-       |  SELECT w FROM (
-       |    SELECT unnest(regexp_split_to_array(sniptext, '\\s+')) AS w
-       |    FROM sn WHERE doc_id <= $TbVocabDocs) WHERE w <> ''),
-       |chars AS (
-       |  SELECT DISTINCT c AS piece FROM (
-       |    SELECT unnest(string_split(w, '')) AS c
-       |    FROM (SELECT DISTINCT w FROM words)) WHERE c <> ''),
-       |cand AS (
-       |  SELECT piece, 9223372036854775807 AS freq FROM chars
-       |  UNION ALL SELECT '##' || piece, 9223372036854775807 FROM chars
-       |  UNION ALL SELECT w AS piece, count(*) AS freq FROM words GROUP BY w),
-       |lim AS (
-       |  SELECT piece, max(freq) AS freq FROM cand GROUP BY piece
-       |  ORDER BY max(freq) DESC, piece LIMIT ${TbVocabMax - 4}),
-       |vocab AS (
-       |  SELECT piece, CAST(id AS BIGINT) AS id FROM (VALUES
-       |    ('[PAD]', 0), ('[UNK]', 1), ('[CLS]', 2), ('[SEP]', 3)) sp(piece, id)
-       |  UNION ALL
-       |  SELECT piece, CAST(row_number() OVER (ORDER BY freq DESC, piece) + 3 AS BIGINT)
-       |  FROM lim),
-       |dw AS (
-       |  SELECT DISTINCT w FROM (
-       |    SELECT unnest(regexp_split_to_array(etext, '\\s+')) AS w
-       |    FROM src) WHERE w <> ''),
-       |pieces AS (
-       |  SELECT id, piece LIKE '##%' AS cont,
-       |    CASE WHEN piece LIKE '##%' THEN substr(piece, 3) ELSE piece END AS core
-       |  FROM vocab WHERE piece NOT LIKE '[%'),
-       |wp AS (SELECT w, unnest(generate_series(1, length(w))) AS pos FROM dw),
-       |best AS (
-       |  SELECT wp.w, wp.pos, arg_max(p.id, length(p.core)) AS pid,
-       |    max(length(p.core)) AS plen
-       |  FROM wp JOIN pieces p
-       |    ON p.cont = (wp.pos > 1)
-       |   AND substr(wp.w, wp.pos, length(p.core)) = p.core
-       |  GROUP BY wp.w, wp.pos),
-       |walk(w, pos, ids) AS (
-       |  SELECT w, 1, CAST([] AS BIGINT[]) FROM dw
-       |  UNION ALL
-       |  SELECT x.w, x.pos + b.plen, list_append(x.ids, b.pid)
-       |  FROM walk x JOIN best b ON b.w = x.w AND b.pos = x.pos),
-       |wseg AS (
-       |  SELECT d.w,
-       |    coalesce(t.ids, list_value((SELECT id FROM vocab WHERE piece = '[UNK]'))) AS ids
-       |  FROM dw d LEFT JOIN
-       |    (SELECT w, ids FROM walk WHERE pos = length(w) + 1) t ON t.w = d.w),
-       |toks AS (
-       |  SELECT eid, w, o FROM (
-       |    SELECT eid,
-       |      unnest(regexp_split_to_array(etext, '\\s+')) AS w,
-       |      unnest(generate_series(1, len(regexp_split_to_array(etext, '\\s+')))) AS o
-       |    FROM src) WHERE w <> ''),
-       |enc AS (
-       |  SELECT t.eid,
-       |    list_concat(
-       |      list_value((SELECT id FROM vocab WHERE piece = '[CLS]')),
-       |      list_append(
-       |        list_slice(flatten(list(s.ids ORDER BY t.o)), 1, $bodySlots),
-       |        (SELECT id FROM vocab WHERE piece = '[SEP]'))) AS ids
-       |  FROM toks t JOIN wseg s ON s.w = t.w GROUP BY t.eid)""".stripMargin
-  }
+       |""".stripMargin +
+      wordpieceCtes("sniptext", s"sn WHERE doc_id <= $TbVocabDocs", TbVocabMax - 4,
+        "eid", "etext", "src", TbS - 2)
 
   private val Q7HeadJson = "/tmp/graft_fixtures/q7_head.json"
 
@@ -468,11 +470,9 @@ object EncoderQueries {
     val jsonPath = Q7HeadJson
     graft.ml.OnnxExport.exportLogistic(model, onnxPath)
     graft.ml.Scorer.exportLinearModel(model, jsonPath) // oracle's copy
-    new graft.ml.Scorer.ExternalModelScorer(
+    roundedScores(new graft.ml.Scorer.ExternalModelScorer(
         graft.ml.Scorer.onnxModelFactory(onnxPath), Seq("x1", "x2", "x3"))
-      .score(feats)
-      .select(col("id"), round(col("score"), 6).as("score_r"))
-      .orderBy("id")
+      .score(feats))
   }
 
   /** q7_onnx_score: recompute sigmoid(coef·x + b) from the exported JSON
@@ -492,32 +492,16 @@ object EncoderQueries {
       |    m.coefficients[3] * x3 + m.intercept))), 6) AS score_r
       |FROM xs, m ORDER BY id""".stripMargin
 
-  private def q7TransformerScore(s: SparkSession, dir: String): DataFrame = {
-    val path = "/tmp/graft_fixtures/q7_encoder.onnx"
-    graft.ml.OnnxExport.exportEncoderStack(teStack(1), path)
-    val (feats, featCols) = teFeats(s)
-    new graft.ml.Scorer.ExternalModelScorer(
-        graft.ml.Scorer.onnxModelFactory(path), featCols)
-      .score(feats)
-      .select(col("id"), round(col("score"), 6).as("score_r"))
-      .orderBy("id")
-  }
+  private def q7TransformerScore(s: SparkSession, dir: String): DataFrame =
+    teScore(s, "/tmp/graft_fixtures/q7_encoder.onnx", layers = 1)
 
   private def q7TransformerScoreSql: String = q7TransformerSql(1)
 
   /** The DEEP variant: a 3-layer stack of the same encoder block (the
     * reference's BERT is 12 stacked copies of this block) through the
     * same session — the oracle unrolls all three layers in SQL. */
-  private def q7EncoderStack(s: SparkSession, dir: String): DataFrame = {
-    val path = "/tmp/graft_fixtures/q7_encoder_stack.onnx"
-    graft.ml.OnnxExport.exportEncoderStack(teStack(3), path)
-    val (feats, featCols) = teFeats(s)
-    new graft.ml.Scorer.ExternalModelScorer(
-        graft.ml.Scorer.onnxModelFactory(path), featCols)
-      .score(feats)
-      .select(col("id"), round(col("score"), 6).as("score_r"))
-      .orderBy("id")
-  }
+  private def q7EncoderStack(s: SparkSession, dir: String): DataFrame =
+    teScore(s, "/tmp/graft_fixtures/q7_encoder_stack.onnx", layers = 3)
 
   /** Q6 IN-ENGINE value/sentence embeddings (`embedding_search.py:25-42`
     * — the sentence-transformer value-vector path): each document's
@@ -530,22 +514,11 @@ object EncoderQueries {
     * the whole encoder as unrolled SQL, then float-narrows exactly like
     * the embedder. */
   private def q6ValueEmbed(s: SparkSession, dir: String): DataFrame = {
-    val (sq, d) = (TeS, TeD)
+    val d = TeD
     val path = "/tmp/graft_fixtures/q6_encoder.onnx"
     graft.ml.OnnxExport.exportEncoderStack(teStack(1), path, withHead = false)
-    val toks = t(s, dir, "documents").filter(col("doc_id") <= 48)
-      .select(col("doc_id"),
-        filter(split(lower(col("text")), "\\s+"), v => v =!= "").as("w"))
-    val tids = toks.select(col("doc_id") +: (0 until sq).map { si =>
-      coalesce(when(size(col("w")) > si,
-          graft.functions.SketchFunctions.md5_low32(col("w")(si)) % 64),
-        lit(0L)).as(s"tid_$si")
-    }: _*)
-    val featCols = for (si <- 0 until sq; di <- 0 until d) yield s"x_${si}_$di"
-    val feats = tids.select(col("doc_id") +:
-      (for (si <- 0 until sq; di <- 0 until d) yield
-        (((col(s"tid_$si") * 7 + lit(di * 3)) % 17).cast("double") * 0.125 - 1.0)
-          .as(s"x_${si}_$di")): _*)
+    val (feats, featCols) =
+      teTokenFeats(t(s, dir, "documents").filter(col("doc_id") <= 48), Seq("doc_id"))
     new graft.ml.Scorer.ExternalEmbedder(
         graft.ml.Scorer.onnxEmbedderFactory(path), featCols, dim = d)
       .score(feats)
@@ -559,16 +532,8 @@ object EncoderQueries {
     * while the oracle replays it as (exp(2z)−1)/(exp(2z)+1), the only
     * tanh DuckDB 1.0 can express; the ≤1-ulp formula difference sits
     * far inside the 6-dp rounding discipline. */
-  private def q7EncoderTanh(s: SparkSession, dir: String): DataFrame = {
-    val path = "/tmp/graft_fixtures/q7_encoder_tanh.onnx"
-    graft.ml.OnnxExport.exportEncoderStack(teStack(1), path, activation = "Tanh")
-    val (feats, featCols) = teFeats(s)
-    new graft.ml.Scorer.ExternalModelScorer(
-        graft.ml.Scorer.onnxModelFactory(path), featCols)
-      .score(feats)
-      .select(col("id"), round(col("score"), 6).as("score_r"))
-      .orderBy("id")
-  }
+  private def q7EncoderTanh(s: SparkSession, dir: String): DataFrame =
+    teScore(s, "/tmp/graft_fixtures/q7_encoder_tanh.onnx", layers = 1, activation = "Tanh")
 
   /** q7_encoder_tanh: the BERT-family Tanh activation under the oracle —
     * the session executes the Tanh node (correctly-rounded math.tanh);
@@ -581,16 +546,8 @@ object EncoderQueries {
     * approximate='tanh' export emits (no bespoke Gelu op), the session
     * executes it node by node, and the oracle replays the identical
     * chain with tanh as (exp(2a)−1)/(exp(2a)+1). */
-  private def q7EncoderGelu(s: SparkSession, dir: String): DataFrame = {
-    val path = "/tmp/graft_fixtures/q7_encoder_gelu.onnx"
-    graft.ml.OnnxExport.exportEncoderStack(teStack(1), path, activation = "Gelu")
-    val (feats, featCols) = teFeats(s)
-    new graft.ml.Scorer.ExternalModelScorer(
-        graft.ml.Scorer.onnxModelFactory(path), featCols)
-      .score(feats)
-      .select(col("id"), round(col("score"), 6).as("score_r"))
-      .orderBy("id")
-  }
+  private def q7EncoderGelu(s: SparkSession, dir: String): DataFrame =
+    teScore(s, "/tmp/graft_fixtures/q7_encoder_gelu.onnx", layers = 1, activation = "Gelu")
 
   /** q7_encoder_gelu: BERT's actual activation (`transformer_bert.py`
     * uses the BERT GELU) in the tanh approximation — the session executes
@@ -605,16 +562,9 @@ object EncoderQueries {
     * the oracle replays the identical polynomial in SQL — with the
     * tanh-approx variant above this completes the torch-activation
     * matrix (Sigmoid/Tanh/Relu/tanh-GELU/exact-GELU). */
-  private def q7EncoderGeluExact(s: SparkSession, dir: String): DataFrame = {
-    val path = "/tmp/graft_fixtures/q7_encoder_gelu_exact.onnx"
-    graft.ml.OnnxExport.exportEncoderStack(teStack(1), path, activation = "GeluErf")
-    val (feats, featCols) = teFeats(s)
-    new graft.ml.Scorer.ExternalModelScorer(
-        graft.ml.Scorer.onnxModelFactory(path), featCols)
-      .score(feats)
-      .select(col("id"), round(col("score"), 6).as("score_r"))
-      .orderBy("id")
-  }
+  private def q7EncoderGeluExact(s: SparkSession, dir: String): DataFrame =
+    teScore(s, "/tmp/graft_fixtures/q7_encoder_gelu_exact.onnx", layers = 1,
+      activation = "GeluErf")
 
   /** q7_encoder_gelu_exact: GELU in the EXACT (erf) form — the chain a
     * default torch `nn.GELU()` export writes (Div→Erf→Add→Mul→Mul). The
@@ -851,110 +801,17 @@ object EncoderQueries {
 
   private[graft] def tbBqkv(l: Int, j: Int): Double = ((l * 5 + j * 3) % 7 - 3) * 0.0625
 
-  /** Unrolled SQL replay of the realistic-checkpoint encoder stack: like
-    * [[teEncoderCtes]] but with (a) FUSED-QKV biases on q/k/v, (b) the
-    * additive attention mask `em_j` on every logit before the softmax
-    * max-subtraction, (c) Tb dimensions (S=6, 4 layers), and (d) a
-    * MASKED mean pool. Expects a CTE `c0` exposing `id`, `x0_{i}_{d}`,
-    * `m_0..m_{S−1}` and `em_0..em_{S−1}`; emits `cP` with
-    * (id, pooled_0..pooled_{D−1}). Summation orders mirror the session
-    * kernels exactly (k ascending, lanes ascending). */
-  private def tbEncoderCtes: String = {
-    val (s_, d_, h_, f_, layers) = (TbS, TbD, TbH, TbF, TbL)
-    val dh = d_ / h_
-    def f(v: Double): String = {
-      val t = v.toString
-      if (t.contains('E') || t.contains('e')) s"CAST($t AS DOUBLE)" else t
-    }
-    def sum(ts: Seq[String]): String = ts.mkString("(", " + ", ")")
-    val ctes = scala.collection.mutable.ArrayBuffer.empty[String]
-    var prev = "c0"
-    var n = 0
-    def cte(cols: Seq[String]): Unit = {
-      n += 1
-      ctes += s"t$n AS (SELECT *, ${cols.mkString(", ")} FROM $prev)"
-      prev = s"t$n"
-    }
-    for (l <- 0 until layers) {
-      val X = s"x${l}_"
-      val P = s"L${l}_"
-      val O = s"x${l + 1}_"
-      // fused-QKV projections WITH bias: the torch Linear layout
-      // [Q|K|V]; block column (h·dh + e) of block `off`
-      val qkv = for {
-        (nm, off) <- Seq(("q", 0), ("k", d_), ("v", 2 * d_))
-        hi <- 0 until h_; si <- 0 until s_; e <- 0 until dh
-      } yield sum((0 until d_).map(di =>
-          s"$X${si}_$di * ${f(tbWqkv(l, di, off + hi * dh + e))}")) +
-        s" + ${f(tbBqkv(l, off + hi * dh + e))} AS $P${nm}_${hi}_${si}_$e"
-      cte(qkv)
-      // masked scaled logits: (Σ_e q·k)·scale + em_j (pad keys → −10000)
-      cte(for (hi <- 0 until h_; i <- 0 until s_; j <- 0 until s_)
-        yield sum((0 until dh).map(e => s"${P}q_${hi}_${i}_$e * ${P}k_${hi}_${j}_$e")) +
-          s" * $TbScale + em_$j AS ${P}scl_${hi}_${i}_$j")
-      cte(for (hi <- 0 until h_; i <- 0 until s_)
-        yield s"GREATEST(${(0 until s_).map(j => s"${P}scl_${hi}_${i}_$j").mkString(", ")})" +
-          s" AS ${P}m_${hi}_$i")
-      cte(for (hi <- 0 until h_; i <- 0 until s_; j <- 0 until s_)
-        yield s"exp(${P}scl_${hi}_${i}_$j - ${P}m_${hi}_$i) AS ${P}e_${hi}_${i}_$j")
-      cte(for (hi <- 0 until h_; i <- 0 until s_)
-        yield sum((0 until s_).map(j => s"${P}e_${hi}_${i}_$j")) + s" AS ${P}s_${hi}_$i")
-      cte(for (hi <- 0 until h_; i <- 0 until s_; e <- 0 until dh)
-        yield sum((0 until s_).map(j =>
-          s"(${P}e_${hi}_${i}_$j / ${P}s_${hi}_$i) * ${P}v_${hi}_${j}_$e")) +
-          s" AS ${P}hd_${hi}_${i}_$e")
-      def ctx(i: Int, c: Int) = s"${P}hd_${c / dh}_${i}_${c % dh}"
-      cte(for (i <- 0 until s_; di <- 0 until d_)
-        yield sum((0 until d_).map(c => s"${ctx(i, c)} * ${f(teWoL(l, c, di))}")) +
-          s" + ${f(teBoL(l, di))} + $X${i}_$di AS ${P}r1_${i}_$di")
-      def lnCols(src: String, out: String, g: Int => Double, b: Int => Double): Unit = {
-        val tag = s"${P}mv${out.replace(P, "")}"
-        cte((for (i <- 0 until s_)
-          yield sum((0 until d_).map(di => s"${src}_${i}_$di")) +
-            s" / ${d_}.0 AS mean_${tag}_$i") ++
-          (for (i <- 0 until s_)
-            yield sum((0 until d_).map(di =>
-              s"(${src}_${i}_$di - mean_${tag}_$i) * (${src}_${i}_$di - mean_${tag}_$i)")) +
-              s" / ${d_}.0 AS var_${tag}_$i"))
-        cte(for (i <- 0 until s_; di <- 0 until d_)
-          yield s"((${src}_${i}_$di - mean_${tag}_$i) / sqrt(var_${tag}_$i + $TbEps))" +
-            s" * ${f(g(di))} + ${f(b(di))} AS ${out}${i}_$di")
-      }
-      lnCols(s"${P}r1", s"${P}l1_", teG1L(l, _), teB1L(l, _))
-      // Sigmoid FFN (the shared-exp-formula oracle discipline)
-      cte(for (i <- 0 until s_; fi <- 0 until f_)
-        yield s"1.0 / (1.0 + exp(-(" +
-          sum((0 until d_).map(di => s"${P}l1_${i}_$di * ${f(teW1L(l, di, fi))}")) +
-          s" + ${f(teBf1L(l, fi))}))) AS ${P}f2_${i}_$fi")
-      cte(for (i <- 0 until s_; di <- 0 until d_)
-        yield sum((0 until f_).map(fi => s"${P}f2_${i}_$fi * ${f(teW2L(l, fi, di))}")) +
-          s" + ${f(teBf2L(l, di))} + ${P}l1_${i}_$di AS ${P}r2_${i}_$di")
-      lnCols(s"${P}r2", O, teG2L(l, _), teB2L(l, _))
-    }
-    // masked mean pool: Σ_i x·m_i / Σ_i m_i, both ascending
-    val cnt = sum((0 until s_).map(i => s"m_$i"))
-    val pooled = for (di <- 0 until d_)
-      yield sum((0 until s_).map(i => s"x${layers}_${i}_$di * m_$i")) +
-        s" / $cnt AS pooled_$di"
-    ctes += s"cP AS (SELECT id, ${pooled.mkString(", ")} FROM $prev)"
-    ctes.mkString(", ")
-  }
-
   /** e2e_encode_search oracle: replay the WHOLE product loop in SQL —
     * recursive-CTE WordPiece (vocab build + greedy segmentation, the
     * t2_wordpiece machinery over 18-char snippets), the 6-way
     * TabularBertEmbeddings sum with the graph's exact add association,
     * the embedding LayerNorm, four masked encoder layers
-    * ([[tbEncoderCtes]]), the masked mean pool, the float32 narrow, and
+    * ([[encoderCtes]]), the masked mean pool, the float32 narrow, and
     * the ranked cosine top-k. */
   private def e2eEncodeSearchSql: String = {
     val (s_, d_) = (TbS, TbD)
-    def f(v: Double): String = {
-      val t = v.toString
-      if (t.contains('E') || t.contains('e')) s"CAST($t AS DOUBLE)" else t
-    }
-    def sum(ts: Seq[String]): String = ts.mkString("(", " + ", ")")
-    val bodySlots = s_ - 2
+    def f(v: Double): String = sqlDouble(v)
+    def sum(ts: Seq[String]): String = sqlSum(ts)
     val tidCols = (0 until s_).map(i => s"COALESCE(e.ids[${i + 1}], 0) AS tid_$i")
     val mCols = (0 until s_).map(i =>
       s"CASE WHEN $i < ntok THEN 1.0 ELSE 0.0 END AS m_$i")
@@ -1000,7 +857,8 @@ object EncoderQueries {
        |ce AS (SELECT *, ${pCols.mkString(", ")} FROM cmm),
        |cv AS (SELECT *, ${meanCols.mkString(", ")}, ${varCols.mkString(", ")} FROM ce),
        |c0 AS (SELECT *, ${x0Cols.mkString(", ")} FROM cv),
-       |""".stripMargin + tbEncoderCtes + s""",
+       |""".stripMargin +
+      encoderCtes("t", TbS, TbD, TbH, TbF, TbL, TbScale, TbEps, checkpoint = true) + s""",
        |emb0 AS (SELECT id AS doc_id, ${embCols.mkString(", ")} FROM cP),
        |emb AS (SELECT *, $nrm AS nrm FROM emb0),
        |pr AS (
@@ -1087,25 +945,14 @@ object EncoderQueries {
   private def stStreamEmbedQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val name = s"st_embed_${streamSeq.incrementAndGet()}"
-    val (sq, d) = (TeS, TeD)
+    val d = TeD
     val path = "/tmp/graft_fixtures/st_embed_encoder.onnx"
     graft.ml.OnnxExport.exportEncoderStack(teStack(1), path, withHead = false)
     val schema = s.read.parquet(s"$dir/documents.parquet").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
       .filter(col("doc_id") <= 48)
-    val toks = stream.select(col("doc_id"), col("lang"),
-      filter(split(lower(col("text")), "\\s+"), v => v =!= "").as("w"))
-    val tids = toks.select(col("doc_id") +: col("lang") +: (0 until sq).map { si =>
-      coalesce(when(size(col("w")) > si,
-          graft.functions.SketchFunctions.md5_low32(col("w")(si)) % 64),
-        lit(0L)).as(s"tid_$si")
-    }: _*)
-    val featCols = for (si <- 0 until sq; di <- 0 until d) yield s"x_${si}_$di"
-    val feats = tids.select(col("doc_id") +: col("lang") +:
-      (for (si <- 0 until sq; di <- 0 until d) yield
-        (((col(s"tid_$si") * 7 + lit(di * 3)) % 17).cast("double") * 0.125 - 1.0)
-          .as(s"x_${si}_$di")): _*)
+    val (feats, featCols) = teTokenFeats(stream, Seq("doc_id", "lang"))
     val emb = new graft.ml.Scorer.ExternalEmbedder(
         graft.ml.Scorer.onnxEmbedderFactory(path), featCols, dim = d)
       .score(feats)

@@ -10,21 +10,62 @@ import Shared._
   * components and triangle counts. */
 object GraphQueries {
 
+  /** The synthetic link graph over document ids, (src, dst): a
+    * permutation-ish family ((7i+3) mod N) plus a hub family (i mod 31). */
+  private def linkGraph(s: SparkSession, dir: String): DataFrame = {
+    val docs = t(s, dir, "documents")
+    val n = docs.select(count(lit(1)).as("n"))
+    docs.crossJoin(broadcast(n)).select(
+        col("doc_id").as("src"),
+        ((col("doc_id") * 7 + 3) % col("n")).as("dst"))
+      .union(docs.select(col("doc_id"), col("doc_id") % 31))
+  }
+
+  /** The functional link graph (x → 7x+3 mod N, a permutation: pure
+    * cycles) without self-edges, as distinct undirected (id_a, id_b)
+    * pairs, id_a < id_b. */
+  private def cyclePairs(s: SparkSession, dir: String): DataFrame = {
+    val docs = t(s, dir, "documents")
+    val n = docs.select(count(lit(1)).as("n"))
+    val e = docs.crossJoin(broadcast(n)).select(
+        col("doc_id").cast("long").as("src"),
+        ((col("doc_id") * 7 + 3) % col("n")).cast("long").as("dst"))
+      .filter(col("src") =!= col("dst"))
+    e.select(least(col("src"), col("dst")).as("id_a"),
+      greatest(col("src"), col("dst")).as("id_b")).distinct()
+  }
+
+  /** [[linkGraph]] in SQL: `nn`, and every edge with duplicates as `e0`. */
+  private val linkEdgeCtes: String =
+    """nn AS (SELECT count(*) AS n FROM documents),
+      |e0 AS (SELECT doc_id AS src, (doc_id * 7 + 3) % nn.n AS dst FROM documents, nn
+      |       UNION ALL SELECT doc_id, doc_id % 31 FROM documents)""".stripMargin
+
+  /** [[linkGraph]] symmetrized in SQL: distinct directed `sym` edges both
+    * ways, self-edges dropped (MATERIALIZED: the unrolled rounds that
+    * read it would otherwise inline it per round). */
+  private val symGraphCtes: String =
+    """nn AS (SELECT CAST(count(*) AS BIGINT) AS c FROM documents),
+      |e0 AS (
+      |  SELECT doc_id AS src, (doc_id*7 + 3) % (SELECT c FROM nn) AS dst FROM documents
+      |  UNION ALL
+      |  SELECT doc_id, doc_id % 31 FROM documents),
+      |sym AS MATERIALIZED (
+      |  SELECT DISTINCT src, dst FROM (
+      |    SELECT src, dst FROM e0 WHERE src <> dst
+      |    UNION ALL
+      |    SELECT dst, src FROM e0 WHERE src <> dst))""".stripMargin
+
   /** w_components: component-size histogram of the functional link
     * graph, recomputed by recursive transitive closure. */
   private def componentsSql: String =
-    """WITH RECURSIVE nn AS (SELECT count(*) AS n FROM documents),
+    s"""WITH RECURSIVE nn AS (SELECT count(*) AS n FROM documents),
       |e0 AS (SELECT doc_id AS src, (doc_id * 7 + 3) % nn.n AS dst
       |       FROM documents, nn),
       |ed AS (SELECT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst
       |       FROM e0 WHERE src <> dst),
       |edges AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed),
-      |reach(src, dst) AS (
-      |  SELECT src, dst FROM edges
-      |  UNION
-      |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-      |labels AS (SELECT src AS id, least(src, min(dst)) AS cluster
-      |           FROM reach GROUP BY src),
+      |$closureCtes,
       |cs AS (SELECT cluster, count(*) AS size FROM labels GROUP BY 1)
       |SELECT size, count(*) AS n_components FROM cs
       |GROUP BY 1 ORDER BY size""".stripMargin
@@ -90,30 +131,14 @@ object GraphQueries {
     * ranks genuinely differentiate. 3 iterations in exact ppm space —
     * DuckDB replays the unrolled loop; top-20 pins exact rank values. */
   private def pageRankQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val n = docs.select(count(lit(1)).as("n"))
-    val e = docs.crossJoin(broadcast(n)).select(
-        col("doc_id").as("src"),
-        ((col("doc_id") * 7 + 3) % col("n")).as("dst"))
-      .union(docs.select(col("doc_id"), col("doc_id") % 31))
-    graft.operators.Graph.pagerankInt(e, nIter = 3)
+    graft.operators.Graph.pagerankInt(linkGraph(s, dir), nIter = 3)
       .orderBy(col("rank_ppm").desc, col("node")).limit(20)
   }
 
   /** w_page_rank: replay integer-ppm PageRank by unrolling the 3
     * iterations — every op is exact integral arithmetic (floor division
     * on positives via //), so ranks match bit-for-bit. */
-  private def pageRankSql: String = {
-    def iter(prev: String, out: String): String =
-      s"""i_$out AS (
-         |  SELECT e.dst AS node, CAST(sum(r.r // g.d) AS BIGINT) AS insum
-         |  FROM edges e JOIN $prev r ON r.node = e.src
-         |  JOIN deg g ON g.src = e.src GROUP BY e.dst),
-         |$out AS (
-         |  SELECT nd.node,
-         |    CAST(150000 + (coalesce(i.insum, 0) * 850000) // 1000000 AS BIGINT) AS r
-         |  FROM nodes nd LEFT JOIN i_$out i ON i.node = nd.node)"""
-        .stripMargin
+  private def pageRankSql: String =
     s"""WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS c FROM documents),
        |e0 AS (
        |  SELECT doc_id AS src, (doc_id*7 + 3) % (SELECT c FROM nn) AS dst FROM documents
@@ -122,13 +147,9 @@ object GraphQueries {
        |edges AS (SELECT src, dst FROM e0 WHERE src <> dst),
        |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
        |deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
-       |r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM nodes),
-       |${iter("r0", "r1")},
-       |${iter("r1", "r2")},
-       |${iter("r2", "r3")}
+       |$pageRankCtes
        |SELECT node, r AS rank_ppm FROM r3
        |ORDER BY rank_ppm DESC, node LIMIT 20""".stripMargin
-  }
 
   /** Community detection over the `w_page_rank` link graph
     * ([[graft.operators.Graph.labelPropagation]], 3 synchronous
@@ -140,13 +161,7 @@ object GraphQueries {
     * 8 synchronous h-operator rounds on the same synthetic doc graph as
     * [[labelPropQ]], reported as (coreness, n_nodes, node_checksum). */
   private def kCoreQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val n = docs.select(count(lit(1)).as("n"))
-    val e = docs.crossJoin(broadcast(n)).select(
-        col("doc_id").as("src"),
-        ((col("doc_id") * 7 + 3) % col("n")).as("dst"))
-      .union(docs.select(col("doc_id"), col("doc_id") % 31))
-    graft.operators.Graph.kCore(e, nIter = 8)
+    graft.operators.Graph.kCore(linkGraph(s, dir), nIter = 8)
       .groupBy("coreness").agg(count(lit(1)).as("n_nodes"),
         sum(col("node")).as("node_checksum"))
       .orderBy("coreness")
@@ -166,16 +181,7 @@ object GraphQueries {
          |  GROUP BY 1)""".stripMargin
     val rounds = (1 to 8).map(i => rnd(if (i == 1) "c0" else s"c${i - 1}", s"c$i"))
       .mkString(",\n")
-    s"""WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS c FROM documents),
-       |e0 AS (
-       |  SELECT doc_id AS src, (doc_id*7 + 3) % (SELECT c FROM nn) AS dst FROM documents
-       |  UNION ALL
-       |  SELECT doc_id, doc_id % 31 FROM documents),
-       |sym AS MATERIALIZED (
-       |  SELECT DISTINCT src, dst FROM (
-       |    SELECT src, dst FROM e0 WHERE src <> dst
-       |    UNION ALL
-       |    SELECT dst, src FROM e0 WHERE src <> dst)),
+    s"""WITH $symGraphCtes,
        |c0 AS MATERIALIZED (
        |  SELECT src AS node, CAST(count(*) AS BIGINT) AS c FROM sym GROUP BY 1),
        |$rounds
@@ -185,13 +191,7 @@ object GraphQueries {
   }
 
   private def labelPropQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val n = docs.select(count(lit(1)).as("n"))
-    val e = docs.crossJoin(broadcast(n)).select(
-        col("doc_id").as("src"),
-        ((col("doc_id") * 7 + 3) % col("n")).as("dst"))
-      .union(docs.select(col("doc_id"), col("doc_id") % 31))
-    graft.operators.Graph.labelPropagation(e, nIter = 3)
+    graft.operators.Graph.labelPropagation(linkGraph(s, dir), nIter = 3)
       .groupBy("label").agg(count(lit(1)).as("size"))
       .groupBy("size").agg(count(lit(1)).as("n_communities"),
         sum(col("label")).as("label_checksum"))
@@ -213,16 +213,7 @@ object GraphQueries {
          |$out AS MATERIALIZED (
          |  SELECT l.node, coalesce(t.label, l.label) AS label
          |  FROM $prev l LEFT JOIN t_$out t USING (node))""".stripMargin
-    s"""WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS c FROM documents),
-       |e0 AS (
-       |  SELECT doc_id AS src, (doc_id*7 + 3) % (SELECT c FROM nn) AS dst FROM documents
-       |  UNION ALL
-       |  SELECT doc_id, doc_id % 31 FROM documents),
-       |sym AS MATERIALIZED (
-       |  SELECT DISTINCT src, dst FROM (
-       |    SELECT src, dst FROM e0 WHERE src <> dst
-       |    UNION ALL
-       |    SELECT dst, src FROM e0 WHERE src <> dst)),
+    s"""WITH $symGraphCtes,
        |l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS label FROM sym),
        |${round("l0", "l1")},
        |${round("l1", "l2")},
@@ -240,14 +231,7 @@ object GraphQueries {
     * merge — and incremental == from-scratch IS the oracle (the
     * `w_components` closure SQL verbatim). */
   private def incrementalClustersQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val n = docs.select(count(lit(1)).as("n"))
-    val e = docs.crossJoin(broadcast(n)).select(
-        col("doc_id").cast("long").as("src"),
-        ((col("doc_id") * 7 + 3) % col("n")).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val pairs = e.select(least(col("src"), col("dst")).as("id_a"),
-      greatest(col("src"), col("dst")).as("id_b")).distinct()
+    val pairs = cyclePairs(s, dir)
     val batch1 = pairs.filter(col("id_a") % 2 === 0)
     val batch2 = pairs.filter(col("id_a") % 2 === 1)
     val catalog = graft.operators.Dedup.resolveClusters(batch1)
@@ -262,13 +246,7 @@ object GraphQueries {
     * pipeline checks before trusting link-centrality weights.
     */
   private def graphStatsQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val n = docs.select(count(lit(1)).as("n"))
-    val e = docs.crossJoin(broadcast(n)).select(
-        col("doc_id").as("src"),
-        ((col("doc_id") * 7 + 3) % col("n")).as("dst"))
-      .union(docs.select(col("doc_id"), col("doc_id") % 31))
-    graft.operators.Graph.inDegreeDistribution(e)
+    graft.operators.Graph.inDegreeDistribution(linkGraph(s, dir))
       .orderBy("in_deg")
   }
 
@@ -276,9 +254,7 @@ object GraphQueries {
     * (cleaned like pagerank: self-edges and duplicate edges dropped,
     * isolated-direction nodes report 0). */
   private def graphStatsSql: String =
-    """WITH nn AS (SELECT count(*) AS n FROM documents),
-      |e0 AS (SELECT doc_id AS src, (doc_id * 7 + 3) % nn.n AS dst FROM documents, nn
-      |       UNION ALL SELECT doc_id, doc_id % 31 FROM documents),
+    s"""WITH $linkEdgeCtes,
       |e AS (SELECT DISTINCT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst
       |      FROM e0 WHERE src <> dst),
       |nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
@@ -292,22 +268,14 @@ object GraphQueries {
     * construction as `w_page_rank` / `w_graph_stats`.
     */
   private def trianglesQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val n = docs.select(count(lit(1)).as("n"))
-    val e = docs.crossJoin(broadcast(n)).select(
-        col("doc_id").as("src"),
-        ((col("doc_id") * 7 + 3) % col("n")).as("dst"))
-      .union(docs.select(col("doc_id"), col("doc_id") % 31))
-    graft.operators.Graph.triangleStats(e)
+    graft.operators.Graph.triangleStats(linkGraph(s, dir))
   }
 
   /** w_triangles: exact triangle census of the synthetic link graph —
     * canonical u<v edges, wedges around the middle vertex, EXISTS-closed
     * (a,c); wedge total from Σd(d−1)/2 in integer space. */
   private def trianglesSql: String =
-    """WITH nn AS (SELECT count(*) AS n FROM documents),
-      |e0 AS (SELECT doc_id AS src, (doc_id * 7 + 3) % nn.n AS dst FROM documents, nn
-      |       UNION ALL SELECT doc_id, doc_id % 31 FROM documents),
+    s"""WITH $linkEdgeCtes,
       |und AS (SELECT DISTINCT least(CAST(src AS BIGINT), CAST(dst AS BIGINT)) AS u,
       |        greatest(CAST(src AS BIGINT), CAST(dst AS BIGINT)) AS v
       |        FROM e0 WHERE src <> dst),
@@ -331,14 +299,7 @@ object GraphQueries {
     * components by recursive transitive closure.
     */
   private def componentsQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val n = docs.select(count(lit(1)).as("n"))
-    val e = docs.crossJoin(broadcast(n)).select(
-        col("doc_id").cast("long").as("src"),
-        ((col("doc_id") * 7 + 3) % col("n")).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val pairs = e.select(least(col("src"), col("dst")).as("id_a"),
-      greatest(col("src"), col("dst")).as("id_b")).distinct()
+    val pairs = cyclePairs(s, dir)
     graft.operators.Dedup.resolveClusters(pairs)
       .groupBy("cluster").agg(count(lit(1)).as("size"))
       .groupBy("size").agg(count(lit(1)).as("n_components"))
@@ -350,13 +311,7 @@ object GraphQueries {
     * top 20 authorities.
     */
   private def hitsQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val n = docs.select(count(lit(1)).as("n"))
-    val e = docs.crossJoin(broadcast(n)).select(
-        col("doc_id").as("src"),
-        ((col("doc_id") * 7 + 3) % col("n")).as("dst"))
-      .union(docs.select(col("doc_id"), col("doc_id") % 31))
-    graft.operators.Graph.hitsInt(e, nIter = 2)
+    graft.operators.Graph.hitsInt(linkGraph(s, dir), nIter = 2)
       .orderBy(col("auth_ppm").desc, col("node")).limit(20)
   }
 
@@ -395,20 +350,12 @@ object GraphQueries {
     * ([[graft.operators.Graph.reciprocity]]).
     */
   private def reciprocityQ(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val n = docs.select(count(lit(1)).as("n"))
-    val e = docs.crossJoin(broadcast(n)).select(
-        col("doc_id").as("src"),
-        ((col("doc_id") * 7 + 3) % col("n")).as("dst"))
-      .union(docs.select(col("doc_id"), col("doc_id") % 31))
-    graft.operators.Graph.reciprocity(e)
+    graft.operators.Graph.reciprocity(linkGraph(s, dir))
   }
 
   /** w_reciprocity: fraction of directed edges with a reverse edge. */
   private def reciprocitySql: String =
-    """WITH nn AS (SELECT count(*) AS n FROM documents),
-      |e0 AS (SELECT doc_id AS src, (doc_id * 7 + 3) % nn.n AS dst FROM documents, nn
-      |       UNION ALL SELECT doc_id, doc_id % 31 FROM documents),
+    s"""WITH $linkEdgeCtes,
       |ed AS (SELECT DISTINCT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst
       |       FROM e0 WHERE src <> dst),
       |r AS (SELECT count(*) AS n_rec FROM ed a

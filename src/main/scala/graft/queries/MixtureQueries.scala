@@ -184,17 +184,7 @@ object MixtureQueries {
     * budget·ppm desired, min(4·10⁶, desired·10⁶ // n) micro-epochs,
     * capped actual and shortfall, all truncating BIGINT `//`. */
   private def mixEpochsSql: String =
-    """WITH toks AS (
-      |  SELECT source, lang,
-      |    CASE WHEN trim(text) = '' THEN 0
-      |         ELSE len(string_split_regex(trim(text), '\s+')) END AS nt
-      |  FROM documents),
-      |tot AS (SELECT source, lang, count(*) AS n_docs,
-      |          CAST(sum(nt) AS BIGINT) AS n_tokens
-      |        FROM toks GROUP BY source, lang),
-      |q AS (SELECT *,
-      |        CAST(floor(sqrt(CAST(n_tokens AS DOUBLE)) * 1000000.0) AS BIGINT) AS isq
-      |      FROM tot),
+    s"""WITH $sqrtWeightCtes,
       |g AS (SELECT CAST(sum(isq) AS BIGINT) AS sisq FROM q),
       |p AS (SELECT source, lang, n_docs, n_tokens,
       |        isq * 1000000 // sisq AS weight_ppm FROM q, g),

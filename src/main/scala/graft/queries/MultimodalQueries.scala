@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.DateFunctions._
@@ -11,6 +11,38 @@ import Shared._
 /** Image, audio and video decoding, probing and media dedup. */
 object MultimodalQueries {
 
+  /** The PNG (ids 1-12) and GIF (ids 13-18) legs of the decode fixtures,
+    * encoded from the generative pixel formulas. */
+  private def pngGifMedia: Seq[(Long, Array[Byte])] =
+    (1 to 12).map { i =>
+      (i.toLong, graft.multimodal.SyntheticMedia.pngFull(
+        8 + (i % 5) * 3, 6 + (i % 4) * 2, (i * 17) % 251))
+    } ++ (13 to 18).map { i =>
+      // GIF leg: real LZW decode + palette resolution (ids 13-18)
+      (i.toLong, graft.multimodal.SyntheticMedia.gifFull(
+        7 + (i % 4) * 5, 5 + (i % 3) * 4, (i * 29) % 101))
+    }
+
+  /** [[pngGifMedia]] in SQL: one (media_id, fmt, w, h, seed) row each. */
+  private val PngGifImgs =
+    """  SELECT i AS media_id, 'png' AS fmt, 8 + (i % 5) * 3 AS w,
+      |         6 + (i % 4) * 2 AS h, (i * 17) % 251 AS seed
+      |  FROM generate_series(1, 12) t(i)
+      |  UNION ALL
+      |  SELECT i, 'gif', 7 + (i % 4) * 5, 5 + (i % 3) * 4, (i * 29) % 101
+      |  FROM generate_series(13, 18) t(i)""".stripMargin
+
+  /** Every pixel (x, y) of each `imgs` image: CTEs `xs`, then `ys`. */
+  private val PixelGridCtes =
+    """xs AS (SELECT media_id, fmt, w, h, seed,
+      |       unnest(generate_series(0, w - 1)) AS x FROM imgs),
+      |ys AS (SELECT media_id, fmt, w, h, seed, x,
+      |       unnest(generate_series(0, h - 1)) AS y FROM xs)""".stripMargin
+
+  /** The 6-dp mean of decoded channel `n` (1-based), null past the
+    * image's channel count. */
+  private def chMean(n: Int): Column = when(size(col("channel_means")) >= n,
+    round(element_at(col("channel_means"), n), 6))
   /** FULL-FRAME media decode, real for all three codec-free formats:
     * standards-valid PNGs (zlib IDAT, per-row filters cycling all five
     * types), GIFs (real LZW), and baseline JPEGs (Huffman + IDCT;
@@ -23,14 +55,7 @@ object MultimodalQueries {
     * are all hash-verified, not spec-only. */
   private def mmPixelDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val media = ((1 to 12).map { i =>
-      (i.toLong, graft.multimodal.SyntheticMedia.pngFull(
-        8 + (i % 5) * 3, 6 + (i % 4) * 2, (i * 17) % 251))
-    } ++ (13 to 18).map { i =>
-      // GIF leg: real LZW decode + palette resolution (ids 13-18)
-      (i.toLong, graft.multimodal.SyntheticMedia.gifFull(
-        7 + (i % 4) * 5, 5 + (i % 3) * 4, (i * 29) % 101))
-    } ++ (19 to 24).map { i =>
+    val media = (pngGifMedia ++ (19 to 24).map { i =>
       // grayscale JPEG leg: dims off the 8-grid exercise pad/crop; odd
       // seeds add restart markers (ids 19-24)
       (i.toLong, graft.multimodal.SyntheticMedia.jpegFullGray(
@@ -40,8 +65,6 @@ object MultimodalQueries {
       (i.toLong, graft.multimodal.SyntheticMedia.jpegFullColor(
         14 + (i % 3) * 9, 10 + (i % 2) * 13, (i * 23) % 150))
     }).toDF("media_id", "payload")
-    def chMean(n: Int) = when(size(col("channel_means")) >= n,
-      round(element_at(col("channel_means"), n), 6))
     graft.multimodal.Multimodal.pixelStats(media)
       .select(col("media_id"),
         col("px_width").cast("long").as("px_width"),
@@ -58,23 +81,15 @@ object MultimodalQueries {
   // unit quantization preserves bit-for-bit; the color leg's neutral
   // chroma makes the JFIF transform return R=G=B=Y exactly.
   private def mmPixelDecodeSql: String =
-    """WITH imgs AS (
-      |  SELECT i AS media_id, 'png' AS fmt, 8 + (i % 5) * 3 AS w,
-      |         6 + (i % 4) * 2 AS h, (i * 17) % 251 AS seed
-      |  FROM generate_series(1, 12) t(i)
-      |  UNION ALL
-      |  SELECT i, 'gif', 7 + (i % 4) * 5, 5 + (i % 3) * 4, (i * 29) % 101
-      |  FROM generate_series(13, 18) t(i)
+    s"""WITH imgs AS (
+      |$PngGifImgs
       |  UNION ALL
       |  SELECT i, 'jgray', 9 + (i % 5) * 4, 7 + (i % 4) * 3, (i * 31) % 200
       |  FROM generate_series(19, 24) t(i)
       |  UNION ALL
       |  SELECT i, 'jcolor', 14 + (i % 3) * 9, 10 + (i % 2) * 13, (i * 23) % 150
       |  FROM generate_series(25, 30) t(i)),
-      |xs AS (SELECT media_id, fmt, w, h, seed,
-      |       unnest(generate_series(0, w - 1)) AS x FROM imgs),
-      |ys AS (SELECT media_id, fmt, w, h, seed, x,
-      |       unnest(generate_series(0, h - 1)) AS y FROM xs),
+      |$PixelGridCtes,
       |cells AS (SELECT media_id, w, h,
       |            CASE WHEN fmt = 'png'
       |              THEN (x * 3 + y * 7 + c * 11 + seed) % 256
@@ -505,15 +520,7 @@ object MultimodalQueries {
     * generative pixel formulas. */
   private def mmResizeQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val media = ((1 to 12).map { i =>
-      (i.toLong, graft.multimodal.SyntheticMedia.pngFull(
-        8 + (i % 5) * 3, 6 + (i % 4) * 2, (i * 17) % 251))
-    } ++ (13 to 18).map { i =>
-      (i.toLong, graft.multimodal.SyntheticMedia.gifFull(
-        7 + (i % 4) * 5, 5 + (i % 3) * 4, (i * 29) % 101))
-    }).toDF("media_id", "payload")
-    def chMean(n: Int) = when(size(col("channel_means")) >= n,
-      round(element_at(col("channel_means"), n), 6))
+    val media = pngGifMedia.toDF("media_id", "payload")
     graft.multimodal.Multimodal.resizeStats(media, factor = 2)
       .select(col("media_id"),
         col("rs_width").cast("long").as("rs_width"),
@@ -527,17 +534,9 @@ object MultimodalQueries {
     * formulas — truncating per-block integer mean, channel means over
     * the resized raster, exact checksum. */
   private def mmResizeSql: String =
-    """WITH imgs AS (
-      |  SELECT i AS media_id, 'png' AS fmt, 8 + (i % 5) * 3 AS w,
-      |         6 + (i % 4) * 2 AS h, (i * 17) % 251 AS seed
-      |  FROM generate_series(1, 12) t(i)
-      |  UNION ALL
-      |  SELECT i, 'gif', 7 + (i % 4) * 5, 5 + (i % 3) * 4, (i * 29) % 101
-      |  FROM generate_series(13, 18) t(i)),
-      |xs AS (SELECT media_id, fmt, w, h, seed,
-      |       unnest(generate_series(0, w - 1)) AS x FROM imgs),
-      |ys AS (SELECT media_id, fmt, w, h, seed, x,
-      |       unnest(generate_series(0, h - 1)) AS y FROM xs),
+    s"""WITH imgs AS (
+      |$PngGifImgs),
+      |$PixelGridCtes,
       |cells AS (SELECT media_id, w, h, x, y, c,
       |            CASE WHEN fmt = 'png'
       |              THEN (x * 3 + y * 7 + c * 11 + seed) % 256

@@ -23,11 +23,7 @@ object NearDupQueries {
   /** Shared CTE chain: per-doc 3-word-shingle MinHash digests (`dig`). */
   private def docDigCtes: String =
     s"""$permsCte,
-       |d AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM documents),
-       |g AS (SELECT doc_id,
-       |        CASE WHEN len(w) <= 2 THEN [array_to_string(w, ' ')]
-       |             ELSE list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) END AS sh
-       |      FROM d),
+       |${shingle3Ctes("doc_id")},
        |sv AS (SELECT DISTINCT doc_id, unnest(sh) AS v FROM g),
        |mins AS (SELECT doc_id, pi, ${mhSlotMin("v")} AS mh
        |         FROM sv CROSS JOIN perms GROUP BY doc_id, pi),
@@ -45,6 +41,10 @@ object NearDupQueries {
        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        |    ${digCompare("a", "b")}
        |  FROM dig a JOIN dig b ON a.doc_id < b.doc_id)""".stripMargin
+
+  /** The verified near-dup pairs of [[minhashPairCtes]] (Jaccard ≥ 0.05
+    * in some band) that the cluster queries close over. */
+  private val NearDupPairs = "SELECT id_a, id_b FROM pairs WHERE nb > 0 AND jaccard >= 0.05"
 
   /** d_icws_minhash: replay Ioffe ICWS in the log domain — md5
     * uniforms (low32 + 1)/2³², Gamma(2,1) r/c as negated sums of
@@ -114,24 +114,46 @@ object NearDupQueries {
       |  count(*) AS n_dups, min(doc_id) AS keeper
       |FROM documents GROUP BY 1 HAVING count(*) > 1 ORDER BY fingerprint""".stripMargin
 
+  /** Every (id_a < id_b) pair of `docs`' doc ids. */
+  private def idPairs(docs: DataFrame): DataFrame = {
+    val ids = docs.select(col("doc_id").as("id"))
+    ids.as("a").join(ids.as("b"), col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+  }
+
+  /** The distinct word bigrams `g`(doc_id, sh) of the doc_id ≤ 25 slice
+    * (a ≤1-word text is one whole-text gram), over `d`. */
+  private val sliceBigramCtes: String =
+    raw"""d AS (
+      |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents WHERE doc_id <= 25
+      |), g AS (
+      |  SELECT doc_id, list_distinct(
+      |    CASE WHEN len(w) <= 1 THEN [array_to_string(w, ' ')]
+      |         ELSE list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1]) END) AS sh
+      |  FROM d)""".stripMargin
+
+  /** A weighted-MinHash audit's result: each `est` pair's estimate, the
+    * exact weighted Jaccard from `tot` and `inter`, and their 6-dp gap. */
+  private val WjAuditSelect: String =
+    """SELECT e.id_a, e.id_b, e.wj_est,
+      |  round(CAST(coalesce(i.smin, 0) AS DOUBLE)
+      |        / CAST(ta.tot + tb.tot - coalesce(i.smin, 0) AS DOUBLE), 6) AS wj_exact,
+      |  round(abs(e.wj_est - round(CAST(coalesce(i.smin, 0) AS DOUBLE)
+      |    / CAST(ta.tot + tb.tot - coalesce(i.smin, 0) AS DOUBLE), 6)), 6) AS abs_err
+      |FROM est e JOIN tot ta ON ta.id = e.id_a JOIN tot tb ON tb.id = e.id_b
+      |LEFT JOIN inter i ON i.id_a = e.id_a AND i.id_b = e.id_b
+      |ORDER BY e.id_a, e.id_b""".stripMargin
+
   private def ngramJaccard(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").filter(col("doc_id") <= 25)
-    val ids = docs.select(col("doc_id").as("id"))
-    val pairs = ids.as("a").join(ids.as("b"), col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+    val pairs = idPairs(docs)
     Dedup.ngramJaccardPairs(docs, pairs, n = 2)
       .filter(col("jaccard") > 0)
       .orderBy("id_a", "id_b")
   }
 
   private def ngramJaccardSql: String =
-    """WITH d AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents WHERE doc_id <= 25
-      |), g AS (
-      |  SELECT doc_id, list_distinct(
-      |    CASE WHEN len(w) <= 1 THEN [array_to_string(w, ' ')]
-      |         ELSE list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1]) END) AS sh
-      |  FROM d)
+    raw"""WITH $sliceBigramCtes
       |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
       |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
       |        / len(list_distinct(list_concat(a.sh, b.sh))), 6) AS jaccard
@@ -146,9 +168,7 @@ object NearDupQueries {
     * similar prose where set Jaccard conflates them. */
   private def weightedJaccardQ(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").filter(col("doc_id") <= 25)
-    val ids = docs.select(col("doc_id").as("id"))
-    val pairs = ids.as("a").join(ids.as("b"), col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+    val pairs = idPairs(docs)
     Dedup.weightedJaccardPairs(docs, pairs)
       .filter(col("wjaccard") > 0)
       .orderBy("id_a", "id_b")
@@ -192,9 +212,7 @@ object NearDupQueries {
     * discipline for the weighted family. */
   private def weightedMinhashQ(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").filter(col("doc_id") <= 25)
-    val ids = docs.select(col("doc_id").as("id"))
-    val pairs = ids.as("a").join(ids.as("b"), col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+    val pairs = idPairs(docs)
     val dig = Dedup.weightedMinHashDigests(docs)
     val est = pairs
       .join(dig.select(col("id").as("id_a"), col("mh").as("mh_a")), "id_a")
@@ -234,14 +252,7 @@ object NearDupQueries {
       |  FROM est x JOIN tf a ON a.id = x.id_a
       |  JOIN tf b ON b.id = x.id_b AND b.tok = a.tok
       |  GROUP BY 1, 2)
-      |SELECT e.id_a, e.id_b, e.wj_est,
-      |  round(CAST(coalesce(i.smin, 0) AS DOUBLE)
-      |        / CAST(ta.tot + tb.tot - coalesce(i.smin, 0) AS DOUBLE), 6) AS wj_exact,
-      |  round(abs(e.wj_est - round(CAST(coalesce(i.smin, 0) AS DOUBLE)
-      |    / CAST(ta.tot + tb.tot - coalesce(i.smin, 0) AS DOUBLE), 6)), 6) AS abs_err
-      |FROM est e JOIN tot ta ON ta.id = e.id_a JOIN tot tb ON tb.id = e.id_b
-      |LEFT JOIN inter i ON i.id_a = e.id_a AND i.id_b = e.id_b
-      |ORDER BY e.id_a, e.id_b""".stripMargin
+      |$WjAuditSelect""".stripMargin
 
   /** ICWS real-weight MinHash self-audit ([[Dedup.icwsSignatures]] on
     * [[Dedup.idfWeights]] tf·idf micros, K=32): per-pair signature
@@ -250,9 +261,7 @@ object NearDupQueries {
     * token counts. */
   private def icwsMinhashQ(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").filter(col("doc_id") <= 25)
-    val ids = docs.select(col("doc_id").as("id"))
-    val pairs = ids.as("a").join(ids.as("b"), col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+    val pairs = idPairs(docs)
     // wide = false: this audit is a deliberate 25-doc slice — the
     // corpus-scale width pins cost more than they buy here (measured)
     val wts = Dedup.idfWeights(docs, wide = false)
@@ -290,14 +299,7 @@ object NearDupQueries {
       |  FROM prs p JOIN wts a ON a.id = p.id_a
       |  JOIN wts b ON b.id = p.id_b AND b.tok = a.tok
       |  GROUP BY 1, 2)
-      |SELECT e.id_a, e.id_b, e.wj_est,
-      |  round(CAST(coalesce(i.smin, 0) AS DOUBLE)
-      |        / CAST(ta.tot + tb.tot - coalesce(i.smin, 0) AS DOUBLE), 6) AS wj_exact,
-      |  round(abs(e.wj_est - round(CAST(coalesce(i.smin, 0) AS DOUBLE)
-      |    / CAST(ta.tot + tb.tot - coalesce(i.smin, 0) AS DOUBLE), 6)), 6) AS abs_err
-      |FROM est e JOIN tot ta ON ta.id = e.id_a JOIN tot tb ON tb.id = e.id_b
-      |LEFT JOIN inter i ON i.id_a = e.id_a AND i.id_b = e.id_b
-      |ORDER BY e.id_a, e.id_b""".stripMargin
+      |$WjAuditSelect""".stripMargin
   }
 
   /** Weighted near-dup join at scale shape
@@ -397,21 +399,7 @@ object NearDupQueries {
     * id checksum pins the exact kept set, not just its size.
     */
   private def dedupCorpusSql: String =
-    s"""WITH RECURSIVE $minhashPairCtes,
-       |vp AS (SELECT id_a, id_b FROM pairs WHERE nb > 0 AND jaccard >= 0.05),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM vp
-       |          UNION SELECT id_b, id_a FROM vp),
-       |reach(src, dst) AS (
-       |  SELECT src, dst FROM edges
-       |  UNION
-       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-       |labels AS (SELECT src AS id, least(src, min(dst)) AS cluster
-       |           FROM reach GROUP BY src),
-       |losers AS (SELECT id FROM labels WHERE id <> cluster)
-       |SELECT lang, count(*) AS n_docs_kept,
-       |  CAST(sum(doc_id) AS BIGINT) AS id_checksum
-       |FROM documents WHERE doc_id NOT IN (SELECT id FROM losers)
-       |GROUP BY lang ORDER BY lang""".stripMargin
+    keptCorpusSql(minhashPairCtes, NearDupPairs)
 
   /** LLM-pipeline: quality-aware canonical selection per near-dup
     * cluster — keep the longest member (n_chars, tie → min id) instead
@@ -428,15 +416,7 @@ object NearDupQueries {
     * id asc) — the quality-aware keep policy. All-integer output. */
   private def clusterCanonicalSql: String =
     s"""WITH RECURSIVE $minhashPairCtes,
-       |vp AS (SELECT id_a, id_b FROM pairs WHERE nb > 0 AND jaccard >= 0.05),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM vp
-       |          UNION SELECT id_b, id_a FROM vp),
-       |reach(src, dst) AS (
-       |  SELECT src, dst FROM edges
-       |  UNION
-       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-       |labels AS (SELECT src AS id, least(src, min(dst)) AS cluster
-       |           FROM reach GROUP BY src),
+       |${pairClosureCtes(NearDupPairs)},
        |members AS (SELECT l.id, l.cluster, d.n_chars
        |            FROM labels l JOIN documents d ON d.doc_id = l.id),
        |canon AS (SELECT id, cluster, n_chars,
@@ -507,15 +487,7 @@ object NearDupQueries {
   private def leakageSplitSql: String = {
     def thr(f: Double) = math.floor(f * 4294967296.0).toLong
     s"""WITH RECURSIVE $minhashPairCtes,
-       |vp AS (SELECT id_a, id_b FROM pairs WHERE nb > 0 AND jaccard >= 0.05),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM vp
-       |          UNION SELECT id_b, id_a FROM vp),
-       |reach(src, dst) AS (
-       |  SELECT src, dst FROM edges
-       |  UNION
-       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-       |labels AS (SELECT src AS id, least(src, min(dst)) AS cluster
-       |           FROM reach GROUP BY src),
+       |${pairClosureCtes(NearDupPairs)},
        |assign AS (
        |  SELECT d.doc_id, coalesce(l.cluster, d.doc_id) AS cluster,
        |    (md5_number_lower(CAST(coalesce(l.cluster, d.doc_id) AS VARCHAR)
@@ -548,9 +520,7 @@ object NearDupQueries {
     * relation. */
   private def lshCalibrationQ(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").filter(col("doc_id") <= 25)
-    val ids = docs.select(col("doc_id").as("id"))
-    val pairs = ids.as("a").join(ids.as("b"), col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+    val pairs = idPairs(docs)
     val jac = Dedup.ngramJaccardPairs(docs, pairs, n = 2)
       .filter(col("jaccard") > 0)
     val grid = s.createDataFrame(Seq((16, 2), (8, 4), (4, 8), (2, 16)))
@@ -580,13 +550,7 @@ object NearDupQueries {
     * canonicalizes DECIMAL representations inconsistently — the
     * j_hybrid_rrf precedent). */
   private def lshCalibrationSql: String =
-    """WITH d AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents WHERE doc_id <= 25
-      |), g AS (
-      |  SELECT doc_id, list_distinct(
-      |    CASE WHEN len(w) <= 1 THEN [array_to_string(w, ' ')]
-      |         ELSE list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1]) END) AS sh
-      |  FROM d),
+    raw"""WITH $sliceBigramCtes,
       |jac AS (
       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
       |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
@@ -696,11 +660,7 @@ object NearDupQueries {
   // d_bloom_merge: chunked set-bit union == one-shot build IS the
   // oracle (only the one-shot side is replayed)
   private def bloomMergeSql: String =
-    """WITH d AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-      |g AS (SELECT doc_id,
-      |        CASE WHEN len(w) <= 2 THEN [array_to_string(w, ' ')]
-      |             ELSE list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) END AS sh
-      |      FROM d),
+    raw"""WITH ${shingle3Ctes("doc_id")},
       |vs AS (SELECT DISTINCT unnest(sh) AS s FROM g),
       |bits AS (SELECT DISTINCT (md5_number_lower(s || ':bloom' || i) & 4294967295) % 1024 AS p
       |         FROM vs, unnest([0, 1, 2]) AS t(i))

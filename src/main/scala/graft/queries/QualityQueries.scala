@@ -88,16 +88,22 @@ object QualityQueries {
        |    SELECT fx.dim, CAST(sum(fx.x * r.r) AS BIGINT) AS g
        |    FROM fx JOIN r_$out r USING (id) GROUP BY 1) g ON g.dim = w.dim, $nRel n)""".stripMargin
 
-  private def lrBaseCtes: String =
-    raw"""m AS (
-       |  SELECT doc_id,
-       |    CASE WHEN length(trim(text)) = 0 THEN 0
+  /** The Gopher-rule metrics of `text` (`TextAnalysis.qualityFilter`):
+    * n_tokens, punctuation ratio `pr` and mean token length `mtl`, the
+    * ratios rounded to 6 dp. */
+  private val gopherMetricCols: String =
+    raw"""    CASE WHEN length(trim(text)) = 0 THEN 0
        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
        |    round(CASE WHEN length(text) = 0 THEN 0
        |          ELSE CAST(length(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS DOUBLE) / length(text) END, 6) AS pr,
        |    round(CASE WHEN len(string_split_regex(trim(text), '\s+')) = 0 THEN 0
        |          ELSE CAST(list_sum(list_transform(string_split_regex(trim(text), '\s+'), w -> length(w))) AS DOUBLE)
-       |               / len(string_split_regex(trim(text), '\s+')) END, 6) AS mtl
+       |               / len(string_split_regex(trim(text), '\s+')) END, 6) AS mtl""".stripMargin
+
+  private def lrBaseCtes: String =
+    raw"""m AS (
+       |  SELECT doc_id,
+       |$gopherMetricCols
        |  FROM documents),
        |lab AS MATERIALIZED (
        |  SELECT doc_id AS id,
@@ -137,6 +143,19 @@ object QualityQueries {
        |FROM sc JOIN lab l ON l.id = sc.id
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
+  /** Word bigrams of `src` docs, `word_shingles(2)`'s convention: `d`,
+    * per-doc `g`(doc_id, bgs) with a ≤1-word text as one whole-text
+    * gram, and the bigram counts `tb`(bg, c12) of ≥2-token docs. */
+  private def bigramCtes(src: String): String =
+    raw"""d AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM $src),
+       |g AS (SELECT doc_id,
+       |        CASE WHEN len(w) <= 1 THEN [array_to_string(w, ' ')]
+       |             ELSE list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1]) END AS bgs
+       |      FROM d),
+       |tb AS (SELECT bg, CAST(count(*) AS DOUBLE) AS c12
+       |       FROM (SELECT unnest(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS bg
+       |             FROM d WHERE len(w) >= 2) GROUP BY bg)""".stripMargin
+
   /** t_lm_quality: replay the add-1 bigram LM — word_shingles(2)
     * bigrams, train counts from ≥2-token docs ONLY (sub-2-token docs
     * would inject their whole-text collapse shingle), scored docs keep
@@ -151,14 +170,7 @@ object QualityQueries {
     * t_lm_quality, t_ppl_buckets (via the full statement) and the CCNet
     * funnel (mid-cascade over langid survivors). */
   private def lmScoreCtes(src: String): String =
-    s"""d AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM $src),
-       |g AS (SELECT doc_id,
-       |        CASE WHEN len(w) <= 1 THEN [array_to_string(w, ' ')]
-       |             ELSE list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1]) END AS bgs
-       |      FROM d),
-       |tb AS (SELECT bg, CAST(count(*) AS DOUBLE) AS c12
-       |       FROM (SELECT unnest(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS bg
-       |             FROM d WHERE len(w) >= 2) GROUP BY bg),
+    s"""${bigramCtes(src)},
        |ctx AS (SELECT split_part(bg, ' ', 1) AS w1, sum(c12) AS c1 FROM tb GROUP BY w1),
        |vv AS (SELECT CAST(count(DISTINCT tok) AS DOUBLE) AS v
        |       FROM (SELECT unnest(w) AS tok FROM d) WHERE tok <> ''),
@@ -271,11 +283,7 @@ object QualityQueries {
        |FROM ag ORDER BY doc_id""".stripMargin
 
   private def decontamSql: String =
-    """WITH d AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-      |g AS (SELECT doc_id,
-      |        CASE WHEN len(w) <= 2 THEN [array_to_string(w, ' ')]
-      |             ELSE list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) END AS sh
-      |      FROM d),
+    raw"""WITH ${shingle3Ctes("doc_id")},
       |ds AS (SELECT DISTINCT doc_id, unnest(sh) AS s FROM g WHERE doc_id > 5),
       |bs AS (SELECT DISTINCT unnest(sh) AS s FROM g WHERE doc_id <= 5),
       |counts AS (SELECT doc_id, count(*) AS n_shingles FROM ds GROUP BY doc_id),
@@ -353,14 +361,7 @@ object QualityQueries {
     * BIGINT sums, the mean re-rounds — the lmScoreCtes seam with the
     * KN formula. */
   private def knQualitySql: String =
-    raw"""WITH d AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-      |g AS (SELECT doc_id,
-      |        CASE WHEN len(w) <= 1 THEN [array_to_string(w, ' ')]
-      |             ELSE list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1]) END AS bgs
-      |      FROM d),
-      |tb AS (SELECT bg, CAST(count(*) AS DOUBLE) AS c12
-      |       FROM (SELECT unnest(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS bg
-      |             FROM d WHERE len(w) >= 2) GROUP BY bg),
+    raw"""WITH ${bigramCtes("documents")},
       |ctx AS (SELECT split_part(bg, ' ', 1) AS w1, sum(c12) AS c1,
       |          CAST(count(*) AS DOUBLE) AS n1p FROM tb GROUP BY 1),
       |cont AS (SELECT string_split(bg, ' ')[-1] AS w2,
@@ -585,15 +586,9 @@ object QualityQueries {
     * (mirrors TextAnalysis.qualityFilter with the query's thresholds;
     * rule comparisons on round-6 metrics on both sides). */
   private def qualityFilterSql: String =
-    """WITH m AS (
+    raw"""WITH m AS (
       |  SELECT lang,
-      |    CASE WHEN length(trim(text)) = 0 THEN 0
-      |         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
-      |    round(CASE WHEN length(text) = 0 THEN 0
-      |          ELSE CAST(length(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS DOUBLE) / length(text) END, 6) AS pr,
-      |    round(CASE WHEN len(string_split_regex(trim(text), '\s+')) = 0 THEN 0
-      |          ELSE CAST(list_sum(list_transform(string_split_regex(trim(text), '\s+'), w -> length(w))) AS DOUBLE)
-      |               / len(string_split_regex(trim(text), '\s+')) END, 6) AS mtl
+      |$gopherMetricCols
       |  FROM documents),
       |f AS (
       |  SELECT lang,
@@ -680,15 +675,9 @@ object QualityQueries {
     * (d_decontam_report's shingle collapse and τ) — and report each
     * stage's surviving docs + tokens. */
   private def curationFunnelSql: String =
-    """WITH m AS (
+    raw"""WITH m AS (
       |  SELECT doc_id, text,
-      |    CASE WHEN length(trim(text)) = 0 THEN 0
-      |         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
-      |    round(CASE WHEN length(text) = 0 THEN 0
-      |          ELSE CAST(length(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS DOUBLE) / length(text) END, 6) AS pr,
-      |    round(CASE WHEN len(string_split_regex(trim(text), '\s+')) = 0 THEN 0
-      |          ELSE CAST(list_sum(list_transform(string_split_regex(trim(text), '\s+'), w -> length(w))) AS DOUBLE)
-      |               / len(string_split_regex(trim(text), '\s+')) END, 6) AS mtl
+      |$gopherMetricCols
       |  FROM documents),
       |s1 AS (
       |  SELECT doc_id, text, n_tokens FROM m
@@ -753,15 +742,21 @@ object QualityQueries {
       .orderBy("lang", "bucket")
   }
 
-  /** t_ppl_buckets: the lmQuality replay as a subquery, per-language
-    * positional tertiles over (score DESC, doc_id), decimal-exact mean. */
-  private def pplBucketsSql: String =
-    s"""WITH sc AS (SELECT * FROM ($lmQualitySql)),
+  /** The t_lm_quality scores as `sc`, joined to each doc's language
+    * (`sl`), ranked per language by (score DESC, doc_id) with the
+    * language's doc count `nl` (`rk`). */
+  private def pplRankCtes: String =
+    s"""sc AS (SELECT * FROM ($lmQualitySql)),
        |sl AS (SELECT sc.doc_id, d.lang, sc.avg_logprob_r
        |  FROM sc JOIN documents d USING (doc_id)),
        |rk AS (SELECT *,
        |    row_number() OVER (PARTITION BY lang ORDER BY avg_logprob_r DESC, doc_id) AS rn,
-       |    count(*) OVER (PARTITION BY lang) AS nl FROM sl),
+       |    count(*) OVER (PARTITION BY lang) AS nl FROM sl)""".stripMargin
+
+  /** t_ppl_buckets: the lmQuality replay as a subquery, per-language
+    * positional tertiles over (score DESC, doc_id), decimal-exact mean. */
+  private def pplBucketsSql: String =
+    s"""WITH $pplRankCtes,
        |ag AS (SELECT lang,
        |  CASE WHEN rn*3 <= nl THEN 'head' WHEN rn*3 <= 2*nl THEN 'middle' ELSE 'tail' END AS bucket,
        |  count(*) AS n_docs, CAST(sum(doc_id) AS BIGINT) AS id_checksum,
@@ -846,23 +841,12 @@ object QualityQueries {
     * the cross-tab. */
   private def qualityAgreementSql: String =
     s"""WITH m AS (SELECT doc_id,
-       |    CASE WHEN length(trim(text)) = 0 THEN 0
-       |         ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens,
-       |    round(CASE WHEN length(text) = 0 THEN 0
-       |          ELSE CAST(length(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS DOUBLE) / length(text) END, 6) AS pr,
-       |    round(CASE WHEN len(string_split_regex(trim(text), '\\s+')) = 0 THEN 0
-       |          ELSE CAST(list_sum(list_transform(string_split_regex(trim(text), '\\s+'), w -> length(w))) AS DOUBLE)
-       |               / len(string_split_regex(trim(text), '\\s+')) END, 6) AS mtl
+       |$gopherMetricCols
        |  FROM documents),
        |kk AS (SELECT doc_id,
        |    (n_tokens >= 30 AND n_tokens <= 5000 AND mtl >= 3.0 AND mtl <= 4.8
        |     AND pr <= 0.1) AS keep FROM m),
-       |sc AS (SELECT * FROM ($lmQualitySql)),
-       |sl AS (SELECT sc.doc_id, d.lang, sc.avg_logprob_r
-       |  FROM sc JOIN documents d USING (doc_id)),
-       |rk AS (SELECT *,
-       |    row_number() OVER (PARTITION BY lang ORDER BY avg_logprob_r DESC, doc_id) AS rn,
-       |    count(*) OVER (PARTITION BY lang) AS nl FROM sl),
+       |$pplRankCtes,
        |bk AS (SELECT doc_id,
        |    CASE WHEN rn*3 <= nl THEN 'head' WHEN rn*3 <= 2*nl THEN 'middle'
        |         ELSE 'tail' END AS bucket FROM rk)
@@ -915,27 +899,7 @@ object QualityQueries {
     * per-source cap (w_domain_cap's ordering) — with per-stage doc and
     * token counts. */
   private def ccnetFunnelSql: String = {
-    val markers = graft.functions.TextFunctions.langMarkers
-    val cntSelects = markers.toSeq.sortBy(_._1).map { case (lang, ms) =>
-      val cnt = ms.map { m =>
-        s"(length(t) - length(replace(t, '$m', ''))) // ${m.length}"
-      }.mkString(" + ")
-      s"SELECT doc_id, '$lang' AS cand, $cnt AS cnt FROM t0"
-    }
-    val nTok = "CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len(string_split_regex(trim(text), '\\s+')) END"
-    s"""WITH t0 AS (
-       |  SELECT doc_id, lang, source, text, ' ' || lower(text) || ' ' AS t FROM documents),
-       |scores AS (
-       |  ${cntSelects.mkString("\n  UNION ALL ")}
-       |),
-       |best AS (
-       |  SELECT doc_id, cand, cnt,
-       |    row_number() OVER (PARTITION BY doc_id
-       |      ORDER BY cnt DESC, CASE WHEN cand = 'en' THEN 0 ELSE 1 END, cand) AS rn
-       |  FROM scores),
-       |marker AS (
-       |  SELECT doc_id, CASE WHEN cnt = 0 THEN 'und' ELSE cand END AS marker_pred
-       |  FROM best WHERE rn = 1),
+    s"""WITH ${langMarkerCtes("doc_id, lang, source, text")},
        |pr AS (
        |  SELECT t0.doc_id, t0.lang, t0.source, t0.text,
        |    CASE WHEN t0.text IS NULL OR trim(t0.text) = '' THEN 'und'
@@ -954,10 +918,10 @@ object QualityQueries {
        |  QUALIFY row_number() OVER (PARTITION BY source
        |    ORDER BY md5('ccnet:' || CAST(doc_id AS VARCHAR)), doc_id) <= 8)
        |SELECT CAST(1 AS BIGINT) AS stage_idx, 'all' AS stage, count(*) AS n_docs,
-       |  CAST(coalesce(sum($nTok), 0) AS BIGINT) AS n_tokens FROM documents
-       |UNION ALL SELECT CAST(2 AS BIGINT), 'langid_match', count(*), CAST(coalesce(sum($nTok), 0) AS BIGINT) FROM s2
-       |UNION ALL SELECT CAST(3 AS BIGINT), 'ppl_head_middle', count(*), CAST(coalesce(sum($nTok), 0) AS BIGINT) FROM s3
-       |UNION ALL SELECT CAST(4 AS BIGINT), 'source_cap', count(*), CAST(coalesce(sum($nTok), 0) AS BIGINT) FROM s4
+       |  CAST(coalesce(sum($nTokensSql), 0) AS BIGINT) AS n_tokens FROM documents
+       |UNION ALL SELECT CAST(2 AS BIGINT), 'langid_match', count(*), CAST(coalesce(sum($nTokensSql), 0) AS BIGINT) FROM s2
+       |UNION ALL SELECT CAST(3 AS BIGINT), 'ppl_head_middle', count(*), CAST(coalesce(sum($nTokensSql), 0) AS BIGINT) FROM s3
+       |UNION ALL SELECT CAST(4 AS BIGINT), 'source_cap', count(*), CAST(coalesce(sum($nTokensSql), 0) AS BIGINT) FROM s4
        |ORDER BY stage_idx""".stripMargin
   }
 

@@ -272,12 +272,7 @@ object RelationalQueries {
         when(col("event_id") % 7 === 0, lit("delete")).otherwise(lit("upsert")))
     val merged = graft.operators.Merge.upsert(target, changes,
       Seq("user_id", "event_type"), Seq("ts", "event_id"))
-    merged.groupBy("event_type")
-      .agg(count(lit(1)).as("n_keys"),
-        sum(col("user_id")).as("user_checksum"),
-        sum(col("event_id")).as("event_checksum"),
-        sum(round(col("value") * 100, 0).cast("long")).as("value_cents"))
-      .orderBy("event_type")
+    upsertChecksums(merged)
   }
 
   /** x_merge_upsert: replay the changelog compaction (rank window ≡ the

@@ -12,25 +12,32 @@ import Shared._
   * pseudo-relevance feedback, hybrid fusion and ranking metrics. */
 object SearchQueries {
 
-  private def bm25TopSql(k: Int): String =
-    raw"""WITH d AS (
+  /** The BM25 (k1=1.2, b=0.75) first pass over the four query terms:
+    * documents' word lists `d`/`dd`, corpus `consts`, and per-(doc, term)
+    * contributions `contrib<sfx>` (via `tf<sfx>`, `dfq<sfx>`), idf and
+    * contribution each rounded to 6 dp. */
+  private def bm25Ctes(sfx: String): String =
+    raw"""d AS (
       |  SELECT doc_id,
       |    list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS w
       |  FROM documents),
       |dd AS (SELECT doc_id, CAST(len(w) AS DOUBLE) AS dl, w FROM d),
       |consts AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dd),
-      |tf AS (
+      |tf$sfx AS (
       |  SELECT doc_id, dl, term, CAST(count(*) AS DOUBLE) AS tf
       |  FROM (SELECT doc_id, dl, unnest(w) AS term FROM dd)
       |  WHERE term IN ('dup', 'vector', 'join', 'window')
       |  GROUP BY doc_id, dl, term),
-      |dfq AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM tf GROUP BY term),
-      |contrib AS (
-      |  SELECT tf.doc_id,
-      |    round(round(ln((c.n_docs - dfq.df + 0.5) / (dfq.df + 0.5) + 1), 6)
-      |          * (tf.tf * (1.2 + 1))
-      |          / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / c.avgdl)), 6) AS cc
-      |  FROM tf JOIN dfq USING (term), consts c)
+      |dfq$sfx AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM tf$sfx GROUP BY term),
+      |contrib$sfx AS (
+      |  SELECT tf$sfx.doc_id,
+      |    round(round(ln((c.n_docs - dfq$sfx.df + 0.5) / (dfq$sfx.df + 0.5) + 1), 6)
+      |          * (tf$sfx.tf * (1.2 + 1))
+      |          / (tf$sfx.tf + 1.2 * (0.25 + 0.75 * tf$sfx.dl / c.avgdl)), 6) AS cc
+      |  FROM tf$sfx JOIN dfq$sfx USING (term), consts c)""".stripMargin
+
+  private def bm25TopSql(k: Int): String =
+    raw"""WITH ${bm25Ctes("")}
       |SELECT doc_id,
       |  CAST(sum(CAST(cc AS DECIMAL(18,6))) AS DOUBLE) AS score_r,
       |  row_number() OVER (ORDER BY CAST(sum(CAST(cc AS DECIMAL(18,6))) AS DOUBLE) DESC, doc_id) AS rank
@@ -42,24 +49,7 @@ object SearchQueries {
     * candidates only, and micro idf·count expansion weights ranked
     * (wgt desc, term). */
   private def prfCtes: String =
-    raw"""d AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS w
-      |  FROM documents),
-      |dd AS (SELECT doc_id, CAST(len(w) AS DOUBLE) AS dl, w FROM d),
-      |consts AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dd),
-      |tf1 AS (
-      |  SELECT doc_id, dl, term, CAST(count(*) AS DOUBLE) AS tf
-      |  FROM (SELECT doc_id, dl, unnest(w) AS term FROM dd)
-      |  WHERE term IN ('dup', 'vector', 'join', 'window')
-      |  GROUP BY doc_id, dl, term),
-      |dfq1 AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM tf1 GROUP BY term),
-      |contrib1 AS (
-      |  SELECT tf1.doc_id,
-      |    round(round(ln((c.n_docs - dfq1.df + 0.5) / (dfq1.df + 0.5) + 1), 6)
-      |          * (tf1.tf * (1.2 + 1))
-      |          / (tf1.tf + 1.2 * (0.25 + 0.75 * tf1.dl / c.avgdl)), 6) AS cc
-      |  FROM tf1 JOIN dfq1 USING (term), consts c),
+    raw"""${bm25Ctes("1")},
       |fb AS MATERIALIZED (
       |  SELECT doc_id FROM (
       |    SELECT doc_id, row_number() OVER (
@@ -83,6 +73,28 @@ object SearchQueries {
       |      CAST(floor(round(ln((c.n_docs - dfc.df + 0.5) / (dfc.df + 0.5) + 1), 6)
       |        * 1e6 + 0.5) AS BIGINT) * cnt.fb_count AS wgt_micro
       |    FROM cnt JOIN dfc USING (term), consts c))""".stripMargin
+
+  /** The PRF rerank over [[prfCtes]]: query terms at weight 1e6 ppm and
+    * the top-5 expansion terms at 5e5, contributions micro-quantized
+    * before the weight multiply (`ctr2`). */
+  private def prfRerankCtes: String =
+    s"""tw AS (
+       |  SELECT term, CAST(1000000 AS BIGINT) AS wgt
+       |  FROM (VALUES ('dup'), ('vector'), ('join'), ('window')) t(term)
+       |  UNION ALL
+       |  SELECT term, CAST(500000 AS BIGINT) FROM exp WHERE rn <= 5),
+       |tf2 AS (
+       |  SELECT doc_id, dl, term, wgt, CAST(count(*) AS DOUBLE) AS tf
+       |  FROM (SELECT doc_id, dl, unnest(w) AS term FROM dd) JOIN tw USING (term)
+       |  GROUP BY 1, 2, 3, 4),
+       |df2 AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM tf2 GROUP BY 1),
+       |ctr2 AS (
+       |  SELECT tf2.doc_id,
+       |    (CAST(floor(round(round(ln((c.n_docs - df2.df + 0.5) / (df2.df + 0.5) + 1), 6)
+       |       * (tf2.tf * (1.2 + 1))
+       |       / (tf2.tf + 1.2 * (0.25 + 0.75 * tf2.dl / c.avgdl)), 6) * 1e6 + 0.5) AS BIGINT)
+       |     * tf2.wgt) // 1000000 AS cw
+       |  FROM tf2 JOIN df2 USING (term), consts c)""".stripMargin
 
   /** BM25 keyword search over documents — the text-search modality next
     * to sketch and embedding search. Mixed-selectivity query: 'dup' is
@@ -125,23 +137,7 @@ object SearchQueries {
     * weight multiply, BIGINT sum, top-15. */
   private def prfSearchSql: String =
     s"""WITH $prfCtes,
-       |tw AS (
-       |  SELECT term, CAST(1000000 AS BIGINT) AS wgt
-       |  FROM (VALUES ('dup'), ('vector'), ('join'), ('window')) t(term)
-       |  UNION ALL
-       |  SELECT term, CAST(500000 AS BIGINT) FROM exp WHERE rn <= 5),
-       |tf2 AS (
-       |  SELECT doc_id, dl, term, wgt, CAST(count(*) AS DOUBLE) AS tf
-       |  FROM (SELECT doc_id, dl, unnest(w) AS term FROM dd) JOIN tw USING (term)
-       |  GROUP BY 1, 2, 3, 4),
-       |df2 AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM tf2 GROUP BY 1),
-       |ctr2 AS (
-       |  SELECT tf2.doc_id,
-       |    (CAST(floor(round(round(ln((c.n_docs - df2.df + 0.5) / (df2.df + 0.5) + 1), 6)
-       |       * (tf2.tf * (1.2 + 1))
-       |       / (tf2.tf + 1.2 * (0.25 + 0.75 * tf2.dl / c.avgdl)), 6) * 1e6 + 0.5) AS BIGINT)
-       |     * tf2.wgt) // 1000000 AS cw
-       |  FROM tf2 JOIN df2 USING (term), consts c)
+       |$prfRerankCtes
        |SELECT doc_id, CAST(sum(cw) AS DOUBLE) / 1e6 AS score_r,
        |  row_number() OVER (ORDER BY CAST(sum(cw) AS DOUBLE) / 1e6 DESC, doc_id) AS rank
        |FROM ctr2 GROUP BY doc_id
@@ -207,23 +203,7 @@ object SearchQueries {
   private def rboSql: String = {
     val tail = graft.search.Evaluation.rboTailMicro(15)
     s"""WITH $prfCtes,
-       |tw AS (
-       |  SELECT term, CAST(1000000 AS BIGINT) AS wgt
-       |  FROM (VALUES ('dup'), ('vector'), ('join'), ('window')) t(term)
-       |  UNION ALL
-       |  SELECT term, CAST(500000 AS BIGINT) FROM exp WHERE rn <= 5),
-       |tf2 AS (
-       |  SELECT doc_id, dl, term, wgt, CAST(count(*) AS DOUBLE) AS tf
-       |  FROM (SELECT doc_id, dl, unnest(w) AS term FROM dd) JOIN tw USING (term)
-       |  GROUP BY 1, 2, 3, 4),
-       |df2 AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df FROM tf2 GROUP BY 1),
-       |ctr2 AS (
-       |  SELECT tf2.doc_id,
-       |    (CAST(floor(round(round(ln((c.n_docs - df2.df + 0.5) / (df2.df + 0.5) + 1), 6)
-       |       * (tf2.tf * (1.2 + 1))
-       |       / (tf2.tf + 1.2 * (0.25 + 0.75 * tf2.dl / c.avgdl)), 6) * 1e6 + 0.5) AS BIGINT)
-       |     * tf2.wgt) // 1000000 AS cw
-       |  FROM tf2 JOIN df2 USING (term), consts c),
+       |$prfRerankCtes,
        |a15 AS (
        |  SELECT doc_id, rank FROM (
        |    SELECT doc_id, row_number() OVER (
@@ -245,10 +225,10 @@ object SearchQueries {
        |FROM mm""".stripMargin
   }
 
-  /** J3: precision/recall@5 of brute-force ANN against same-label ground
-    * truth (labels make the truth relation relational, so the whole
-    * evaluation join is independently recomputable). */
-  private def searchEval(s: SparkSession, dir: String): DataFrame = {
+  /** The J3 fixture: brute-force cosine top-5 of the 10 query vectors
+    * (vec_id ≤ 10) as (query, candidate, rank), and their same-label
+    * ground truth as (query, expected). */
+  private def j3Fixture(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val embs = t(s, dir, "embeddings")
     val results = Ann.bruteForceTopK(embs, embs.filter(col("vec_id") <= 10), k = 5)
       .select(col("query_id").cast("string").as("query"),
@@ -259,19 +239,18 @@ object SearchQueries {
       .filter(col("vec_id") =!= col("nid"))
       .groupBy(col("vec_id").cast("string").as("query"))
       .agg(collect_list(col("nid").cast("string")).as("expected"))
-    graft.search.Evaluation.precisionAtK(results, truth, 5).orderBy("query")
+    (results, truth)
   }
 
-  /** j3_search_eval: precision/recall@5 of exact cosine top-5 against the
-    * same-label ground truth (mirrors Evaluation.precisionAtK over
-    * Ann.bruteForceTopK). */
-  private def searchEvalSql: String =
-    """WITH n AS (
+  /** The J3 fixture in SQL: per-vector norms `n`, the top-5 `res`
+    * (columns `resCols`) and the label-mate `truth` pairs. */
+  private def j3Ctes(resCols: String): String =
+    s"""n AS (
       |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e,
       |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
       |  FROM embeddings),
       |res AS (
-      |  SELECT query_id, neighbor_id FROM (
+      |  SELECT $resCols FROM (
       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
       |      row_number() OVER (PARTITION BY q.vec_id
       |        ORDER BY CASE WHEN q.nrm * c.nrm = 0 THEN 0.0
@@ -280,7 +259,21 @@ object SearchQueries {
       |  WHERE rank <= 5),
       |truth AS (
       |  SELECT a.vec_id AS query_id, b.vec_id AS nid
-      |  FROM n a JOIN n b ON a.label = b.label AND a.vec_id <= 10 AND b.vec_id <> a.vec_id),
+      |  FROM n a JOIN n b ON a.label = b.label AND a.vec_id <= 10 AND b.vec_id <> a.vec_id)""".stripMargin
+
+  /** J3: precision/recall@5 of brute-force ANN against same-label ground
+    * truth (labels make the truth relation relational, so the whole
+    * evaluation join is independently recomputable). */
+  private def searchEval(s: SparkSession, dir: String): DataFrame = {
+    val (results, truth) = j3Fixture(s, dir)
+    graft.search.Evaluation.precisionAtK(results, truth, 5).orderBy("query")
+  }
+
+  /** j3_search_eval: precision/recall@5 of exact cosine top-5 against the
+    * same-label ground truth (mirrors Evaluation.precisionAtK over
+    * Ann.bruteForceTopK). */
+  private def searchEvalSql: String =
+    s"""WITH ${j3Ctes("query_id, neighbor_id")},
       |hits AS (
       |  SELECT r.query_id, count(*) AS n_hits
       |  FROM res r JOIN truth t ON r.query_id = t.query_id AND r.neighbor_id = t.nid
@@ -298,16 +291,7 @@ object SearchQueries {
     * engine-replayable.
     */
   private def searchNdcgQ(s: SparkSession, dir: String): DataFrame = {
-    val embs = t(s, dir, "embeddings")
-    val results = Ann.bruteForceTopK(embs, embs.filter(col("vec_id") <= 10), k = 5)
-      .select(col("query_id").cast("string").as("query"),
-        col("neighbor_id").cast("string").as("candidate"), col("rank"))
-    val truth = embs.filter(col("vec_id") <= 10)
-      .select(col("vec_id"), col("label"))
-      .join(embs.select(col("label"), col("vec_id").as("nid")), "label")
-      .filter(col("vec_id") =!= col("nid"))
-      .groupBy(col("vec_id").cast("string").as("query"))
-      .agg(collect_list(col("nid").cast("string")).as("expected"))
+    val (results, truth) = j3Fixture(s, dir)
     graft.search.Evaluation.ndcgAtK(results, truth, 5).orderBy("query")
   }
 
@@ -315,21 +299,7 @@ object SearchQueries {
     * integer micro-gains floor(1e6 / round(log2(pos+1), 6)) summed per
     * query; one final double division. */
   private def searchNdcgSql: String =
-    """WITH n AS (
-      |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e,
-      |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-      |  FROM embeddings),
-      |res AS (
-      |  SELECT query_id, neighbor_id, rank FROM (
-      |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |      row_number() OVER (PARTITION BY q.vec_id
-      |        ORDER BY CASE WHEN q.nrm * c.nrm = 0 THEN 0.0
-      |          ELSE round(list_dot_product(q.e, c.e) / (q.nrm * c.nrm), 6) END DESC, c.vec_id) AS rank
-      |    FROM n q JOIN n c ON q.vec_id <= 10 AND c.vec_id <> q.vec_id)
-      |  WHERE rank <= 5),
-      |truth AS (
-      |  SELECT a.vec_id AS query_id, b.vec_id AS nid
-      |  FROM n a JOIN n b ON a.label = b.label AND a.vec_id <= 10 AND b.vec_id <> a.vec_id),
+    s"""WITH ${j3Ctes("query_id, neighbor_id, rank")},
       |dcg AS (
       |  SELECT r.query_id,
       |    sum(CAST(floor(1000000.0 / round(log2(CAST(r.rank AS DOUBLE) + 1.0), 6)) AS BIGINT)) AS dcg_micro
@@ -352,37 +322,14 @@ object SearchQueries {
     * first-relevant-position where nDCG is graded; reciprocal ranks in
     * exact integer micro-units. */
   private def searchMrrQ(s: SparkSession, dir: String): DataFrame = {
-    val embs = t(s, dir, "embeddings")
-    val results = Ann.bruteForceTopK(embs, embs.filter(col("vec_id") <= 10), k = 5)
-      .select(col("query_id").cast("string").as("query"),
-        col("neighbor_id").cast("string").as("candidate"), col("rank"))
-    val truth = embs.filter(col("vec_id") <= 10)
-      .select(col("vec_id"), col("label"))
-      .join(embs.select(col("label"), col("vec_id").as("nid")), "label")
-      .filter(col("vec_id") =!= col("nid"))
-      .groupBy(col("vec_id").cast("string").as("query"))
-      .agg(collect_list(col("nid").cast("string")).as("expected"))
+    val (results, truth) = j3Fixture(s, dir)
     graft.search.Evaluation.mrrAtK(results, truth, 5).orderBy("query")
   }
 
   /** j3_mrr: the searchNdcg result/truth replay with the
     * first-relevant-rank tail — reciprocal in truncating micro-units. */
   private def searchMrrSql: String =
-    """WITH n AS (
-      |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e,
-      |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-      |  FROM embeddings),
-      |res AS (
-      |  SELECT query_id, neighbor_id, rank FROM (
-      |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |      row_number() OVER (PARTITION BY q.vec_id
-      |        ORDER BY CASE WHEN q.nrm * c.nrm = 0 THEN 0.0
-      |          ELSE round(list_dot_product(q.e, c.e) / (q.nrm * c.nrm), 6) END DESC, c.vec_id) AS rank
-      |    FROM n q JOIN n c ON q.vec_id <= 10 AND c.vec_id <> q.vec_id)
-      |  WHERE rank <= 5),
-      |truth AS (
-      |  SELECT a.vec_id AS query_id, b.vec_id AS nid
-      |  FROM n a JOIN n b ON a.label = b.label AND a.vec_id <= 10 AND b.vec_id <> a.vec_id),
+    s"""WITH ${j3Ctes("query_id, neighbor_id, rank")},
       |fh AS (
       |  SELECT r.query_id, CAST(min(r.rank) AS BIGINT) AS first_rank
       |  FROM res r JOIN truth t ON r.query_id = t.query_id AND r.neighbor_id = t.nid
@@ -399,16 +346,7 @@ object SearchQueries {
     * j3_search_eval/j3_ndcg/j3_mrr, truncating-integer average
     * precision. */
   private def searchMapQ(s: SparkSession, dir: String): DataFrame = {
-    val embs = t(s, dir, "embeddings")
-    val results = Ann.bruteForceTopK(embs, embs.filter(col("vec_id") <= 10), k = 5)
-      .select(col("query_id").cast("string").as("query"),
-        col("neighbor_id").cast("string").as("candidate"), col("rank"))
-    val truth = embs.filter(col("vec_id") <= 10)
-      .select(col("vec_id"), col("label"))
-      .join(embs.select(col("label"), col("vec_id").as("nid")), "label")
-      .filter(col("vec_id") =!= col("nid"))
-      .groupBy(col("vec_id").cast("string").as("query"))
-      .agg(collect_list(col("nid").cast("string")).as("expected"))
+    val (results, truth) = j3Fixture(s, dir)
     graft.search.Evaluation.averagePrecisionAtK(results, truth, 5)
       .orderBy("query")
   }
@@ -417,21 +355,7 @@ object SearchQueries {
     * average-precision tail — per-hit truncating micro precision, then
     * one truncating divide by min(|relevant|, k). */
   private def searchMapSql: String =
-    """WITH n AS (
-      |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e,
-      |         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-      |  FROM embeddings),
-      |res AS (
-      |  SELECT query_id, neighbor_id, rank FROM (
-      |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |      row_number() OVER (PARTITION BY q.vec_id
-      |        ORDER BY CASE WHEN q.nrm * c.nrm = 0 THEN 0.0
-      |          ELSE round(list_dot_product(q.e, c.e) / (q.nrm * c.nrm), 6) END DESC, c.vec_id) AS rank
-      |    FROM n q JOIN n c ON q.vec_id <= 10 AND c.vec_id <> q.vec_id)
-      |  WHERE rank <= 5),
-      |truth AS (
-      |  SELECT a.vec_id AS query_id, b.vec_id AS nid
-      |  FROM n a JOIN n b ON a.label = b.label AND a.vec_id <= 10 AND b.vec_id <> a.vec_id),
+    s"""WITH ${j3Ctes("query_id, neighbor_id, rank")},
       |h AS (
       |  SELECT r.query_id, r.rank,
       |    row_number() OVER (PARTITION BY r.query_id ORDER BY r.rank) AS hit_idx

@@ -293,17 +293,17 @@ object SketchCatalogQueries {
     * re-distincting the lake; on a real cluster it would persist next to
     * the SketchStore catalog, bucketed by value_str.
     */
-  private val valueIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val valueIndexes = new SessionCache[DataFrame]
 
   private def searchValueIndex(s: SparkSession, dir: String): DataFrame =
-    valueIndexes.getOrElseUpdate(s"${System.identityHashCode(s)}#$dir#values",
+    valueIndexes(s, dir) {
       SearchLake.map { name =>
         Profiler.longFormat(t(s, dir, name)).withColumn("table_name", lit(name))
       }.reduce(_ unionByName _)
         .filter(col("value_str").isNotNull)
         .select(col("table_name"), col("col_idx"), col("value_str")).distinct()
-        .localCheckpoint(eager = true))
+        .localCheckpoint(eager = true)
+    }
 
   private def searchExact(s: SparkSession, dir: String): DataFrame =
     Discovery.columnVoteRank(
@@ -368,8 +368,13 @@ object SketchCatalogQueries {
     * driver's pandas row-sort chokes on raw array columns).
     */
   private def profileSketches(s: SparkSession, dir: String): DataFrame =
-    lakeCatalog(s, dir)
-      .filter(col("table_name").isin("customer", "supplier", "nation", "region", "part"))
+    sketchColumns(lakeCatalog(s, dir)
+      .filter(col("table_name").isin("customer", "supplier", "nation", "region", "part")))
+
+  /** A profile catalog's per-column stats and comma-joined exact/word
+    * digests, by (table_name, col_idx). */
+  private def sketchColumns(profiles: DataFrame): DataFrame =
+    profiles
       .select(col("table_name"), col("col_idx").cast("long").as("col_idx"),
         col("col_name"), col("col_type"),
         col("rows").as("n_rows"), col("num_nan"), col("unique").as("n_unique"),
@@ -997,14 +1002,7 @@ object SketchCatalogQueries {
     val out = "/tmp/graft_fixtures/sketch_store"
     graft.store.SketchStore.writeParquet(
       lakeCatalog(s, dir).filter(col("table_name").isin("region", "nation")), out)
-    graft.store.SketchStore.readParquet(s, out)
-      .select(col("table_name"), col("col_idx").cast("long").as("col_idx"),
-        col("col_name"), col("col_type"),
-        col("rows").as("n_rows"), col("num_nan"), col("unique").as("n_unique"),
-        round(col("cell_width"), 6).as("cell_width_r"),
-        array_join(col("minhash_exact"), ",").as("mh_exact"),
-        array_join(col("minhash_words"), ",").as("mh_words"))
-      .orderBy("table_name", "col_idx")
+    sketchColumns(graft.store.SketchStore.readParquet(s, out))
   }
 
   private val SketchDocsPlainDir = "/tmp/graft_fixtures/sketch_docs_plain"

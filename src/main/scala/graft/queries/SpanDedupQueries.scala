@@ -45,11 +45,7 @@ object SpanDedupQueries {
   /** Shared CTE list of the PPJoin replay (ends at `j`, the rounded
     * pairwise jaccard relation). */
   private def ppjoinCtes: String =
-    """d AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-      |g AS (SELECT doc_id,
-      |        CASE WHEN len(w) <= 2 THEN [array_to_string(w, ' ')]
-      |             ELSE list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) END AS sh
-      |      FROM d),
+    raw"""${shingle3Ctes("doc_id")},
       |toks AS (SELECT DISTINCT doc_id AS id, unnest(sh) AS tok FROM g),
       |freq AS (SELECT tok, count(*) AS f FROM toks GROUP BY 1),
       |sizes AS (SELECT id, count(*) AS sz FROM toks GROUP BY 1),
@@ -233,21 +229,7 @@ object SpanDedupQueries {
   /** d_exact_dedup_corpus: the PPJoin pairs feed the same recursive
     * connected-components replay as the LSH corpus dedup. */
   private def exactDedupCorpusSql: String =
-    s"""WITH RECURSIVE $ppjoinCtes,
-      |vp AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.7),
-      |edges AS (SELECT id_a AS src, id_b AS dst FROM vp
-      |          UNION SELECT id_b, id_a FROM vp),
-      |reach(src, dst) AS (
-      |  SELECT src, dst FROM edges
-      |  UNION
-      |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-      |labels AS (SELECT src AS id, least(src, min(dst)) AS cluster
-      |           FROM reach GROUP BY src),
-      |losers AS (SELECT id FROM labels WHERE id <> cluster)
-      |SELECT lang, count(*) AS n_docs_kept,
-      |  CAST(sum(doc_id) AS BIGINT) AS id_checksum
-      |FROM documents WHERE doc_id NOT IN (SELECT id FROM losers)
-      |GROUP BY lang ORDER BY lang""".stripMargin
+    keptCorpusSql(ppjoinCtes, "SELECT id_a, id_b FROM j WHERE jaccard >= 0.7")
 
   /** LLM-pipeline: decontamination with the Bloom-bitmap prefilter —
     * same exact overlap columns as `d_decontam_report` (no false
@@ -277,11 +259,7 @@ object SpanDedupQueries {
     * candidates only — identical n_overlap because Bloom has no false
     * negatives. */
   private def bloomPrefilterSql: String =
-    """WITH d AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-      |g AS (SELECT doc_id,
-      |        CASE WHEN len(w) <= 2 THEN [array_to_string(w, ' ')]
-      |             ELSE list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) END AS sh
-      |      FROM d),
+    raw"""WITH ${shingle3Ctes("doc_id")},
       |ds AS (SELECT DISTINCT doc_id, unnest(sh) AS s FROM g WHERE doc_id > 5),
       |bs AS (SELECT DISTINCT unnest(sh) AS s FROM g WHERE doc_id <= 5),
       |bits AS (SELECT DISTINCT (md5_number_lower(s || ':bloom' || i) & 4294967295) % 1024 AS p

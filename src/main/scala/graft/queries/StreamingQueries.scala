@@ -97,10 +97,7 @@ object StreamingQueries {
     * oracle is just the batch computation. */
   private def streamProfileSql: String = {
     val selects = lakeSchemas("nation").map { case (c, lt) =>
-      val render =
-        if (lt == "string") s"nullif(CAST($c AS VARCHAR), '')"
-        else s"CAST($c AS VARCHAR)"
-      s"SELECT '$c' AS cn, $render AS v FROM nation"
+      s"SELECT '$c' AS cn, ${renderSql(c, lt)} AS v FROM nation"
     }
     s"""WITH $permsCte,
        |vals AS (
@@ -207,9 +204,7 @@ object StreamingQueries {
     * numeric bounds per column). */
   private def incProfileMergeSql: String = {
     val selects = lakeSchemas("supplier").zipWithIndex.map { case ((c, lt), i) =>
-      val strRender =
-        if (lt == "string") s"nullif(CAST($c AS VARCHAR), '')"
-        else s"CAST($c AS VARCHAR)"
+      val strRender = renderSql(c, lt)
       val numRender =
         if (lt == "integer" || lt == "float") s"CAST($c AS DOUBLE)" else "CAST(NULL AS DOUBLE)"
       s"SELECT $i AS ci, $strRender AS v, $numRender AS vn FROM supplier"
@@ -305,13 +300,7 @@ object StreamingQueries {
       }
       .queryName(name).trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    graft.operators.Merge.liveView(state)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_keys"),
-        sum(col("user_id")).as("user_checksum"),
-        sum(col("event_id")).as("event_checksum"),
-        sum(round(col("value") * 100, 0).cast("long")).as("value_cents"))
-      .orderBy("event_type")
+    upsertChecksums(graft.operators.Merge.liveView(state))
   }
 
   // st_stream_upsert: micro-batched LWW folds must equal the one-shot

@@ -163,37 +163,17 @@ object TextQueries {
     * argmax) and quality_score.
     */
   private def langQualitySql: String = {
-    val markers = graft.functions.TextFunctions.langMarkers
-    val cntSelects = markers.toSeq.sortBy(_._1).map { case (lang, ms) =>
-      val cnt = ms.map { m =>
-        s"(length(t) - length(replace(t, '$m', ''))) // ${m.length}"
-      }.mkString(" + ")
-      s"SELECT doc_id, '$lang' AS cand, $cnt AS cnt FROM t0"
-    }
-    val nTok = "CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len(string_split_regex(trim(text), '\\s+')) END"
     val punctR = "CASE WHEN length(text) = 0 THEN 0.0 ELSE CAST(length(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS DOUBLE) / length(text) END"
     val stopR = s"CAST(len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x IN ($stopList))) AS DOUBLE) / len(string_split_regex(lower(trim(text)), '\\s+'))"
-    s"""WITH t0 AS (
-       |  SELECT doc_id, lang, text, ' ' || lower(text) || ' ' AS t FROM documents),
-       |scores AS (
-       |  ${cntSelects.mkString("\n  UNION ALL ")}
-       |),
-       |best AS (
-       |  SELECT doc_id, cand, cnt,
-       |    row_number() OVER (PARTITION BY doc_id
-       |      ORDER BY cnt DESC, CASE WHEN cand = 'en' THEN 0 ELSE 1 END, cand) AS rn
-       |  FROM scores),
-       |marker AS (
-       |  SELECT doc_id, CASE WHEN cnt = 0 THEN 'und' ELSE cand END AS marker_pred
-       |  FROM best WHERE rn = 1),
+    s"""WITH ${langMarkerCtes("doc_id, lang, text")},
        |pred AS (
        |  SELECT t0.lang,
        |    CASE WHEN t0.text IS NULL OR trim(t0.text) = '' THEN 'und'
        |         WHEN length(regexp_replace(t0.t, '[^\\x{4e00}-\\x{9fff}]', '', 'g')) * 2 > length(t0.t) THEN 'zh'
        |         ELSE m.marker_pred END AS lang_pred,
        |    round(
-       |      (CASE WHEN ($nTok) < 5 THEN CAST(($nTok) AS DOUBLE) / 5.0
-       |            WHEN ($nTok) > 5000 THEN 0.5 ELSE 1.0 END) * 0.4
+       |      (CASE WHEN ($nTokensSql) < 5 THEN CAST(($nTokensSql) AS DOUBLE) / 5.0
+       |            WHEN ($nTokensSql) > 5000 THEN 0.5 ELSE 1.0 END) * 0.4
        |      + (1.0 - least(($punctR) * 2.0, 1.0)) * 0.3
        |      + least(($stopR) * 4.0, 1.0) * 0.3, 6) AS q
        |  FROM t0 JOIN marker m USING (doc_id))
@@ -275,17 +255,7 @@ object TextQueries {
     * ratios (round 6) and floor(budget·isq/sisq) allocation with the
     * identical operation order so the doubles agree bitwise. */
   private def tokenBudgetSql: String =
-    """WITH toks AS (
-      |  SELECT source, lang,
-      |    CASE WHEN trim(text) = '' THEN 0
-      |         ELSE len(string_split_regex(trim(text), '\s+')) END AS nt
-      |  FROM documents),
-      |tot AS (SELECT source, lang, count(*) AS n_docs,
-      |          CAST(sum(nt) AS BIGINT) AS n_tokens
-      |        FROM toks GROUP BY source, lang),
-      |q AS (SELECT *,
-      |        CAST(floor(sqrt(CAST(n_tokens AS DOUBLE)) * 1000000.0) AS BIGINT) AS isq
-      |      FROM tot),
+    s"""WITH $sqrtWeightCtes,
       |g AS (SELECT CAST(sum(isq) AS BIGINT) AS sisq,
       |             CAST(sum(n_tokens) AS BIGINT) AS tot_tokens FROM q)
       |SELECT source, lang, n_docs, n_tokens,
@@ -350,39 +320,36 @@ object TextQueries {
   private def ngramEntropyQ(s: SparkSession, dir: String): DataFrame =
     graft.operators.TextAnalysis.ngramEntropy(t(s, dir, "documents"))
 
+  /** The exact micro-unit entropy terms c·round(ln(n/c), 6)·10⁶ as
+    * `tm` per count `c` of `counts`, next to the total n. */
+  private def entropyTerms(counts: String): String =
+    s"""  FROM (SELECT c, CAST(sum(c) OVER () AS BIGINT) AS n,
+       |          CAST(floor(CAST(c AS DOUBLE)
+       |            * round(ln(CAST(sum(c) OVER () AS DOUBLE) / c), 6)
+       |            * 1000000.0) AS BIGINT) AS tm
+       |        FROM $counts))""".stripMargin
+
   // t_ngram_entropy: micro-nat terms floor(c·round6(ln(n/c))·1e6)
   // over the three bounded count relations; conditional = one
   // subtraction of the two rounded entropies
   private def ngramEntropySql: String =
-    """WITH tok AS (SELECT t FROM (
+    raw"""WITH tok AS (SELECT t FROM (
       |    SELECT unnest(string_split_regex(trim(text), '\s+')) AS t FROM documents)
       |  WHERE t <> ''),
       |uc AS (SELECT count(*) AS c FROM tok GROUP BY t),
       |uh AS (SELECT CAST(any_value(n) AS BIGINT) AS n, count(*) AS nd,
       |    round(CAST(sum(tm) AS DOUBLE) / any_value(n) / 1000000.0, 6) AS h
-      |  FROM (SELECT c, CAST(sum(c) OVER () AS BIGINT) AS n,
-      |          CAST(floor(CAST(c AS DOUBLE)
-      |            * round(ln(CAST(sum(c) OVER () AS DOUBLE) / c), 6)
-      |            * 1000000.0) AS BIGINT) AS tm
-      |        FROM uc)),
+      |${entropyTerms("uc")},
       |d AS (SELECT string_split_regex(trim(text), '\s+') AS w FROM documents),
       |gg AS (SELECT unnest(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS g
       |       FROM d WHERE len(w) >= 2),
       |bc AS (SELECT count(*) AS c FROM gg GROUP BY g),
       |bh AS (SELECT CAST(any_value(n) AS BIGINT) AS n, count(*) AS nd,
       |    round(CAST(sum(tm) AS DOUBLE) / any_value(n) / 1000000.0, 6) AS h
-      |  FROM (SELECT c, CAST(sum(c) OVER () AS BIGINT) AS n,
-      |          CAST(floor(CAST(c AS DOUBLE)
-      |            * round(ln(CAST(sum(c) OVER () AS DOUBLE) / c), 6)
-      |            * 1000000.0) AS BIGINT) AS tm
-      |        FROM bc)),
+      |${entropyTerms("bc")},
       |cc AS (SELECT count(*) AS c FROM (SELECT split_part(g, ' ', 1) AS w1 FROM gg) GROUP BY w1),
       |ch AS (SELECT round(CAST(sum(tm) AS DOUBLE) / any_value(n) / 1000000.0, 6) AS h
-      |  FROM (SELECT c, CAST(sum(c) OVER () AS BIGINT) AS n,
-      |          CAST(floor(CAST(c AS DOUBLE)
-      |            * round(ln(CAST(sum(c) OVER () AS DOUBLE) / c), 6)
-      |            * 1000000.0) AS BIGINT) AS tm
-      |        FROM cc))
+      |${entropyTerms("cc")}
       |SELECT uh.n AS n_tokens, uh.nd AS n_distinct_tokens, uh.h AS h_unigram,
       |  bh.n AS n_bigrams, bh.nd AS n_distinct_bigrams, bh.h AS h_bigram,
       |  round(bh.h - ch.h, 6) AS h_conditional
@@ -473,16 +440,6 @@ object TextQueries {
     * PageRank iterations (the w_page_rank template), ranks joined back
     * to min(tok) per id, top-20 by (rank desc, tok). */
   private def textrankSql: String = {
-    def iter(prev: String, out: String): String =
-      s"""i_$out AS (
-         |  SELECT e.dst AS node, CAST(sum(r.r // g.d) AS BIGINT) AS insum
-         |  FROM edges e JOIN $prev r ON r.node = e.src
-         |  JOIN deg g ON g.src = e.src GROUP BY e.dst),
-         |$out AS (
-         |  SELECT nd.node,
-         |    CAST(150000 + (coalesce(i.insum, 0) * 850000) // 1000000 AS BIGINT) AS r
-         |  FROM nodes nd LEFT JOIN i_$out i ON i.node = nd.node)"""
-        .stripMargin
     raw"""WITH d AS (SELECT string_split_regex(trim(text), '\s+') AS w FROM documents
        |           WHERE len(string_split_regex(trim(text), '\s+')) >= 2),
        |bg AS (SELECT unnest(list_transform(range(1, len(w)),
@@ -498,10 +455,7 @@ object TextQueries {
        |  WHERE src <> dst),
        |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
        |deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
-       |r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM nodes),
-       |${iter("r0", "r1")},
-       |${iter("r1", "r2")},
-       |${iter("r2", "r3")},
+       |$pageRankCtes,
        |words AS (
        |  SELECT CAST(md5_number_lower(tok) & 4294967295 AS BIGINT) AS node,
        |    min(tok) AS tok
@@ -606,11 +560,7 @@ object TextQueries {
     * same shingle convention as the HLL oracle (short docs contribute
     * the whole text as one gram). */
   private def ngramNoveltySql: String =
-    """WITH d AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
-      |g AS (SELECT doc_id,
-      |        CASE WHEN len(w) <= 2 THEN [array_to_string(w, ' ')]
-      |             ELSE list_transform(range(1, len(w) - 1), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) END AS sh
-      |      FROM d),
+    raw"""WITH ${shingle3Ctes("doc_id")},
       |gd AS (SELECT DISTINCT doc_id, gram FROM
       |        (SELECT doc_id, unnest(sh) AS gram FROM g)),
       |f AS (SELECT gram, count(*) AS df FROM gd GROUP BY gram),

@@ -4,6 +4,8 @@ package queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ml.{Bpe, Unigram}
+
 import Shared._
 
 /** Tokenizers trained and applied in the engine: WordPiece, BPE and
@@ -189,6 +191,39 @@ object TokenizerQueries {
     ).mkString(",\n")
   }
 
+  /** BPE merge rounds every BPE query trains and applies. */
+  private val BpeRounds = 8
+
+  /** The trained merges (the [[bpeTrainCtes]] cascade) applied to every
+    * document's words: `BpeRounds` rewrite rounds through
+    * `dw<BpeRounds>`(doc_id, word, syms). */
+  private def bpeEncodeCtes: String = {
+    val dw0 =
+      """dw0 AS (
+        |  SELECT doc_id, word,
+        |    list_append([substr(word, i, 1) FOR i IN range(1, length(word) + 1)],
+        |                '</w>') AS syms
+        |  FROM (
+        |    SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS word
+        |    FROM documents)
+        |  WHERE word <> '')""".stripMargin
+    val encRounds = (1 to BpeRounds).map(k =>
+      bpeRewriteCte(s"dw${k - 1}", s"b$k", s"dw$k", "doc_id, word"))
+    s"${bpeTrainCtes(BpeRounds)},\n${(dw0 +: encRounds).mkString(",\n")}"
+  }
+
+  /** BPE trained on the top-40 word-frequency relation of `docs`, 8
+    * merges: (merges, trained symbol relation). */
+  private def trainBpe(docs: DataFrame): (Seq[Bpe.Merge], DataFrame) =
+    Bpe.train(Bpe.wordFreq(docs, "text", maxWords = Some(40)), BpeRounds)
+
+  /** The Unigram-LM vocabulary trained on the top-40 word-frequency
+    * relation of `docs` (pieces ≤ 4 chars, 60 seeds, 2 EM rounds),
+    * collected to the driver. */
+  private def unigramVocab(docs: DataFrame): Seq[(String, Long)] =
+    Unigram.collectVocab(Unigram.train(Unigram.wordFreq(docs, "text", maxWords = 40),
+      maxPieceLen = 4, maxSeed = 60, emRounds = 2))
+
   /** Shared encode cascade: train, then the Viterbi DP over the corpus
     * distinct-word relation (`ue_F`), with `udw` carrying per-doc word
     * occurrences for the join-back. */
@@ -300,74 +335,12 @@ object TokenizerQueries {
       .orderBy("doc_id")
   }
 
-  // WordPiece replay: the greedy longest-match choice at each (word,
-  // position) does not depend on segmentation history, so `best`
-  // precomputes it per position and `walk` just follows the path.
   // Constants mirror wordpieceQ: vocab docs<=20, maxSize 60 (56 pieces
   // after the 4 specials), encode docs<=10, maxLen 32 (30 body slots).
   private def wordpieceSql: String =
-    """WITH RECURSIVE
-      |words AS (
-      |  SELECT w FROM (
-      |    SELECT unnest(regexp_split_to_array(lower(text), '\s+')) AS w
-      |    FROM documents WHERE doc_id <= 20) WHERE w <> ''),
-      |chars AS (
-      |  SELECT DISTINCT c AS piece FROM (
-      |    SELECT unnest(string_split(w, '')) AS c
-      |    FROM (SELECT DISTINCT w FROM words)) WHERE c <> ''),
-      |cand AS (
-      |  SELECT piece, 9223372036854775807 AS freq FROM chars
-      |  UNION ALL SELECT '##' || piece, 9223372036854775807 FROM chars
-      |  UNION ALL SELECT w AS piece, count(*) AS freq FROM words GROUP BY w),
-      |lim AS (
-      |  SELECT piece, max(freq) AS freq FROM cand GROUP BY piece
-      |  ORDER BY max(freq) DESC, piece LIMIT 56),
-      |vocab AS (
-      |  SELECT piece, CAST(id AS BIGINT) AS id FROM (VALUES
-      |    ('[PAD]', 0), ('[UNK]', 1), ('[CLS]', 2), ('[SEP]', 3)) sp(piece, id)
-      |  UNION ALL
-      |  SELECT piece, CAST(row_number() OVER (ORDER BY freq DESC, piece) + 3 AS BIGINT)
-      |  FROM lim),
-      |dw AS (
-      |  SELECT DISTINCT w FROM (
-      |    SELECT unnest(regexp_split_to_array(lower(text), '\s+')) AS w
-      |    FROM documents WHERE doc_id <= 10) WHERE w <> ''),
-      |pieces AS (
-      |  SELECT id, piece LIKE '##%' AS cont,
-      |    CASE WHEN piece LIKE '##%' THEN substr(piece, 3) ELSE piece END AS core
-      |  FROM vocab WHERE piece NOT LIKE '[%'),
-      |wp AS (SELECT w, unnest(generate_series(1, length(w))) AS pos FROM dw),
-      |best AS (
-      |  SELECT wp.w, wp.pos, arg_max(p.id, length(p.core)) AS pid,
-      |    max(length(p.core)) AS plen
-      |  FROM wp JOIN pieces p
-      |    ON p.cont = (wp.pos > 1)
-      |   AND substr(wp.w, wp.pos, length(p.core)) = p.core
-      |  GROUP BY wp.w, wp.pos),
-      |walk(w, pos, ids) AS (
-      |  SELECT w, 1, CAST([] AS BIGINT[]) FROM dw
-      |  UNION ALL
-      |  SELECT x.w, x.pos + b.plen, list_append(x.ids, b.pid)
-      |  FROM walk x JOIN best b ON b.w = x.w AND b.pos = x.pos),
-      |wseg AS (
-      |  SELECT d.w,
-      |    coalesce(t.ids, list_value((SELECT id FROM vocab WHERE piece = '[UNK]'))) AS ids
-      |  FROM dw d LEFT JOIN
-      |    (SELECT w, ids FROM walk WHERE pos = length(w) + 1) t ON t.w = d.w),
-      |toks AS (
-      |  SELECT doc_id, w, o FROM (
-      |    SELECT doc_id,
-      |      unnest(regexp_split_to_array(lower(text), '\s+')) AS w,
-      |      unnest(generate_series(1, len(regexp_split_to_array(lower(text), '\s+')))) AS o
-      |    FROM documents WHERE doc_id <= 10) WHERE w <> ''),
-      |enc AS (
-      |  SELECT t.doc_id,
-      |    list_concat(
-      |      list_value((SELECT id FROM vocab WHERE piece = '[CLS]')),
-      |      list_append(
-      |        list_slice(flatten(list(s.ids ORDER BY t.o)), 1, 30),
-      |        (SELECT id FROM vocab WHERE piece = '[SEP]'))) AS ids
-      |  FROM toks t JOIN wseg s ON s.w = t.w GROUP BY t.doc_id)
+    "WITH RECURSIVE\n" + wordpieceCtes("lower(text)", "documents WHERE doc_id <= 20", 56,
+      "doc_id", "lower(text)", "documents WHERE doc_id <= 10", 30) +
+    """
       |SELECT CAST(doc_id AS BIGINT) AS doc_id,
       |  array_to_string(ids, ',') || repeat(',0', 32 - len(ids)) AS input_ids,
       |  array_to_string(list_transform(ids, x -> 1), ',')
@@ -382,9 +355,7 @@ object TokenizerQueries {
     * merge table must match exactly.
     */
   private def bpeTrainQ(s: SparkSession, dir: String): DataFrame = {
-    import graft.ml.Bpe
-    val wf = Bpe.wordFreq(t(s, dir, "documents"), "text", maxWords = Some(40))
-    val (merges, _) = Bpe.train(wf, 8)
+    val (merges, _) = trainBpe(t(s, dir, "documents"))
     import s.implicits._
     merges.toDF()
       .select(col("rank").cast("long").as("merge_rank"),
@@ -393,11 +364,10 @@ object TokenizerQueries {
   }
 
   private def bpeTrainSql: String = {
-    val numRounds = 8
-    val sel = (1 to numRounds)
+    val sel = (1 to BpeRounds)
       .map(k => s"SELECT $k AS merge_rank, lhs, rhs, CAST(c AS BIGINT) AS pair_count FROM b$k")
       .mkString("\n  UNION ALL ")
-    s"""WITH ${bpeTrainCtes(numRounds)}
+    s"""WITH ${bpeTrainCtes(BpeRounds)}
        |SELECT CAST(merge_rank AS BIGINT) AS merge_rank, lhs, rhs, pair_count
        |FROM (
        |  $sel)
@@ -411,7 +381,6 @@ object TokenizerQueries {
     * unrolled Viterbi DP step, and both rescores — the final vocabulary
     * (piece, count, micro-quantized log-prob) must match exactly. */
   private def unigramTrainQ(s: SparkSession, dir: String): DataFrame = {
-    import graft.ml.Unigram
     val wf = Unigram.wordFreq(t(s, dir, "documents"), "text", maxWords = 40)
     Unigram.train(wf, maxPieceLen = 4, maxSeed = 60, emRounds = 2)
       .select(col("piece"), col("cnt").cast("long").as("cnt"),
@@ -431,11 +400,8 @@ object TokenizerQueries {
     * distinct-word discipline); per-doc word/subword counts plus the
     * exact-integer path log-likelihood pin the segmentation. */
   private def unigramEncodeQ(s: SparkSession, dir: String): DataFrame = {
-    import graft.ml.Unigram
     val docs = t(s, dir, "documents")
-    val vocab = Unigram.collectVocab(Unigram.train(
-      Unigram.wordFreq(docs, "text", maxWords = 40),
-      maxPieceLen = 4, maxSeed = 60, emRounds = 2))
+    val vocab = unigramVocab(docs)
     Unigram.encodeCorpus(docs, "text", "doc_id", vocab, maxPieceLen = 4)
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"),
@@ -462,11 +428,8 @@ object TokenizerQueries {
     * Manual half-away-from-zero rounding for the ratio (the
     * `t_ppl_buckets` boundary lesson applied from the start). */
   private def unigramFertilityQ(s: SparkSession, dir: String): DataFrame = {
-    import graft.ml.Unigram
     val docs = t(s, dir, "documents")
-    val vocab = Unigram.collectVocab(Unigram.train(
-      Unigram.wordFreq(docs, "text", maxWords = 40),
-      maxPieceLen = 4, maxSeed = 60, emRounds = 2))
+    val vocab = unigramVocab(docs)
     val q = sum(size(col("pieces"))).cast("double") /
       count(lit(1)) * lit(1000000.0)
     Unigram.encodeCorpus(docs, "text", "doc_id", vocab, maxPieceLen = 4)
@@ -504,7 +467,6 @@ object TokenizerQueries {
     * the best-path DP, AND the per-(word, piece) alt-path DP with a
     * per-row score map. */
   private def unigramPruneQ(s: SparkSession, dir: String): DataFrame = {
-    import graft.ml.Unigram
     val wf = Unigram.wordFreq(t(s, dir, "documents"), "text", maxWords = 40)
     val vocab = Unigram.train(wf, maxPieceLen = 4, maxSeed = 60, emRounds = 2)
     val nSingles = Unigram.collectVocab(vocab).count(_._1.length == 1)
@@ -564,15 +526,13 @@ object TokenizerQueries {
     * BPE subword counts include the `</w>` end-mark pieces — that is
     * the BPE segmentation's own accounting, not an adjustment. */
   private def tokenizerCompareQ(s: SparkSession, dir: String): DataFrame = {
-    import graft.ml.{Bpe, Unigram}
     val docs = t(s, dir, "documents")
     def ratio6(num: Column, den: Column): Column = {
       val q = num.cast("double") / den * lit(1000000.0)
       when(q >= 0, floor(q + 0.5)).otherwise(ceil(q - 0.5)) / lit(1000000.0)
     }
     // BPE arm: 8 merges on the top-40 word-freq relation
-    val (merges, trained) = Bpe.train(
-      Bpe.wordFreq(docs, "text", maxWords = Some(40)), 8)
+    val (merges, trained) = trainBpe(docs)
     val bpeVocab = Bpe.vocab(trained).agg(count(lit(1)).as("vocab_pieces"))
     val bpeEnc = Bpe.encodeCorpus(docs, "text", "doc_id", merges)
       .agg(count(lit(1)).as("n_words"),
@@ -609,18 +569,6 @@ object TokenizerQueries {
     * the identical corpus — vocab sizes, word/subword/char totals, and
     * the manual-rounded compression/fertility ratios, one row each. */
   private def tokenizerCompareSql: String = {
-    val numRounds = 8
-    val dw0 =
-      """dw0 AS (
-        |  SELECT doc_id, word,
-        |    list_append([substr(word, i, 1) FOR i IN range(1, length(word) + 1)],
-        |                '</w>') AS syms
-        |  FROM (
-        |    SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS word
-        |    FROM documents)
-        |  WHERE word <> '')""".stripMargin
-    val encRounds = (1 to numRounds).map(k =>
-      bpeRewriteCte(s"dw${k - 1}", s"b$k", s"dw$k", "doc_id, word"))
     def arm(tok: String, vocabSql: String, encFrom: String,
             subLen: String): String =
       s"""SELECT '$tok' AS tokenizer,
@@ -632,13 +580,12 @@ object TokenizerQueries {
          |  CAST(sum($subLen) AS DOUBLE) / count(*) * 1000000 AS qf
          |FROM $encFrom""".stripMargin
     val bpeArm = arm("bpe",
-      s"(SELECT count(DISTINCT s) FROM (SELECT unnest(syms) AS s FROM w$numRounds))",
-      s"dw$numRounds", "len(syms)")
+      s"(SELECT count(DISTINCT s) FROM (SELECT unnest(syms) AS s FROM w$BpeRounds))",
+      s"dw$BpeRounds", "len(syms)")
     val uniArm = arm("unigram",
       "(SELECT count(*) FROM uv2)",
       "udw JOIN ue_F e USING (word)", "len(e.segs)")
-    s"""WITH ${bpeTrainCtes(numRounds)},
-       |${(dw0 +: encRounds).mkString(",\n")},
+    s"""WITH $bpeEncodeCtes,
        |$unigramEncodeCtes
        |SELECT tokenizer, CAST(vocab_pieces AS BIGINT) AS vocab_pieces,
        |  n_words, n_subwords, n_chars,
@@ -661,12 +608,9 @@ object TokenizerQueries {
     * per-language aggregation; streamed == batch IS the oracle. */
   private def streamingUnigramQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    import graft.ml.Unigram
     val name = s"st_unigram_${streamSeq.incrementAndGet()}"
     val docs = t(s, dir, "documents")
-    val vocab = Unigram.collectVocab(Unigram.train(
-      Unigram.wordFreq(docs, "text", maxWords = 40),
-      maxPieceLen = 4, maxSeed = 60, emRounds = 2))
+    val vocab = unigramVocab(docs)
     val vm = Unigram.scoreMapLit(vocab)
     val encoded = docs
       .select(explode(split(lower(col("text")), "\\s+")).as("word"))
@@ -707,11 +651,8 @@ object TokenizerQueries {
     * 8 encode rounds.
     */
   private def bpeEncodeQ(s: SparkSession, dir: String): DataFrame = {
-    import graft.ml.Bpe
     val docs = t(s, dir, "documents")
-    val (merges, _) = Bpe.train(
-      Bpe.wordFreq(docs, "text", maxWords = Some(40)), 8)
-    Bpe.encodeCorpus(docs, "text", "doc_id", merges)
+    Bpe.encodeCorpus(docs, "text", "doc_id", trainBpe(docs)._1)
       .groupBy("doc_id")
       .agg(sum(size(col("subwords"))).cast("long").as("n_subwords"),
         count(lit(1)).as("n_words"))
@@ -723,25 +664,11 @@ object TokenizerQueries {
     * relation, reusing the training cascade's b$k winners) — per-doc
     * subword/word counts pin the segmentation corpus-wide.
     */
-  private def bpeEncodeSql: String = {
-    val numRounds = 8
-    val dw0 =
-      """dw0 AS (
-        |  SELECT doc_id, word,
-        |    list_append([substr(word, i, 1) FOR i IN range(1, length(word) + 1)],
-        |                '</w>') AS syms
-        |  FROM (
-        |    SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS word
-        |    FROM documents)
-        |  WHERE word <> '')""".stripMargin
-    val encRounds = (1 to numRounds).map(k =>
-      bpeRewriteCte(s"dw${k - 1}", s"b$k", s"dw$k", "doc_id, word"))
-    s"""WITH ${bpeTrainCtes(numRounds)},
-       |${(dw0 +: encRounds).mkString(",\n")}
+  private def bpeEncodeSql: String =
+    s"""WITH $bpeEncodeCtes
        |SELECT doc_id, CAST(sum(len(syms)) AS BIGINT) AS n_subwords,
        |  count(*) AS n_words
-       |FROM dw$numRounds GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
+       |FROM dw$BpeRounds GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   /** Tokenizer fertility per language (subwords emitted per word) under
     * the corpus-trained BPE — the table a multilingual pipeline reports
@@ -750,11 +677,8 @@ object TokenizerQueries {
     * training run as `t2_bpe_train`; the encode relation joins back to
     * the documents table for language, then one keyed aggregation. */
   private def bpeFertilityQ(s: SparkSession, dir: String): DataFrame = {
-    import graft.ml.Bpe
     val docs = t(s, dir, "documents")
-    val (merges, _) = Bpe.train(
-      Bpe.wordFreq(docs, "text", maxWords = Some(40)), 8)
-    Bpe.encodeCorpus(docs, "text", "doc_id", merges)
+    Bpe.encodeCorpus(docs, "text", "doc_id", trainBpe(docs)._1)
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
       .groupBy("lang")
       .agg(sum(size(col("subwords"))).cast("long").as("n_subwords"),
@@ -767,27 +691,13 @@ object TokenizerQueries {
   /** t2_bpe_fertility: the encode cascade again (same trained merges),
     * aggregated per LANGUAGE with the subwords-per-word ratio — the
     * multilingual-vocabulary health table. */
-  private def bpeFertilitySql: String = {
-    val numRounds = 8
-    val dw0 =
-      """dw0 AS (
-        |  SELECT doc_id, word,
-        |    list_append([substr(word, i, 1) FOR i IN range(1, length(word) + 1)],
-        |                '</w>') AS syms
-        |  FROM (
-        |    SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS word
-        |    FROM documents)
-        |  WHERE word <> '')""".stripMargin
-    val encRounds = (1 to numRounds).map(k =>
-      bpeRewriteCte(s"dw${k - 1}", s"b$k", s"dw$k", "doc_id, word"))
-    s"""WITH ${bpeTrainCtes(numRounds)},
-       |${(dw0 +: encRounds).mkString(",\n")}
+  private def bpeFertilitySql: String =
+    s"""WITH $bpeEncodeCtes
        |SELECT d.lang, CAST(sum(len(syms)) AS BIGINT) AS n_subwords,
        |  count(*) AS n_words,
        |  round(CAST(sum(len(syms)) AS DOUBLE) / count(*), 6) AS fertility
-       |FROM dw$numRounds e JOIN documents d USING (doc_id)
+       |FROM dw$BpeRounds e JOIN documents d USING (doc_id)
        |GROUP BY d.lang ORDER BY d.lang""".stripMargin
-  }
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("t2_tokenizer_layout", tokenizerLayout, tokenizerLayoutSql),

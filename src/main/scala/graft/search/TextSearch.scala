@@ -506,6 +506,33 @@ object TextSearch {
       .select("doc_id", "score_r", "rank")
   }
 
+  /** The tokenized corpus (doc_id, w, dl) and its constants as one
+    * broadcastable row (n_docs, avgdl). */
+  private def bm25Corpus(docs: DataFrame, idCol: String,
+                         textCol: String): (DataFrame, DataFrame) = {
+    val base = docs.select(col(idCol).as("doc_id"), toks(col(textCol)).as("w"))
+      .withColumn("dl", size(col("w")).cast("double"))
+    (base, base.agg(count(lit(1)).cast("double").as("n_docs"), avg(col("dl")).as("avgdl")))
+  }
+
+  /** Per-(doc, term) BM25 contributions `c` of a term-frequency relation
+    * (doc_id, dl, term, tf, …), each rounded to 6 dp. */
+  private def bm25Contrib(tf: DataFrame, consts: DataFrame,
+                          k1: Double, b: Double): DataFrame = {
+    val df_ = tf.groupBy(col("term"))
+      .agg(countDistinct(col("doc_id")).cast("double").as("df"))
+    tf.join(broadcast(df_), Seq("term"))
+      .crossJoin(broadcast(consts))
+      // idf is the one transcendental in the score: round it to 6 dp so a
+      // sub-ulp libm-vs-Math.log difference can never reach the oracle
+      // compare through the later multiplications
+      .withColumn("idf",
+        round(log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1), 6))
+      .withColumn("c",
+        round(col("idf") * (col("tf") * (k1 + 1)) /
+          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))), 6))
+  }
+
   /** The full-corpus BM25 scored relation (doc_id, score_r) behind
     * [[bm25TopK]], memoized per (session, corpus plan, normalized
     * terms, k1, b) — see [[bm25Memo]]. */
@@ -520,12 +547,7 @@ object TextSearch {
       if (hit != null) { routerMemoHits += 1; return hit }
       bm25Memo.values.removeIf(v => sessionStopped(v))
     }
-    val base = docs.select(col(idCol).as("doc_id"),
-      toks(col(textCol)).as("w"))
-      .withColumn("dl", size(col("w")).cast("double"))
-    // corpus constants: one broadcast row (count + avg doc length)
-    val consts = base.agg(count(lit(1)).cast("double").as("n_docs"),
-      avg(col("dl")).as("avgdl"))
+    val (base, consts) = bm25Corpus(docs, idCol, textCol)
     // explode ONLY query-term matches: the shuffle carries matching
     // tokens, not the corpus token stream
     val tf = base
@@ -533,20 +555,7 @@ object TextSearch {
         explode(filter(col("w"), t => t.isInCollection(terms))).as("term"))
       .groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
-    val df_ = tf.groupBy(col("term"))
-      .agg(countDistinct(col("doc_id")).cast("double").as("df"))
-    val contrib = tf
-      .join(broadcast(df_), Seq("term"))
-      .crossJoin(broadcast(consts))
-      // idf is the one transcendental in the score: round it to 6 dp so a
-      // sub-ulp libm-vs-Math.log difference can never reach the oracle
-      // compare through the later multiplications
-      .withColumn("idf",
-        round(log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1), 6))
-      .withColumn("c",
-        round(col("idf") * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))), 6))
-    val scored = contrib.groupBy(col("doc_id"))
+    val scored = bm25Contrib(tf, consts, k1, b).groupBy(col("doc_id"))
       .agg(sum(col("c").cast(DecimalType(18, 6))).cast("double").as("score_r"))
       .localCheckpoint(eager = false)
     bm25Memo.synchronized { bm25Memo.put(key, scored) }
@@ -614,25 +623,13 @@ object TextSearch {
       .unionByName(prfExpansionTerms(docs, queryTerms, kFb, nExp,
           idCol, textCol)
         .select(col("term"), lit(lambdaPpm).as("wgt_ppm")))
-    val base = docs.select(col(idCol).as("doc_id"), toks(col(textCol)).as("w"))
-      .withColumn("dl", size(col("w")).cast("double"))
-    val consts = base.agg(count(lit(1)).cast("double").as("n_docs"),
-      avg(col("dl")).as("avgdl"))
+    val (base, consts) = bm25Corpus(docs, idCol, textCol)
     val tf = base
       .select(col("doc_id"), col("dl"), explode(col("w")).as("term"))
       .join(broadcast(termsW), "term")
       .groupBy(col("doc_id"), col("dl"), col("term"), col("wgt_ppm"))
       .agg(count(lit(1)).cast("double").as("tf"))
-    val df_ = tf.groupBy(col("term"))
-      .agg(countDistinct(col("doc_id")).cast("double").as("df"))
-    val contrib = tf
-      .join(broadcast(df_), Seq("term"))
-      .crossJoin(broadcast(consts))
-      .withColumn("idf",
-        round(log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1), 6))
-      .withColumn("c",
-        round(col("idf") * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))), 6))
+    val contrib = bm25Contrib(tf, consts, k1, b)
       .withColumn("cw_micro",
         expr("(CAST(floor(c * 1e6 + 0.5) AS BIGINT) * wgt_ppm) div 1000000L"))
     val scored = contrib.groupBy(col("doc_id"))

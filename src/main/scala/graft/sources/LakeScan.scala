@@ -285,15 +285,14 @@ object LakeScan {
         ColPlan(i, t.getName, "other", SlotArr, (g, f) => {
           val lg = g.getGroup(f, 0)
           val n = lg.getFieldRepetitionCount(0)
-          val out = new Array[Float](n)
+          val out = new Array[Any](n)
           var j = 0
           while (j < n) {
             out(j) =
               if (threeLevel) {
+                // an optional element may be null, as v_arr's elements may
                 val eg = lg.getGroup(0, j)
-                if (eg.getFieldRepetitionCount(0) == 0)
-                  unsupported("null list element")
-                eg.getFloat(0, 0)
+                if (eg.getFieldRepetitionCount(0) == 0) null else eg.getFloat(0, 0)
               } else lg.getFloat(0, j)
             j += 1
           }

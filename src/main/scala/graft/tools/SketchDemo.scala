@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.core.{MinHash, SimHash}
 
 /** CLI demo: distributed MinHash sketching of the `documents` table.
@@ -14,12 +13,7 @@ import graft.core.{MinHash, SimHash}
 object SketchDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-sketch-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSpark.session()
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
 

@@ -94,6 +94,20 @@ class LakeScanSpec extends SparkSpec {
     scanned(tmp, Seq("edge")) { cells => assertParity(profileOf(cells), loop) }
   }
 
+  test("a null element in a list<float> column decodes as null, as the per-table path reads it") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_nullelem").toString
+    Seq(Seq(Some(1.0f), None), Seq(Some(2.0f))).toDF("vec")
+      .write.mode("overwrite").parquet(s"$tmp/t.parquet")
+    val loop = Profiler.profileLake(spark, tmp, Seq("t"))
+    val snap = Profiler.contentSnapshot(Lake.read(spark, tmp, "t"), "t")
+    def c(df: org.apache.spark.sql.DataFrame) = df.toJSON.collect().toSeq
+    scanned(tmp, Seq("t")) { cells =>
+      assertParity(profileOf(cells), loop)
+      assert(c(LakeScan.snapshotFromRaw(cells)) == c(snap))
+    }
+  }
+
   test("lake-scan snapshots match per-table contentSnapshot digests") {
     val snapTables = Seq("region", "nation", "supplier", "orders")
     val loop = snapTables.map(t =>
