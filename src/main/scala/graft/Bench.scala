@@ -501,26 +501,6 @@ object Bench {
     f"""{"d_model":$d,"heads":$h,"d_ff":$f,"layer_ms_seq128":$ms128%.1f,"layer_ms_seq512":$ms512%.1f,"docs_per_sec_12layer_seq128_${cpus}cores":$dps128%.2f,"docs_per_sec_12layer_seq512_${cpus}cores":$dps512%.2f,"deploy_docs":$nDocs,"docs_per_sec_1layer_seq512_measured_local$cpus":$measured1L%.2f,"docs_per_sec_12layer_seq512_implied_local$cpus":$measured12L%.2f}"""
   }
 
-  /** cluster_scale: [[graft.operators.Dedup.resolveClusters]] at 10⁶
-    * nodes — the scale evidence behind the "logarithmic rounds" claim
-    * the 100 TB dedup story rests on (the correctness specs pin
-    * convergence only to n=300). Two adversarial shapes:
-    *  - PATH: consecutive ids chained pairwise (the sorted-id relation
-    *    real near-dup corpora produce, and THE regression class of the
-    *    r13 stranded-label bug) — worst case for region merging, since
-    *    every round can at best halve the single path's region count;
-    *  - MIXED: one hash-scattered edge per node (xxhash64 dst), a
-    *    random functional graph whose components are many short
-    *    cycle-trees — the many-small-clusters regime.
-    * Reports contraction rounds (expect ≈log₂n for the path, far fewer
-    * for mixed) and wall + component counts as a self-audit (the path
-    * must resolve to exactly ONE component). */
-  /** lpa_scale: labelPropagation (3 synchronous rounds) on the
-    * cluster_scale-style mixed graph at 10⁵ and 10⁶ nodes — rounds are
-    * FIXED by contract, so the scale claim is cost-per-round linearity:
-    * the 10×-node wall should grow ~linearly (keyed edge joins + hash
-    * aggregates, no pairing). Records walls, the wall ratio, and the
-    * surviving label counts. */
   /** ICWS banding feature-space probe — artifact for the round-16 fix:
     * on this corpus's 31-token vocabulary, UNIGRAM tf·idf features make
     * a large fraction of all doc pairs collide in some band (quadratic
@@ -558,6 +538,12 @@ object Bench {
     f"""{"n_docs":$nDocs,"shingle3_cands":$cShingle,"shingle3_pairs":$nShingle,"shingle3_sec":$sShingle%.1f,"unigram_cands":$cUni,"unigram_pairs":$nUni,"unigram_sec":$sUni%.1f}"""
   }
 
+  /** lpa_scale: labelPropagation (3 synchronous rounds) on the
+    * cluster_scale-style mixed graph at 10⁵ and 10⁶ nodes — rounds are
+    * FIXED by contract, so the scale claim is cost-per-round linearity:
+    * the 10×-node wall should grow ~linearly (keyed edge joins + hash
+    * aggregates, no pairing). Records walls, the wall ratio, and the
+    * surviving label counts. */
   private def lpaScaleBench(spark: SparkSession): String = {
     def run(n: Long): (Double, Long) = {
       System.gc()
@@ -576,6 +562,20 @@ object Bench {
     f"""{"n_small":100000,"small_sec":$s1%.1f,"small_labels":$l1,"n_big":1000000,"big_sec":$s2%.1f,"big_labels":$l2,"wall_ratio_10x":${s2 / math.max(s1, 1e-9)}%.1f}"""
   }
 
+  /** cluster_scale: [[graft.operators.Dedup.resolveClusters]] at 10⁶
+    * nodes — the scale evidence behind the "logarithmic rounds" claim
+    * the 100 TB dedup story rests on (the correctness specs pin
+    * convergence only to n=300). Two adversarial shapes:
+    *  - PATH: consecutive ids chained pairwise (the sorted-id relation
+    *    real near-dup corpora produce, and THE regression class of the
+    *    r13 stranded-label bug) — worst case for region merging, since
+    *    every round can at best halve the single path's region count;
+    *  - MIXED: one hash-scattered edge per node (xxhash64 dst), a
+    *    random functional graph whose components are many short
+    *    cycle-trees — the many-small-clusters regime.
+    * Reports contraction rounds (expect ≈log₂n for the path, far fewer
+    * for mixed) and wall + component counts as a self-audit (the path
+    * must resolve to exactly ONE component). */
   private def clusterScaleBench(spark: SparkSession): String = {
     def run(edges: org.apache.spark.sql.DataFrame): (Int, Double, Long) = {
       System.gc()

@@ -20,13 +20,6 @@ object FeatureAssembly {
 
   val DefaultPad = 768  // reference hidden size
 
-  /** Per-column stats vector: `[unique, num_nan, cell_width, quantile13,
-    * 0-pad]` to full width, then z-scored over the WHOLE width — the
-    * reference z-scores after padding (`tabular_tokenizer.py:222-234`), so
-    * the pad slots carry the common (0−μ)/σ value. Missing cell_width
-    * defaults to the CELL_WIDTH_BYTES constant 1.0 (`:201-204,51`);
-    * missing/NaN quantiles → 0 (`:217-218`).
-    */
   /** Z-score the `raw` head values against the FULL padded width: the pad
     * slots are zeros, so μ = Σraw/width and the pad contribution to the
     * variance is the closed form `(width−|raw|)·μ²` — a fixed left-to-right
@@ -47,6 +40,13 @@ object FeatureAssembly {
     else raw.map(x => (x - mu) / sd) ++ Seq.fill(width - raw.length)(-mu / sd)
   }
 
+  /** Per-column stats vector: `[unique, num_nan, cell_width, quantile13,
+    * 0-pad]` to full width, then z-scored over the WHOLE width — the
+    * reference z-scores after padding (`tabular_tokenizer.py:222-234`), so
+    * the pad slots carry the common (0−μ)/σ value. Missing cell_width
+    * defaults to the CELL_WIDTH_BYTES constant 1.0 (`:201-204,51`);
+    * missing/NaN quantiles → 0 (`:217-218`).
+    */
   def statsVector(width: Int = DefaultPad): Column = {
     val raw = concat(
       array(col("unique").cast("double"), col("num_nan").cast("double"),

@@ -239,17 +239,6 @@ object OnnxExport {
       wHead: Array[Double], bHead: Double,
       attScale: Double, lnEps: Double)
 
-  /** Export a REAL (toy-sized) transformer encoder as ONNX, opset 17:
-    * Reshape [N, S·D] → [N, S, D]; per-head Q/K/V MatMuls, K transpose,
-    * scaled QKᵀ, Softmax over keys, attention-weighted V; head Concat;
-    * output projection + residual + LayerNormalization; Sigmoid FFN +
-    * residual + LayerNormalization; mean-pool over positions; linear +
-    * Sigmoid score. Every op here executes in [[OnnxSession]] — the
-    * demonstration that the pure-JVM session runs ENCODER-shaped graphs
-    * (3-D tensors, attention MatMuls, Softmax, LayerNorm), not just the
-    * linear/MLP heads. Input column order is the flattened
-    * `x_{s}_{d}` (position-major) feature list.
-    */
   /** One encoder layer's weights for [[exportEncoderStack]] — same field
     * semantics as [[MiniEncoderWeights]] minus the stack-level head. */
   final case class EncoderLayer(
@@ -270,7 +259,18 @@ object OnnxExport {
       wHead: Array[Double], bHead: Double,
       attScale: Double, lnEps: Double)
 
-  /** @param withHead true → sigmoid classifier output `score [N,1]`
+  /** Export a REAL (toy-sized) transformer encoder as ONNX, opset 17:
+    * Reshape [N, S·D] → [N, S, D]; per-head Q/K/V MatMuls, K transpose,
+    * scaled QKᵀ, Softmax over keys, attention-weighted V; head Concat;
+    * output projection + residual + LayerNormalization; Sigmoid FFN +
+    * residual + LayerNormalization; mean-pool over positions; linear +
+    * Sigmoid score. Every op here executes in [[OnnxSession]] — the
+    * demonstration that the pure-JVM session runs ENCODER-shaped graphs
+    * (3-D tensors, attention MatMuls, Softmax, LayerNorm), not just the
+    * linear/MLP heads. Input column order is the flattened
+    * `x_{s}_{d}` (position-major) feature list.
+    *
+    * @param withHead true → sigmoid classifier output `score [N,1]`
     *                  (Q7 pair scoring); false → the graph STOPS at the
     *                  mean-pooled encoder state `pooled [N,dModel]` — the
     *                  sentence/value EMBEDDING shape (Q6,

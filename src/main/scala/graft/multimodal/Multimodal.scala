@@ -158,15 +158,6 @@ object Multimodal {
         "duration_ms", "rms")
   }
 
-  /** Decoded-content fingerprints: hash the DECODED pixels (dims +
-    * channels + raster MD5), not the payload bytes — so the same image
-    * re-encoded (PNG vs GIF vs JPEG, different compressors, different
-    * filter choices) fingerprints identically, which byte-level hashing
-    * can never do. Null for payloads outside the decodable profiles.
-    * Feed the result to [[graft.operators.Dedup.exactDuplicates]] with
-    * `textCol = "pixel_fp"` for cross-format media dedup — one hash
-    * shuffle, the standard exact-dedup scale shape.
-    */
   /** 64-bit difference hash (dHash) of a decoded image — the standard
     * perceptual near-dup key for image corpora (aHash/dHash/pHash
     * family; dHash is the gradient variant). The image average-pools to
@@ -297,6 +288,15 @@ object Multimodal {
         .select(col("media_id").as("id"), col("afp").as("sh")),
       maxHamming)
 
+  /** Decoded-content fingerprints: hash the DECODED pixels (dims +
+    * channels + raster MD5), not the payload bytes — so the same image
+    * re-encoded (PNG vs GIF vs JPEG, different compressors, different
+    * filter choices) fingerprints identically, which byte-level hashing
+    * can never do. Null for payloads outside the decodable profiles.
+    * Feed the result to [[graft.operators.Dedup.exactDuplicates]] with
+    * `textCol = "pixel_fp"` for cross-format media dedup — one hash
+    * shuffle, the standard exact-dedup scale shape.
+    */
   def pixelFingerprints(media: DataFrame): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._

@@ -401,20 +401,6 @@ object Ann {
     }
   }
 
-  /** LSH cosine near-dup pairs: signature chunks as band keys, exact cosine
-    * verification. Output (id_a, id_b, cosine) with cosine ≥ threshold.
-    *
-    * Chunk width is derived FROM the threshold so banding keeps ≥
-    * `recallTarget` of true pairs (a fixed width silently drops most
-    * qualifying pairs at low thresholds — at cosine 0.35 a 6-bit chunk
-    * agrees with p≈5%, recall≈23%). When the recall-feasible chunking is
-    * no longer selective (expected collision fraction ≥ ½ of all pairs),
-    * banding cannot beat scoring every pair, so this falls back to
-    * [[exactCosinePairs]] — correct results at every threshold, LSH
-    * speedup whenever geometry permits. The fallback is blocked (no node
-    * holds the corpus) but still O(n²) FLOPs — that cost is inherent to an
-    * exact answer at a threshold where banding has no recall.
-    */
   /** Per-label centroid geometry in exact integer micro space — do the
     * label clusters actually separate, and which labels confuse? Each
     * component micro-quantizes to a long, per-(label, dim) SUMS are
@@ -488,6 +474,20 @@ object Ann {
             col("__sv").cast("double"), 6)).as("anisotropy"))
   }
 
+  /** LSH cosine near-dup pairs: signature chunks as band keys, exact cosine
+    * verification. Output (id_a, id_b, cosine) with cosine ≥ threshold.
+    *
+    * Chunk width is derived FROM the threshold so banding keeps ≥
+    * `recallTarget` of true pairs (a fixed width silently drops most
+    * qualifying pairs at low thresholds — at cosine 0.35 a 6-bit chunk
+    * agrees with p≈5%, recall≈23%). When the recall-feasible chunking is
+    * no longer selective (expected collision fraction ≥ ½ of all pairs),
+    * banding cannot beat scoring every pair, so this falls back to
+    * [[exactCosinePairs]] — correct results at every threshold, LSH
+    * speedup whenever geometry permits. The fallback is blocked (no node
+    * holds the corpus) but still O(n²) FLOPs — that cost is inherent to an
+    * exact answer at a threshold where banding has no recall.
+    */
   def cosineNearDups(embs: DataFrame, threshold: Double = 0.95,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      nBits: Int = 32, recallTarget: Double = 0.95): DataFrame = {

@@ -157,10 +157,6 @@ object Graph {
     cur.select(col("node"), col("c").as("coreness"))
   }
 
-  /** Per-node degrees of the cleaned edge relation (self-edges and
-    * duplicates dropped, as [[pagerankInt]]): (node, out_deg, in_deg).
-    * Two key shuffles; nodes with no edges in a direction report 0.
-    */
   /** Undirected triangle census + global clustering coefficient — the
     * "is this link graph tissue or hairball" summary a curation pipeline
     * reads next to the degree distribution (spam farms show near-zero
@@ -276,6 +272,10 @@ object Graph {
             col("n_edges").cast("double"), 6)).as("reciprocity"))
   }
 
+  /** Per-node degrees of the cleaned edge relation (self-edges and
+    * duplicates dropped, as [[pagerankInt]]): (node, out_deg, in_deg).
+    * Two key shuffles; nodes with no edges in a direction report 0.
+    */
   def degreeReport(edges: DataFrame): DataFrame = {
     val e = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))

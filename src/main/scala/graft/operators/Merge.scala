@@ -26,10 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Merge {
 
-  /** Apply `changes` (target schema + an `opCol` of 'upsert'/'delete')
-    * to `target`, keyed by `keyCols`, latest-change-wins ordered by
-    * `orderCols`. Output has exactly the target's schema.
-    */
   /** Guard a changelog's op column: anything outside {upsert, delete}
     * (including NULL — which three-valued logic would otherwise turn
     * into a silent delete) fails the job instead of corrupting state. */
@@ -38,6 +34,10 @@ object Merge {
       .otherwise(expr(
         s"raise_error(concat('Merge: unknown op ', coalesce(`$opCol`, 'NULL')))"))
 
+  /** Apply `changes` (target schema + an `opCol` of 'upsert'/'delete')
+    * to `target`, keyed by `keyCols`, latest-change-wins ordered by
+    * `orderCols`. Output has exactly the target's schema.
+    */
   def upsert(target: DataFrame, changes: DataFrame, keyCols: Seq[String],
              orderCols: Seq[String], opCol: String = "op"): DataFrame = {
     require(keyCols.nonEmpty && orderCols.nonEmpty)

@@ -182,22 +182,6 @@ object Sampling {
         (col("desired_tokens") - col("actual_tokens")).as("shortfall")): _*)
   }
 
-  /** Weighted sampling WITHOUT replacement, k rows per group —
-    * Efraimidis–Spirakis (IPL 2006) exponential keys: each row draws
-    * u ∈ (0,1] from its salted id hash and ranks by u^(1/w), i.e. by
-    * `ln(u)/w` descending. Deterministic like everything here: u is a
-    * pure function of (salt, id), so the sample is reproducible on any
-    * partitioning and replayable by the oracle.
-    *
-    * FP discipline (the BM25 precedent): the one transcendental, ln(u),
-    * is rounded to 6 dp BEFORE the divide; the key is then a single
-    * IEEE-754 division of identical doubles in every engine. Ties (same
-    * rounded key) break on id ascending.
-    *
-    * Scale shape: hash + key are row-local; ranking is a window
-    * PARTITIONED by the group columns; non-positive weights are
-    * excluded (sampling mass zero).
-    */
   /** Compute-optimal training-data planner (Hoffmann et al. 2022,
     * "Training Compute-Optimal Large Language Models" — Chinchilla;
     * public): for each FLOP budget C, the compute-optimal model size
@@ -307,6 +291,22 @@ object Sampling {
         expr("(alpha_raw * 1000000L) div t").as("weight_ppm"))
   }
 
+  /** Weighted sampling WITHOUT replacement, k rows per group —
+    * Efraimidis–Spirakis (IPL 2006) exponential keys: each row draws
+    * u ∈ (0,1] from its salted id hash and ranks by u^(1/w), i.e. by
+    * `ln(u)/w` descending. Deterministic like everything here: u is a
+    * pure function of (salt, id), so the sample is reproducible on any
+    * partitioning and replayable by the oracle.
+    *
+    * FP discipline (the BM25 precedent): the one transcendental, ln(u),
+    * is rounded to 6 dp BEFORE the divide; the key is then a single
+    * IEEE-754 division of identical doubles in every engine. Ties (same
+    * rounded key) break on id ascending.
+    *
+    * Scale shape: hash + key are row-local; ranking is a window
+    * PARTITIONED by the group columns; non-positive weights are
+    * excluded (sampling mass zero).
+    */
   def weightedSample(df: DataFrame, idCol: String, weightCol: String,
                      k: Int, groupCols: Seq[String] = Nil,
                      salt: String = "ws0"): DataFrame = {

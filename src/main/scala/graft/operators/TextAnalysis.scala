@@ -226,11 +226,6 @@ object TextAnalysis {
         round(col("n_novel").cast("double") / col("n_grams"), 6))
   }
 
-  /** Repetition metrics (the rest of the Gopher rule family): duplicate
-    * word fraction and the share of bigrams taken by the most frequent
-    * one. Pure array expressions per row — codegen'd, shuffle-free; the
-    * O(distinct·n) inner count is bounded by document length.
-    */
   /** Unicode SCRIPT-MIX audit — the cheap pre-language-ID signal and
     * corpus-composition report: per group (default: the claimed lang
     * label), exact codepoint counts by script class (Latin, Han, ASCII
@@ -265,6 +260,11 @@ object TextAnalysis {
           col("ws")).cast("double") / col("n_chars"), 6).as("other_share"))
   }
 
+  /** Repetition metrics (the rest of the Gopher rule family): duplicate
+    * word fraction and the share of bigrams taken by the most frequent
+    * one. Pure array expressions per row — codegen'd, shuffle-free; the
+    * O(distinct·n) inner count is bounded by document length.
+    */
   def repetitionMetrics(docs: DataFrame, idCol: String = "doc_id",
                         textCol: String = "text"): DataFrame = {
     // materialize token/bigram arrays as real columns FIRST: lambda

@@ -85,14 +85,6 @@ object Profiler {
     case _                                             => "other"  // zero-encoded downstream
   }
 
-  /** Ensure enough partitions for the downstream aggregation: a single
-    * parquet row group arrives as ONE partition, which would serialize the
-    * whole profile. No-op when the scan already has parallelism (the 100 TB
-    * case — thousands of row groups).
-    */
-  private def ensureParallelism(df: DataFrame): DataFrame =
-    graft.sources.Lake.balance(df)
-
   /** The one pair of cell-rendering casts every profile path shares —
     * `(value_str, value_num)` for a field (P2 empty→null on strings,
     * epoch seconds for dates). `LakeScan.renderLong` mirrors these over
@@ -181,7 +173,7 @@ object Profiler {
     // Repartition the narrow input BEFORE exploding ×nCols — the serial
     // shuffle write from a single-row-group scan is 11× cheaper that way.
     profileFromLong(
-      longFormatKeyed(ensureParallelism(df), tableName, renderNumerics = withSketches),
+      longFormatKeyed(graft.sources.Lake.balance(df), tableName, renderNumerics = withSketches),
       withSketches, withQuantiles)
       .orderBy("col_idx")
 
@@ -319,7 +311,7 @@ object Profiler {
     // partition and only 100-slot buffers merge — no data shuffle at all.
     // (Row strings are mostly unique, so a dedup pre-stage would only add
     // a shuffle.)
-    ensureParallelism(df).select(rowStr.as("row_str"))
+    graft.sources.Lake.balance(df).select(rowStr.as("row_str"))
       .agg(minhash_agg(col("row_str")).as("content_snapshot"))
       .withColumn("table_name", lit(tableName))
       .select("table_name", "content_snapshot")

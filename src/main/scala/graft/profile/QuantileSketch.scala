@@ -94,10 +94,6 @@ object QuantileSketch {
       .drop(q, a, e)
   }
 
-  /** Decile read-back: for k = 1..9, the bucket containing the
-    * ceil(n·k/10)-th smallest non-null value, reported as its midpoint.
-    * Output: (table_name, col_idx, decile, est).
-    */
   /** The decile CUT BUCKETS of a sketch — the raw integer bucket ids
     * holding ranks ⌈n·k/10⌉, k = 1..9 (a bucket spanning several
     * deciles appears once per k). [[deciles]] adds the midpoint
@@ -143,6 +139,10 @@ object QuantileSketch {
       .select(col("table_name"), col("col_idx"), col("k"), col("bucket"))
   }
 
+  /** Decile read-back: for k = 1..9, the bucket containing the
+    * ceil(n·k/10)-th smallest non-null value, reported as its midpoint.
+    * Output: (table_name, col_idx, decile, est).
+    */
   def deciles(sketch: DataFrame): DataFrame =
     decileBuckets(sketch)
       .withColumn("est", bucketEstimate(col("bucket")))

@@ -94,12 +94,6 @@ object AnnQueries {
       |                      / (a.nrm * b.nrm), 6) END DESC, b.vec_id) AS rank
       |  FROM n a JOIN n b ON a.vec_id <= 10 AND b.vec_id <> a.vec_id)""".stripMargin
 
-  /** ann_kmeans_ivf: replay deterministic Lloyd's k-means (3 unrolled
-    * iterations, exact BIGINT micro-space distances, trunc-division
-    * means, empty cells keep their centroid), then the IVF search:
-    * corpus→nearest cell, queries→2 nearest cells, full-precision
-    * cosine within probed cells, top-5.
-    */
   /** Nearest-cell argmin CTE body over `qvs` × the `src` centroid
     * relation (BIGINT micro-space distances, ties to the lowest cell) —
     * shared by the kmeans replays. */
@@ -509,6 +503,12 @@ object AnnQueries {
       .orderBy("query_id", "rank")
   }
 
+  /** ann_kmeans_ivf: replay deterministic Lloyd's k-means (3 unrolled
+    * iterations, exact BIGINT micro-space distances, trunc-division
+    * means, empty cells keep their centroid), then the IVF search:
+    * corpus→nearest cell, queries→2 nearest cells, full-precision
+    * cosine within probed cells, top-5.
+    */
   private def annKmeansIvfSql: String = {
     val (iters, kCells, nProbe, k, dim) = (3, 8, 2, 5, 64)
     def argmin(src: String, filter: String, rnCond: String) =

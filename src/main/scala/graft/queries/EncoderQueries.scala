@@ -12,17 +12,6 @@ import Shared._
   * DuckDB from the same weight functions. */
 object EncoderQueries {
 
-  /** E4 with a REAL (toy-sized) transformer: a 1-layer 2-head encoder —
-    * per-head scaled-dot attention with Softmax, residual + LayerNorm,
-    * Sigmoid FFN, mean-pool, sigmoid head — exported as an ONNX graph
-    * ([[graft.ml.OnnxExport.exportMiniEncoder]]) and executed DISTRIBUTED
-    * by the pure-JVM [[graft.ml.OnnxSession]] through the same
-    * per-partition/batched `ExternalModelScorer` seam a JNI onnxruntime
-    * would use. Weights and inputs come from the closed-form
-    * exact-binary-fraction formulas; the oracle replays the whole forward
-    * pass as unrolled SQL in the session kernels' summation orders
-    * (reference: `transformer_bert.py:88-224`, `extract_embeddings.py:
-    * 16-117` — checkpoint-driven encoder inference in the engine). */
   /** One fixture encoder layer from the layer-indexed
     * closed-form formulas (layer 0 == the original 1-layer fixture). */
   private def teLayer(l: Int): graft.ml.OnnxExport.EncoderLayer = {
@@ -492,6 +481,17 @@ object EncoderQueries {
       |    m.coefficients[3] * x3 + m.intercept))), 6) AS score_r
       |FROM xs, m ORDER BY id""".stripMargin
 
+  /** E4 with a REAL (toy-sized) transformer: a 1-layer 2-head encoder —
+    * per-head scaled-dot attention with Softmax, residual + LayerNorm,
+    * Sigmoid FFN, mean-pool, sigmoid head — exported as an ONNX graph
+    * ([[graft.ml.OnnxExport.exportMiniEncoder]]) and executed DISTRIBUTED
+    * by the pure-JVM [[graft.ml.OnnxSession]] through the same
+    * per-partition/batched `ExternalModelScorer` seam a JNI onnxruntime
+    * would use. Weights and inputs come from the closed-form
+    * exact-binary-fraction formulas; the oracle replays the whole forward
+    * pass as unrolled SQL in the session kernels' summation orders
+    * (reference: `transformer_bert.py:88-224`, `extract_embeddings.py:
+    * 16-117` — checkpoint-driven encoder inference in the engine). */
   private def q7TransformerScore(s: SparkSession, dir: String): DataFrame =
     teScore(s, "/tmp/graft_fixtures/q7_encoder.onnx", layers = 1)
 

@@ -151,12 +151,6 @@ object GraphQueries {
        |SELECT node, r AS rank_ppm FROM r3
        |ORDER BY rank_ppm DESC, node LIMIT 20""".stripMargin
 
-  /** Community detection over the `w_page_rank` link graph
-    * ([[graft.operators.Graph.labelPropagation]], 3 synchronous
-    * rounds): the site-cluster pass that caps or weights whole
-    * communities where `w_components` would over-merge through
-    * bridges. Output = community-size histogram with exact label
-    * checksums; the oracle replays the unrolled rounds. */
   /** Web-graph coreness histogram ([[graft.operators.Graph.kCore]]):
     * 8 synchronous h-operator rounds on the same synthetic doc graph as
     * [[labelPropQ]], reported as (coreness, n_nodes, node_checksum). */
@@ -190,6 +184,12 @@ object GraphQueries {
        |FROM c8 GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
+  /** Community detection over the `w_page_rank` link graph
+    * ([[graft.operators.Graph.labelPropagation]], 3 synchronous
+    * rounds): the site-cluster pass that caps or weights whole
+    * communities where `w_components` would over-merge through
+    * bridges. Output = community-size histogram with exact label
+    * checksums; the oracle replays the unrolled rounds. */
   private def labelPropQ(s: SparkSession, dir: String): DataFrame = {
     graft.operators.Graph.labelPropagation(linkGraph(s, dir), nIter = 3)
       .groupBy("label").agg(count(lit(1)).as("size"))

@@ -15,11 +15,6 @@ import Shared._
   * and the corpus dedup passes built on them. */
 object NearDupQueries {
 
-  /** d_minhash_lsh: 3-word-shingle MinHash near-dup pairs with the SAME
-    * banding semantics as Dedup.minhashNearDups (bands of 5 consecutive
-    * slots; a pair is a candidate iff some band matches in full), verified
-    * at jaccard ≥ 0.05.
-    */
   /** Shared CTE chain: per-doc 3-word-shingle MinHash digests (`dig`). */
   private def docDigCtes: String =
     s"""$permsCte,
@@ -46,12 +41,6 @@ object NearDupQueries {
     * in some band) that the cluster queries close over. */
   private val NearDupPairs = "SELECT id_a, id_b FROM pairs WHERE nb > 0 AND jaccard >= 0.05"
 
-  /** d_icws_minhash: replay Ioffe ICWS in the log domain — md5
-    * uniforms (low32 + 1)/2³², Gamma(2,1) r/c as negated sums of
-    * 6dp-rounded lns (the weightedSample seam), exact dyadic β,
-    * t_k = floor(round(ln w,6)/r + β), slot key ln(c)−r(t_k−β)−r (no
-    * exp anywhere), argmin ties to ascending token — beside the exact
-    * weighted Jaccard on the same tf·idf_micro weights. */
   /** The shared ICWS replay CTE block over a doc predicate: tf → idf
     * micros → wts → 32-slot log-domain ICWS keys → `sig` (id, k, s_tok,
     * s_tk). Used by d_icws_minhash and d_icws_neardups. */
@@ -282,6 +271,12 @@ object NearDupQueries {
       .orderBy("id_a", "id_b")
   }
 
+  /** d_icws_minhash: replay Ioffe ICWS in the log domain — md5
+    * uniforms (low32 + 1)/2³², Gamma(2,1) r/c as negated sums of
+    * 6dp-rounded lns (the weightedSample seam), exact dyadic β,
+    * t_k = floor(round(ln w,6)/r + β), slot key ln(c)−r(t_k−β)−r (no
+    * exp anywhere), argmin ties to ascending token — beside the exact
+    * weighted Jaccard on the same tf·idf_micro weights. */
   private def icwsMinhashSql: String = {
     raw"""WITH ${icwsSigCtes("doc_id <= 25")},
       |ids AS (SELECT doc_id AS id FROM documents WHERE doc_id <= 25),
@@ -346,6 +341,11 @@ object NearDupQueries {
     Dedup.minhashNearDups(t(s, dir, "documents"), threshold = 0.05, bands = 20)
       .orderBy("id_a", "id_b")
 
+  /** d_minhash_lsh: 3-word-shingle MinHash near-dup pairs with the SAME
+    * banding semantics as Dedup.minhashNearDups (bands of 5 consecutive
+    * slots; a pair is a candidate iff some band matches in full), verified
+    * at jaccard ≥ 0.05.
+    */
   private def minhashLshSql: String =
     s"""WITH $minhashPairCtes
        |SELECT id_a, id_b, jaccard FROM pairs

@@ -16,14 +16,6 @@ import Shared._
   * perplexity buckets and decontamination, each with its streamed twin. */
 object QualityQueries {
 
-  /** C4 page-cleaning funnel per language
-    * ([[graft.operators.TextAnalysis.c4Filter]]). Pages are synthesized
-    * deterministically from the token stream (8-token lines; line i gets
-    * a terminal '.' when (doc_id+i) % 4 ≠ 0; code / lorem-ipsum /
-    * policy-word lines injected by doc_id residue — the t_pii_scrub
-    * synthesis precedent), so every rule actually discriminates on this
-    * corpus; the oracle rebuilds the identical pages and replays the
-    * rules. */
   /** Deterministic page synthesis for the C4 queries (8-token lines,
     * residue-keyed terminal '.', injected code/lorem/policy lines) —
     * pure projections, so it runs identically on batch and streaming
@@ -156,15 +148,6 @@ object QualityQueries {
        |       FROM (SELECT unnest(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS bg
        |             FROM d WHERE len(w) >= 2) GROUP BY bg)""".stripMargin
 
-  /** t_lm_quality: replay the add-1 bigram LM — word_shingles(2)
-    * bigrams, train counts from ≥2-token docs ONLY (sub-2-token docs
-    * would inject their whole-text collapse shingle), scored docs keep
-    * the collapse (scores as unseen), context counts from the bigram
-    * relation, unigram vocabulary. Log-probs become integer micro-units
-    * via floor/ceil half-away rounding (bit-deterministic in both
-    * engines, unlike round() built-ins, which disagree when the decimal
-    * sum / count quotient lands exactly on a .5e-6 boundary — observed
-    * at sf0.1), summed exactly; the mean re-rounds the same way. */
   /** The bigram-LM score CTE chain over an arbitrary source relation
     * `src` (train = score = src, the t_lm_quality shape) — shared by
     * t_lm_quality, t_ppl_buckets (via the full statement) and the CCNet
@@ -276,12 +259,25 @@ object QualityQueries {
        |  CAST((alpha_raw * 1000000) // tt.t AS BIGINT) AS weight_ppm
        |FROM ar, tt ORDER BY domain""".stripMargin
 
+  /** t_lm_quality: replay the add-1 bigram LM — word_shingles(2)
+    * bigrams, train counts from ≥2-token docs ONLY (sub-2-token docs
+    * would inject their whole-text collapse shingle), scored docs keep
+    * the collapse (scores as unseen), context counts from the bigram
+    * relation, unigram vocabulary. Log-probs become integer micro-units
+    * via floor/ceil half-away rounding (bit-deterministic in both
+    * engines, unlike round() built-ins, which disagree when the decimal
+    * sum / count quotient lands exactly on a .5e-6 boundary — observed
+    * at sf0.1), summed exactly; the mean re-rounds the same way. */
   private def lmQualitySql: String =
     s"""WITH ${lmScoreCtes("documents")}
        |SELECT doc_id, n_bigrams,
        |  (CASE WHEN m >= 0 THEN floor(m + 0.5) ELSE ceil(m - 0.5) END) / 1000000.0 AS avg_logprob_r
        |FROM ag ORDER BY doc_id""".stripMargin
 
+  /** d_decontam_report: 3-gram overlap of corpus docs (id > 5) against
+    * the eval set (id ≤ 5), mirroring Decontamination.overlapReport
+    * (distinct shingles; ≤2-word docs collapse to one whole-text
+    * shingle, same as word_shingles). */
   private def decontamSql: String =
     raw"""WITH ${shingle3Ctes("doc_id")},
       |ds AS (SELECT DISTINCT doc_id, unnest(sh) AS s FROM g WHERE doc_id > 5),
@@ -717,6 +713,14 @@ object QualityQueries {
       |  UNION ALL SELECT 3, 'decontam', count(*), CAST(coalesce(sum(n_tokens), 0) AS BIGINT) FROM s3)
       |ORDER BY stage_id""".stripMargin
 
+  /** C4 page-cleaning funnel per language
+    * ([[graft.operators.TextAnalysis.c4Filter]]). Pages are synthesized
+    * deterministically from the token stream (8-token lines; line i gets
+    * a terminal '.' when (doc_id+i) % 4 ≠ 0; code / lorem-ipsum /
+    * policy-word lines injected by doc_id residue — the t_pii_scrub
+    * synthesis precedent), so every rule actually discriminates on this
+    * corpus; the oracle rebuilds the identical pages and replays the
+    * rules. */
   private def c4FiltersQ(s: SparkSession, dir: String): DataFrame =
     c4Rollup(graft.operators.TextAnalysis.c4Filter(
       c4Pages(t(s, dir, "documents")),

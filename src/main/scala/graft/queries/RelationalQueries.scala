@@ -302,6 +302,8 @@ object RelationalQueries {
       |  CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS value_cents
       |FROM mg GROUP BY 1 ORDER BY 1""".stripMargin
 
+  /** Engine extension: as-of join — each click enriched with the user's
+    * latest prior purchase value (DuckDB's native ASOF JOIN verifies). */
   private def asofEnrich(s: SparkSession, dir: String): DataFrame = {
     val ev = t(s, dir, "events")
     val clicks = ev.filter(col("event_type") === "click")
@@ -327,8 +329,6 @@ object RelationalQueries {
       |  ON c.user_id = p.user_id AND c.ts >= p.ts
       |ORDER BY event_id""".stripMargin
 
-  /** Engine extension: as-of join — each click enriched with the user's
-    * latest prior purchase value (DuckDB's native ASOF JOIN verifies). */
   /** §2.6 reshaping: status × priority pivot matrix (explicit value
     * list, so the plan is static); absent combinations are 0. */
   private def pivotQ(s: SparkSession, dir: String): DataFrame =

@@ -247,10 +247,6 @@ object SpanDedupQueries {
       .orderBy("id")
   }
 
-  /** d_decontam_report: 3-gram overlap of corpus docs (id > 5) against
-    * the eval set (id ≤ 5), mirroring Decontamination.overlapReport
-    * (distinct shingles; ≤2-word docs collapse to one whole-text
-    * shingle, same as word_shingles). */
   /** d_bloom_prefilter: decontamSql plus the Bloom band — bit positions
     * are salted md5_low32 draws mod 1024 (`md5_number_lower(s||':bloom'||i)
     * & 2³²−1 % 1024`), bits = distinct positions of the eval side, a

@@ -68,6 +68,12 @@ object StreamingQueries {
        |FROM est ORDER BY col_idx, decile""".stripMargin
   }
 
+  /** §2.12: Structured-Streaming profile of `nation`, driven to completion
+    * with AvailableNow and read back from the memory sink. The MinHash
+    * merge algebra makes the streamed profile EQUAL the batch profile over
+    * the same rows, so this streaming query has an exact DuckDB oracle —
+    * the strongest possible evidence the incremental path is lossless.
+    */
   private def streamingProfile(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types.StringType
@@ -115,12 +121,6 @@ object StreamingQueries {
        |FROM stats JOIN dig USING (cn) ORDER BY col_name""".stripMargin
   }
 
-  /** §2.12: Structured-Streaming profile of `nation`, driven to completion
-    * with AvailableNow and read back from the memory sink. The MinHash
-    * merge algebra makes the streamed profile EQUAL the batch profile over
-    * the same rows, so this streaming query has an exact DuckDB oracle —
-    * the strongest possible evidence the incremental path is lossless.
-    */
   /** Streaming watermarked hourly rollup (the canonical readStream →
     * window agg → sink shape): the streamed per-hour event counts must
     * equal the batch date_trunc rollup — window(ts, 1h) is epoch-hour

@@ -12,14 +12,6 @@ import Shared._
   * Unigram, with fertility and pruning studies. */
 object TokenizerQueries {
 
-  /** t2_bpe_train: replay BPE training as an UNROLLED 8-round CTE
-    * cascade (each round references its predecessor freely — no
-    * recursive-CTE single-reference limit). Greedy left-to-right merge
-    * uses the run-parity formula: a match position is merged iff the
-    * count of consecutive match positions immediately before it is even
-    * — equivalent to the engine's carry fold (a merged token never
-    * re-merges within a pass).
-    */
   /** One greedy-rewrite round: merge `best`'s pair into `src`'s symbol
     * arrays (run-parity greedy semantics), carrying `keep` columns. */
   private def bpeRewriteCte(src: String, best: String, out: String,
@@ -363,6 +355,14 @@ object TokenizerQueries {
       .orderBy("merge_rank")
   }
 
+  /** t2_bpe_train: replay BPE training as an UNROLLED 8-round CTE
+    * cascade (each round references its predecessor freely — no
+    * recursive-CTE single-reference limit). Greedy left-to-right merge
+    * uses the run-parity formula: a match position is merged iff the
+    * count of consecutive match positions immediately before it is even
+    * — equivalent to the engine's carry fold (a merged token never
+    * re-merges within a pass).
+    */
   private def bpeTrainSql: String = {
     val sel = (1 to BpeRounds)
       .map(k => s"SELECT $k AS merge_rank, lhs, rhs, CAST(c AS BIGINT) AS pair_count FROM b$k")

@@ -315,20 +315,6 @@ object TextSearch {
     sumDf2 / 2.0 <= 0.25 * allPairs || prefixCands <= 0.25 * allPairs
   }
 
-  /** Exact cosine self-join, AUTO-ROUTED between the two physical plans
-    * ([[cosineSelfJoin]] blocked kernel vs [[cosineSelfJoinPostings]]
-    * L2AP posting join) from a cheap per-corpus vocabulary profile —
-    * callers no longer need to know which regime their corpus is in.
-    *
-    * The profile costs one aggregate over the (materialized-once)
-    * posting relation, plus — only in the hot-vocabulary regime — the
-    * prefix window the postings plan would run anyway; when the router
-    * then picks postings, the prefix is handed over, not recomputed.
-    * Both profiles are linear in corpus size; choosing the WRONG plan is
-    * quadratic — see [[routeToPostings]] for the crossover rule. Results
-    * are plan-independent by construction (both plans are exact and
-    * round identically), so routing is invisible to callers.
-    */
   /** Bounded per-JVM memo of the router's expensive intermediates, so a
     * caller probing SEVERAL thresholds over one corpus (the usual way a
     * τ is tuned) re-pays neither the materialized posting relation nor
@@ -454,6 +440,20 @@ object TextSearch {
     * JVM (None before the first call). */
   def routerReport: Option[RouterReport] = lastRouterReport
 
+  /** Exact cosine self-join, AUTO-ROUTED between the two physical plans
+    * ([[cosineSelfJoin]] blocked kernel vs [[cosineSelfJoinPostings]]
+    * L2AP posting join) from a cheap per-corpus vocabulary profile —
+    * callers no longer need to know which regime their corpus is in.
+    *
+    * The profile costs one aggregate over the (materialized-once)
+    * posting relation, plus — only in the hot-vocabulary regime — the
+    * prefix window the postings plan would run anyway; when the router
+    * then picks postings, the prefix is handed over, not recomputed.
+    * Both profiles are linear in corpus size; choosing the WRONG plan is
+    * quadratic — see [[routeToPostings]] for the crossover rule. Results
+    * are plan-independent by construction (both plans are exact and
+    * round identically), so routing is invisible to callers.
+    */
   def cosineSimilarityJoin(docs: DataFrame, threshold: Double,
                            idCol: String = "doc_id",
                            textCol: String = "text"): DataFrame = {

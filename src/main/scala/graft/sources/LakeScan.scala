@@ -6,13 +6,12 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import org.apache.parquet.column.ColumnReader
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.io.{ColumnIOFactory, DelegatingSeekableInputStream, InputFile, SeekableInputStream}
-import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
+import org.apache.parquet.io.{DelegatingSeekableInputStream, InputFile, SeekableInputStream}
+import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
+import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, Type}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 /** Distributed lake scanner — the single-job shape of the reference's
@@ -31,6 +30,12 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * however large the file. `SketchBuild.build` reads every parquet lake
   * through [[scanLake]]; only the tables it rejects take the per-table
   * `Lake.read` path.
+  *
+  * One row reader decodes every file, `list<float>` columns included:
+  * [[fileRows]] reads the requested columns' pages directly through
+  * parquet's `ColumnReader`, and each column's [[ColPlan]] extractor turns
+  * the reader's typed values — and, for a list, its repetition and
+  * definition levels — into the cell's value.
   *
   * Value-rendering parity is BY CONSTRUCTION: the decoder only moves
   * typed values into a fixed variant schema (one slot per physical type);
@@ -136,38 +141,23 @@ object LakeScan {
   }
 
   /** Per-column decode plan: field position, reference-logical type, the
-    * variant slot, and the (already-null-checked) value extractor.
-    * `datePromoted` mirrors `Profiler.DatePromotedKey`: classification is
-    * "date", physical values stay strings. `fromCap` is the COLUMNAR
-    * extractor (direct page decode, no Group assembly) — null for types
-    * the columnar path doesn't cover (lists), which sends the whole file
-    * through the Group fallback. */
+    * variant slot, and `read`, the column's one value extractor: it
+    * decodes the reader's current row of the column (null for a null
+    * cell) and consumes it — one value of a primitive column, the whole
+    * repetition run of a `list<float>`. `datePromoted` mirrors
+    * `Profiler.DatePromotedKey`: classification is "date", physical
+    * values stay strings. */
   private final case class ColPlan(idx: Int, name: String, colType: String,
-                                   slot: Int, get: (Group, Int) => Any,
-                                   datePromoted: Boolean = false,
-                                   fromCap: ValueCap => Any = null)
+                                   slot: Int, read: ColumnReader => Any,
+                                   datePromoted: Boolean = false)
 
-  /** Leaf converter capturing the current primitive value during direct
-    * column reads (`ColumnReader.writeCurrentValueToConverter`). */
-  private final class ValueCap extends PrimitiveConverter {
-    var i: Int = 0; var l: Long = 0L; var f: Float = 0f; var d: Double = 0d
-    var b: Boolean = false; var bin: Binary = null
-    override def addInt(v: Int): Unit = i = v
-    override def addLong(v: Long): Unit = l = v
-    override def addFloat(v: Float): Unit = f = v
-    override def addDouble(v: Double): Unit = d = v
-    override def addBoolean(v: Boolean): Unit = b = v
-    override def addBinary(v: Binary): Unit = bin = v
-  }
-
-  /** Root converter for `ColumnReadStoreImpl`: routes each read field to
-    * its plan's [[ValueCap]] (only requested fields are populated). */
-  private final class CapRoot(byField: Array[Converter]) extends GroupConverter {
+  /** A converter tree that converts nothing. `ColumnReadStoreImpl` walks
+    * one down to every leaf it opens a reader for; the values themselves
+    * are read through `ColumnReader`'s typed getters. */
+  private final class NoConverter(t: GroupType) extends GroupConverter {
     override def getConverter(fieldIndex: Int): Converter = {
-      val c = byField(fieldIndex)
-      if (c == null) throw new IllegalStateException(
-        s"LakeScan: field $fieldIndex read without a requested converter")
-      c
+      val f = t.getType(fieldIndex)
+      if (f.isPrimitive) new PrimitiveConverter {} else new NoConverter(f.asGroupType())
     }
     override def start(): Unit = ()
     override def end(): Unit = ()
@@ -197,7 +187,18 @@ object LakeScan {
     schema.getFields.asScala.zipWithIndex.map { case (t, i) =>
       def unsupported(what: String) = throw new UnsupportedOperationException(
         s"LakeScan: unsupported $what for column '${t.getName}' of table '$table'")
+      // the readers below take one repetition level per row at most
+      if (t.isRepetition(Type.Repetition.REPEATED)) unsupported("repeated field")
+      // definition level at which the field itself is non-null
+      val fieldDef = schema.getMaxDefinitionLevel(t.getName)
       if (t.isPrimitive) {
+        def plan(colType: String, slot: Int, datePromoted: Boolean = false)(
+            get: ColumnReader => Any) =
+          ColPlan(i, t.getName, colType, slot, r => {
+            val v = if (r.getCurrentDefinitionLevel == fieldDef) get(r) else null
+            r.consume()
+            v
+          }, datePromoted)
         val ann = t.asPrimitiveType().getLogicalTypeAnnotation
         t.asPrimitiveType().getPrimitiveTypeName match {
           case PrimitiveTypeName.BINARY => ann match {
@@ -208,20 +209,17 @@ object LakeScan {
               // the Spark schema in the footer): classified "date", values
               // rendered as strings — same split as Profiler.logicalType
               val dp = promoted.contains(t.getName)
-              ColPlan(i, t.getName, if (dp) "date" else "string", SlotStr,
-                (g, f) => g.getBinary(f, 0).toStringUsingUTF8, datePromoted = dp,
-                fromCap = c => c.bin.toStringUsingUTF8)
+              plan(if (dp) "date" else "string", SlotStr, dp)(
+                _.getBinary.toStringUsingUTF8)
             case a => unsupported(s"BINARY annotation $a")
           }
           case PrimitiveTypeName.INT32 => ann match {
             case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation =>
-              ColPlan(i, t.getName, "date", SlotDate, (g, f) => g.getInteger(f, 0),
-                fromCap = c => c.i)
+              plan("date", SlotDate)(_.getInteger)
             case _: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
               unsupported("INT32 decimal")
             case _ =>
-              ColPlan(i, t.getName, "integer", SlotLong,
-                (g, f) => g.getInteger(f, 0).toLong, fromCap = c => c.i.toLong)
+              plan("integer", SlotLong)(_.getInteger.toLong)
           }
           case PrimitiveTypeName.INT64 => ann match {
             case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
@@ -233,37 +231,27 @@ object LakeScan {
                 // DuckDB's TIMESTAMP_NS load) applies
                 case TimeUnit.NANOS => _ / 1000L
               }
-              ColPlan(i, t.getName, "date", SlotTs,
-                (g, f) => toMicros(g.getLong(f, 0)), fromCap = c => toMicros(c.l))
+              plan("date", SlotTs)(r => toMicros(r.getLong))
             case _: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
               unsupported("INT64 decimal")
             case _ =>
-              ColPlan(i, t.getName, "integer", SlotLong, (g, f) => g.getLong(f, 0),
-                fromCap = c => c.l)
+              plan("integer", SlotLong)(_.getLong)
           }
           case PrimitiveTypeName.INT96 =>
             // legacy Spark-written timestamps: 8B nanos-of-day + 4B julian
             // day, little-endian; same CORRECTED-mode conversion Spark's
             // own reader applies (proleptic μs since epoch)
-            def int96Micros(bytes: Array[Byte]): Long = {
-              val buf = java.nio.ByteBuffer.wrap(bytes)
+            plan("date", SlotTs) { r =>
+              val buf = java.nio.ByteBuffer.wrap(r.getBinary.getBytes)
                 .order(java.nio.ByteOrder.LITTLE_ENDIAN)
               val nanosOfDay = buf.getLong
               val julianDay = buf.getInt
               (julianDay - 2440588).toLong * 86400000000L + nanosOfDay / 1000L
             }
-            ColPlan(i, t.getName, "date", SlotTs,
-              (g, f) => int96Micros(g.getInt96(f, 0).getBytes),
-              fromCap = c => int96Micros(c.bin.getBytes))
-          case PrimitiveTypeName.FLOAT =>
-            ColPlan(i, t.getName, "float", SlotFloat, (g, f) => g.getFloat(f, 0),
-              fromCap = c => c.f)
-          case PrimitiveTypeName.DOUBLE =>
-            ColPlan(i, t.getName, "float", SlotDouble, (g, f) => g.getDouble(f, 0),
-              fromCap = c => c.d)
+          case PrimitiveTypeName.FLOAT => plan("float", SlotFloat)(_.getFloat)
+          case PrimitiveTypeName.DOUBLE => plan("float", SlotDouble)(_.getDouble)
           case PrimitiveTypeName.BOOLEAN => // pandas bool→STRING (data_prep.py:103-108)
-            ColPlan(i, t.getName, "string", SlotBool, (g, f) => g.getBoolean(f, 0),
-              fromCap = c => c.b)
+            plan("string", SlotBool)(_.getBoolean)
           case other => unsupported(s"physical type $other")
         }
       } else {
@@ -271,69 +259,69 @@ object LakeScan {
         val isList = t.getLogicalTypeAnnotation != null &&
           t.getLogicalTypeAnnotation.isInstanceOf[LogicalTypeAnnotation.ListLogicalTypeAnnotation]
         if (!isList || gt.getFieldCount != 1) unsupported("nested group")
+        // standard 3-level list<float> (repeated group { optional element },
+        // Spark's legacy bag/array naming included) plus the legacy 2-level
+        // (repeated float) layout
         val inner = gt.getType(0)
-        // standard 3-level list<float> (repeated group { optional element })
-        // plus the legacy 2-level (repeated float) layout
-        val threeLevel = !inner.isPrimitive
-        val elemIsFloat =
-          if (threeLevel)
-            inner.asGroupType().getFieldCount == 1 &&
-              inner.asGroupType().getType(0).isPrimitive &&
-              inner.asGroupType().getType(0).asPrimitiveType().getPrimitiveTypeName == PrimitiveTypeName.FLOAT
-          else inner.asPrimitiveType().getPrimitiveTypeName == PrimitiveTypeName.FLOAT
-        if (!elemIsFloat) unsupported("list element type (only float lists)")
-        ColPlan(i, t.getName, "other", SlotArr, (g, f) => {
-          val lg = g.getGroup(f, 0)
-          val n = lg.getFieldRepetitionCount(0)
-          val out = new Array[Any](n)
-          var j = 0
-          while (j < n) {
-            out(j) =
-              if (threeLevel) {
-                // an optional element may be null, as v_arr's elements may
-                val eg = lg.getGroup(0, j)
-                if (eg.getFieldRepetitionCount(0) == 0) null else eg.getFloat(0, 0)
-              } else lg.getFloat(0, j)
-            j += 1
+        val leafPath =
+          if (inner.isPrimitive) Seq(t.getName, inner.getName)
+          else if (inner.asGroupType().getFieldCount == 1)
+            Seq(t.getName, inner.getName, inner.asGroupType().getType(0).getName)
+          else unsupported("list element type (only float lists)")
+        val leaf = schema.getType(leafPath: _*)
+        if (!leaf.isPrimitive ||
+            leaf.asPrimitiveType().getPrimitiveTypeName != PrimitiveTypeName.FLOAT ||
+            schema.getMaxRepetitionLevel(leafPath: _*) != 1)
+          unsupported("list element type (only float lists)")
+        // levels: below fieldDef the list is null, at fieldDef it is empty,
+        // above it each value is one element — a float at leafDef, else a
+        // null element (the optional element of the 3-level layout);
+        // repetition level 1 continues the current row's list
+        val leafDef = schema.getMaxDefinitionLevel(leafPath: _*)
+        ColPlan(i, t.getName, "other", SlotArr, r => {
+          val d = r.getCurrentDefinitionLevel
+          if (d <= fieldDef) {
+            r.consume()
+            if (d < fieldDef) null else IndexedSeq.empty
+          } else {
+            val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+            while ({
+              out += (if (r.getCurrentDefinitionLevel == leafDef) r.getFloat else null)
+              r.consume()
+              r.getCurrentRepetitionLevel == 1
+            }) ()
+            out.toIndexedSeq
           }
-          out.toIndexedSeq
         })
       }
     }.toArray
   }
 
-  /** Lazy row iterator over all row groups of an open reader; caps at
-    * `limit` rows and closes the reader when exhausted. Flat-primitive
-    * schemas decode COLUMNAR (direct page reads via `ColumnReadStoreImpl`,
-    * ~5-10× the throughput of example-Group assembly, and only the
-    * REQUESTED columns' pages are touched — the projection the Group path
-    * cannot do); schemas with list columns fall back to Group assembly.
+  /** The one parquet row reader: a lazy row iterator over all row groups
+    * of an open reader that caps at `limit` rows and closes the reader
+    * when exhausted. Per row group it opens one `ColumnReader` per plan
+    * (direct page reads, and only the REQUESTED columns' pages are
+    * touched) and streams `chunk`-row slices of each column through its
+    * plan's `read` into positional arrays, then zips rows — memory is
+    * O(chunk × width), never a whole group. A row is read whole, so a
+    * list never splits across a chunk or a row group. An unkeyed cap
+    * stops consuming pages mid-group; a file with no plans (a zero-column
+    * schema, or a part file without the `onlyCols` columns) yields no
+    * rows.
     */
   private def fileRows(in: ParquetFileReader, schema: MessageType,
-                       plans: Array[ColPlan], limit: Long): Iterator[Array[Any]] =
-    if (plans.isEmpty || plans.exists(_.fromCap == null))
-      fileRowsViaGroups(in, schema, plans, limit)
-    else fileRowsColumnar(in, schema, plans, limit)
-
-  /** Columnar decode: per row group, stream `chunk`-row slices of each
-    * requested column through its [[ValueCap]] into positional arrays,
-    * then zip rows — memory is O(chunk × width), never a whole group.
-    * An unkeyed cap stops consuming pages mid-group (same early exit the
-    * Group path had). */
-  private def fileRowsColumnar(in: ParquetFileReader, schema: MessageType,
-                               plans: Array[ColPlan], limit: Long,
-                               chunk: Int = 65536): Iterator[Array[Any]] =
-    new Iterator[Array[Any]] {
+                       plans: Array[ColPlan], limit: Long,
+                       chunk: Int = 65536): Iterator[Array[Any]] =
+    if (plans.isEmpty) { in.close(); Iterator.empty }
+    else new Iterator[Array[Any]] {
       private val createdBy = in.getFooter.getFileMetaData.getCreatedBy
       private val descs = plans.map { p =>
         schema.getColumns.asScala.find(_.getPath()(0) == p.name).getOrElse(
           throw new IllegalStateException(
             s"LakeScan: no column chunk for '${p.name}'"))
       }
-      private val maxDefs = descs.map(_.getMaxDefinitionLevel)
       // per-row-group state
-      private var readers: Array[org.apache.parquet.column.ColumnReader] = _
-      private var caps: Array[ValueCap] = _
+      private var readers: Array[ColumnReader] = _
       private var groupLeft = 0L
       // per-chunk state
       private var cols: Array[Array[Any]] = _
@@ -347,11 +335,7 @@ object LakeScan {
         if (pages == null) false
         else if (pages.getRowCount == 0) openGroup()
         else {
-          caps = plans.map(_ => new ValueCap)
-          val byField = new Array[Converter](schema.getFieldCount)
-          plans.zipWithIndex.foreach { case (p, k) =>
-            byField(schema.getFieldIndex(p.name)) = caps(k) }
-          val crs = new ColumnReadStoreImpl(pages, new CapRoot(byField),
+          val crs = new ColumnReadStoreImpl(pages, new NoConverter(schema),
             schema, createdBy)
           readers = descs.map(crs.getColumnReader)
           groupLeft = pages.getRowCount
@@ -367,18 +351,10 @@ object LakeScan {
           cols = Array.fill(plans.length)(new Array[Any](want))
         var k = 0
         while (k < plans.length) {
-          val reader = readers(k); val cap = caps(k)
-          val fin = plans(k).fromCap; val maxDef = maxDefs(k)
+          val reader = readers(k); val read = plans(k).read
           val out = cols(k)
           var i = 0
-          while (i < want) {
-            if (reader.getCurrentDefinitionLevel == maxDef) {
-              reader.writeCurrentValueToConverter()
-              out(i) = fin(cap)
-            } else out(i) = null
-            reader.consume()
-            i += 1
-          }
+          while (i < want) { out(i) = read(reader); i += 1 }
           k += 1
         }
         groupLeft -= want
@@ -397,45 +373,6 @@ object LakeScan {
         var k = 0
         while (k < plans.length) { out(k) = cols(k)(r); k += 1 }
         r += 1; emitted += 1
-        out
-      }
-    }
-
-  private def fileRowsViaGroups(in: ParquetFileReader, schema: MessageType,
-                                plans: Array[ColPlan], limit: Long): Iterator[Array[Any]] =
-    new Iterator[Array[Any]] {
-      private val colIO = new ColumnIOFactory().getColumnIO(schema)
-      private var reader: org.apache.parquet.io.RecordReader[Group] = _
-      private var inGroup = 0L
-      private var groupRows = 0L
-      private var emitted = 0L
-      private var closed = false
-      private def advance(): Boolean = {
-        val pages = in.readNextRowGroup()
-        if (pages == null) false
-        else {
-          reader = colIO.getRecordReader(pages, new GroupRecordConverter(schema))
-          inGroup = 0L; groupRows = pages.getRowCount
-          if (groupRows == 0) advance() else true
-        }
-      }
-      def hasNext: Boolean = {
-        val more = emitted < limit && (inGroup < groupRows || advance())
-        if (!more && !closed) { closed = true; in.close() }
-        more
-      }
-      def next(): Array[Any] = {
-        val g = reader.read()
-        inGroup += 1; emitted += 1
-        // out is POSITIONAL over `plans` (which may be a filtered subset);
-        // the parquet field index is always plans(i).idx
-        val out = new Array[Any](plans.length)
-        var i = 0
-        while (i < plans.length) {
-          val f = plans(i).idx
-          out(i) = if (g.getFieldRepetitionCount(f) == 0) null else plans(i).get(g, f)
-          i += 1
-        }
         out
       }
     }
@@ -576,7 +513,8 @@ object LakeScan {
         // the per-file keyed heap is only a PRE-filter when a keyed table
         // spans several part files (as the scan listed them, partition
         // subdirs included) — re-select the global top-cap rows
-        val nFiles = raw.inputFiles.toSeq.groupBy(tableOf(tables, _)).map {
+        val requested = tables.toSet
+        val nFiles = raw.inputFiles.toSeq.groupBy(tableOf(requested, _)).map {
           case (t, fs) => t -> fs.size }
         val multiKeyed = tables.filter(t =>
           Lake.TableKeys.contains(t) && nFiles.getOrElse(t, 0) > 1)
@@ -592,14 +530,15 @@ object LakeScan {
     CsvScan.ScanResult(cells, rejected, cached)
   }
 
-  /** The requested table a scanned file belongs to, resolved from the
-    * REQUESTED names (deepest match wins), not by grabbing a '.parquet'
-    * path segment — a lake directory itself named '*.parquet' would
-    * otherwise swallow every table into one name. */
-  private def tableOf(tables: Seq[String], path: String): String =
-    tables.filter { t =>
-      path.endsWith(s"/$t.parquet") || path.contains(s"/$t.parquet/")
-    }.sortBy(t => path.lastIndexOf(s"/$t.parquet")).lastOption
+  /** The requested table a scanned file belongs to: its deepest path
+    * segment `<name>.parquet` whose name was REQUESTED — not merely the
+    * deepest '.parquet' segment, or a lake directory itself named
+    * '*.parquet' would swallow every table into one name. One set lookup
+    * per segment, so resolving every file stays linear in the file count. */
+  private def tableOf(tables: Set[String], path: String): String =
+    path.split('/').reverseIterator
+      .collect { case seg if seg.endsWith(".parquet") => seg.stripSuffix(".parquet") }
+      .find(tables.contains)
       .getOrElse(throw new IllegalStateException(
         s"LakeScan: file $path matches no requested table"))
 
@@ -609,7 +548,7 @@ object LakeScan {
     require(tables.nonEmpty, "LakeScan needs at least one table")
     val keyMap = Lake.TableKeys
     val cap = rowCap
-    val known = tables.toVector
+    val known = tables.toSet
     val only = onlyCols
     // pathGlobFilter: Spark-written tables are DIRECTORIES of part files
     // (plus _SUCCESS markers) — keep only parquet leaves

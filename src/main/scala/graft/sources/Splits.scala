@@ -15,10 +15,6 @@ object Splits {
   def readMetadata(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", "true").json(path)
 
-  /** F4 pretrain split: `{train:[{table, metadata, json, column}], valid,
-    * test}` → long format (split, table, metadata, json, column). Reads
-    * plain or .bz2 JSON (codec by extension).
-    */
   /** Splits whose arrays hold structs (empty lists infer as
     * array<string> and carry no records). */
   private def structSplits(raw: DataFrame): Seq[String] =
@@ -30,6 +26,10 @@ object Splits {
       }
     }
 
+  /** F4 pretrain split: `{train:[{table, metadata, json, column}], valid,
+    * test}` → long format (split, table, metadata, json, column). Reads
+    * plain or .bz2 JSON (codec by extension).
+    */
   def readPretrainSplit(spark: SparkSession, path: String): DataFrame = {
     val raw = spark.read.option("multiLine", "true").json(path)
     structSplits(raw).map { s =>

@@ -94,18 +94,50 @@ class LakeScanSpec extends SparkSpec {
     scanned(tmp, Seq("edge")) { cells => assertParity(profileOf(cells), loop) }
   }
 
+  /** Profile and snapshot of table `t` under `d` must equal the per-table
+    * path's (`Profiler.profileLake` / `contentSnapshot` over `Lake.read`). */
+  private def assertTableParity(d: String, t: String): Unit = {
+    val loop = Profiler.profileLake(spark, d, Seq(t))
+    val snap = Profiler.contentSnapshot(Lake.read(spark, d, t), t)
+    def c(df: org.apache.spark.sql.DataFrame) = df.toJSON.collect().toSeq
+    scanned(d, Seq(t)) { cells =>
+      assertParity(profileOf(cells), loop)
+      assert(c(LakeScan.snapshotFromRaw(cells)) == c(snap))
+    }
+  }
+
+  /** Row `i` of the list fixtures: a null list every 13th row, an empty
+    * list every 17th, else 1–4 elements with a null element where
+    * `(i + j) % 5 == 0` (`nullElems = false` keeps those elements). */
+  private def listAt(i: Int, nullElems: Boolean = true): Option[Seq[Option[Float]]] =
+    if (i % 13 == 0) None
+    else if (i % 17 == 0) Some(Nil)
+    else Some((0 to i % 4).map { j =>
+      if (nullElems && (i + j) % 5 == 0) None else Some(i * 0.25f + j)
+    })
+
+  /** Footer of the first parquet file under `tableDir`. */
+  private def footerOf(tableDir: String) = {
+    val f = new java.io.File(tableDir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getAbsolutePath),
+        spark.sparkContext.hadoopConfiguration))
+    try r.getFooter finally r.close()
+  }
+
+  private def rowGroupRows(tableDir: String): Seq[Long] = {
+    import scala.jdk.CollectionConverters._
+    footerOf(tableDir).getBlocks.asScala.map(_.getRowCount).toSeq
+  }
+
   test("a null element in a list<float> column decodes as null, as the per-table path reads it") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_nullelem").toString
     Seq(Seq(Some(1.0f), None), Seq(Some(2.0f))).toDF("vec")
       .write.mode("overwrite").parquet(s"$tmp/t.parquet")
-    val loop = Profiler.profileLake(spark, tmp, Seq("t"))
-    val snap = Profiler.contentSnapshot(Lake.read(spark, tmp, "t"), "t")
-    def c(df: org.apache.spark.sql.DataFrame) = df.toJSON.collect().toSeq
-    scanned(tmp, Seq("t")) { cells =>
-      assertParity(profileOf(cells), loop)
-      assert(c(LakeScan.snapshotFromRaw(cells)) == c(snap))
-    }
+    assertTableParity(tmp, "t")
   }
 
   test("lake-scan snapshots match per-table contentSnapshot digests") {
@@ -189,6 +221,23 @@ class LakeScanSpec extends SparkSpec {
     }
     assert(rows == Map("a" -> 5L, "b" -> 3L),
       s"tables merged or misnamed: $rows")
+  }
+
+  test("nested *.parquet segments resolve to the deepest requested table") {
+    import spark.implicits._
+    // the lake sits under a directory named like one of its own tables:
+    // every file of table "a" also has "b.parquet" among its ancestors
+    val base = java.nio.file.Files.createTempDirectory("graft_nested").toString
+    val lakeDir = s"$base/b.parquet/lake.parquet"
+    (1 to 4).map(i => (i.toLong, s"a$i")).toDF("id", "v").coalesce(1)
+      .write.mode("overwrite").parquet(s"$lakeDir/a.parquet")
+    (1 to 2).map(i => (i.toLong, i * 0.5)).toDF("k", "x").coalesce(1)
+      .write.mode("overwrite").parquet(s"$lakeDir/b.parquet")
+    val rows = scanned(lakeDir, Seq("a", "b"), Some(10000)) { cells =>
+      profileOf(cells).select("table_name", "rows").distinct().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+    assert(rows == Map("a" -> 4L, "b" -> 2L), s"tables merged or misnamed: $rows")
   }
 
   test("empty table still yields one snapshot row (sentinel-fed aggregate)") {
@@ -284,15 +333,7 @@ class LakeScanSpec extends SparkSpec {
       .coalesce(1)
       .write.option("parquet.block.size", 64 * 1024)
       .mode("overwrite").parquet(s"$tmp/big.parquet")
-    val nGroups = {
-      val f = new java.io.File(s"$tmp/big.parquet").listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-          spark.sparkContext.hadoopConfiguration))
-      try r.getRowGroups.size finally r.close()
-    }
+    val nGroups = rowGroupRows(s"$tmp/big.parquet").size
     assert(nGroups > 3, s"fixture must span several row groups, got $nGroups")
     // uncapped: every cell must round-trip (counts + null counts + sum)
     val scan = LakeScan.scanLake(spark, tmp, Seq("big"), None)
@@ -321,6 +362,99 @@ class LakeScanSpec extends SparkSpec {
       col("value_str").isNull).count()
     assert(sNulls == n / 7)
     scan.release()
+  }
+
+  test("list<float> column: null lists, empty lists and null elements across row groups and the 64k chunk") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_lists").toString
+    // one row group holds more than 65,536 rows, so lists also meet the
+    // decode-chunk boundary inside a group, not only at group ends
+    val n = 140000
+    (1 to n).map(i => (i.toLong, listAt(i))).toDF("id", "vec")
+      .coalesce(1)
+      .write.option("parquet.block.size", 1024 * 1024)
+      .mode("overwrite").parquet(s"$tmp/lists.parquet")
+    val groups = rowGroupRows(s"$tmp/lists.parquet")
+    assert(groups.size > 1 && groups.max > 65536,
+      s"fixture must span several row groups, one over 64k rows: $groups")
+    assertTableParity(tmp, "lists")
+  }
+
+  test("list<float> column in Spark's legacy bag/array layout") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_legacylist").toString
+    // the legacy layout is a session setting; a child session keeps it
+    // out of the shared one
+    val legacy = spark.newSession()
+    legacy.conf.set("spark.sql.parquet.writeLegacyFormat", "true")
+    legacy.createDataset((1 to 3000).map(i => (i.toLong, listAt(i))))
+      .toDF("id", "vec").coalesce(1)
+      .write.option("parquet.block.size", 16 * 1024)
+      .mode("overwrite").parquet(s"$tmp/legacy.parquet")
+    val footer = footerOf(s"$tmp/legacy.parquet").getFileMetaData.getSchema.toString
+    assert(footer.contains("repeated group bag") && footer.contains("float array"),
+      s"fixture is not in the legacy layout: $footer")
+    assert(rowGroupRows(s"$tmp/legacy.parquet").size > 1)
+    assertTableParity(tmp, "legacy")
+  }
+
+  test("list<float> column in the 2-level repeated-float layout") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val tmp = java.nio.file.Files.createTempDirectory("graft_twolevel").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message t { required int64 id; optional group vec (LIST) { repeated float array; } }")
+    val out = HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$tmp/twolevel.parquet/part-0.parquet"),
+      spark.sparkContext.hadoopConfiguration)
+    val w = ExampleParquetWriter.builder(out).withType(schema)
+      .withRowGroupSize(16 * 1024L).withPageSize(1024).build()
+    val groups = new SimpleGroupFactory(schema)
+    try (1 to 3000).foreach { i =>
+      val g = groups.newGroup().append("id", i.toLong)
+      // a 2-level list has no null elements
+      listAt(i, nullElems = false).foreach { xs =>
+        val l = g.addGroup("vec")
+        xs.flatten.foreach(x => l.append("array", x))
+      }
+      w.write(g)
+    } finally w.close()
+    assert(rowGroupRows(s"$tmp/twolevel.parquet").size > 1)
+    assertTableParity(tmp, "twolevel")
+  }
+
+  test("fields with more than one repetition level per row are rejected, not mis-decoded") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val tmp = java.nio.file.Files.createTempDirectory("graft_repeated").toString
+    // a top-level repeated float, and a LIST whose element repeats again
+    val schemas = Map(
+      "toprep" -> "message t { required int64 id; repeated float xs; }",
+      "listrep" -> ("message t { required int64 id; optional group vec (LIST) " +
+        "{ repeated group list { repeated float x; } } }"))
+    schemas.foreach { case (name, text) =>
+      val schema = MessageTypeParser.parseMessageType(text)
+      val out = HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$tmp/$name.parquet/part-0.parquet"),
+        spark.sparkContext.hadoopConfiguration)
+      val w = ExampleParquetWriter.builder(out).withType(schema).build()
+      try (1 to 3).foreach { i =>
+        val g = new SimpleGroupFactory(schema).newGroup().append("id", i.toLong)
+        if (name == "toprep") (0 to i).foreach(j => g.append("xs", j.toFloat))
+        else {
+          val l = g.addGroup("vec")
+          (0 to i).foreach(j => l.addGroup("list").append("x", j.toFloat).append("x", -1f))
+        }
+        w.write(g)
+      } finally w.close()
+    }
+    val scan = LakeScan.scanLake(spark, tmp, schemas.keys.toSeq.sorted, None)
+    try assert(scan.rejected == Seq("listrep", "toprep"))
+    finally scan.release()
   }
 
   test("scanLake rejects the decimal table, with none of its rows in cells") {
