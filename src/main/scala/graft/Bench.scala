@@ -438,11 +438,12 @@ object Bench {
       Array.tabulate(len)(i => ((i * 5 + seed) % 7 - 3) * 0.015625)
     val layer = OnnxExport.EncoderLayer(
       wq = w3(1), wk = w3(2), wv = w3(3),
-      wo = w2(d, d, 4), bo = v1(d, 5),
-      g1 = Array.fill(d)(1.0), b1 = v1(d, 6),
-      w1 = w2(d, f, 7), bf1 = v1(f, 8),
-      w2 = w2(f, d, 9), bf2 = v1(d, 10),
-      g2 = Array.fill(d)(1.0), b2 = v1(d, 11))
+      tail = OnnxExport.LayerTail(
+        wo = w2(d, d, 4), bo = v1(d, 5),
+        g1 = Array.fill(d)(1.0), b1 = v1(d, 6),
+        w1 = w2(d, f, 7), bf1 = v1(f, 8),
+        w2 = w2(f, d, 9), bf2 = v1(d, 10),
+        g2 = Array.fill(d)(1.0), b2 = v1(d, 11)))
     def perDocMs(s: Int, docs: Int): Double = {
       val stack = OnnxExport.EncoderStack(s, d, h, f, Seq(layer),
         wHead = v1(d, 12), bHead = 0.125,

@@ -10,15 +10,16 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.MinHash
 
-/** Native Catalyst MinHash aggregate (A11/A12) — the hot-path version of
-  * the `Aggregator`-based UDAF in [[SketchFunctions]].
+/** Native Catalyst MinHash aggregate (A11/A12) behind
+  * [[SketchFunctions]]' `minhash_agg` / `minhash_words_agg`.
   *
-  * Why `TypedImperativeAggregate`: the udaf() wrapper decodes each value
-  * UTF8String → java String → UTF-8 bytes (three allocations) before
-  * hashing. Here we hash the UTF8String's bytes directly — zero decode,
-  * zero copy — and tokenize on ASCII whitespace in-place for the word
-  * variant. Same digest algebra (elementwise-min, associative/commutative),
-  * so partial aggregation still shuffles only fixed 100-slot buffers.
+  * Why `TypedImperativeAggregate`: a `udaf()`-wrapped `Aggregator` would
+  * decode each value UTF8String → java String → UTF-8 bytes (three
+  * allocations) before hashing. Here we hash the UTF8String's bytes
+  * directly — zero decode, zero copy — and tokenize on ASCII whitespace
+  * in-place for the word variant. The digest algebra is elementwise
+  * min (associative and commutative), so partial aggregation shuffles
+  * only fixed 100-slot buffers.
   */
 trait MinHashAggBase extends TypedImperativeAggregate[Array[Long]] {
 
@@ -49,8 +50,14 @@ trait MinHashAggBase extends TypedImperativeAggregate[Array[Long]] {
     out
   }
 
-  protected def hashUtf8(buffer: Array[Long], s: UTF8String): Unit =
-    MinHash.permuteInto(buffer, MinHash.md5Low32(s.getBytes), perms)
+  override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
+    val v = child.eval(input)
+    if (v != null) hashValue(buffer, v.asInstanceOf[UTF8String])
+    buffer
+  }
+
+  /** Fold one non-null value into `buffer`. */
+  protected def hashValue(buffer: Array[Long], s: UTF8String): Unit
 }
 
 /** MinHash over exact values. */
@@ -59,11 +66,9 @@ case class MinHashExactAgg(child: Expression,
                            override val inputAggBufferOffset: Int = 0)
     extends MinHashAggBase {
 
-  override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) hashUtf8(buffer, v.asInstanceOf[UTF8String])
-    buffer
-  }
+  override protected def hashValue(buffer: Array[Long], s: UTF8String): Unit =
+    MinHash.permuteInto(buffer, MinHash.md5Low32(s.getBytes), perms)
+
   override def withNewMutableAggBufferOffset(o: Int): MinHashExactAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): MinHashExactAgg =
@@ -83,22 +88,18 @@ case class MinHashWordsAggNative(child: Expression,
                                  override val inputAggBufferOffset: Int = 0)
     extends MinHashAggBase {
 
-  override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val bytes = v.asInstanceOf[UTF8String].getBytes
-      var i = 0
-      val n = bytes.length
-      while (i < n) {
-        while (i < n && isWs(bytes(i))) i += 1
-        val start = i
-        while (i < n && !isWs(bytes(i))) i += 1
-        if (i > start)
-          MinHash.permuteInto(buffer,
-            MinHash.md5Low32(java.util.Arrays.copyOfRange(bytes, start, i)), perms)
-      }
+  override protected def hashValue(buffer: Array[Long], s: UTF8String): Unit = {
+    val bytes = s.getBytes
+    var i = 0
+    val n = bytes.length
+    while (i < n) {
+      while (i < n && isWs(bytes(i))) i += 1
+      val start = i
+      while (i < n && !isWs(bytes(i))) i += 1
+      if (i > start)
+        MinHash.permuteInto(buffer,
+          MinHash.md5Low32(java.util.Arrays.copyOfRange(bytes, start, i)), perms)
     }
-    buffer
   }
   @inline private def isWs(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f' || b == 0x0b

@@ -24,12 +24,17 @@ object ExcelRead {
     * readable workbook (so the caller's fallback chain moves on).
     */
   def read(spark: SparkSession, path: String, rowCap: Int = Int.MaxValue): Option[DataFrame] =
-    try {
-      val local = new java.io.File(new java.net.URI(path).getPath)
-      readLocal(spark, local, rowCap)
-    } catch {
+    readLocalFile(path)(readLocal(spark, _, rowCap))
+
+  /** `read` of a local workbook file, shared with [[XlsRead]]: `path`
+    * is tried as a `file:` URI, then as a plain path; None when neither
+    * reads. */
+  private[ingest] def readLocalFile(path: String)(
+      read: java.io.File => Option[DataFrame]): Option[DataFrame] =
+    try read(new java.io.File(new java.net.URI(path).getPath))
+    catch {
       case _: Exception =>
-        try readLocal(spark, new java.io.File(path), rowCap)
+        try read(new java.io.File(path))
         catch { case _: Exception => None }
     }
 
@@ -45,7 +50,8 @@ object ExcelRead {
             .map(si => (si \\ "t").map(_.text).mkString).toIndexedSeq
         }.getOrElse(IndexedSeq.empty)
         val rows = (XML.load(zip.getInputStream(zip.getEntry(sheet))) \\ "row")
-          .take(rowCap + 1).map(parseRow(_, shared))
+          .take(math.max(rowCap, rowCap + 1)) // the header + rowCap rows, no overflow
+          .map(parseRow(_, shared))
         rows.headOption.filter(_.nonEmpty).map { header =>
           val width = header.length
           val schema = StructType(header.zipWithIndex.map { case (h, i) =>

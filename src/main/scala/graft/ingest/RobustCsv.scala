@@ -201,9 +201,8 @@ object RobustCsv {
     * 5-23`) is a corpus-download quirk and is not reproduced.
     */
   def listTables(spark: SparkSession, dir: String): Seq[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
+    val path = new org.apache.hadoop.fs.Path(dir)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(path).toSeq
       .filter(s => s.isFile && (s.getPath.getName.endsWith(".csv") ||
         s.getPath.getName.endsWith(".csv.bz2") || s.getPath.getName.endsWith(".csv.gz")))
       .map(_.getPath.toString).sorted

@@ -25,14 +25,7 @@ object XlsRead {
   /** Read the first worksheet of a BIFF8 `.xls`; None when the file is
     * not a readable workbook (the caller's fallback chain moves on). */
   def read(spark: SparkSession, path: String, rowCap: Int = Int.MaxValue): Option[DataFrame] =
-    try {
-      val local = new java.io.File(new java.net.URI(path).getPath)
-      readLocal(spark, local, rowCap)
-    } catch {
-      case _: Exception =>
-        try readLocal(spark, new java.io.File(path), rowCap)
-        catch { case _: Exception => None }
-    }
+    ExcelRead.readLocalFile(path)(readLocal(spark, _, rowCap))
 
   private def readLocal(spark: SparkSession, file: java.io.File, rowCap: Int): Option[DataFrame] = {
     val bytes = java.nio.file.Files.readAllBytes(file.toPath)

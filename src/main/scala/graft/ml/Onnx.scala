@@ -113,25 +113,38 @@ object OnnxExport {
     java.nio.file.Files.write(p, modelBytes)
   }
 
-  /** Export the pipeline's logistic stage as an ONNX binary. Same fail-fast
-    * validations as the JSON exporter: finite weights, a VectorAssembler
-    * supplying the feature order, widths consistent. */
-  def exportLogistic(model: org.apache.spark.ml.PipelineModel, path: String): Unit = {
+  /** The pipeline's logistic stage as (feature columns, coefficients,
+    * intercept), checked at EXPORT time rather than at the first scored
+    * row: a NaN/Infinity coefficient (diverged fit) would serialize as an
+    * invalid artifact, and a feature list that does not match the
+    * coefficient width would only surface per row inside the scoring
+    * kernel. `exporter` names the caller in the error messages. */
+  private[ml] def logisticStage(model: org.apache.spark.ml.PipelineModel,
+                                exporter: String): (Seq[String], Array[Double], Double) = {
     val lr = model.stages.collectFirst {
       case m: org.apache.spark.ml.classification.LogisticRegressionModel => m
     }.getOrElse(throw new IllegalArgumentException(
-      "exportLogistic needs a LogisticRegressionModel stage"))
+      s"$exporter needs a LogisticRegressionModel stage"))
     val feats = model.stages.collectFirst {
       case a: org.apache.spark.ml.feature.VectorAssembler => a.getInputCols.toSeq
     }.getOrElse(Seq.empty)
     val coefs = lr.coefficients.toArray
     require(coefs.forall(java.lang.Double.isFinite) &&
       java.lang.Double.isFinite(lr.intercept),
-      "exportLogistic: non-finite coefficient/intercept (diverged fit?)")
-    require(feats.nonEmpty, "exportLogistic: no VectorAssembler stage")
+      s"$exporter: non-finite coefficient/intercept (diverged fit?): " +
+        s"intercept=${lr.intercept}, coefficients=${coefs.mkString(",")}")
+    require(feats.nonEmpty, s"$exporter: no VectorAssembler stage — " +
+      "the artifact needs the feature column order to lay out batches")
     require(feats.length == coefs.length,
-      s"exportLogistic: ${feats.length} features vs ${coefs.length} coefficients")
+      s"$exporter: ${feats.length} feature columns vs " +
+        s"${coefs.length} coefficients — pipeline stages inconsistent")
+    (feats, coefs, lr.intercept)
+  }
 
+  /** Export the pipeline's logistic stage ([[logisticStage]]) as an ONNX
+    * binary. */
+  def exportLogistic(model: org.apache.spark.ml.PipelineModel, path: String): Unit = {
+    val (feats, coefs, intercept) = logisticStage(model, "exportLogistic")
     val d = coefs.length
     writeModel(path, "graft_logistic",
       nodes = Seq(
@@ -140,7 +153,7 @@ object OnnxExport {
         nodeMsg("Sigmoid", Seq("z1"), "score")),
       inits = Seq(
         tensorMsg("coef", Seq(d.toLong, 1L), coefs),
-        tensorMsg("intercept", Seq(1L), Array(lr.intercept))),
+        tensorMsg("intercept", Seq(1L), Array(intercept))),
       input = ("features", Seq(Left("N"), Right(d.toLong))),
       output = ("score", Seq(Left("N"), Right(1L))),
       features = feats)
@@ -218,70 +231,34 @@ object OnnxExport {
       features = features)
   }
 
-  /** All weights of the 1-layer multi-head transformer encoder +
-    * sigmoid classification head [[exportMiniEncoder]] writes — the E4
-    * shape (`/root/reference/tabsketchfm/transformer_bert.py:88-224`
-    * encoder layer; `extract_embeddings.py:16-117` checkpoint-driven
-    * scoring) at toy dimensions. `wq/wk/wv(h)(d)(e)` are per-head
-    * projections `[dModel][dHead]`; `wo` the output projection
-    * `[dModel][dModel]`; `w1/w2` the FFN (Sigmoid activation); g1/b1 and
-    * g2/b2 the two LayerNorm scale/bias pairs; `wHead`/`bHead` the
-    * pooled classifier. */
-  final case class MiniEncoderWeights(
-      seqLen: Int, dModel: Int, nHeads: Int, dFf: Int,
-      wq: Array[Array[Array[Double]]], wk: Array[Array[Array[Double]]],
-      wv: Array[Array[Array[Double]]],
-      wo: Array[Array[Double]], bo: Array[Double],
-      g1: Array[Double], b1: Array[Double],
-      w1: Array[Array[Double]], bf1: Array[Double],
-      w2: Array[Array[Double]], bf2: Array[Double],
-      g2: Array[Double], b2: Array[Double],
-      wHead: Array[Double], bHead: Double,
-      attScale: Double, lnEps: Double)
-
-  /** One encoder layer's weights for [[exportEncoderStack]] — same field
-    * semantics as [[MiniEncoderWeights]] minus the stack-level head. */
-  final case class EncoderLayer(
-      wq: Array[Array[Array[Double]]], wk: Array[Array[Array[Double]]],
-      wv: Array[Array[Array[Double]]],
+  /** The weights an encoder layer applies after attention, shared by
+    * [[EncoderLayer]] and [[CheckpointLayer]]: `wo`/`bo` the output
+    * projection `[dModel][dModel]`; `w1/bf1`, `w2/bf2` the FFN; g1/b1
+    * and g2/b2 the two LayerNorm scale/bias pairs. */
+  final case class LayerTail(
       wo: Array[Array[Double]], bo: Array[Double],
       g1: Array[Double], b1: Array[Double],
       w1: Array[Array[Double]], bf1: Array[Double],
       w2: Array[Array[Double]], bf2: Array[Double],
       g2: Array[Double], b2: Array[Double])
 
+  /** One encoder layer's weights for [[exportEncoderStack]] — the E4
+    * shape (`transformer_bert.py:88-224`
+    * encoder layer; `extract_embeddings.py:16-117` checkpoint-driven
+    * scoring) at toy dimensions: `wq/wk/wv(h)(d)(e)` are per-head
+    * projections `[dModel][dHead]`, then `tail`. */
+  final case class EncoderLayer(
+      wq: Array[Array[Array[Double]]], wk: Array[Array[Array[Double]]],
+      wv: Array[Array[Array[Double]]], tail: LayerTail)
+
   /** A DEEP encoder: `layers` stacked attention+FFN blocks (the
     * reference's BERT runs 12 of exactly this block,
-    * `transformer_bert.py:88-224`) + the pooled head. */
+    * `transformer_bert.py:88-224`) + the pooled head `wHead`/`bHead`. */
   final case class EncoderStack(
       seqLen: Int, dModel: Int, nHeads: Int, dFf: Int,
       layers: Seq[EncoderLayer],
       wHead: Array[Double], bHead: Double,
       attScale: Double, lnEps: Double)
-
-  /** Export a REAL (toy-sized) transformer encoder as ONNX, opset 17:
-    * Reshape [N, S·D] → [N, S, D]; per-head Q/K/V MatMuls, K transpose,
-    * scaled QKᵀ, Softmax over keys, attention-weighted V; head Concat;
-    * output projection + residual + LayerNormalization; Sigmoid FFN +
-    * residual + LayerNormalization; mean-pool over positions; linear +
-    * Sigmoid score. Every op here executes in [[OnnxSession]] — the
-    * demonstration that the pure-JVM session runs ENCODER-shaped graphs
-    * (3-D tensors, attention MatMuls, Softmax, LayerNorm), not just the
-    * linear/MLP heads. Input column order is the flattened
-    * `x_{s}_{d}` (position-major) feature list.
-    *
-    * @param withHead true → sigmoid classifier output `score [N,1]`
-    *                  (Q7 pair scoring); false → the graph STOPS at the
-    *                  mean-pooled encoder state `pooled [N,dModel]` — the
-    *                  sentence/value EMBEDDING shape (Q6,
-    *                  `embedding_search.py:25-42`), consumed through
-    *                  [[Scorer.onnxEmbedderFactory]]. */
-  def exportMiniEncoder(w: MiniEncoderWeights, path: String,
-                        withHead: Boolean = true): Unit =
-    exportEncoderStack(EncoderStack(w.seqLen, w.dModel, w.nHeads, w.dFf,
-      Seq(EncoderLayer(w.wq, w.wk, w.wv, w.wo, w.bo, w.g1, w.b1,
-        w.w1, w.bf1, w.w2, w.bf2, w.g2, w.b2)),
-      w.wHead, w.bHead, w.attScale, w.lnEps), path, withHead)
 
   /** Export a REAL (toy-sized, arbitrarily DEEP) transformer encoder as
     * ONNX, opset 17: Reshape [N, S·D] → [N, S, D]; per layer — per-head
@@ -289,9 +266,19 @@ object OnnxExport {
     * attention-weighted V, head Concat, output projection + residual +
     * LayerNormalization, Sigmoid FFN + residual + LayerNormalization —
     * then mean-pool over positions and (optionally) linear + Sigmoid
-    * score. Every op executes in [[OnnxSession]]; node/initializer names
-    * are layer-prefixed so the graph is plainly N stacked copies of the
-    * reference block. */
+    * score. Every op executes in [[OnnxSession]] — the demonstration
+    * that the pure-JVM session runs ENCODER-shaped graphs (3-D tensors,
+    * attention MatMuls, Softmax, LayerNorm), not just the linear/MLP
+    * heads; node/initializer names are layer-prefixed so the graph is
+    * plainly N stacked copies of the reference block. Input column order
+    * is the flattened `x_{s}_{d}` (position-major) feature list.
+    *
+    * @param withHead true → sigmoid classifier output `score [N,1]`
+    *                  (Q7 pair scoring); false → the graph STOPS at the
+    *                  mean-pooled encoder state `pooled [N,dModel]` — the
+    *                  sentence/value EMBEDDING shape (Q6,
+    *                  `embedding_search.py:25-42`), consumed through
+    *                  [[Scorer.onnxEmbedderFactory]]. */
   def exportEncoderStack(w: EncoderStack, path: String,
                          withHead: Boolean = true,
                          activation: String = "Sigmoid"): Unit = {
@@ -343,20 +330,20 @@ object OnnxExport {
         s"${P}hd$hi"
       }
       nodes += nodeMsg("Concat", headOuts, s"${P}ctx", Seq(attrI("axis", -1L)))
-      inits += tensorMsg(s"${P}wo", Seq(d.toLong, d.toLong), lw.wo.flatten)
-      inits += tensorMsg(s"${P}bo", Seq(d.toLong), lw.bo)
+      inits += tensorMsg(s"${P}wo", Seq(d.toLong, d.toLong), lw.tail.wo.flatten)
+      inits += tensorMsg(s"${P}bo", Seq(d.toLong), lw.tail.bo)
       nodes += nodeMsg("MatMul", Seq(s"${P}ctx", s"${P}wo"), s"${P}pj0")
       nodes += nodeMsg("Add", Seq(s"${P}pj0", s"${P}bo"), s"${P}pj")
       nodes += nodeMsg("Add", Seq(s"${P}pj", cur), s"${P}r1")
-      inits += tensorMsg(s"${P}g1", Seq(d.toLong), lw.g1)
-      inits += tensorMsg(s"${P}b1", Seq(d.toLong), lw.b1)
+      inits += tensorMsg(s"${P}g1", Seq(d.toLong), lw.tail.g1)
+      inits += tensorMsg(s"${P}b1", Seq(d.toLong), lw.tail.b1)
       nodes += nodeMsg("LayerNormalization",
         Seq(s"${P}r1", s"${P}g1", s"${P}b1"), s"${P}l1",
         Seq(attrI("axis", -1L), attrF("epsilon", w.lnEps.toFloat)))
-      inits += tensorMsg(s"${P}w1", Seq(d.toLong, f.toLong), lw.w1.flatten)
-      inits += tensorMsg(s"${P}bf1", Seq(f.toLong), lw.bf1)
-      inits += tensorMsg(s"${P}w2", Seq(f.toLong, d.toLong), lw.w2.flatten)
-      inits += tensorMsg(s"${P}bf2", Seq(d.toLong), lw.bf2)
+      inits += tensorMsg(s"${P}w1", Seq(d.toLong, f.toLong), lw.tail.w1.flatten)
+      inits += tensorMsg(s"${P}bf1", Seq(f.toLong), lw.tail.bf1)
+      inits += tensorMsg(s"${P}w2", Seq(f.toLong, d.toLong), lw.tail.w2.flatten)
+      inits += tensorMsg(s"${P}bf2", Seq(d.toLong), lw.tail.bf2)
       // FFN activation — default Sigmoid: the DuckDB oracle has no
       // tanh/erf builtin, and sigmoid keeps BOTH engines on the literal
       // formula 1/(1+exp(−z)) — exp is then the only libm call in the
@@ -395,8 +382,8 @@ object OnnxExport {
       nodes += nodeMsg("MatMul", Seq(s"${P}f2", s"${P}w2"), s"${P}f3")
       nodes += nodeMsg("Add", Seq(s"${P}f3", s"${P}bf2"), s"${P}f4")
       nodes += nodeMsg("Add", Seq(s"${P}f4", s"${P}l1"), s"${P}r2")
-      inits += tensorMsg(s"${P}g2", Seq(d.toLong), lw.g2)
-      inits += tensorMsg(s"${P}b2", Seq(d.toLong), lw.b2)
+      inits += tensorMsg(s"${P}g2", Seq(d.toLong), lw.tail.g2)
+      inits += tensorMsg(s"${P}b2", Seq(d.toLong), lw.tail.b2)
       nodes += nodeMsg("LayerNormalization",
         Seq(s"${P}r2", s"${P}g2", s"${P}b2"), s"x${l + 1}",
         Seq(attrI("axis", -1L), attrF("epsilon", w.lnEps.toFloat)))
@@ -423,15 +410,10 @@ object OnnxExport {
 
   /** One encoder layer of a torch-export-style checkpoint: FUSED QKV
     * projection `[dModel, 3·dModel]` (split + per-head sliced at
-    * runtime, the way real exports carve attention heads), otherwise
-    * the [[EncoderLayer]] field semantics. */
+    * runtime, the way real exports carve attention heads), then the
+    * same [[LayerTail]] as an [[EncoderLayer]]. */
   final case class CheckpointLayer(
-      wqkv: Array[Array[Double]], bqkv: Array[Double],
-      wo: Array[Array[Double]], bo: Array[Double],
-      g1: Array[Double], b1: Array[Double],
-      w1: Array[Array[Double]], bf1: Array[Double],
-      w2: Array[Array[Double]], bf2: Array[Double],
-      g2: Array[Double], b2: Array[Double])
+      wqkv: Array[Array[Double]], bqkv: Array[Double], tail: LayerTail)
 
   /** A REALISTIC (toy-dimensioned) tabular-BERT checkpoint — the
     * reference's `TabularBertEmbeddings` 6-way input sum
@@ -572,18 +554,18 @@ object OnnxExport {
         s"${P}hd$hi"
       }
       nodes += nodeMsg("Concat", headOuts, s"${P}ctx", Seq(attrI("axis", -1L)))
-      inits += tensorMsgF32(s"${P}wo", Seq(d.toLong, d.toLong), lw.wo.flatten)
-      inits += tensorMsgF32(s"${P}bo", Seq(d.toLong), lw.bo)
+      inits += tensorMsgF32(s"${P}wo", Seq(d.toLong, d.toLong), lw.tail.wo.flatten)
+      inits += tensorMsgF32(s"${P}bo", Seq(d.toLong), lw.tail.bo)
       nodes += nodeMsg("MatMul", Seq(s"${P}ctx", s"${P}wo"), s"${P}pj0")
       nodes += nodeMsg("Add", Seq(s"${P}pj0", s"${P}bo"), s"${P}pj")
       nodes += nodeMsg("Add", Seq(s"${P}pj", cur), s"${P}r1")
-      inits += tensorMsgF32(s"${P}g1", Seq(d.toLong), lw.g1)
-      inits += tensorMsgF32(s"${P}b1", Seq(d.toLong), lw.b1)
+      inits += tensorMsgF32(s"${P}g1", Seq(d.toLong), lw.tail.g1)
+      inits += tensorMsgF32(s"${P}b1", Seq(d.toLong), lw.tail.b1)
       ln(s"${P}r1", s"${P}g1", s"${P}b1", s"${P}l1", s"${P}n1")
-      inits += tensorMsgF32(s"${P}w1", Seq(d.toLong, f.toLong), lw.w1.flatten)
-      inits += tensorMsgF32(s"${P}bf1", Seq(f.toLong), lw.bf1)
-      inits += tensorMsgF32(s"${P}w2", Seq(f.toLong, d.toLong), lw.w2.flatten)
-      inits += tensorMsgF32(s"${P}bf2", Seq(d.toLong), lw.bf2)
+      inits += tensorMsgF32(s"${P}w1", Seq(d.toLong, f.toLong), lw.tail.w1.flatten)
+      inits += tensorMsgF32(s"${P}bf1", Seq(f.toLong), lw.tail.bf1)
+      inits += tensorMsgF32(s"${P}w2", Seq(f.toLong, d.toLong), lw.tail.w2.flatten)
+      inits += tensorMsgF32(s"${P}bf2", Seq(d.toLong), lw.tail.bf2)
       // Sigmoid FFN activation — the shared-exp-formula oracle discipline
       // (see exportEncoderStack's note; DuckDB 1.0 has no tanh/erf)
       nodes += nodeMsg("MatMul", Seq(s"${P}l1", s"${P}w1"), s"${P}f0")
@@ -592,8 +574,8 @@ object OnnxExport {
       nodes += nodeMsg("MatMul", Seq(s"${P}f2", s"${P}w2"), s"${P}f3")
       nodes += nodeMsg("Add", Seq(s"${P}f3", s"${P}bf2"), s"${P}f4")
       nodes += nodeMsg("Add", Seq(s"${P}f4", s"${P}l1"), s"${P}r2")
-      inits += tensorMsgF32(s"${P}g2", Seq(d.toLong), lw.g2)
-      inits += tensorMsgF32(s"${P}b2", Seq(d.toLong), lw.b2)
+      inits += tensorMsgF32(s"${P}g2", Seq(d.toLong), lw.tail.g2)
+      inits += tensorMsgF32(s"${P}b2", Seq(d.toLong), lw.tail.b2)
       ln(s"${P}r2", s"${P}g2", s"${P}b2", s"x${l + 1}", s"${P}n2")
       cur = s"x${l + 1}"
     }
@@ -943,45 +925,37 @@ final class OnnxSession(modelBytes: Array[Byte]) extends Serializable {
     case (3, 2) =>
       require(a.dims(2) == b.dims(0), s"MatMul [${a.dims.mkString(",")}]x[${b.dims.mkString(",")}]")
       val (n, m, k, p) = (a.dims(0), a.dims(1), a.dims(2), b.dims(1))
-      val r = new Array[Double](n * m * p)
       val bT = if (cacheB) cachedTransposed(b.data, k, p) // shared weights: once
                else transposedSlice(b.data, 0, k, p)
-      if (n == 1) mm2T(a.data, bT, m, k, p, r) // no slice copies
-      else {
-        // per-batch slice copies keep the kernel offset-free (see
-        // mm2TTile); copy cost is linear in the operands, GEMM is cubic
-        val rb = new Array[Double](m * p)
-        var bi = 0
-        while (bi < n) {
-          val ab = java.util.Arrays.copyOfRange(a.data, bi * m * k, (bi + 1) * m * k)
-          mm2T(ab, bT, m, k, p, rb)
-          System.arraycopy(rb, 0, r, bi * m * p, m * p)
-          bi += 1
-        }
-      }
-      Tensor(Array(n, m, p), r)
+      batchedMatmul(a.data, n, m, k, p)(_ => bT)
     case (3, 3) =>
       require(a.dims(0) == b.dims(0) && a.dims(2) == b.dims(1),
         s"MatMul [${a.dims.mkString(",")}]x[${b.dims.mkString(",")}]")
       val (n, m, k, p) = (a.dims(0), a.dims(1), a.dims(2), b.dims(2))
-      val r = new Array[Double](n * m * p)
-      if (n == 1) {
-        val bT = transposedSlice(b.data, 0, k, p)
-        mm2T(a.data, bT, m, k, p, r)
-      } else {
-        val rb = new Array[Double](m * p)
-        var bi = 0
-        while (bi < n) {
-          val bT = transposedSlice(b.data, bi * k * p, k, p)
-          val ab = java.util.Arrays.copyOfRange(a.data, bi * m * k, (bi + 1) * m * k)
-          mm2T(ab, bT, m, k, p, rb)
-          System.arraycopy(rb, 0, r, bi * m * p, m * p)
-          bi += 1
-        }
-      }
-      Tensor(Array(n, m, p), r)
+      batchedMatmul(a.data, n, m, k, p)(bi => transposedSlice(b.data, bi * k * p, k, p))
     case (ra, rb) => throw new UnsupportedOperationException(
       s"MatMul ranks ${ra}x$rb")
+  }
+
+  /** `[n, m, k] × [.., k, p] → [n, m, p]`, where `bT(bi)` is batch `bi`'s
+    * right operand, already transposed to `[p, k]`. */
+  private def batchedMatmul(a: Array[Double], n: Int, m: Int, k: Int, p: Int)(
+      bT: Int => Array[Double]): Tensor = {
+    val r = new Array[Double](n * m * p)
+    if (n == 1) mm2T(a, bT(0), m, k, p, r) // no slice copies
+    else {
+      // per-batch slice copies keep the kernel offset-free (see
+      // mm2TTile); copy cost is linear in the operands, GEMM is cubic
+      val rb = new Array[Double](m * p)
+      var bi = 0
+      while (bi < n) {
+        val ab = java.util.Arrays.copyOfRange(a, bi * m * k, (bi + 1) * m * k)
+        mm2T(ab, bT(bi), m, k, p, rb)
+        System.arraycopy(rb, 0, r, bi * m * p, m * p)
+        bi += 1
+      }
+    }
+    Tensor(Array(n, m, p), r)
   }
 
   private def strides(dims: Array[Int]): Array[Int] = {

@@ -73,6 +73,10 @@ object QualityDistill {
           expr("z_micro div 4") + 500000L))).as("r_micro"))
   }
 
+  /** Labels (id, y) with y as a long, materialized once. */
+  private def longLabels(labels: DataFrame): DataFrame =
+    labels.select(col("id"), col("y").cast("long").as("y")).localCheckpoint(eager = true)
+
   /** Full-batch hard-sigmoid GD from w = 0: returns (dim, w_micro)
     * after `nIter` rounds on features (id, dim, x) and labels (id, y)
     * with y ∈ {0, 1}.
@@ -93,8 +97,7 @@ object QualityDistill {
     val s = feats.sparkSession
     import s.implicits._
     val fx = feats.localCheckpoint(eager = true)
-    val lab = labels.select(col("id"), col("y").cast("long").as("y"))
-      .localCheckpoint(eager = true)
+    val lab = longLabels(labels)
     val n = lab.count()
     val w = Array.fill(dims + 1)(0L)
     for (_ <- 1 to nIter) {
@@ -132,13 +135,9 @@ object QualityDistill {
                       valLabels: DataFrame, dims: Int = 8, nIter: Int = 3,
                       etaMicro: Long = 1000L): DataFrame = {
     require(nIter >= 1 && etaMicro > 0, "need nIter >= 1 and etaMicro > 0")
-    val s = feats.sparkSession
-    import s.implicits._
     val fx = feats.localCheckpoint(eager = true)
-    val tr = trainLabels.select(col("id"), col("y").cast("long").as("y"))
-      .localCheckpoint(eager = true)
-    val va = valLabels.select(col("id"), col("y").cast("long").as("y"))
-      .localCheckpoint(eager = true)
+    val tr = longLabels(trainLabels)
+    val va = longLabels(valLabels)
     val n = tr.count()
     val nVal = va.count()
     // ONE tagged residual pass per round serves both the train gradient

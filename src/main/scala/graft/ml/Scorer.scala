@@ -90,31 +90,11 @@ object Scorer {
     */
   def exportLinearModel(model: org.apache.spark.ml.PipelineModel,
                         path: String): Unit = {
-    val lr = model.stages.collectFirst {
-      case m: org.apache.spark.ml.classification.LogisticRegressionModel => m
-    }.getOrElse(throw new IllegalArgumentException(
-      "exportLinearModel needs a LogisticRegressionModel stage"))
-    val feats = model.stages.collectFirst {
-      case a: org.apache.spark.ml.feature.VectorAssembler => a.getInputCols.toSeq
-    }.getOrElse(Seq.empty)
-    // Fail at EXPORT time, not at first scored row: a NaN/Infinity
-    // coefficient (diverged fit) would serialize as invalid JSON, and a
-    // feature list that doesn't match the coefficient width would only
-    // surface per-row inside the scoring kernel.
-    val coefs = lr.coefficients.toArray
-    require(coefs.forall(java.lang.Double.isFinite) &&
-      java.lang.Double.isFinite(lr.intercept),
-      s"exportLinearModel: non-finite coefficient/intercept (diverged fit?): " +
-        s"intercept=${lr.intercept}, coefficients=${coefs.mkString(",")}")
-    require(feats.nonEmpty, "exportLinearModel: no VectorAssembler stage — " +
-      "the artifact needs the feature column order to lay out batches")
-    require(feats.length == coefs.length,
-      s"exportLinearModel: ${feats.length} feature columns vs " +
-        s"${coefs.length} coefficients — pipeline stages inconsistent")
+    val (feats, coefs, intercept) = OnnxExport.logisticStage(model, "exportLinearModel")
     val json =
       s"""{"features":[${feats.map("\"" + _ + "\"").mkString(",")}],
-         |"coefficients":[${lr.coefficients.toArray.mkString(",")}],
-         |"intercept":${lr.intercept}}""".stripMargin.replace("\n", "")
+         |"coefficients":[${coefs.mkString(",")}],
+         |"intercept":$intercept}""".stripMargin.replace("\n", "")
     val p = java.nio.file.Paths.get(path)
     if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
     java.nio.file.Files.write(p, json.getBytes("UTF-8"))
@@ -272,22 +252,11 @@ object Scorer {
       batchSize: Int = 256,
       outputCol: String = "embedding") extends TableScorer {
 
-    def score(features: DataFrame): DataFrame = {
-      val schema = features.schema
-      val outSchema = schema.add(outputCol, ArrayType(FloatType, containsNull = false))
-      val idxs = featureCols.map(schema.fieldIndex).toArray
-      val (bs, d) = (budgetedBatch(batchSize, idxs.length), dim)
-      implicit val enc = RowEncoder.encoderFor(outSchema)
-      features.mapPartitions { it =>
+    /** [[ExternalMultiEmbedder]] with the feature columns as its one input. */
+    def score(features: DataFrame): DataFrame =
+      new ExternalMultiEmbedder(() => {
         val model = modelFactory()
-        it.grouped(bs).flatMap { rows =>
-          val m = rows.map(r => idxs.map(i => r.getAs[Number](i).doubleValue())).toArray
-          val vecs = model(m)
-          require(vecs.length == rows.length && vecs.forall(_.length == d),
-            s"embedder must return one $d-dim vector per row")
-          rows.lazyZip(vecs).map { (r, v) => Row.fromSeq(r.toSeq :+ v.toSeq) }
-        }
-      }
-    }
+        batches => model(batches("features"))
+      }, Seq("features" -> featureCols), dim, batchSize, outputCol).score(features)
   }
 }

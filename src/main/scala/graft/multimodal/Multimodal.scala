@@ -1,8 +1,10 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal column plumbing — engine extension for training-data
   * pipelines: image/audio/video travel as opaque `binary` columns with a
@@ -106,6 +108,19 @@ object Multimodal {
   private def decodeImage(payload: Array[Byte]): Option[PngCodec.Image] =
     PngCodec.decode(payload).orElse(GifCodec.decode(payload)).orElse(JpegCodec.decode(payload))
 
+  /** Runs `decode` over `media`'s (media_id, payload) rows, one
+    * partition at a time; the output is media_id followed by `cols`, one
+    * per field after the id in `decode`'s tuples. */
+  private def decodePayloads[T <: Product : TypeTag](media: DataFrame, cols: String*)(
+      decode: Iterator[(Long, Array[Byte])] => Iterator[T]): DataFrame = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    media.select(col("media_id"), col("payload"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions(decode)(Encoders.product[T])
+      .toDF("media_id" +: cols: _*)
+  }
+
   /** FULL-FRAME decode over payload batches: real PNG ([[PngCodec]] —
     * inflate + unfilter), GIF ([[GifCodec]] — LZW + palette), and
     * baseline JPEG ([[JpegCodec]] — Huffman + IDCT) pixel decoding,
@@ -115,23 +130,17 @@ object Multimodal {
     * profile. At 100 TB this is the exact shape a codec-backed frame
     * decoder runs in — only the decode body differs.
     */
-  def pixelStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, payload) =>
-          decodeImage(payload) match {
-            case Some(img) =>
-              (id, Some(img.width), Some(img.height), Some(img.channels),
-                Some(img.channelMeans.toSeq))
-            case None => (id, None, None, None, None)
-          }
+  def pixelStats(media: DataFrame): DataFrame =
+    decodePayloads(media, "px_width", "px_height", "n_channels", "channel_means") { it =>
+      it.map { case (id, payload) =>
+        decodeImage(payload) match {
+          case Some(img) =>
+            (id, Some(img.width), Some(img.height), Some(img.channels),
+              Some(img.channelMeans.toSeq))
+          case None => (id, None, None, None, None)
         }
       }
-      .toDF("media_id", "px_width", "px_height", "n_channels", "channel_means")
-  }
+    }
 
   /** FULL audio decode over payload batches: real WAV/RIFF PCM parsing
     * ([[WavCodec]]) distributed via the same per-partition batch shape
@@ -139,24 +148,18 @@ object Multimodal {
     * frame count, duration, and RMS amplitude; nulls when the payload
     * is not integer-PCM WAV.
     */
-  def audioStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, payload) =>
-          WavCodec.decode(payload) match {
-            case Some(a) =>
-              (id, Some(a.sampleRate), Some(a.channels), Some(a.frames.toLong),
-                Some(a.durationMs), Some(a.rms))
-            case None => (id, None, None, None, None, None)
-          }
+  def audioStats(media: DataFrame): DataFrame =
+    decodePayloads(media, "sample_rate", "n_channels", "n_frames", "duration_ms",
+        "rms") { it =>
+      it.map { case (id, payload) =>
+        WavCodec.decode(payload) match {
+          case Some(a) =>
+            (id, Some(a.sampleRate), Some(a.channels), Some(a.frames.toLong),
+              Some(a.durationMs), Some(a.rms))
+          case None => (id, None, None, None, None, None)
         }
       }
-      .toDF("media_id", "sample_rate", "n_channels", "n_frames",
-        "duration_ms", "rms")
-  }
+    }
 
   /** 64-bit difference hash (dHash) of a decoded image — the standard
     * perceptual near-dup key for image corpora (aHash/dHash/pHash
@@ -171,19 +174,10 @@ object Multimodal {
     * cell of pixel x = `x*9/w` (y analogous), cell value =
     * `floor(sum/count)`. Images narrower than the grid (w<9 or h<8)
     * yield null. */
-  def dhash(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, payload) =>
-          val h = decodeImage(payload).flatMap(dhashOf)
-          (id, h)
-        }
-      }
-      .toDF("media_id", "dhash")
-  }
+  def dhash(media: DataFrame): DataFrame =
+    decodePayloads(media, "dhash") { it =>
+      it.map { case (id, payload) => (id, decodeImage(payload).flatMap(dhashOf)) }
+    }
 
   private[multimodal] def dhashOf(img: PngCodec.Image): Option[Long] = {
     if (img.width < 9 || img.height < 8) return None
@@ -245,18 +239,12 @@ object Multimodal {
     * reduced to an integer-exact, oracle-replayable core. Clips shorter
     * than 65 frames (or undecodable payloads) yield null.
     */
-  def audioFingerprint(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, payload) =>
-          (id, WavCodec.decode(payload).flatMap(afpOf))
-        }
+  def audioFingerprint(media: DataFrame): DataFrame =
+    decodePayloads(media, "afp") { it =>
+      it.map { case (id, payload) =>
+        (id, WavCodec.decode(payload).flatMap(afpOf))
       }
-      .toDF("media_id", "afp")
-  }
+    }
 
   private[multimodal] def afpOf(a: WavCodec.Audio): Option[Long] = {
     val frames = a.frames
@@ -297,26 +285,20 @@ object Multimodal {
     * `textCol = "pixel_fp"` for cross-format media dedup — one hash
     * shuffle, the standard exact-dedup scale shape.
     */
-  def pixelFingerprints(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, payload) =>
-          decodeImage(payload) match {
-            case Some(img) =>
-              md.reset()
-              md.update(s"${img.width}x${img.height}x${img.channels}:"
-                .getBytes("US-ASCII"))
-              (id, Some(md.digest(img.pixels).map("%02x".format(_)).mkString))
-            case None => (id, None)
-          }
+  def pixelFingerprints(media: DataFrame): DataFrame =
+    decodePayloads(media, "pixel_fp") { it =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      it.map { case (id, payload) =>
+        decodeImage(payload) match {
+          case Some(img) =>
+            md.reset()
+            md.update(s"${img.width}x${img.height}x${img.channels}:"
+              .getBytes("US-ASCII"))
+            (id, Some(md.digest(img.pixels).map("%02x".format(_)).mkString))
+          case None => (id, None)
         }
       }
-      .toDF("media_id", "pixel_fp")
-  }
+    }
 
   /** Integer box-filter downsample of DECODED pixels — the resize leg
     * of the multimodal plumbing (thumbnailing / model-input shrink):
@@ -331,55 +313,50 @@ object Multimodal {
     */
   def resizeStats(media: DataFrame, factor: Int = 2): DataFrame = {
     require(factor >= 1, "factor must be >= 1")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, payload) =>
-          decodeImage(payload) match {
-            case Some(img) =>
-              val rw = (img.width + factor - 1) / factor
-              val rh = (img.height + factor - 1) / factor
-              val ch = img.channels
-              val sums = new Array[Long](ch)
-              var checksum = 0L
-              var yy = 0
-              while (yy < rh) {
-                var xx = 0
-                while (xx < rw) {
-                  var c = 0
-                  while (c < ch) {
-                    var s = 0L; var n = 0
-                    var y = yy * factor
-                    val yEnd = math.min(yy * factor + factor, img.height)
-                    val xEnd = math.min(xx * factor + factor, img.width)
-                    while (y < yEnd) {
-                      var x = xx * factor
-                      while (x < xEnd) {
-                        s += (img.pixels((y * img.width + x) * ch + c) & 0xff)
-                        n += 1; x += 1
-                      }
-                      y += 1
+    decodePayloads(media, "rs_width", "rs_height", "n_channels", "channel_means",
+        "checksum") { it =>
+      it.map { case (id, payload) =>
+        decodeImage(payload) match {
+          case Some(img) =>
+            val rw = (img.width + factor - 1) / factor
+            val rh = (img.height + factor - 1) / factor
+            val ch = img.channels
+            val sums = new Array[Long](ch)
+            var checksum = 0L
+            var yy = 0
+            while (yy < rh) {
+              var xx = 0
+              while (xx < rw) {
+                var c = 0
+                while (c < ch) {
+                  var s = 0L; var n = 0
+                  var y = yy * factor
+                  val yEnd = math.min(yy * factor + factor, img.height)
+                  val xEnd = math.min(xx * factor + factor, img.width)
+                  while (y < yEnd) {
+                    var x = xx * factor
+                    while (x < xEnd) {
+                      s += (img.pixels((y * img.width + x) * ch + c) & 0xff)
+                      n += 1; x += 1
                     }
-                    val v = s / n // truncating: nonnegative, ≡ SQL //
-                    sums(c) += v
-                    checksum += v
-                    c += 1
+                    y += 1
                   }
-                  xx += 1
+                  val v = s / n // truncating: nonnegative, ≡ SQL //
+                  sums(c) += v
+                  checksum += v
+                  c += 1
                 }
-                yy += 1
+                xx += 1
               }
-              val nOut = rw.toLong * rh
-              (id, Some(rw), Some(rh), Some(ch),
-                Some(sums.map(_.toDouble / nOut).toSeq), Some(checksum))
-            case None => (id, None, None, None, None, None)
-          }
+              yy += 1
+            }
+            val nOut = rw.toLong * rh
+            (id, Some(rw), Some(rh), Some(ch),
+              Some(sums.map(_.toDouble / nOut).toSeq), Some(checksum))
+          case None => (id, None, None, None, None, None)
         }
       }
-      .toDF("media_id", "rs_width", "rs_height", "n_channels",
-        "channel_means", "checksum")
+    }
   }
 
   /** Video container probe over payload batches: real MP4/ISO-BMFF box
@@ -389,23 +366,17 @@ object Multimodal {
     * stays behind the [[MediaDecoder]] seam; the metadata parsed here
     * is exactly what [[sampleFramePlan]] consumes.
     */
-  def videoProbe(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, payload) =>
-          Mp4Probe.probe(payload) match {
-            case Some(v) =>
-              (id, Some(v.durationMs), Some(v.width), Some(v.height),
-                Some(v.nTracks))
-            case None => (id, None, None, None, None)
-          }
+  def videoProbe(media: DataFrame): DataFrame =
+    decodePayloads(media, "duration_ms", "vid_width", "vid_height", "n_tracks") { it =>
+      it.map { case (id, payload) =>
+        Mp4Probe.probe(payload) match {
+          case Some(v) =>
+            (id, Some(v.durationMs), Some(v.width), Some(v.height),
+              Some(v.nTracks))
+          case None => (id, None, None, None, None)
         }
       }
-      .toDF("media_id", "duration_ms", "vid_width", "vid_height", "n_tracks")
-  }
+    }
 
   /** Payload-level metadata probe without decoding: size, magic-byte
     * sniff, fingerprint — cheap columnar ops on binary.

@@ -960,6 +960,24 @@ object Ann {
       .select(col("id"), col("sub"), col("code"))
   }
 
+  /** The ADC rank tail of [[pqTopK]] and [[ivfPqTopK]]: each query's
+    * sub-distances `d` (`dt`) join the encoded corpus (`enc`) on `keys`,
+    * sum per (query_id, neighbor_id) into `adc_dist` (self-matches
+    * dropped), and the `k` nearest per query are ranked by (adc_dist,
+    * neighbor_id). */
+  private def adcTopK(enc: DataFrame, dt: DataFrame, keys: Seq[String],
+                      k: Int): DataFrame = {
+    val scored = enc.join(broadcast(dt), keys)
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .groupBy("query_id", "neighbor_id")
+      .agg(sum(col("d")).as("adc_dist"))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("adc_dist"), col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .orderBy("query_id", "rank")
+  }
+
   /** PQ top-k by Asymmetric Distance Computation: per query, a
     * `(nSub × k)` table of exact BIGINT squared distances from the
     * query's subvectors to every codeword; a corpus vector's distance
@@ -989,15 +1007,7 @@ object Ann {
       .join(broadcast(cents), Seq("sub"))
       .select(col("query_id"), col("sub"), col("code"),
         sqDistMicro(col("sq"), col("cq")).as("d"))
-    val scored = enc.join(broadcast(dt), Seq("sub", "code"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(sum(col("d")).as("adc_dist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
+    adcTopK(enc, dt, Seq("sub", "code"), k)
   }
 
   /** IVF-PQ composed index (Jégou, Douze & Schmid 2011, "Product
@@ -1050,14 +1060,7 @@ object Ann {
     val dt = qp.join(broadcast(pq), Seq("sub"))
       .select(col("query_id"), col("cell"), col("sub"), col("code"),
         sqDistMicro(col("sq"), col("cq")).as("d"))
-    val scored = enc.join(broadcast(dt), Seq("cell", "sub", "code"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .groupBy("query_id", "neighbor_id").agg(sum(col("d")).as("adc_dist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
+    adcTopK(enc, dt, Seq("cell", "sub", "code"), k)
   }
 
   /** IVF-style bucketed top-k: assign each vector to its nearest of

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.SketchFunctions.md5_low32
-import graft.functions.TextFunctions.word_shingles
 
 /** Bloom-filter membership prefilter — the at-scale companion to the
   * shingle semi-join in [[Decontamination]] (reference leakage guard:
@@ -121,10 +120,8 @@ object Bloom {
   def prefilterOverlap(docs: DataFrame, benchmark: DataFrame, n: Int = 8,
                        threshold: Double = 0.05, spec: BloomSpec = BloomSpec(),
                        idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    def shingleSet(df: DataFrame, out: String) =
-      df.select(col(idCol).as(out),
-        explode(array_distinct(word_shingles(col(textCol), n))).as("sh"))
-    val benchSh = shingleSet(benchmark, "bench_id").select("sh").distinct()
+    import Decontamination.shingleSet
+    val benchSh = shingleSet(benchmark, idCol, textCol, n, "bench_id").select("sh").distinct()
     val bitmap = build(benchSh, "sh", spec)
     // one corpus pass computes both counts (the Bloom test is a cheap
     // map-side flag); only flagged shingles re-enter for the exact join.
@@ -132,17 +129,12 @@ object Bloom {
     // shingle is compute-dense, and a small-on-disk corpus otherwise
     // runs both downstream passes on the scan's single split (measured
     // at sf0.1: two 3.6 s one-task stages)
-    val flagged = shingleSet(graft.sources.Lake.balance(docs), "id")
+    val flagged = shingleSet(graft.sources.Lake.balance(docs), idCol, textCol, n, "id")
       .withColumn("hit", mightContain(col("sh"), bitmap, spec))
     val counts = flagged.groupBy("id").agg(
       count(lit(1)).as("n_shingles"),
       count(when(col("hit"), lit(1))).as("n_candidates"))
-    val overlaps = flagged.filter(col("hit")).join(benchSh, "sh")
-      .groupBy("id").agg(count(lit(1)).as("n_overlap"))
-    counts.join(overlaps, Seq("id"), "left")
-      .na.fill(0L, Seq("n_overlap"))
-      .withColumn("overlap_frac",
-        round(col("n_overlap") / col("n_shingles"), 6))
-      .withColumn("contaminated", col("overlap_frac") >= threshold)
+    Decontamination.flagOverlaps(counts, flagged.filter(col("hit")).join(benchSh, "sh"),
+      threshold)
   }
 }

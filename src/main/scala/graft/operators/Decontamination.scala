@@ -25,20 +25,29 @@ object Decontamination {
   def overlapReport(docs: DataFrame, benchmark: DataFrame, n: Int = 8,
                     threshold: Double = 0.05,
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    def shingleSet(df: DataFrame, out: String) =
-      df.select(col(idCol).as(out),
-        explode(array_distinct(word_shingles(col(textCol), n))).as("sh"))
-    val docSh = shingleSet(docs, "id")
-    val benchSh = shingleSet(benchmark, "bench_id").select("sh").distinct()
+    val docSh = shingleSet(docs, idCol, textCol, n, "id")
+    val benchSh = shingleSet(benchmark, idCol, textCol, n, "bench_id").select("sh").distinct()
     val counts = docSh.groupBy("id").agg(count(lit(1)).as("n_shingles"))
-    val overlaps = docSh.join(benchSh, "sh")
-      .groupBy("id").agg(count(lit(1)).as("n_overlap"))
-    counts.join(overlaps, Seq("id"), "left")
+    flagOverlaps(counts, docSh.join(benchSh, "sh"), threshold)
+  }
+
+  /** (`out`, sh): each document's distinct word `n`-shingles. */
+  private[operators] def shingleSet(df: DataFrame, idCol: String, textCol: String,
+                                    n: Int, out: String): DataFrame =
+    df.select(col(idCol).as(out),
+      explode(array_distinct(word_shingles(col(textCol), n))).as("sh"))
+
+  /** `counts` (id, n_shingles, …) with each document's number of
+    * shingles in `overlapping` (id, …) as `n_overlap` (0 when none),
+    * `overlap_frac` and the `contaminated` flag at `threshold`. */
+  private[operators] def flagOverlaps(counts: DataFrame, overlapping: DataFrame,
+                                      threshold: Double): DataFrame =
+    counts.join(overlapping.groupBy("id").agg(count(lit(1)).as("n_overlap")),
+        Seq("id"), "left")
       .na.fill(0L, Seq("n_overlap"))
       .withColumn("overlap_frac",
         round(col("n_overlap") / col("n_shingles"), 6))
       .withColumn("contaminated", col("overlap_frac") >= threshold)
-  }
 
   /** Semantic decontamination — embedding-cosine leakage the n-gram
     * guard cannot see (paraphrases, translations, reformatted copies).

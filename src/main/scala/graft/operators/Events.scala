@@ -115,6 +115,20 @@ object Events {
         col("eff_from"), col("eff_to"), col("n_events"))
   }
 
+  /** (key, d, x): the number of events per key and calendar day — the
+    * bounded aggregate the daily-series statistics run on. */
+  private def dailyCounts(events: DataFrame, keyCol: String, tsCol: String): DataFrame =
+    events.select(col(s"`$keyCol`").as("key"),
+        date_trunc("day", col(s"`$tsCol`")).cast("date").as("d"))
+      .groupBy("key", "d").agg(count(lit(1)).as("x"))
+
+  /** (key, d1, x1, d2, x2): every pair of one key's days with d1 < d2. */
+  private def dayPairs(daily: DataFrame): DataFrame = {
+    val a = daily.select(col("key"), col("d").as("d1"), col("x").as("x1"))
+    val b = daily.select(col("key"), col("d").as("d2"), col("x").as("x2"))
+    a.join(b, Seq("key")).filter(col("d1") < col("d2"))
+  }
+
   /** Mann–Kendall trend test per key over a daily-count series: the
     * rank-based monotone-trend statistic `S = Σ_{i<j} sign(x_j − x_i)`
     * and Kendall's `τ = S / (n(n−1)/2)` — is a stream's volume trending
@@ -129,12 +143,7 @@ object Events {
     */
   def mannKendall(events: DataFrame, keyCol: String = "event_type",
                   tsCol: String = "ts"): DataFrame = {
-    val daily = events.select(col(s"`$keyCol`").as("key"),
-        date_trunc("day", col(s"`$tsCol`")).cast("date").as("d"))
-      .groupBy("key", "d").agg(count(lit(1)).as("x"))
-    val a = daily.select(col("key"), col("d").as("d1"), col("x").as("x1"))
-    val b = daily.select(col("key"), col("d").as("d2"), col("x").as("x2"))
-    a.join(b, Seq("key")).filter(col("d1") < col("d2"))
+    dayPairs(dailyCounts(events, keyCol, tsCol))
       .groupBy("key")
       .agg(sum(signum(col("x2") - col("x1")).cast("long")).as("s_stat"),
         (countDistinct(col("d1")) + 1).as("n_days")) // d_max never appears as d1
@@ -162,9 +171,7 @@ object Events {
                       keyCol: String = "event_type",
                       tsCol: String = "ts"): DataFrame = {
     require(maxLag > 0, "maxLag must be positive")
-    val daily = events.select(col(s"`$keyCol`").as("key"),
-        date_trunc("day", col(s"`$tsCol`")).cast("date").as("d"))
-      .groupBy("key", "d").agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(events, keyCol, tsCol)
     val stats = daily.groupBy("key")
       .agg(count(lit(1)).as("__n"), sum(col("x")).as("__s"))
     val dev = daily.join(broadcast(stats), "key")
@@ -202,12 +209,7 @@ object Events {
   def theilSen(events: DataFrame, keyCol: String = "event_type",
                tsCol: String = "ts"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = events.select(col(s"`$keyCol`").as("key"),
-        date_trunc("day", col(s"`$tsCol`")).cast("date").as("d"))
-      .groupBy("key", "d").agg(count(lit(1)).as("x"))
-    val a = daily.select(col("key"), col("d").as("d1"), col("x").as("x1"))
-    val b = daily.select(col("key"), col("d").as("d2"), col("x").as("x2"))
-    val slopes = a.join(b, Seq("key")).filter(col("d1") < col("d2"))
+    val slopes = dayPairs(dailyCounts(events, keyCol, tsCol))
       .select(col("key"),
         ((col("x2") - col("x1")).cast("double") /
           datediff(col("d2"), col("d1")).cast("double")).as("slope"))
@@ -243,9 +245,7 @@ object Events {
   def changepoint(events: DataFrame, keyCol: String = "event_type",
                   tsCol: String = "ts"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = events.select(col(s"`$keyCol`").as("key"),
-        date_trunc("day", col(s"`$tsCol`")).cast("date").as("d"))
-      .groupBy("key", "d").agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(events, keyCol, tsCol)
     val w = Window.partitionBy(col("key")).orderBy(col("d"))
     val pre = daily
       .withColumn("p", row_number().over(w).cast("long"))

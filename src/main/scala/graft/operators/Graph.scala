@@ -32,6 +32,29 @@ object Graph {
 
   val OnePpm = 1000000L
 
+  /** `edges` as (src, dst) longs without self-edges. */
+  private def cleanEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .filter(col("src") =!= col("dst"))
+
+  /** The distinct directed edges of [[cleanEdges]] and their nodes, each
+    * materialized once: loop-invariant relations of the iterative
+    * scorers, so no round's lineage re-derives them. */
+  private def edgesAndNodes(edges: DataFrame): (DataFrame, DataFrame) = {
+    val e = cleanEdges(edges).distinct().localCheckpoint(eager = true)
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+      .localCheckpoint(eager = true)
+    (e, nodes)
+  }
+
+  /** [[cleanEdges]] in both directions, distinct, materialized once. */
+  private def symmetricEdges(edges: DataFrame): DataFrame = {
+    val d = cleanEdges(edges)
+    d.union(d.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct().localCheckpoint(eager = true)
+  }
+
   /** @param edges (src: long, dst: long) relation; self-edges and
     *              duplicates are dropped.
     * @return (node, rank_ppm) for every node appearing in `edges`. */
@@ -42,13 +65,7 @@ object Graph {
     // materialize the loop-invariant relations ONCE (resolveClusters
     // discipline): without the checkpoint every iteration's lineage
     // re-derives the edge dedup, node union, and degree aggregate
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(eager = true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(eager = true)
+    val (e, nodes) = edgesAndNodes(edges)
     val deg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
       .localCheckpoint(eager = true)
     val base = OnePpm - dampingPpm
@@ -89,11 +106,7 @@ object Graph {
     * @return (node, label) after `nIter` synchronous rounds. */
   def labelPropagation(edges: DataFrame, nIter: Int = 4): DataFrame = {
     require(nIter >= 1, "need nIter >= 1")
-    val d = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val sym = d.union(d.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(eager = true)
+    val sym = symmetricEdges(edges)
     val nodes = sym.select(col("src").as("node")).distinct()
       .localCheckpoint(eager = true)
     var labels = nodes.withColumn("label", col("node"))
@@ -135,11 +148,7 @@ object Graph {
     * @return (node, coreness) after `nIter` h-operator rounds. */
   def kCore(edges: DataFrame, nIter: Int = 8): DataFrame = {
     require(nIter >= 1, "need nIter >= 1")
-    val d = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val sym = d.union(d.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(eager = true)
+    val sym = symmetricEdges(edges)
     var cur = sym.groupBy("src").agg(count(lit(1)).as("c"))
       .select(col("src").as("node"), col("c"))
     for (i <- 1 to nIter) {
@@ -218,13 +227,7 @@ object Graph {
     // checkpointed so a half-step's lineage never replays earlier rounds
     // (each full HITS round is 2 shuffles + 2 broadcast rescales — deep
     // enough that lineage replay dominated the wall time before)
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(eager = true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(eager = true)
+    val (e, nodes) = edgesAndNodes(edges)
     var hub = nodes.select(col("node"), lit(OnePpm).as("h"))
     var auth = nodes.select(col("node"), lit(0L).as("a"))
     for (i <- 1 to nIter) {

@@ -90,6 +90,19 @@ object Sampling {
           < floor(col("mix_rate") * lit(4294967296.0)).cast("long"))
   }
 
+  /** The bucket key columns, and per bucket (keys…, n_docs, n_tokens,
+    * __isq): the document and token counts and the τ=0.5 temperature
+    * weight's integer sqrt quantization `floor(√n_tokens · 10⁶)`. */
+  private def bucketTotals(df: DataFrame, bucketCols: Seq[String],
+                           tokenCol: Column): (Seq[Column], DataFrame) = {
+    val k = bucketCols.map(c => col(s"`$c`"))
+    (k, df.groupBy(k: _*)
+      .agg(count(lit(1)).as("n_docs"),
+        sum(tokenCol).cast("long").as("n_tokens"))
+      .withColumn("__isq",
+        floor(sqrt(col("n_tokens").cast("double")) * lit(1000000.0)).cast("long")))
+  }
+
   /** Token-budget accounting — the report a mixture planner reads before
     * committing a pretraining run: per bucket (source × language is the
     * usual grain), document/token counts, corpus share, the τ=0.5
@@ -107,12 +120,7 @@ object Sampling {
     */
   def tokenBudgetPlan(df: DataFrame, bucketCols: Seq[String],
                       tokenCol: Column, budget: Long): DataFrame = {
-    val k = bucketCols.map(c => col(s"`$c`"))
-    val totals = df.groupBy(k: _*)
-      .agg(count(lit(1)).as("n_docs"),
-        sum(tokenCol).cast("long").as("n_tokens"))
-      .withColumn("__isq",
-        floor(sqrt(col("n_tokens").cast("double")) * lit(1000000.0)).cast("long"))
+    val (k, totals) = bucketTotals(df, bucketCols, tokenCol)
     val grand = totals.agg(sum(col("__isq")).as("__sisq"),
       sum(col("n_tokens")).as("__tot"))
     val planned = lit(budget).cast("double") * col("__isq") / col("__sisq")
@@ -150,12 +158,7 @@ object Sampling {
                       tokenCol: Column, budget: Long,
                       maxEpochs: Int): DataFrame = {
     require(budget > 0 && maxEpochs > 0, "budget and maxEpochs must be positive")
-    val k = bucketCols.map(c => col(s"`$c`"))
-    val totals = df.groupBy(k: _*)
-      .agg(count(lit(1)).as("n_docs"),
-        sum(tokenCol).cast("long").as("n_tokens"))
-      .withColumn("__isq",
-        floor(sqrt(col("n_tokens").cast("double")) * lit(1000000.0)).cast("long"))
+    val (k, totals) = bucketTotals(df, bucketCols, tokenCol)
     val grand = totals.agg(sum(col("__isq")).as("__sisq"))
     // ppm products run in DECIMAL(38,0): the Long forms wrap silently in
     // non-ANSI Spark once budget exceeds ~9.2e12 tokens (budget·ppm) or a

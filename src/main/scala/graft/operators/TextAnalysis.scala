@@ -690,6 +690,16 @@ object TextAnalysis {
       .select(col("doc_id"), col("lang"), col("avg_logprob_r"), col("bucket"))
   }
 
+  /** A corpus's whitespace tokens `t`, one row each, and its bigrams `g`
+    * ([[bigramLogProb]]'s convention: docs with ≥2 tokens only, no
+    * collapse shingle). */
+  private def tokensAndBigrams(docs: DataFrame, textCol: String): (DataFrame, DataFrame) = {
+    val words = split(trim(col(s"`$textCol`")), "\\s+")
+    (docs.select(explode(words).as("t")).filter(col("t") =!= ""),
+      docs.where(size(words) >= 2)
+        .select(explode(word_shingles(col(s"`$textCol`"), 2)).as("g")))
+  }
+
   /** Corpus n-gram entropy rate — the predictability screen beside
     * [[zipfFit]]: unigram entropy H(W), bigram entropy H(W₁W₂), and the
     * conditional entropy rate H(W₂|W₁) = H(W₁W₂) − H(W₁-marginal)
@@ -715,12 +725,7 @@ object TextAnalysis {
         .select(col("n"), col("nd"),
           round(col("s").cast("double") / col("n") / 1e6, 6).as("h"))
     }
-    val toks = docs
-      .select(explode(split(trim(col(s"`$textCol`")), "\\s+")).as("t"))
-      .filter(col("t") =!= "")
-    val big = docs
-      .where(size(split(trim(col(s"`$textCol`")), "\\s+")) >= 2)
-      .select(explode(word_shingles(col(s"`$textCol`"), 2)).as("g"))
+    val (toks, big) = tokensAndBigrams(docs, textCol)
     val uni = entropyOf(toks.groupBy("t").agg(count(lit(1)).as("__c")))
     val bi = entropyOf(big.groupBy("g").agg(count(lit(1)).as("__c")))
     val ctx = entropyOf(big.select(substring_index(col("g"), " ", 1).as("w1"))
@@ -751,13 +756,8 @@ object TextAnalysis {
   def pmiCollocations(docs: DataFrame, minCount: Long = 5, topK: Int = 100,
                       textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = docs
-      .select(explode(split(trim(col(s"`$textCol`")), "\\s+")).as("t"))
-      .filter(col("t") =!= "")
-    val big = docs
-      .where(size(split(trim(col(s"`$textCol`")), "\\s+")) >= 2)
-      .select(explode(word_shingles(col(s"`$textCol`"), 2)).as("g"))
-      .select(substring_index(col("g"), " ", 1).as("w1"),
+    val (toks, grams) = tokensAndBigrams(docs, textCol)
+    val big = grams.select(substring_index(col("g"), " ", 1).as("w1"),
         substring_index(col("g"), " ", -1).as("w2"))
     val uni = toks.groupBy("t").agg(count(lit(1)).as("c"))
     val nu = toks.agg(count(lit(1)).as("nu"))

@@ -122,17 +122,22 @@ object Profiler {
     df.select(posexplode(array(structs.toIndexedSeq: _*)).as(Seq("pos", "c"))).select("c.*")
   }
 
+  /** The leading fields of every per-cell relation — the keyed long
+    * format and `LakeScan.RawSchema`: which table and column a cell
+    * belongs to, and whether it is a value or a schema sentinel. */
+  val CellKeyFields: Seq[StructField] = Seq(
+    StructField("table_name", StringType, nullable = false),
+    StructField("col_idx", IntegerType, nullable = false),
+    StructField("col_name", StringType, nullable = false),
+    StructField("col_type", StringType, nullable = false),
+    StructField("present", BooleanType, nullable = false))
+
   /** Schema of the KEYED long-format relation [[profileFromLong]]
     * consumes — one row per cell plus one `present=false` sentinel per
     * column (sentinels preserve the schema through aggregation, so an
     * empty table still profiles to zero-count rows).
     */
-  val KeyedLongSchema: StructType = StructType(Seq(
-    StructField("table_name", StringType, nullable = false),
-    StructField("col_idx", IntegerType, nullable = false),
-    StructField("col_name", StringType, nullable = false),
-    StructField("col_type", StringType, nullable = false),
-    StructField("present", BooleanType, nullable = false),
+  val KeyedLongSchema: StructType = StructType(CellKeyFields ++ Seq(
     StructField("value_str", StringType),
     StructField("value_num", DoubleType)))
 

@@ -12,15 +12,11 @@ import Shared._
   * DuckDB from the same weight functions. */
 object EncoderQueries {
 
-  /** One fixture encoder layer from the layer-indexed
-    * closed-form formulas (layer 0 == the original 1-layer fixture). */
-  private def teLayer(l: Int): graft.ml.OnnxExport.EncoderLayer = {
-    val (d, h, f) = (TeD, TeH, TeF)
-    val dh = d / h
-    graft.ml.OnnxExport.EncoderLayer(
-      wq = Array.tabulate(h, d, dh)(teWqL(l, _, _, _)),
-      wk = Array.tabulate(h, d, dh)(teWkL(l, _, _, _)),
-      wv = Array.tabulate(h, d, dh)(teWvL(l, _, _, _)),
+  /** Layer `l`'s [[graft.ml.OnnxExport.LayerTail]] from the
+    * layer-indexed closed-form formulas, shared by the per-head fixture
+    * encoder and the fused-QKV checkpoint. */
+  private def layerTail(l: Int, d: Int, f: Int): graft.ml.OnnxExport.LayerTail =
+    graft.ml.OnnxExport.LayerTail(
       wo = Array.tabulate(d, d)(teWoL(l, _, _)),
       bo = Array.tabulate(d)(teBoL(l, _)),
       g1 = Array.tabulate(d)(teG1L(l, _)),
@@ -31,6 +27,17 @@ object EncoderQueries {
       bf2 = Array.tabulate(d)(teBf2L(l, _)),
       g2 = Array.tabulate(d)(teG2L(l, _)),
       b2 = Array.tabulate(d)(teB2L(l, _)))
+
+  /** One fixture encoder layer from the layer-indexed
+    * closed-form formulas (layer 0 == the original 1-layer fixture). */
+  private[graft] def teLayer(l: Int): graft.ml.OnnxExport.EncoderLayer = {
+    val (d, h, f) = (TeD, TeH, TeF)
+    val dh = d / h
+    graft.ml.OnnxExport.EncoderLayer(
+      wq = Array.tabulate(h, d, dh)(teWqL(l, _, _, _)),
+      wk = Array.tabulate(h, d, dh)(teWkL(l, _, _, _)),
+      wv = Array.tabulate(h, d, dh)(teWvL(l, _, _, _)),
+      tail = layerTail(l, d, f))
   }
 
   private def teStack(layers: Int): graft.ml.OnnxExport.EncoderStack =
@@ -143,32 +150,6 @@ object EncoderQueries {
   private[graft] def teG2L(l: Int, j: Int): Double = 1.0 + ((l + j) % 2 * 2 - 1) * 0.0625
 
   private[graft] def teB2L(l: Int, j: Int): Double = ((l * 3 + j * 5 + 1) % 7 - 3) * 0.0625
-
-  private[graft] def teWq(h: Int, i: Int, j: Int): Double = teWqL(0, h, i, j)
-
-  private[graft] def teWk(h: Int, i: Int, j: Int): Double = teWkL(0, h, i, j)
-
-  private[graft] def teWv(h: Int, i: Int, j: Int): Double = teWvL(0, h, i, j)
-
-  private[graft] def teWo(i: Int, j: Int): Double = teWoL(0, i, j)
-
-  private[graft] def teBo(j: Int): Double = teBoL(0, j)
-
-  private[graft] def teG1(j: Int): Double = teG1L(0, j)
-
-  private[graft] def teB1(j: Int): Double = teB1L(0, j)
-
-  private[graft] def teW1(i: Int, j: Int): Double = teW1L(0, i, j)
-
-  private[graft] def teBf1(j: Int): Double = teBf1L(0, j)
-
-  private[graft] def teW2(i: Int, j: Int): Double = teW2L(0, i, j)
-
-  private[graft] def teBf2(j: Int): Double = teBf2L(0, j)
-
-  private[graft] def teG2(j: Int): Double = teG2L(0, j)
-
-  private[graft] def teB2(j: Int): Double = teB2L(0, j)
 
   private[graft] def teWh(j: Int): Double = ((j * 3 + 1) % 5 - 2) * 0.25
 
@@ -484,7 +465,7 @@ object EncoderQueries {
   /** E4 with a REAL (toy-sized) transformer: a 1-layer 2-head encoder —
     * per-head scaled-dot attention with Softmax, residual + LayerNorm,
     * Sigmoid FFN, mean-pool, sigmoid head — exported as an ONNX graph
-    * ([[graft.ml.OnnxExport.exportMiniEncoder]]) and executed DISTRIBUTED
+    * ([[graft.ml.OnnxExport.exportEncoderStack]]) and executed DISTRIBUTED
     * by the pure-JVM [[graft.ml.OnnxSession]] through the same
     * per-partition/batched `ExternalModelScorer` seam a JNI onnxruntime
     * would use. Weights and inputs come from the closed-form
@@ -648,22 +629,11 @@ object EncoderQueries {
     * from the shared layer-indexed formula family + the 6-way
     * TabularBertEmbeddings tables. Word-embedding rows cover the whole
     * `TbVocabMax` id range regardless of the actual trained vocab size. */
-  private[graft] def tbLayer(l: Int): graft.ml.OnnxExport.CheckpointLayer = {
-    val (d, f) = (TbD, TbF)
+  private[graft] def tbLayer(l: Int): graft.ml.OnnxExport.CheckpointLayer =
     graft.ml.OnnxExport.CheckpointLayer(
-      wqkv = Array.tabulate(d, 3 * d)(tbWqkv(l, _, _)),
-      bqkv = Array.tabulate(3 * d)(tbBqkv(l, _)),
-      wo = Array.tabulate(d, d)(teWoL(l, _, _)),
-      bo = Array.tabulate(d)(teBoL(l, _)),
-      g1 = Array.tabulate(d)(teG1L(l, _)),
-      b1 = Array.tabulate(d)(teB1L(l, _)),
-      w1 = Array.tabulate(d, f)(teW1L(l, _, _)),
-      bf1 = Array.tabulate(f)(teBf1L(l, _)),
-      w2 = Array.tabulate(f, d)(teW2L(l, _, _)),
-      bf2 = Array.tabulate(d)(teBf2L(l, _)),
-      g2 = Array.tabulate(d)(teG2L(l, _)),
-      b2 = Array.tabulate(d)(teB2L(l, _)))
-  }
+      wqkv = Array.tabulate(TbD, 3 * TbD)(tbWqkv(l, _, _)),
+      bqkv = Array.tabulate(3 * TbD)(tbBqkv(l, _)),
+      tail = layerTail(l, TbD, TbF))
 
   private[graft] def tbCheckpoint: graft.ml.OnnxExport.TabularCheckpoint = {
     graft.ml.OnnxExport.TabularCheckpoint(

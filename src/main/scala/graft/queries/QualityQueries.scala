@@ -157,15 +157,24 @@ object QualityQueries {
        |ctx AS (SELECT split_part(bg, ' ', 1) AS w1, sum(c12) AS c1 FROM tb GROUP BY w1),
        |vv AS (SELECT CAST(count(DISTINCT tok) AS DOUBLE) AS v
        |       FROM (SELECT unnest(w) AS tok FROM d) WHERE tok <> ''),
-       |sc AS (
+       |${lmScoreTail("(coalesce(tb.c12, 0) + 1.0) / (coalesce(ctx.c1, 0) + 1.0 * vv.v)",
+         ", vv")}""".stripMargin
+
+  /** The `sc` and `ag` CTEs that close a bigram-LM score: each bigram's
+    * `ln(prob)` in micro units, rounded half away from zero, then each
+    * doc's bigram count `n_bigrams` and mean `m`. `prob` reads `tb`,
+    * `ctx` and whatever `joins` adds after the `ctx` join (the last of
+    * it cross-joins the LM's scalar CTE). */
+  private def lmScoreTail(prob: String, joins: String): String =
+    s"""sc AS (
        |  SELECT s.doc_id,
        |    CAST(CASE WHEN l >= 0 THEN floor(l + 0.5) ELSE ceil(l - 0.5) END AS BIGINT) AS lpm
        |  FROM (
        |    SELECT s0.doc_id,
-       |      ln((coalesce(tb.c12, 0) + 1.0) / (coalesce(ctx.c1, 0) + 1.0 * vv.v)) * 1000000 AS l
+       |      ln($prob) * 1000000 AS l
        |    FROM (SELECT doc_id, unnest(bgs) AS bg FROM g) s0
        |    LEFT JOIN tb USING (bg)
-       |    LEFT JOIN ctx ON ctx.w1 = split_part(s0.bg, ' ', 1), vv) s),
+       |    LEFT JOIN ctx ON ctx.w1 = split_part(s0.bg, ' ', 1)$joins) s),
        |ag AS (SELECT doc_id, count(*) AS n_bigrams,
        |         CAST(sum(lpm) AS DOUBLE) / count(*) AS m
        |       FROM sc GROUP BY doc_id)""".stripMargin
@@ -356,32 +365,23 @@ object QualityQueries {
     * (engines never re-associate), ln micro-rounds half-away, exact
     * BIGINT sums, the mean re-rounds — the lmScoreCtes seam with the
     * KN formula. */
-  private def knQualitySql: String =
+  private def knQualitySql: String = {
+    val knProb =
+      """CASE WHEN ctx.c1 IS NOT NULL
+        |           THEN greatest(coalesce(tb.c12, 0.0) - 0.75, 0.0) / ctx.c1
+        |                + 0.75 * ctx.n1p / ctx.c1 * coalesce(cont.n1pc, 0.0) / tt.t
+        |           ELSE coalesce(cont.n1pc, 0.0) / tt.t END""".stripMargin
     raw"""WITH ${bigramCtes("documents")},
       |ctx AS (SELECT split_part(bg, ' ', 1) AS w1, sum(c12) AS c1,
       |          CAST(count(*) AS DOUBLE) AS n1p FROM tb GROUP BY 1),
       |cont AS (SELECT string_split(bg, ' ')[-1] AS w2,
       |           CAST(count(*) AS DOUBLE) AS n1pc FROM tb GROUP BY 1),
       |tt AS (SELECT CAST(count(*) AS DOUBLE) AS t FROM tb),
-      |sc AS (
-      |  SELECT s.doc_id,
-      |    CAST(CASE WHEN l >= 0 THEN floor(l + 0.5) ELSE ceil(l - 0.5) END AS BIGINT) AS lpm
-      |  FROM (
-      |    SELECT s0.doc_id,
-      |      ln(CASE WHEN ctx.c1 IS NOT NULL
-      |           THEN greatest(coalesce(tb.c12, 0.0) - 0.75, 0.0) / ctx.c1
-      |                + 0.75 * ctx.n1p / ctx.c1 * coalesce(cont.n1pc, 0.0) / tt.t
-      |           ELSE coalesce(cont.n1pc, 0.0) / tt.t END) * 1000000 AS l
-      |    FROM (SELECT doc_id, unnest(bgs) AS bg FROM g) s0
-      |    LEFT JOIN tb USING (bg)
-      |    LEFT JOIN ctx ON ctx.w1 = split_part(s0.bg, ' ', 1)
-      |    LEFT JOIN cont ON cont.w2 = string_split(s0.bg, ' ')[-1], tt) s),
-      |ag AS (SELECT doc_id, count(*) AS n_bigrams,
-      |         CAST(sum(lpm) AS DOUBLE) / count(*) AS m
-      |       FROM sc GROUP BY doc_id)
+      |${lmScoreTail(knProb, "\n    LEFT JOIN cont ON cont.w2 = string_split(s0.bg, ' ')[-1], tt")}
       |SELECT doc_id, n_bigrams,
       |  (CASE WHEN m >= 0 THEN floor(m + 0.5) ELSE ceil(m - 0.5) END) / 1000000.0 AS kn_avg_logprob_r
       |FROM ag ORDER BY doc_id""".stripMargin
+  }
 
   /** Min-K% probability contamination screen
     * ([[graft.operators.TextAnalysis.minKProb]], Shi et al. 2023):

@@ -98,6 +98,25 @@ object StreamingQueries {
       .orderBy("col_name")
   }
 
+  /** The CTE chain of a profile replay: `vals` unions `selects` (each
+    * column's (`key`, v, …) rows), `stats` holds the per-`key` aggregates
+    * `statCols`, and `dig` each `key`'s MinHash digest of its distinct
+    * non-null values, named `digest`. */
+  private def profileCtes(selects: Seq[String], key: String, statCols: String,
+                          digest: String): String =
+    s"""WITH $permsCte,
+       |vals AS (
+       |  ${selects.mkString("\n  UNION ALL ")}
+       |),
+       |stats AS (
+       |  SELECT $key, $statCols
+       |  FROM vals GROUP BY $key),
+       |dvals AS (SELECT DISTINCT $key, v FROM vals WHERE v IS NOT NULL),
+       |mins AS (SELECT $key, pi, ${mhSlotMin("v")} AS mh
+       |         FROM dvals CROSS JOIN perms GROUP BY $key, pi),
+       |dig AS (SELECT $key, array_to_string(list(mh ORDER BY pi), ',') AS $digest
+       |        FROM mins GROUP BY $key)""".stripMargin
+
   /** st_stream_profile: the streamed profile of `nation` must equal the
     * batch profile over the same rows (lossless sketch merge), so its
     * oracle is just the batch computation. */
@@ -105,18 +124,8 @@ object StreamingQueries {
     val selects = lakeSchemas("nation").map { case (c, lt) =>
       s"SELECT '$c' AS cn, ${renderSql(c, lt)} AS v FROM nation"
     }
-    s"""WITH $permsCte,
-       |vals AS (
-       |  ${selects.mkString("\n  UNION ALL ")}
-       |),
-       |stats AS (
-       |  SELECT cn, count(*) AS n_rows, count(*) - count(v) AS n_nulls
-       |  FROM vals GROUP BY cn),
-       |dvals AS (SELECT DISTINCT cn, v FROM vals WHERE v IS NOT NULL),
-       |mins AS (SELECT cn, pi, ${mhSlotMin("v")} AS mh
-       |         FROM dvals CROSS JOIN perms GROUP BY cn, pi),
-       |dig AS (SELECT cn, array_to_string(list(mh ORDER BY pi), ',') AS digest
-       |        FROM mins GROUP BY cn)
+    s"""${profileCtes(selects, "cn",
+          "count(*) AS n_rows, count(*) - count(v) AS n_nulls", "digest")}
        |SELECT cn AS col_name, stats.n_rows, stats.n_nulls, dig.digest
        |FROM stats JOIN dig USING (cn) ORDER BY col_name""".stripMargin
   }
@@ -209,19 +218,9 @@ object StreamingQueries {
         if (lt == "integer" || lt == "float") s"CAST($c AS DOUBLE)" else "CAST(NULL AS DOUBLE)"
       s"SELECT $i AS ci, $strRender AS v, $numRender AS vn FROM supplier"
     }
-    s"""WITH $permsCte,
-       |vals AS (
-       |  ${selects.mkString("\n  UNION ALL ")}
-       |),
-       |stats AS (
-       |  SELECT ci, count(*) AS n_rows, count(*) - count(v) AS num_nan,
-       |         min(vn) AS min_v, max(vn) AS max_v
-       |  FROM vals GROUP BY ci),
-       |dvals AS (SELECT DISTINCT ci, v FROM vals WHERE v IS NOT NULL),
-       |mins AS (SELECT ci, pi, ${mhSlotMin("v")} AS mh
-       |         FROM dvals CROSS JOIN perms GROUP BY ci, pi),
-       |dig AS (SELECT ci, array_to_string(list(mh ORDER BY pi), ',') AS mh_exact
-       |        FROM mins GROUP BY ci)
+    val statCols = "count(*) AS n_rows, count(*) - count(v) AS num_nan,\n" +
+      "         min(vn) AS min_v, max(vn) AS max_v"
+    s"""${profileCtes(selects, "ci", statCols, "mh_exact")}
        |SELECT 'supplier' AS table_name, CAST(ci AS BIGINT) AS col_idx,
        |  stats.n_rows AS "rows", stats.num_nan, dig.mh_exact,
        |  stats.min_v, stats.max_v

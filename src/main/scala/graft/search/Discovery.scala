@@ -55,23 +55,27 @@ object Discovery {
         "cand_col_name", "dist")
   }
 
+  /** The reference's k-NN over-fetch (O3): each query column keeps its
+    * k·3 nearest candidate columns (`embedding_search.py:129`). */
+  private val OverFetch = 3
+
   /** Column-vote ranking (O4) on top of any (q_col_idx, cand_table,
     * cand_col_idx, dist) relation. `k` result tables; per-query-column
-    * candidate pool capped at k·overFetch (reference over-fetch, O3).
+    * candidate pool capped at k·[[OverFetch]].
     *
     * One exchange: the k-NN window's rank filter becomes a partial
     * `WindowGroupLimit` ahead of its shuffle, so at most
-    * partitions × query columns × k·overFetch rows cross it; `coalesce(1)`
-    * then gathers the ≤ query columns × k·overFetch survivors into one
+    * partitions × query columns × k·OverFetch rows cross it; `coalesce(1)`
+    * then gathers the ≤ query columns × k·OverFetch survivors into one
     * partition, which satisfies every later window, the vote and the
     * sort without another exchange.
     */
-  def columnVoteRank(dists: DataFrame, k: Int, overFetch: Int = 3): DataFrame = {
-    // O3: top k·overFetch neighbors per query column (deterministic ties)
+  def columnVoteRank(dists: DataFrame, k: Int): DataFrame = {
+    // O3: top k·OverFetch neighbors per query column (deterministic ties)
     val wKnn = Window.partitionBy(col("q_col_idx"))
       .orderBy(col("dist"), col("cand_table"), col("cand_col_idx"))
     val knn = dists.withColumn("rank", row_number().over(wKnn))
-      .filter(col("rank") <= k * overFetch)
+      .filter(col("rank") <= k * OverFetch)
       .coalesce(1)
     // first match per (query column, candidate table) — embedding_search.py:147-150
     val wFirst = Window.partitionBy(col("q_col_idx"), col("cand_table"))

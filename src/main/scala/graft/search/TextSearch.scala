@@ -771,44 +771,36 @@ private[search] object CosineKernel {
     * closing sqrt, where the oracle converts its exact HUGEINT the same
     * correctly-rounded way). */
   private def norm2(wqs: Array[Long]): Double = {
-    try {
-      var acc = 0L
-      var i = 0
-      while (i < wqs.length) {
-        acc = Math.addExact(acc, Math.multiplyExact(wqs(i), wqs(i))); i += 1
-      }
-      acc.toDouble
-    } catch { case _: ArithmeticException =>
-      wqs.foldLeft(BigInt(0))((s, w) => s + BigInt(w) * BigInt(w)).toDouble
-    }
+    val acc = new ExactSum
+    var i = 0
+    while (i < wqs.length) { acc.add(wqs(i), wqs(i)); i += 1 }
+    acc.toDouble
   }
 
   /** Exact sparse merge dot over term-sorted vectors. */
   private def dot(a: DocVec, b: DocVec): Double = {
-    try {
-      var acc = 0L
-      var i = 0; var j = 0
-      while (i < a.terms.length && j < b.terms.length) {
-        val c = a.terms(i).compareTo(b.terms(j))
-        if (c < 0) i += 1
-        else if (c > 0) j += 1
-        else {
-          acc = Math.addExact(acc, Math.multiplyExact(a.wqs(i), b.wqs(j)))
-          i += 1; j += 1
-        }
-      }
-      acc.toDouble
-    } catch { case _: ArithmeticException =>
-      var acc = BigInt(0)
-      var i = 0; var j = 0
-      while (i < a.terms.length && j < b.terms.length) {
-        val c = a.terms(i).compareTo(b.terms(j))
-        if (c < 0) i += 1
-        else if (c > 0) j += 1
-        else { acc += BigInt(a.wqs(i)) * BigInt(b.wqs(j)); i += 1; j += 1 }
-      }
-      acc.toDouble
+    val acc = new ExactSum
+    var i = 0; var j = 0
+    while (i < a.terms.length && j < b.terms.length) {
+      val c = a.terms(i).compareTo(b.terms(j))
+      if (c < 0) i += 1
+      else if (c > 0) j += 1
+      else { acc.add(a.wqs(i), b.wqs(j)); i += 1; j += 1 }
     }
+    acc.toDouble
+  }
+
+  /** An exact sum of Long products: Long arithmetic until a product or
+    * the running sum overflows, BigInt from then on. */
+  private final class ExactSum {
+    private var acc = 0L
+    private var big: BigInt = null
+    def add(x: Long, y: Long): Unit =
+      if (big != null) big += BigInt(x) * BigInt(y)
+      else
+        try acc = Math.addExact(acc, Math.multiplyExact(x, y))
+        catch { case _: ArithmeticException => big = BigInt(acc) + BigInt(x) * BigInt(y) }
+    def toDouble: Double = if (big != null) big.toDouble else acc.toDouble
   }
 
   /** Spark round(x, 6) semantics (HALF_UP via BigDecimal.valueOf). */

@@ -52,12 +52,7 @@ object LakeScan {
     * ordinal within its (capped) table — the snapshot path reassembles
     * row strings from it.
     */
-  val RawSchema: StructType = StructType(Seq(
-    StructField("table_name", StringType, nullable = false),
-    StructField("col_idx", IntegerType, nullable = false),
-    StructField("col_name", StringType, nullable = false),
-    StructField("col_type", StringType, nullable = false),
-    StructField("present", BooleanType, nullable = false),
+  val RawSchema: StructType = StructType(graft.profile.Profiler.CellKeyFields ++ Seq(
     StructField("row_id", LongType, nullable = true),
     StructField("src_file", StringType, nullable = true),
     StructField("v_str", StringType),
@@ -306,8 +301,7 @@ object LakeScan {
     * O(chunk × width), never a whole group. A row is read whole, so a
     * list never splits across a chunk or a row group. An unkeyed cap
     * stops consuming pages mid-group; a file with no plans (a zero-column
-    * schema, or a part file without the `onlyCols` columns) yields no
-    * rows.
+    * schema) yields no rows.
     */
   private def fileRows(in: ParquetFileReader, schema: MessageType,
                        plans: Array[ColPlan], limit: Long,
@@ -424,8 +418,7 @@ object LakeScan {
     */
   private def readFile(table: String, path: String, bytes: Array[Byte],
                        keys: Map[String, Seq[String]],
-                       rowCap: Option[Int],
-                       onlyCols: Option[Set[String]] = None): Iterator[Row] = {
+                       rowCap: Option[Int]): Iterator[Row] = {
     val in = ParquetFileReader.open(new ByteArrayInputFile(bytes))
     val meta = in.getFooter.getFileMetaData
     val schema = meta.getSchema
@@ -440,14 +433,9 @@ object LakeScan {
         .map(_.fields.filter(graft.profile.Profiler.isDatePromoted)
           .map(_.name).toSet)
         .getOrElse(Set.empty)
-    // onlyCols: projection pushdown for the scoped key-extraction pass —
-    // plans keep their ORIGINAL parquet field idx, data arrays are
-    // positional over the (possibly filtered) plan list
     val plans =
-      try {
-        val all = planFor(schema, table, promoted)
-        onlyCols.map(cs => all.filter(p => cs.contains(p.name))).getOrElse(all)
-      } catch {
+      try planFor(schema, table, promoted)
+      catch {
         case e: UnsupportedOperationException =>
           in.close()
           return Iterator.single(rejectRow(table, path, e.getMessage))
@@ -508,20 +496,25 @@ object LakeScan {
   def scanLake(spark: SparkSession, dir: String, tables: Seq[String],
                rowCap: Option[Int]): CsvScan.ScanResult = {
     val raw = decodeScan(spark, dir, tables, rowCap)
-    val capped = rowCap match {
-      case Some(cap) =>
-        // the per-file keyed heap is only a PRE-filter when a keyed table
-        // spans several part files (as the scan listed them, partition
-        // subdirs included) — re-select the global top-cap rows
-        val requested = tables.toSet
-        val nFiles = raw.inputFiles.toSeq.groupBy(tableOf(requested, _)).map {
-          case (t, fs) => t -> fs.size }
-        val multiKeyed = tables.filter(t =>
-          Lake.TableKeys.contains(t) && nFiles.getOrElse(t, 0) > 1)
-        if (multiKeyed.isEmpty) raw else globalKeyedCap(spark, dir, raw, multiKeyed, cap)
-      case None => raw
+    // the per-file keyed heap is only a PRE-filter when a keyed table spans
+    // several part files (as the scan lists them, partition subdirs
+    // included; listed before any persist, which hides the file relation)
+    val multiKeyed = if (rowCap.isEmpty) Nil else {
+      val requested = tables.toSet
+      val nFiles = raw.inputFiles.toSeq.groupBy(tableOf(requested, _)).map {
+        case (t, fs) => t -> fs.size }
+      tables.filter(t => Lake.TableKeys.contains(t) && nFiles.getOrElse(t, 0) > 1)
     }
-    val (cached, decoded, marked) = persistAndProbe(capped, "table_name")
+    val (cached, decoded, marked) = rowCap match {
+      case Some(cap) if multiKeyed.nonEmpty =>
+        // re-select those tables' global top-cap rows: the key tuples and
+        // the cells come from one persisted decode, dropped once the
+        // capped relation is persisted and probed
+        val once = raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try persistAndProbe(globalKeyedCap(spark, once, multiKeyed, cap), "table_name")
+        finally once.unpersist()
+      case _ => persistAndProbe(raw, "table_name")
+    }
     val rejected = tables.filter(t => marked(t) || !decoded(t)).sorted
     val unmarked = cached.filter(col("col_name") =!= lit(RejectMarker))
     val cells =
@@ -543,28 +536,26 @@ object LakeScan {
         s"LakeScan: file $path matches no requested table"))
 
   private def decodeScan(spark: SparkSession, dir: String, tables: Seq[String],
-                         rowCap: Option[Int],
-                         onlyCols: Option[Set[String]] = None): DataFrame = {
+                         rowCap: Option[Int]): DataFrame = {
     require(tables.nonEmpty, "LakeScan needs at least one table")
     val keyMap = Lake.TableKeys
     val cap = rowCap
     val known = tables.toSet
-    val only = onlyCols
     // pathGlobFilter: Spark-written tables are DIRECTORIES of part files
     // (plus _SUCCESS markers) — keep only parquet leaves
     binaryScan(spark, tables.map(t => s"$dir/$t.parquet"), Some("*.parquet")) {
-      (path, bytes) => readFile(tableOf(known, path), path, bytes, keyMap, cap, only)
+      (path, bytes) => readFile(tableOf(known, path), path, bytes, keyMap, cap)
     }
   }
 
-  /** Global ORDER BY key LIMIT cap across a table's part files: a scoped
-    * second decode of ONLY the multi-file keyed tables extracts each
-    * (pre-filtered) row's key tuple, a per-table window ranks them —
-    * bounded input: ≤ nFiles×cap rows per table after the per-file heaps —
-    * and the main cell relation keeps only the winning (file, row) pairs.
-    * Single-file tables stream through the left joins untouched.
+  /** Global ORDER BY key LIMIT cap across a table's part files: the key
+    * cells of the multi-file keyed tables, read from the persisted decode
+    * `cells`, give each (pre-filtered) row's key tuple, a per-table window
+    * ranks them — bounded input: ≤ nFiles×cap rows per table after the
+    * per-file heaps — and `cells` keeps only the winning (file, row)
+    * pairs. Single-file tables stream through the left joins untouched.
     */
-  private def globalKeyedCap(spark: SparkSession, dir: String, cells: DataFrame,
+  private def globalKeyedCap(spark: SparkSession, cells: DataFrame,
                              multiKeyed: Seq[String], cap: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val keyRel = spark.createDataFrame(
@@ -574,17 +565,15 @@ object LakeScan {
     val keyWidth = spark.createDataFrame(
       multiKeyed.map(t => (t, Lake.TableKeys(t).size)))
       .toDF("table_name", "n_keys")
-    // key cells only: the scoped second decode skips every non-key column
-    val keyCols = multiKeyed.flatMap(t => Lake.TableKeys(t)).toSet
-    val scoped = decodeScan(spark, dir, multiKeyed, Some(cap), onlyCols = Some(keyCols))
     // one row per data row of a multi-file keyed table, its key tuple as a
     // sort key: (key_pos asc, variant slots) — within one key column every
     // row populates the SAME slot, so struct field order is inert and
     // null-first matches the decoder's null-first key compare. Rows whose
     // key tuple is INCOMPLETE (a part file without the key columns —
     // readFile then falls back to file-order capping) are excluded here
-    // and handled by the has-keys gate below.
-    val rowKeys = scoped.filter(col("present"))
+    // and handled by the has-keys gate below. The keyRel join keeps only
+    // the key cells of the multi-file keyed tables.
+    val rowKeys = cells.filter(col("present"))
       .join(broadcast(keyRel), Seq("table_name", "col_name"))
       .groupBy(col("table_name"), col("src_file"), col("row_id"))
       .agg(sort_array(collect_list(struct(col("key_pos"),

@@ -37,8 +37,9 @@ class SketchBuildSpec extends SparkSpec {
   /** A CSV lake: one clean file, `nRagged` files with a malformed row
     * (the strict decoder rejects them whole; the driver chain drops the
     * bad row and keeps ≥5), and one sub-5-row file. */
-  private def csvLake(nRagged: Int): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_build_csv")
+  private def csvLake(nRagged: Int,
+                      d: java.nio.file.Path = java.nio.file.Files.createTempDirectory(
+                        "graft_build_csv")): String = {
     write(d, "clean.csv",
       "id,amount,day,note\n" +
       "1,1.5,2021-01-15,hello\n2,2.5,2021-02-20,\"with,comma\"\n" +
@@ -131,6 +132,33 @@ class SketchBuildSpec extends SparkSpec {
     assert(canonSnap(byUri.snapshots) == canonSnap(byPath.snapshots))
     byUri.release()
     byPath.release()
+  }
+
+  /** Builds the lake `mk` writes under a plain directory name and under
+    * one with a space; asserts both catalogs are equal. */
+  private def assertSpacedDirBuildsSame(mk: java.nio.file.Path => Unit): Unit = {
+    val root = java.nio.file.Files.createTempDirectory("graft_build_space")
+    val dirs = Seq("lake", "my lake").map(n => java.nio.file.Files.createDirectory(root.resolve(n)))
+    dirs.foreach(mk)
+    val Seq(plain, spaced) = dirs.map(d => SketchBuild.build(spark, d.toString))
+    assert(plain.profiles.count() > 0)
+    assert(canon(spaced.profiles) == canon(plain.profiles))
+    assert(canonSnap(spaced.snapshots) == canonSnap(plain.snapshots))
+    plain.release()
+    spaced.release()
+  }
+
+  test("a CSV lake under a directory name with a space builds the same catalog") {
+    assertSpacedDirBuildsSame(d => csvLake(nRagged = 1, d))
+  }
+
+  test("a parquet lake under a directory name with a space builds the same catalog") {
+    assertSpacedDirBuildsSame { d =>
+      (1 to 8).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+        .write.mode("overwrite").parquet(d.resolve("a.parquet").toString)
+      (1 to 6).map(i => (i.toLong, i * 1.5)).toDF("k", "x").coalesce(1)
+        .write.mode("overwrite").parquet(d.resolve("b.parquet").toString)
+    }
   }
 
   test("a parquet table with no parquet leaf fails the build, not vanishes") {

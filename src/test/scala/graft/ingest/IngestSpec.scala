@@ -239,4 +239,22 @@ class CharsetAndExcelSpec extends SparkSpec {
     Files.write(p, Array.fill[Byte](64)(0x7f))
     assert(ExcelRead.read(spark, p.toString).isEmpty)
   }
+
+  test("ExcelRead and XlsRead take a file: URI or a plain path; None when unreadable") {
+    // a space in the directory name: the URI form percent-encodes it
+    val dir = Files.createTempDirectory("graft excel paths")
+    val xlsx = dir.resolve("t.xlsx")
+    Files.copy(Paths.get(writeXlsx(Seq(Seq("k", "v"), Seq("1", "a"), Seq("2", "b")))), xlsx)
+    val xls = dir.resolve("t.xls")
+    XlsWrite.write(xls.toString, Seq("k", "v"), Seq(Seq(1L, "a"), Seq(2L, "b")))
+    val readers = Seq[(java.nio.file.Path, String => Option[org.apache.spark.sql.DataFrame])](
+      xlsx -> (ExcelRead.read(spark, _)), xls -> (XlsRead.read(spark, _)))
+    for ((file, read) <- readers) {
+      def values(path: String) = read(path).map(_.orderBy("k").collect().map(_.getString(1)).toSeq)
+      assert(values(file.toString) == Some(Seq("a", "b")), file)
+      assert(values(file.toUri.toString) == Some(Seq("a", "b")), file)
+      assert(read(dir.resolve("missing").toString).isEmpty, file)
+      assert(read(dir.resolve("missing").toUri.toString).isEmpty, file)
+    }
+  }
 }

@@ -14,38 +14,14 @@ class MiniEncoderSpec extends SparkSpec {
   private val (s_, d_, h_, f_) = (EncoderQueries.TeS, EncoderQueries.TeD, EncoderQueries.TeH, EncoderQueries.TeF)
   private val dh = d_ / h_
 
-  private def weights = OnnxExport.MiniEncoderWeights(
-    seqLen = s_, dModel = d_, nHeads = h_, dFf = f_,
-    wq = Array.tabulate(h_, d_, dh)(EncoderQueries.teWq),
-    wk = Array.tabulate(h_, d_, dh)(EncoderQueries.teWk),
-    wv = Array.tabulate(h_, d_, dh)(EncoderQueries.teWv),
-    wo = Array.tabulate(d_, d_)(EncoderQueries.teWo), bo = Array.tabulate(d_)(EncoderQueries.teBo),
-    g1 = Array.tabulate(d_)(EncoderQueries.teG1), b1 = Array.tabulate(d_)(EncoderQueries.teB1),
-    w1 = Array.tabulate(d_, f_)(EncoderQueries.teW1), bf1 = Array.tabulate(f_)(EncoderQueries.teBf1),
-    w2 = Array.tabulate(f_, d_)(EncoderQueries.teW2), bf2 = Array.tabulate(d_)(EncoderQueries.teBf2),
-    g2 = Array.tabulate(d_)(EncoderQueries.teG2), b2 = Array.tabulate(d_)(EncoderQueries.teB2),
-    wHead = Array.tabulate(d_)(EncoderQueries.teWh), bHead = EncoderQueries.TeBh,
-    attScale = EncoderQueries.TeScale, lnEps = EncoderQueries.TeEps)
-
-  private def layer(l: Int): OnnxExport.EncoderLayer = OnnxExport.EncoderLayer(
-    wq = Array.tabulate(h_, d_, dh)(EncoderQueries.teWqL(l, _, _, _)),
-    wk = Array.tabulate(h_, d_, dh)(EncoderQueries.teWkL(l, _, _, _)),
-    wv = Array.tabulate(h_, d_, dh)(EncoderQueries.teWvL(l, _, _, _)),
-    wo = Array.tabulate(d_, d_)(EncoderQueries.teWoL(l, _, _)),
-    bo = Array.tabulate(d_)(EncoderQueries.teBoL(l, _)),
-    g1 = Array.tabulate(d_)(EncoderQueries.teG1L(l, _)),
-    b1 = Array.tabulate(d_)(EncoderQueries.teB1L(l, _)),
-    w1 = Array.tabulate(d_, f_)(EncoderQueries.teW1L(l, _, _)),
-    bf1 = Array.tabulate(f_)(EncoderQueries.teBf1L(l, _)),
-    w2 = Array.tabulate(f_, d_)(EncoderQueries.teW2L(l, _, _)),
-    bf2 = Array.tabulate(d_)(EncoderQueries.teBf2L(l, _)),
-    g2 = Array.tabulate(d_)(EncoderQueries.teG2L(l, _)),
-    b2 = Array.tabulate(d_)(EncoderQueries.teB2L(l, _)))
+  private def layer(l: Int): OnnxExport.EncoderLayer = EncoderQueries.teLayer(l)
 
   private def stack(n: Int): OnnxExport.EncoderStack = OnnxExport.EncoderStack(
     s_, d_, h_, f_, (0 until n).map(layer),
     wHead = Array.tabulate(d_)(EncoderQueries.teWh), bHead = EncoderQueries.TeBh,
     attScale = EncoderQueries.TeScale, lnEps = EncoderQueries.TeEps)
+
+  private def weights = stack(1)
 
   /** Independent reference: one encoder BLOCK with plain nested loops. */
   private def refBlock(x: Array[Array[Double]], lw: OnnxExport.EncoderLayer,
@@ -72,49 +48,19 @@ class MiniEncoderSpec extends SparkSpec {
       Array.tabulate(s_, dh)((i, e) => (0 until s_).map(j => soft(i)(j) * v(j)(e)).sum)
     }
     val ctx = Array.tabulate(s_, d_)((i, c) => heads(c / dh)(i)(c % dh))
-    val pj = mm(ctx, lw.wo).zipWithIndex.map { case (row, i) =>
-      row.indices.map(j => row(j) + lw.bo(j) + x(i)(j)).toArray }
-    val l1 = ln(pj, lw.g1, lw.b1)
-    val ff = mm(l1, lw.w1).map(row => row.indices.map(j =>
-      1.0 / (1.0 + math.exp(-(row(j) + lw.bf1(j))))).toArray)
-    val r2 = mm(ff, lw.w2).zipWithIndex.map { case (row, i) =>
-      row.indices.map(j => row(j) + lw.bf2(j) + l1(i)(j)).toArray }
-    ln(r2, lw.g2, lw.b2)
+    val pj = mm(ctx, lw.tail.wo).zipWithIndex.map { case (row, i) =>
+      row.indices.map(j => row(j) + lw.tail.bo(j) + x(i)(j)).toArray }
+    val l1 = ln(pj, lw.tail.g1, lw.tail.b1)
+    val ff = mm(l1, lw.tail.w1).map(row => row.indices.map(j =>
+      1.0 / (1.0 + math.exp(-(row(j) + lw.tail.bf1(j))))).toArray)
+    val r2 = mm(ff, lw.tail.w2).zipWithIndex.map { case (row, i) =>
+      row.indices.map(j => row(j) + lw.tail.bf2(j) + l1(i)(j)).toArray }
+    ln(r2, lw.tail.g2, lw.tail.b2)
   }
 
   /** Independent reference forward pass for one [S][D] input. */
-  private def reference(x: Array[Array[Double]], w: OnnxExport.MiniEncoderWeights): Double = {
-    def mm(a: Array[Array[Double]], b: Array[Array[Double]]) =
-      Array.tabulate(a.length, b(0).length)((i, j) =>
-        (0 until b.length).foldLeft(0.0)((acc, k) => acc + a(i)(k) * b(k)(j)))
-    def ln(v: Array[Array[Double]], g: Array[Double], b: Array[Double]) =
-      v.map { row =>
-        val m = row.sum / row.length
-        val va = row.map(e => (e - m) * (e - m)).sum / row.length
-        row.indices.map(j => ((row(j) - m) / math.sqrt(va + w.lnEps)) * g(j) + b(j)).toArray
-      }
-    val heads = (0 until h_).map { hi =>
-      val q = mm(x, w.wq(hi)); val k = mm(x, w.wk(hi)); val v = mm(x, w.wv(hi))
-      val att = Array.tabulate(s_, s_)((i, j) =>
-        (0 until dh).map(e => q(i)(e) * k(j)(e)).sum * w.attScale)
-      val soft = att.map { row =>
-        val m = row.max
-        val es = row.map(z => math.exp(z - m))
-        val sm = es.sum
-        es.map(_ / sm)
-      }
-      Array.tabulate(s_, dh)((i, e) =>
-        (0 until s_).map(j => soft(i)(j) * v(j)(e)).sum)
-    }
-    val ctx = Array.tabulate(s_, d_)((i, c) => heads(c / dh)(i)(c % dh))
-    val pj = mm(ctx, w.wo).zipWithIndex.map { case (row, i) =>
-      row.indices.map(j => row(j) + w.bo(j) + x(i)(j)).toArray }
-    val l1 = ln(pj, w.g1, w.b1)
-    val ff = mm(l1, w.w1).map(row => row.indices.map(j =>
-      1.0 / (1.0 + math.exp(-(row(j) + w.bf1(j))))).toArray)
-    val r2 = mm(ff, w.w2).zipWithIndex.map { case (row, i) =>
-      row.indices.map(j => row(j) + w.bf2(j) + l1(i)(j)).toArray }
-    val l2 = ln(r2, w.g2, w.b2)
+  private def reference(x: Array[Array[Double]], w: OnnxExport.EncoderStack): Double = {
+    val l2 = refBlock(x, w.layers.head, w.lnEps, w.attScale)
     val pooled = (0 until d_).map(j => (0 until s_).map(i => l2(i)(j)).sum / s_)
     val z = (0 until d_).map(j => pooled(j) * w.wHead(j)).sum + w.bHead
     1.0 / (1.0 + math.exp(-z))
@@ -122,7 +68,7 @@ class MiniEncoderSpec extends SparkSpec {
 
   test("session executes the exported encoder graph; matches an independent forward pass") {
     val path = "/tmp/graft_fixtures/spec_mini_encoder.onnx"
-    OnnxExport.exportMiniEncoder(weights, path)
+    OnnxExport.exportEncoderStack(weights, path)
     val session = OnnxSession.load(path)
     val batch = (1 to EncoderQueries.TeN).map { n =>
       Array.tabulate(s_ * d_) { k =>
@@ -172,7 +118,7 @@ class MiniEncoderSpec extends SparkSpec {
 
   test("feature metadata carries the flattened position-major column order") {
     val path = "/tmp/graft_fixtures/spec_mini_encoder.onnx"
-    OnnxExport.exportMiniEncoder(weights, path)
+    OnnxExport.exportEncoderStack(weights, path)
     val session = OnnxSession.load(path)
     assert(session.features ==
       (for (i <- 0 until s_; j <- 0 until d_) yield s"x_${i}_$j"))

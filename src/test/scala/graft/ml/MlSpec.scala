@@ -250,6 +250,30 @@ class PairScoringSpec extends SparkSpec {
     assert(Scorer.budgetedBatch(256, Int.MaxValue / 16) == 1)
     assert(Scorer.budgetedBatch(256, 0) == 256)
   }
+
+  test("both linear exporters refuse a pipeline without an LR or an assembler stage") {
+    import org.apache.spark.ml.{Pipeline, PipelineStage}
+    import org.apache.spark.ml.classification.LogisticRegression
+    import org.apache.spark.ml.feature.VectorAssembler
+    val df = Seq((0.0, 1.0, 0.0), (1.0, 0.0, 1.0), (0.0, 2.0, 0.0), (1.0, 0.5, 1.0))
+      .toDF("a", "b", "label")
+    val assembler = new VectorAssembler().setInputCols(Array("a", "b")).setOutputCol("features")
+    // the assembler runs outside the first pipeline, so its model has only the LR stage
+    def fit(stages: PipelineStage*) =
+      new Pipeline().setStages(stages.toArray).fit(assembler.transform(df))
+    val noAssembler = fit(new LogisticRegression().setMaxIter(5))
+    val noLr = fit(new VectorAssembler().setInputCols(Array("a", "b")).setOutputCol("f2"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_bad_export")
+    for ((name, export) <- Seq[(String, (org.apache.spark.ml.PipelineModel, String) => Unit)](
+        "exportLinearModel" -> Scorer.exportLinearModel,
+        "exportLogistic" -> OnnxExport.exportLogistic)) {
+      val e1 = intercept[IllegalArgumentException](export(noAssembler, s"$dir/$name.a"))
+      assert(e1.getMessage.contains(s"$name: no VectorAssembler stage"))
+      val e2 = intercept[IllegalArgumentException](export(noLr, s"$dir/$name.b"))
+      assert(e2.getMessage.contains(s"$name needs a LogisticRegressionModel stage"))
+      assert(!java.nio.file.Files.exists(dir.resolve(s"$name.a")))
+    }
+  }
 }
 
 class FeatureAssemblySpec extends SparkSpec {

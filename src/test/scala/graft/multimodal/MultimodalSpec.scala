@@ -271,4 +271,19 @@ class MultimodalSpec extends SparkSpec {
     assert(frames.map(_._1).distinct.sameElements(Array(4L)))
     assert(frames.map(_._2).sameElements(Array(0L, 1000L, 2000L, 3000L)))
   }
+
+  test("videoProbe reads MP4 duration, dims and track count; nulls otherwise") {
+    import spark.implicits._
+    val media = Seq(
+      (1L, SyntheticVideo.mp4Of(1000, 7000, Seq((0, 0), (640, 360)))),
+      (2L, Array[Byte](7, 7, 7)))
+      .toDF("media_id", "payload")
+    val out = Multimodal.videoProbe(media)
+    assert(out.columns.toSeq ==
+      Seq("media_id", "duration_ms", "vid_width", "vid_height", "n_tracks"))
+    val byId = out.collect().map(r => r.getLong(0) -> r).toMap
+    assert(byId(1L).getLong(1) == 7000L && byId(1L).getInt(2) == 640 &&
+      byId(1L).getInt(3) == 360 && byId(1L).getInt(4) == 2)
+    assert((1 to 4).forall(byId(2L).isNullAt))
+  }
 }

@@ -5,7 +5,9 @@ import graft.SparkSpec
 /** Pins [[TextAnalysis.pmiCollocations]] on a hand-computed corpus:
   * "a b a b a b" has unigrams a×3 b×3 (Nu=6), bigrams "a b"×3
   * "b a"×2 (Nb=5), so pmi(a,b) = ln(3·36/(9·5)) = ln(2.4) and
-  * pmi(b,a) = ln(2·36/(9·5)) = ln(1.6), ranked in that order. */
+  * pmi(b,a) = ln(2·36/(9·5)) = ln(1.6), ranked in that order. Also
+  * [[TextAnalysis.ngramEntropy]], which reads the same tokens and
+  * bigrams. */
 class PmiSpec extends SparkSpec {
   import spark.implicits._
 
@@ -26,6 +28,26 @@ class PmiSpec extends SparkSpec {
       .collect().map(_.getAs[String]("w1"))
     assert(out.toSeq == Seq("p")) // "x y" has support 1
   }
+
+  test("ngramEntropy: token, bigram and context entropies over the shared tokenizer") {
+    // a blank doc adds no token; a one-token doc adds a token but no bigram
+    val docs = Seq((1L, "a b a b a b"), (2L, "   "), (3L, "c")).toDF("doc_id", "text")
+    def round6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def h(counts: Seq[Long]): Double = { // the operator's integer-micro entropy
+      val n = counts.sum
+      val s = counts.map(c =>
+        math.floor(c.toDouble * round6(math.log(n.toDouble / c.toDouble)) * 1e6).toLong).sum
+      round6(s.toDouble / n / 1e6)
+    }
+    val r = TextAnalysis.ngramEntropy(docs).collect().head
+    assert(r.getAs[Long]("n_tokens") == 7L && r.getAs[Long]("n_distinct_tokens") == 3L)
+    assert(r.getAs[Double]("h_unigram") == h(Seq(3L, 3L, 1L)))
+    // bigrams "a b" x3, "b a" x2; their first words a x3, b x2
+    assert(r.getAs[Long]("n_bigrams") == 5L && r.getAs[Long]("n_distinct_bigrams") == 2L)
+    assert(r.getAs[Double]("h_bigram") == h(Seq(3L, 2L)))
+    assert(r.getAs[Double]("h_conditional") == 0.0)
+  }
+
 }
 
 /** Pins [[TextAnalysis.textrankKeywords]]: the hub word of a star

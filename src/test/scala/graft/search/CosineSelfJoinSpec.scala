@@ -118,4 +118,21 @@ class CosineSelfJoinSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
     assert(out.toSeq == Seq(("dA", "dB", 1.0)))
   }
+
+  test("block kernel sums Long-overflowing products exactly") {
+    import org.apache.spark.sql.Row
+    def vec(id: Long, w: (String, Long)*) =
+      Row(id, w.map { case (t, q) => Row(t, q) })
+    val k = 1000000000L
+    // (3k, 4k)·(4k, 3k): each product overflows a Long; cos = 24/25
+    val xs = CosineKernel.parseBlock(Seq(vec(1L, "x" -> 3 * k, "y" -> 4 * k)))
+    val ys = CosineKernel.parseBlock(Seq(vec(2L, "x" -> 4 * k, "y" -> 3 * k)))
+    assert(CosineKernel.blockPairs(xs, ys, sameBlock = false, tau = 0.5).toSeq ==
+      Seq(Row(1L, 2L, 0.96)))
+    // (3k, 2k)·(2k, 3k): products fit, their sum overflows; cos = 12/13
+    val as = CosineKernel.parseBlock(Seq(vec(3L, "x" -> 3 * k, "y" -> 2 * k)))
+    val bs = CosineKernel.parseBlock(Seq(vec(4L, "x" -> 2 * k, "y" -> 3 * k)))
+    assert(CosineKernel.blockPairs(as, bs, sameBlock = false, tau = 0.5).toSeq ==
+      Seq(Row(3L, 4L, 0.923077)))
+  }
 }

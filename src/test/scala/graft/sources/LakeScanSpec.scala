@@ -184,6 +184,65 @@ class LakeScanSpec extends SparkSpec {
     scanned(tmp, Seq("customer"), Some(40)) { cells => assertParity(profileOf(cells), loop) }
   }
 
+  test("a capped scan reads a multi-part keyed table's files once") {
+    // the global keyed cap takes its key tuples from the persisted decode,
+    // so the binaryFile scan (the only stage over a FileScanRDD) runs once;
+    // a second, single-file table keeps the scan's file list apart from
+    // the multi-part table's own (an identical list would share its exchange)
+    import org.apache.spark.scheduler._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_parts_once").toString
+    Lake.read(spark, dir, "customer")
+      .orderBy(expr("hash(c_custkey)")).repartition(3)
+      .write.mode("overwrite").parquet(s"$tmp/customer.parquet")
+    Lake.read(spark, dir, "nation").coalesce(1)
+      .write.mode("overwrite").parquet(s"$tmp/nation.parquet")
+    val parts = java.nio.file.Files.list(java.nio.file.Paths.get(s"$tmp/customer.parquet"))
+      .filter(_.toString.endsWith(".parquet")).count()
+    assert(parts == 3)
+    val sc = spark.sparkContext
+    val scanStages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val jobGroups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          scanStages.add(e.stageInfo.numTasks)
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobGroups.put(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val rows = scanned(tmp, Seq("customer", "nation"), Some(40)) { cells =>
+        cells.filter(col("present") && col("col_idx") === 0)
+          .groupBy("table_name").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      }
+      assert(rows == Map("customer" -> 40L, "nation" -> 25L))
+      // events arrive in order: once the sentinel job's start is seen,
+      // every earlier stage completion has been too
+      sc.setJobGroup("graft-sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      while (jobGroups.take() != "graft-sentinel") ()
+    } finally sc.removeSparkListener(listener)
+    assert(scanStages.size == 1,
+      s"the part files were scanned ${scanStages.size} times (tasks per scan: $scanStages)")
+  }
+
+  test("RawSchema starts with Profiler's cell key fields, then the variant slots") {
+    import org.apache.spark.sql.types._
+    assert(LakeScan.RawSchema.fields.take(5).toSeq ==
+      Profiler.KeyedLongSchema.fields.take(5).toSeq)
+    assert(LakeScan.RawSchema.fields.map(f => (f.name, f.dataType, f.nullable)).toSeq == Seq(
+      ("table_name", StringType, false), ("col_idx", IntegerType, false),
+      ("col_name", StringType, false), ("col_type", StringType, false),
+      ("present", BooleanType, false), ("row_id", LongType, true),
+      ("src_file", StringType, true), ("v_str", StringType, true),
+      ("v_long", LongType, true), ("v_float", FloatType, true),
+      ("v_double", DoubleType, true), ("v_ts_us", LongType, true),
+      ("v_date_days", IntegerType, true), ("v_bool", BooleanType, true),
+      ("v_arr", ArrayType(FloatType, containsNull = true), true),
+      ("date_promoted", BooleanType, false)))
+  }
+
   test("date-promoted staging parquet keeps its 'date' classification") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_promoted").toString
